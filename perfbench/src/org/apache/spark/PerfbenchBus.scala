@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Waits until every posted listener event has been delivered. The bus is
+  * package-private to Spark, so this one call lives in Spark's package. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
