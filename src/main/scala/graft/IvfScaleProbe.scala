@@ -98,7 +98,7 @@ object IvfScaleProbe {
         val denom = exact.count()
         // exact candidate volume for the model column: per query, the
         // sizes of its nProbe probed cells, summed over all queries
-        val pairVolume = Ivf.probeCells(spark, model, queries, nProbe)
+        val pairVolume = Ivf.probeCellsMapSide(model, queries, nProbe)
           .join(cellSizes, Seq("cell"))
           .agg(sum("count")).collect()(0).getLong(0)
         println(f"[ivfscale] NPROBE-SWEEP nCells=$nCells%4d nProbe=$nProbe%3d  " +

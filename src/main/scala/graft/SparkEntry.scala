@@ -93,15 +93,11 @@ object SparkEntry {
   /** Full fused candidate pool with the α=0.6 blend score and NO
     * ranking window — what score-distribution consumers (q122
     * reliability, q126 isotonic) need; blend()'s per-query sort would
-    * be dead work there. Arithmetic matches blend(alpha = 0.6) exactly:
-    * lit(0.6)·cs + lit(1.0−0.6)·fs. */
+    * be dead work there. Same pool and arithmetic as blend(alpha = 0.6). */
   private def fusedPool(s: SparkSession, d: String): DataFrame = {
     val (content, cf) = hybridArms(s, d)
-    content.join(cf, Seq("query_id", "item"), "full_outer")
-      .select(col("query_id"), col("item"),
-        coalesce(col("cs"), lit(0.0)).as("cs"),
-        coalesce(col("fs"), lit(0.0)).as("fs"))
-      .withColumn("score", lit(0.6) * col("cs") + lit(1.0 - 0.6) * col("fs"))
+    HybridScorer.candidatePool(content, cf)
+      .withColumn("score", HybridScorer.blendScore(0.6))
   }
 
   private def hybridTopK(s: SparkSession, d: String): DataFrame = {

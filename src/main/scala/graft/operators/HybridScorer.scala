@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,13 +11,38 @@ import org.apache.spark.sql.functions._
   * α·content + (1−α)·cf with a missing arm contributing 0.0, sort desc,
   * take k (SURVEY J4 + P8 + A4).
   *
-  * Spark shape: FULL OUTER equi-join on (query_id, item) + coalesce — the
-  * exact relational rendering of "union of keys with dict.get(default 0)".
-  * Both inputs arrive already partitioned by query_id from their windows,
-  * so AQE usually turns this into a shuffle-free sort-merge or, for small
-  * candidate sets, a broadcast join.
+  * Spark shape ([[candidatePool]]): the two arms are unioned with the
+  * missing arm's score null-padded, repartitioned ONCE by query_id, and
+  * collapsed per (query_id, item) — the relational rendering of "union of
+  * keys with dict.get(default 0)". The per-query ranking window reuses
+  * that query_id partitioning, so a blend costs one exchange. (A FULL
+  * OUTER join on (query_id, item) gives the same rows but shuffles both
+  * arms on the pair key and then again on query_id for the window.)
   */
 object HybridScorer {
+
+  /** The fused candidate pool, shared by [[blend]], [[alphaSweep]] and
+    * the score-distribution consumers: one row per (query_id, item) that
+    * either arm retrieved, (query_id, item, cs, fs), with the arm that
+    * missed the item contributing 0.0. Each arm must be unique on
+    * (query_id, item) — what every retriever's top-n emits — so the max
+    * per key is that arm's one score or null.
+    *
+    * Output is hash-partitioned by query_id: the aggregate and any later
+    * per-query window need no further exchange. */
+  def candidatePool(content: DataFrame, cf: DataFrame): DataFrame = {
+    val noScore = lit(null).cast("double")
+    content.select(col("query_id"), col("item"), col("cs"), noScore.as("fs"))
+      .unionByName(cf.select(col("query_id"), col("item"), noScore.as("cs"), col("fs")))
+      .repartition(col("query_id"))
+      .groupBy("query_id", "item")
+      .agg(coalesce(max(col("cs")), lit(0.0)).as("cs"),
+        coalesce(max(col("fs")), lit(0.0)).as("fs"))
+  }
+
+  /** The α-blend of a [[candidatePool]] row: α·cs + (1−α)·fs. */
+  def blendScore(alpha: Double): Column =
+    lit(alpha) * col("cs") + lit(1.0 - alpha) * col("fs")
 
   /** @param content (query_id, item, cs)   content-arm scores in [0,1]
     * @param cf      (query_id, item, fs)   CF-arm normalized scores (0,1]
@@ -29,17 +54,11 @@ object HybridScorer {
     *         deterministic (final DESC, item ASC) tie order.
     */
   def blend(content: DataFrame, cf: DataFrame, alpha: Double, k: Int): DataFrame = {
-    val fused = content
-      .join(cf, Seq("query_id", "item"), "full_outer")
-      .select(
-        col("query_id"), col("item"),
-        coalesce(col("cs"), lit(0.0)).as("cs"),
-        coalesce(col("fs"), lit(0.0)).as("fs"))
-      .withColumn("final",
-        lit(alpha) * col("cs") + lit(1.0 - alpha) * col("fs"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("final").desc, col("item").asc)
-    fused.withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
+    candidatePool(content, cf)
+      .withColumn("final", blendScore(alpha))
+      .withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
   }
 
   /** Reciprocal-rank fusion — the score-free alternative to [[blend]]
@@ -48,10 +67,8 @@ object HybridScorer {
     * between arms, which is why serving stacks prefer it when the arms'
     * score scales drift (cosine vs co-purchase counts).
     *
-    * Same relational shape as [[blend]]: FULL OUTER equi-join on
-    * (query_id, item) of two already-ranked candidate lists + one
-    * per-query window — both inputs arrive partitioned by query_id from
-    * their own top-n windows, so no extra exchange at any scale.
+    * Spark shape: FULL OUTER equi-join on (query_id, item) of two
+    * already-ranked candidate lists + one per-query window.
     *
     * @param content (query_id, item, rnk) content-arm ranks, 1-based
     * @param cf      (query_id, item, rnk) CF-arm ranks, 1-based
@@ -84,10 +101,11 @@ object HybridScorer {
     * evaluated as Precision@k against ground truth for EVERY candidate α
     * in ONE plan and ONE retrieval pass.
     *
-    * Spark shape: the arms are fused once (the α-independent full-outer
-    * join), then a broadcast cross-join against the tiny α list inflates
-    * only the bounded candidate pool (≤ content+cf depth rows per query),
-    * one window ranks per (α, query_id), one semi-join scores hits. At
+    * Spark shape: the arms are fused once (the α-independent
+    * [[candidatePool]]), then a broadcast cross-join against the tiny α
+    * list inflates only the bounded candidate pool (≤ content+cf depth
+    * rows per query), one window ranks per (α, query_id) on the pool's
+    * query_id partitioning, one semi-join scores hits. At
     * 100 TB the sweep costs |Q|·depth·|alphas| — retrieval, the actual
     * expensive step, is NOT repeated per α, which is the whole point
     * versus re-running the pipeline per candidate value.
@@ -106,13 +124,8 @@ object HybridScorer {
                  alphas: Seq[Double], k: Int): DataFrame = {
     val spark = content.sparkSession
     import spark.implicits._
-    val fused = content
-      .join(cf, Seq("query_id", "item"), "full_outer")
-      .select(col("query_id"), col("item"),
-        coalesce(col("cs"), lit(0.0)).as("cs"),
-        coalesce(col("fs"), lit(0.0)).as("fs"))
     val adf = alphas.toDF("alpha")
-    val scored = fused.crossJoin(broadcast(adf))
+    val scored = candidatePool(content, cf).crossJoin(broadcast(adf))
       .withColumn("fin",
         col("alpha") * col("cs") + (lit(1.0) - col("alpha")) * col("fs"))
     val w = Window.partitionBy("alpha", "query_id")

@@ -5,7 +5,6 @@ import graft.functions.expressions.TopKAggregate
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) ANN index — the partition-pruned scale path for
@@ -20,9 +19,9 @@ import org.apache.spark.sql.functions._
   *     centroids are cosine cells).
   *  2. '''assign''': every index vector gets a `cell` column — map-side
   *     only (the model broadcasts its centroids).
-  *  3. '''search''': each query scores the (tiny, broadcast) centroid
-  *     table, probes its `nProbe` nearest cells, and scans ONLY those
-  *     cells — an equi-join on `cell` that Spark hash-partitions.
+  *  3. '''search''': each query scores the centroids in one map-side
+  *     expression, probes its `nProbe` nearest cells, and scans ONLY
+  *     those cells — an equi-join on `cell`.
   *
   * At 100 TB the index is written `partitionBy("cell")`; the probe join
   * then becomes parquet partition pruning and untouched cells are never
@@ -97,25 +96,13 @@ object Ivf {
              vecCol: String = "embedding"): DataFrame =
     model.transform(withUnitVec(emb, vecCol)).drop("__nvec")
 
-  /** Centroid table (cell, centroid array<double>) — |nCells| rows, always
-    * broadcast. */
-  def centroids(spark: SparkSession, model: KMeansModel): DataFrame = {
-    import spark.implicits._
-    model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-  }
-
   /** Probed top-k: for each query, rank the `nProbe` cells whose centroid
     * is most cosine-similar, then exact-score only the index rows in those
     * cells. Output (query_id, vec_id, sim, rnk) with the deterministic
     * (sim DESC, vec_id ASC) tie order (SURVEY §7.4). */
   def topK(indexWithCells: DataFrame, model: KMeansModel, queries: DataFrame,
-           k: Int, nProbe: Int, excludeSelf: Boolean = true): DataFrame = {
-    val spark = indexWithCells.sparkSession
-    val probed = probeCells(spark, model, queries, nProbe)
-    rankInCells(indexWithCells, probed, k, excludeSelf)
-  }
+           k: Int, nProbe: Int, excludeSelf: Boolean = true): DataFrame =
+    rankInCells(indexWithCells, probeCells(model, queries, nProbe)._1, k, excludeSelf)
 
   /** Persist the cell-assigned index `partitionBy("cell")`: each IVF cell
     * becomes a parquet partition directory, so a probed search reads ONLY
@@ -161,9 +148,10 @@ object Ivf {
 
   /** [[topK]] against a persisted index with STATIC partition pruning:
     * the probed cell set (≤ |queries|·nProbe ints — driver-safe at any
-    * scale) is collected and pushed as an `isin` partition filter, so the
-    * scan never opens an unprobed cell's files. This is the 100 TB serving
-    * path: cost scales with probed bytes, not index bytes. */
+    * scale) is read off the collected probe and pushed as an `isin`
+    * partition filter, so the scan never opens an unprobed cell's files.
+    * This is the 100 TB serving path: cost scales with probed bytes, not
+    * index bytes. */
   def topKPersisted(spark: SparkSession, path: String, model: KMeansModel,
                     queries: DataFrame, k: Int, nProbe: Int,
                     excludeSelf: Boolean = true): DataFrame =
@@ -175,9 +163,7 @@ object Ivf {
   def topKPersistedOn(index: DataFrame, model: KMeansModel,
                       queries: DataFrame, k: Int, nProbe: Int,
                       excludeSelf: Boolean = true): DataFrame = {
-    val spark = index.sparkSession
-    val probed = probeCells(spark, model, queries, nProbe)
-    val cells = probed.select("cell").distinct().collect().map(_.getInt(0))
+    val (probed, cells) = probeCells(model, queries, nProbe)
     val pruned = index.where(col("cell").isin(cells.toIndexedSeq: _*))
     rankInCells(pruned, probed, k, excludeSelf)
   }
@@ -233,13 +219,14 @@ object Ivf {
   private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
     TopKAggregate.perGroupTopK(scored, "query_id", "vec_id", "sim", k)
 
-  /** [[probeCells]] without the broadcast join or probe-rank window:
-    * the centroids are baked into ONE map-side expression (array of
-    * (csim, cell) structs → comparator sort → slice nProbe → explode),
-    * so a billion-row query side probes without any exchange. Same
-    * (csim DESC, cell ASC) tie order as [[probeCells]]. */
-  private def probeCellsMapSide(model: KMeansModel, queries: DataFrame,
-                                nProbe: Int): DataFrame = {
+  /** The IVF probe: per query, the `nProbe` cells whose centroid is most
+    * cosine-similar, in the deterministic (csim DESC, cell ASC) tie
+    * order. The centroids are baked into ONE map-side expression (array
+    * of (csim, cell) structs → comparator sort → slice nProbe → explode),
+    * so a billion-row query side probes without any exchange. Output
+    * (query_id, q_emb, cell). */
+  private[graft] def probeCellsMapSide(model: KMeansModel, queries: DataFrame,
+                                       nProbe: Int): DataFrame = {
     val cands = array(model.clusterCenters.zipWithIndex.map { case (c, i) =>
       struct(cosine(col("q_emb"), typedLit(c.toArray.toSeq)).as("csim"),
         lit(i).as("cell"))
@@ -256,19 +243,20 @@ object Ivf {
         explode(col("__probe.cell")).as("cell"))
   }
 
-  /** Per query, the `nProbe` cells whose centroid is most cosine-similar
-    * (the centroid table is tiny and broadcast; deterministic cell-id tie
-    * order). Output (query_id, q_emb, cell). */
-  private[graft] def probeCells(spark: SparkSession, model: KMeansModel,
-                         queries: DataFrame, nProbe: Int): DataFrame = {
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(col("__csim").desc, col("cell").asc)
-    queries
-      .join(centroids(spark, model).hint("broadcast"))
-      .withColumn("__csim", cosine(col("q_emb"), col("centroid")))
-      .withColumn("__crnk", row_number().over(probeW))
-      .where(col("__crnk") <= nProbe)
-      .select(col("query_id"), col("q_emb"), col("cell"))
+  /** [[probeCellsMapSide]] for a broadcast-sized query side, run ONCE:
+    * its ≤ |Q|·nProbe rows are collected and returned as a local
+    * relation (query_id, q_emb, cell), with the distinct probed cells
+    * read off the same rows. The query side is broadcast by contract, so
+    * a broadcast of the probe would collect these same bytes anyway;
+    * holding them locally lets the pruning cell list and the broadcast
+    * side of [[rankInCells]] share one probe job instead of re-running
+    * the probe for each. */
+  private[graft] def probeCells(model: KMeansModel, queries: DataFrame,
+                                nProbe: Int): (DataFrame, Array[Int]) = {
+    val probe = probeCellsMapSide(model, queries, nProbe)
+    val rows = probe.collect()
+    (queries.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), probe.schema),
+      rows.map(_.getAs[Int]("cell")).distinct)
   }
 
   private def rankInCells(indexWithCells: DataFrame, probed: DataFrame,

@@ -71,13 +71,17 @@ object IvfIndexStore {
   }
 
   /** Quantizer models are tiny (nCells × dim doubles) and immutable once
-    * built — memoize per dir so serving doesn't re-read model metadata
-    * from disk on every query. */
+    * built — memoize per model path so serving doesn't re-read model
+    * metadata from disk on every query. The path carries the corpus
+    * fingerprint, so a corpus regenerated in the same JVM misses the
+    * memo and loads the model [[ensure]] rebuilt for it. */
   private val modelCache =
     scala.collection.concurrent.TrieMap.empty[String, KMeansModel]
 
-  def loadModel(sfDir: String): KMeansModel =
-    modelCache.getOrElseUpdate(sfDir, KMeansModel.load(modelPath(sfDir)))
+  def loadModel(sfDir: String): KMeansModel = {
+    val path = modelPath(sfDir)
+    modelCache.getOrElseUpdate(path, KMeansModel.load(path))
+  }
 
   /** Loaded index frames are memoized per path: re-resolving the
     * partitioned parquet relation re-lists 16+ cell directories per

@@ -213,8 +213,7 @@ object Pq {
                            coarse: org.apache.spark.ml.clustering.KMeansModel,
                            queries: DataFrame, shortlist: Int, nProbe: Int,
                            excludeSelf: Boolean): DataFrame = {
-    val spark = encodedIndex.sparkSession
-    val probed = Ivf.probeCells(spark, coarse, queries, nProbe)
+    val probed = Ivf.probeCells(coarse, queries, nProbe)._1
       .withColumn("__nq", l2Normalize(col("q_emb")))
       .withColumn("__lut", lutOf(pq, col("__nq")))
       .drop("__nq")

@@ -46,9 +46,10 @@ object PqIndexStore {
   private val modelCache =
     scala.collection.concurrent.TrieMap.empty[String, Pq.PqModel]
 
-  /** Codebooks reloaded from the persisted parquet (memoized — KB). */
+  /** Codebooks reloaded from the persisted parquet (memoized — KB; keyed
+    * by the fingerprinted books path, like IvfIndexStore.loadModel). */
   def loadModel(spark: SparkSession, sfDir: String): Pq.PqModel =
-    modelCache.getOrElseUpdate(sfDir, {
+    modelCache.getOrElseUpdate(booksPath(sfDir), {
       ensure(spark, sfDir)
       val rows = spark.read.parquet(booksPath(sfDir))
         .select("j", "c", "center").collect()

@@ -300,4 +300,38 @@ class PlanSpec extends SparkTestBase {
     assert(winIdx >= 0 && aggIdx > winIdx,
       s"expected Aggregate (subject reduce) BELOW the windows:\n$s")
   }
+
+  test("one-query hybrid serve: window-free probe, no full-outer join, " +
+    "blend adds exactly ONE query_id exchange") {
+    // The single-request path: IvfIndexStore.serve → CfRetriever.topNFor
+    // → HybridScorer.blend. Its latency is set by its job count, so the
+    // shapes that removed jobs are pinned: the probe is collected once
+    // (no probe-rank Window, no centroid join), and the blend fuses the
+    // arms behind one query_id exchange that its window reuses (no
+    // FULL OUTER sort-merge join shuffling both arms on (query_id, item)).
+    import graft.operators.{CfRetriever, HybridScorer, IvfIndexStore}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    val emb = graft.sources.Tables.embeddings(spark, sf())
+    val query = emb.where(col("vec_id") === 7L)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val edges = emb.where(col("vec_id") < 100 && col("vec_id") =!= 7L)
+      .select(lit(7L).as("src"), col("vec_id").as("dst"),
+        (col("vec_id") % 5 + 1).as("weight"))
+    val content = IvfIndexStore.serve(spark, sf(), query, 60, 4)
+      .select(col("query_id"), col("vec_id").as("item"), col("sim").as("cs"))
+    val cf = CfRetriever.topNFor(edges, query.select("query_id"), 60)
+      .select(col("src").as("query_id"), col("dst").as("item"), col("norm").as("fs"))
+    val fused = HybridScorer.blend(content, cf, 0.6, 10)
+    def plan(df: DataFrame) = df.queryExecution.executedPlan.toString
+    def queryIdExchanges(df: DataFrame) =
+      "Exchange hashpartitioning\\(query_id".r.findAllIn(plan(df)).length
+    assert(!plan(content).contains("Window"),
+      s"the IVF probe runs a window again:\n${plan(content)}")
+    assert(!plan(fused).contains("FullOuter"),
+      s"the blend is a full-outer join again:\n${plan(fused)}")
+    val added = queryIdExchanges(fused) - queryIdExchanges(content) - queryIdExchanges(cf)
+    assert(added == 1, s"blend added $added query_id exchanges:\n${plan(fused)}")
+    assert(fused.collect().map(_.getAs[Int]("rnk")).sorted.toSeq == (1 to 10))
+  }
 }

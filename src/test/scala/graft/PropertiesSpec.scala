@@ -92,6 +92,47 @@ class PropertiesSpec extends SparkTestBase {
     }
   }
 
+  test("blend == the full-outer-join formulation row for row (rnk included) " +
+    "for any unique-key arms: random, one arm empty, full overlap, forced ties") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    // the formulation the union + one-exchange pool replaced
+    def fullOuterBlend(content: DataFrame, cf: DataFrame, alpha: Double, k: Int) = {
+      val w = Window.partitionBy("query_id").orderBy(col("final").desc, col("item").asc)
+      content.join(cf, Seq("query_id", "item"), "full_outer")
+        .select(col("query_id"), col("item"),
+          coalesce(col("cs"), lit(0.0)).as("cs"), coalesce(col("fs"), lit(0.0)).as("fs"))
+        .withColumn("final", lit(alpha) * col("cs") + lit(1.0 - alpha) * col("fs"))
+        .withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
+    }
+    def scored(g: Gen[Double]) = for {
+      q <- Gen.choose(1L, 5L); it <- Gen.choose(1L, 40L); s <- g
+    } yield (q, it, s)
+    def uniq(rows: Seq[(Long, Long, Double)]) = rows.distinctBy(r => (r._1, r._2))
+    val anyScore = Gen.choose(0.0, 1.0)
+    // a five-value grid makes equal finals (and equal arm scores) common
+    val gridScore = Gen.choose(0, 4).map(_ / 4.0)
+    val random = uniq(sample(scored(anyScore), 120))
+    val randomCf = uniq(sample(scored(anyScore), 120).map { case (q, i, s) => (q, i + 20L, s) })
+    val ties = uniq(sample(scored(gridScore), 120))
+    val tiesCf = uniq(sample(scored(gridScore), 120).map { case (q, i, s) => (q, i + 10L, s) })
+    val none = Seq.empty[(Long, Long, Double)]
+    val cases = Seq(
+      "random" -> (random, randomCf),
+      "empty cf arm" -> (random, none),
+      "empty content arm" -> (none, randomCf),
+      "full overlap" -> (random, random.map { case (q, i, s) => (q, i, 1.0 - s) }),
+      "forced ties" -> (ties, tiesCf))
+    for ((name, (c, f)) <- cases; alpha <- Seq(0.5, 0.37); k <- Seq(1, 7, 100)) {
+      val cdf = spark.createDataFrame(c).toDF("query_id", "item", "cs")
+      val fdf = spark.createDataFrame(f).toDF("query_id", "item", "fs")
+      val got = HybridScorer.blend(cdf, fdf, alpha, k).collect()
+      val want = fullOuterBlend(cdf, fdf, alpha, k).collect()
+      assert(got.length == want.length && got.toSet == want.toSet,
+        s"$name, alpha=$alpha, k=$k: blend diverged from the full-outer formulation")
+    }
+  }
+
   test("precision@K ∈ [0,1] and hits ≤ min(K, |ranked|) for any ranked/truth sets") {
     val qg = Gen.choose(1L, 5L)
     val ranked = sample(qg, 40).distinct.flatMap(q =>

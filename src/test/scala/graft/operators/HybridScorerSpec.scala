@@ -4,7 +4,7 @@ import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Fusion correctness (SURVEY §7.4: the full-outer + coalesce join is the
+/** Fusion correctness (SURVEY §7.4: the key union + coalesce is the
   * subtle core) — α-boundary identities and missing-side defaults, per the
   * reference semantics at /root/reference/Hybrid_Recom_vecdb.py:221-231. */
 class HybridScorerSpec extends SparkTestBase {

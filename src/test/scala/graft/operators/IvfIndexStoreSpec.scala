@@ -41,6 +41,37 @@ class IvfIndexStoreSpec extends SparkTestBase {
     assert(!(IvfIndexStore.indexFrame(spark, d) eq f1))
   }
 
+  test("a corpus regenerated in the same JVM serves the rebuilt quantizers") {
+    // the stores' paths carry the embeddings fingerprint, so ensure()
+    // rebuilds under a new root after a regeneration; the memoized models
+    // must follow it instead of staying on the first build's quantizers
+    def centers(m: org.apache.spark.ml.clustering.KMeansModel) =
+      m.clusterCenters.map(_.toArray.toSeq).toSeq
+    def books(d: String) = PqIndexStore.loadModel(spark, d).codebooks.map(_.map(_.toSeq).toSeq).toSeq
+    val d = java.nio.file.Files.createTempDirectory("ivf-regen").toString
+    val embPath = s"$d/embeddings.parquet"
+    val raw = Tables.embeddingsRaw(spark, sf())
+    raw.where(col("vec_id") < 200).write.parquet(embPath)
+    IvfIndexStore.ensure(spark, d)
+    val first = IvfIndexStore.loadModel(d)
+    val firstBooks = books(d)
+    val firstRoot = IvfIndexStore.root(d)
+
+    raw.where(col("vec_id") >= 200).write.mode("overwrite").parquet(embPath)
+    val src = new java.io.File(embPath)
+    src.setLastModified(src.lastModified() + 60000L) // a new fingerprint even within one clock tick
+    assert(IvfIndexStore.root(d) != firstRoot)
+    IvfIndexStore.ensure(spark, d)
+
+    val rebuilt = org.apache.spark.ml.clustering.KMeansModel
+      .load(s"${IvfIndexStore.root(d)}/kmeans")
+    val servesRebuilt = centers(IvfIndexStore.loadModel(d)) == centers(rebuilt)
+    assert(centers(rebuilt) != centers(first), "the regenerated corpus fit the same centers")
+    assert(servesRebuilt, "loadModel kept the quantizer of the replaced corpus")
+    val booksMoved = books(d) != firstBooks
+    assert(booksMoved, "PqIndexStore.loadModel kept the codebooks of the replaced corpus")
+  }
+
   test("upsert rows are visible to a post-upsert load") {
     val d = sf()
     IvfIndexStore.ensure(spark, d)

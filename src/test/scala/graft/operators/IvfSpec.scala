@@ -140,6 +140,37 @@ class IvfSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
 
+  test("probeCells returns the window probe's (query, cell) set") {
+    // The reference formulation the map-side probe replaced: every query
+    // joins the broadcast centroid table and keeps its nProbe best cells
+    // by a (csim DESC, cell ASC) row_number window. A zero query vector
+    // ties every centroid at csim 0, so its cells come from the cell-id
+    // tie order alone.
+    import graft.functions.VectorFunctions.cosine
+    import org.apache.spark.sql.expressions.Window
+    val model = Ivf.fit(emb, nCells = 8)
+    val dim = model.clusterCenters.head.size
+    val wide = emb.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      .unionByName(spark.range(1).select(lit(-1L).as("query_id"),
+        array_repeat(lit(0.0f), dim).as("q_emb")))
+    val centroids = spark.createDataFrame(model.clusterCenters.zipWithIndex
+      .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq).toDF("cell", "centroid")
+    val w = Window.partitionBy("query_id").orderBy(col("csim").desc, col("cell").asc)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "cell").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    for (nProbe <- Seq(1, 3, 8)) {
+      val viaWindow = wide.join(broadcast(centroids))
+        .withColumn("csim", cosine(col("q_emb"), col("centroid")))
+        .withColumn("r", row_number().over(w))
+        .where(col("r") <= nProbe)
+      val (probe, cells) = Ivf.probeCells(model, wide, nProbe)
+      val probed = pairs(probe)
+      assert(cells.sorted.toSeq == probed.map(_._2).toSeq.distinct.sorted)
+      assert(probed.size == 201 * nProbe)
+      assert(probed == pairs(viaWindow), s"nProbe=$nProbe: probe diverged from the window")
+    }
+  }
+
   test("fit is layout-invariant: identical centers from any input partitioning") {
     // The q120 lesson: MLlib k-means'' init samples per partition, so a
     // bare limit() train set gave different centers under different
