@@ -4,8 +4,14 @@ import graft.functions.VectorFunctions._
 import graft.functions.expressions.TopKAggregate
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 /** IVF (inverted-file) ANN index — the partition-pruned scale path for
   * cosine top-k (SURVEY §2.4 V2/V3, §7.2 M6).
@@ -23,10 +29,11 @@ import org.apache.spark.sql.functions._
   *     expression, probes its `nProbe` nearest cells, and scans ONLY
   *     those cells — an equi-join on `cell`.
   *
-  * At 100 TB the index is written `partitionBy("cell")`; the probe join
-  * then becomes parquet partition pruning and untouched cells are never
-  * read. Cost per query drops from O(|I|) to O(nProbe·|I|/nCells);
-  * recall is tunable via nProbe (nProbe = nCells ⇒ exact).
+  * At 100 TB the index is written `partitionBy("cell")`; a persisted
+  * serve then scans only the probed cells' directories and untouched
+  * cells are never listed or read. Cost per query drops from O(|I|) to
+  * O(nProbe·|I|/nCells); recall is tunable via nProbe (nProbe = nCells
+  * ⇒ exact).
   */
 object Ivf {
 
@@ -101,15 +108,17 @@ object Ivf {
     * cells. Output (query_id, vec_id, sim, rnk) with the deterministic
     * (sim DESC, vec_id ASC) tie order (SURVEY §7.4). */
   def topK(indexWithCells: DataFrame, model: KMeansModel, queries: DataFrame,
-           k: Int, nProbe: Int, excludeSelf: Boolean = true): DataFrame =
+           k: Int, nProbe: Int, excludeSelf: Boolean = true): DataFrame = {
+    requireServeArgs(k, nProbe)
     rankInCells(indexWithCells, probeCells(model, queries, nProbe)._1, k, excludeSelf)
+  }
 
   /** Persist the cell-assigned index `partitionBy("cell")`: each IVF cell
     * becomes a parquet partition directory, so a probed search reads ONLY
     * the probed cells' files — the on-disk analogue of an inverted file.
     * Overwrite = the reference's wipe-every-run semantics
     * (`/root/reference/Hybrid_Recom_vecdb.py:28,338-341`). */
-  def writeIndex(indexWithCells: DataFrame, path: String): Unit =
+  def writeIndex(indexWithCells: DataFrame, path: String): Unit = {
     // Hash-cluster rows by cell BEFORE the partitioned write: a plain
     // partitionBy write emits one file per (write task × cell) —
     // nCells × parallelism tiny files (measured round 10: the adaptive
@@ -123,9 +132,16 @@ object Ivf {
     // across tasks.
     indexWithCells.repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
+    // an overwrite may change the columns as well as the files
+    forgetIndex(indexWithCells.sparkSession, path, schemaToo = true)
+  }
 
+  /** The whole persisted index: every `cell=` directory, read with the
+    * index's known schema and files ([[IndexFiles]]). An index path is
+    * written only through [[writeIndex]] and [[upsertIndex]]; files put
+    * there any other way are not seen until one of them runs. */
   def loadIndex(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    scanCells(spark, path, None)
 
   /** Incremental maintenance (FAISS IVF `add` semantics): assign NEW
     * vectors with the EXISTING quantizer and append them to the
@@ -142,30 +158,113 @@ object Ivf {
     // adds at most one new file to each touched cell directory
     assign(model, newRows, vecCol).repartition(col("cell"))
       .write.mode("append").partitionBy("cell").parquet(path)
-    // a serve-side memoized relation for this path now lists stale files
-    IvfIndexStore.invalidateIndex(path)
+    // same quantizer, same columns: only the file listing is stale
+    forgetIndex(newRows.sparkSession, path, schemaToo = false)
   }
 
-  /** [[topK]] against a persisted index with STATIC partition pruning:
+  /** [[topK]] against a persisted index, reading ONLY the probed cells:
     * the probed cell set (≤ |queries|·nProbe ints — driver-safe at any
-    * scale) is read off the collected probe and pushed as an `isin`
-    * partition filter, so the scan never opens an unprobed cell's files.
-    * This is the 100 TB serving path: cost scales with probed bytes, not
-    * index bytes. */
+    * scale) is read off the collected probe, and the scan is rooted at
+    * those cells' `path/cell=<c>` directories ([[scanCells]]), so
+    * untouched cells are never listed or read. A probed cell with no
+    * directory (no rows were ever assigned to it) contributes nothing.
+    * Rows an [[upsertIndex]] appended are visible to the next serve.
+    * This is the 100 TB serving path: cost scales with probed bytes,
+    * not index bytes. */
   def topKPersisted(spark: SparkSession, path: String, model: KMeansModel,
                     queries: DataFrame, k: Int, nProbe: Int,
-                    excludeSelf: Boolean = true): DataFrame =
-    topKPersistedOn(loadIndex(spark, path), model, queries, k, nProbe, excludeSelf)
-
-  /** [[topKPersisted]] over an already-loaded index frame (callers that
-    * serve repeatedly keep the resolved relation and skip re-listing the
-    * partition directories). */
-  def topKPersistedOn(index: DataFrame, model: KMeansModel,
-                      queries: DataFrame, k: Int, nProbe: Int,
-                      excludeSelf: Boolean = true): DataFrame = {
+                    excludeSelf: Boolean = true): DataFrame = {
+    requireServeArgs(k, nProbe)
     val (probed, cells) = probeCells(model, queries, nProbe)
-    val pruned = index.where(col("cell").isin(cells.toIndexedSeq: _*))
-    rankInCells(pruned, probed, k, excludeSelf)
+    rankInCells(scanCells(spark, path, Some(cells.toSeq)), probed, k, excludeSelf)
+  }
+
+  /** What reading a persisted index needs besides its bytes, kept per
+    * index path: the schema, the `cell=` directories that exist, and the
+    * files of each directory a scan has listed (Spark's file-index
+    * listing cache, filled by the scans themselves). Repeated serves of
+    * an unchanged index therefore list nothing, however many cells they
+    * probe. [[writeIndex]] and [[upsertIndex]] are the only writers of
+    * an index path and drop its entry once their files are committed:
+    * an upsert keeps the schema, so the next serve lists the index root
+    * once and then only the directories it probes, with no schema job
+    * and no listing of unprobed cells. Holds file statuses, never a
+    * session or a plan. */
+  private final class IndexFiles(val schema: StructType, val cellDirs: Map[Int, Path])
+      extends FileStatusCache {
+    private val leaves = TrieMap.empty[Path, Array[FileStatus]]
+    override def getLeafFiles(dir: Path): Option[Array[FileStatus]] = leaves.get(dir)
+    override def putLeafFiles(dir: Path, files: Array[FileStatus]): Unit =
+      leaves.put(dir, files)
+    override def invalidateAll(): Unit = leaves.clear()
+  }
+
+  // both keyed by the qualified index path, so any spelling of it
+  // (trailing slash, scheme) finds the same entry
+  private val indexFiles = TrieMap.empty[String, IndexFiles]
+  private val indexSchemas = TrieMap.empty[String, StructType]
+
+  private def qualified(spark: SparkSession, path: String): Path = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+  }
+
+  private def forgetIndex(spark: SparkSession, path: String, schemaToo: Boolean): Unit =
+    synchronized {
+      val key = qualified(spark, path).toString
+      indexFiles.remove(key)
+      if (schemaToo) indexSchemas.remove(key)
+    }
+
+  private val CellDir = "cell=(\\d+)".r
+
+  /** One `listStatus` of the index root finds the cell directories; the
+    * schema is read once from one of them (one job over one footer). */
+  private def filesOf(spark: SparkSession, path: String): (Path, IndexFiles) = synchronized {
+    val root = qualified(spark, path)
+    val files = indexFiles.getOrElseUpdate(root.toString, {
+      val cellDirs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(root).iterator.filter(_.isDirectory).map(_.getPath)
+        .flatMap(d => d.getName match {
+          case CellDir(c) => Some(c.toInt -> d)
+          case _ => None
+        }).toMap
+      val schema = indexSchemas.getOrElseUpdate(root.toString, {
+        val someCell = cellDirs.values.headOption.getOrElse(
+          throw new IllegalStateException(s"no cell directory under $path"))
+        spark.read.option("basePath", root.toString).parquet(someCell.toString).schema
+      })
+      new IndexFiles(schema, cellDirs)
+    })
+    (root, files)
+  }
+
+  /** The index restricted to `cells` (all cells when None), scanned
+    * from those cells' directories only. The file index is built over
+    * the known schema and the memoized directory listings, so only a
+    * directory no scan has listed since the last write is listed. */
+  private def scanCells(spark: SparkSession, path: String,
+                        cells: Option[Iterable[Int]]): DataFrame = {
+    val (root, files) = filesOf(spark, path)
+    val dirs = cells match {
+      case Some(cs) => cs.toSeq.distinct.sorted.flatMap(files.cellDirs.get)
+      case None => files.cellDirs.toSeq.sortBy(_._1).map(_._2)
+    }
+    if (dirs.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), files.schema)
+    else {
+      val location = new InMemoryFileIndex(spark, dirs, Map("basePath" -> root.toString),
+        Some(files.schema), files)
+      val partCols = location.partitionSchema.fieldNames.toSet
+      spark.baseRelationToDataFrame(HadoopFsRelation(location, location.partitionSchema,
+        StructType(files.schema.filterNot(f => partCols(f.name))), None,
+        new ParquetFileFormat(), Map.empty)(spark))
+    }
+  }
+
+  private def requireServeArgs(k: Int, nProbe: Int): Unit = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
   }
 
   /** Cell-cogrouped kNN JOIN — the large-|Q| path (round-2 verdict
@@ -202,6 +301,7 @@ object Ivf {
   def knnJoin(indexWithCells: DataFrame, model: KMeansModel,
               queries: DataFrame, k: Int, nProbe: Int,
               excludeSelf: Boolean = true): DataFrame = {
+    requireServeArgs(k, nProbe)
     val scored = probeCellsMapSide(model, queries, nProbe)
       .join(indexWithCells, Seq("cell"))
       .where(if (excludeSelf) col("query_id") =!= col("vec_id") else lit(true))
@@ -243,20 +343,57 @@ object Ivf {
         explode(col("__probe.cell")).as("cell"))
   }
 
-  /** [[probeCellsMapSide]] for a broadcast-sized query side, run ONCE:
-    * its ≤ |Q|·nProbe rows are collected and returned as a local
-    * relation (query_id, q_emb, cell), with the distinct probed cells
-    * read off the same rows. The query side is broadcast by contract, so
-    * a broadcast of the probe would collect these same bytes anyway;
-    * holding them locally lets the pruning cell list and the broadcast
-    * side of [[rankInCells]] share one probe job instead of re-running
-    * the probe for each. */
+  /** The probe of [[probeCellsMapSide]] for a broadcast-sized query
+    * side, computed on the driver: the query rows (query_id, q_emb) are
+    * collected in ONE job and each scores the centroids in plain Scala,
+    * with [[graft.functions.expressions.CosineSim]]'s arithmetic and the
+    * same (csim DESC, cell ASC) order, so the cells are identical. The
+    * result is a local relation (query_id, q_emb, cell) plus the distinct
+    * probed cells. The query side is broadcast by contract, so its bytes
+    * reach the driver anyway; scoring them here keeps nCells × dim
+    * centroid literals out of every serve's plan, task and generated
+    * code. */
   private[graft] def probeCells(model: KMeansModel, queries: DataFrame,
                                 nProbe: Int): (DataFrame, Array[Int]) = {
-    val probe = probeCellsMapSide(model, queries, nProbe)
-    val rows = probe.collect()
-    (queries.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), probe.schema),
-      rows.map(_.getAs[Int]("cell")).distinct)
+    val qs = queries.select("query_id", "q_emb")
+    val centers = model.clusterCenters.map(_.toArray)
+    val rows = qs.collect().flatMap { q =>
+      nearestCells(q.getAs[scala.collection.Seq[Any]](1), centers, nProbe)
+        .map(c => Row(q.get(0), q.get(1), c))
+    }
+    val schema = qs.schema.add(StructField("cell", IntegerType, nullable = false))
+    (queries.sparkSession.createDataFrame(rows.toSeq.asJava, schema),
+      rows.map(_.getInt(2)).distinct)
+  }
+
+  /** The `nProbe` cells of [[probeCellsMapSide]] for one query vector.
+    * csim is CosineSim's double arithmetic, element order included; a
+    * null vector or a length mismatch makes every csim null, which the
+    * map-side comparator orders by cell alone. Doubles compare as Spark
+    * SQL compares them (NaN above every number). */
+  private def nearestCells(q: scala.collection.Seq[Any], centers: Array[Array[Double]],
+                           nProbe: Int): Array[Int] = {
+    val n = if (q == null) -1 else q.length
+    if (centers.exists(_.length != n)) return centers.indices.take(nProbe).toArray
+    val x = q.iterator.map {
+      case f: Float => f.toDouble
+      case d: Double => d
+    }.toArray
+    val csim = centers.map { c =>
+      var dot = 0.0; var aa = 0.0; var bb = 0.0
+      var i = 0
+      while (i < n) {
+        dot += x(i) * c(i); aa += x(i) * x(i); bb += c(i) * c(i)
+        i += 1
+      }
+      val denom = math.sqrt(aa) * math.sqrt(bb)
+      if (denom == 0.0) 0.0 else dot / denom
+    }
+    def cmp(a: Double, b: Double) = if (a == b) 0 else java.lang.Double.compare(a, b)
+    centers.indices.sortWith { (l, r) =>
+      val c = cmp(csim(l), csim(r))
+      c > 0 || (c == 0 && l < r)
+    }.take(nProbe).toArray
   }
 
   private def rankInCells(indexWithCells: DataFrame, probed: DataFrame,

@@ -83,37 +83,24 @@ object IvfIndexStore {
     modelCache.getOrElseUpdate(path, KMeansModel.load(path))
   }
 
-  /** Loaded index frames are memoized per path: re-resolving the
-    * partitioned parquet relation re-lists 16+ cell directories per
-    * serve; the memoized DataFrame keeps its FileIndex, and partition
-    * pruning still applies per query through the pushed cell filter.
-    * (A plain plan reference, NOT a cache — nothing is pinned.) */
-  // Keyed by (session, path): a memoized DataFrame is bound to its
-  // creating session, and a second SparkSession in the same process must
-  // not be handed a relation tied to a possibly-stopped one.
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Drop the memoized relation for a path whose FILES changed (called
-    * by Ivf.upsertIndex): a pinned FileIndex would otherwise hide
-    * appended rows from every subsequent serve of that path. */
-  private[operators] def invalidateIndex(path: String): Unit =
-    indexCache.keys.filter(_._2 == path).foreach(indexCache.remove)
-
   /** The persisted cell-assigned index as a DataFrame (built on first
-    * touch, memoized relation). Callers that join rather than probe —
-    * Ivf.knnJoin's corpus-scale query side — start here. */
+    * touch; Ivf.loadIndex, which reuses the index's known schema and
+    * directory listings and sees every upsert). Callers that join rather
+    * than probe — Ivf.knnJoin's corpus-scale query side — start here. */
   def indexFrame(spark: SparkSession, sfDir: String): DataFrame = {
     ensure(spark, sfDir)
-    indexCache.getOrElseUpdate((spark, indexPath(sfDir)),
-      Ivf.loadIndex(spark, indexPath(sfDir)))
+    Ivf.loadIndex(spark, indexPath(sfDir))
   }
 
-  /** Serve top-k from the persisted, cell-partitioned index with static
-    * partition pruning (Ivf.topKPersisted): per-query cost scales with
-    * probed bytes, not index bytes — the 100 TB serving path. */
+  /** Serve top-k from the persisted, cell-partitioned index
+    * (Ivf.topKPersisted): the scan reads only the probed cells'
+    * directories, so per-query cost scales with probed bytes, not index
+    * bytes — the 100 TB serving path. Rows upserted into the index are
+    * visible to the next serve, which lists only the directories it
+    * probes. */
   def serve(spark: SparkSession, sfDir: String, queries: DataFrame,
-            k: Int, nProbe: Int): DataFrame =
-    Ivf.topKPersistedOn(indexFrame(spark, sfDir), loadModel(sfDir),
-      queries, k, nProbe)
+            k: Int, nProbe: Int): DataFrame = {
+    ensure(spark, sfDir)
+    Ivf.topKPersisted(spark, indexPath(sfDir), loadModel(sfDir), queries, k, nProbe)
+  }
 }

@@ -328,6 +328,19 @@ class PlanSpec extends SparkTestBase {
       "Exchange hashpartitioning\\(query_id".r.findAllIn(plan(df)).length
     assert(!plan(content).contains("Window"),
       s"the IVF probe runs a window again:\n${plan(content)}")
+    // the index scan is rooted at the probed cells' directories only,
+    // never at the whole index
+    val indexDir = IvfIndexStore.root(sf()) + "/index"
+    val probedDirs = graft.operators.Ivf.probeCells(IvfIndexStore.loadModel(sf()), query, 4)._2
+      .map(c => s"cell=$c").filter(c => new java.io.File(s"$indexDir/$c").exists()).toSet
+    val scanRoots = content.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect {
+      case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation => r.location.rootPaths
+    }.flatten
+    assert(probedDirs.nonEmpty && probedDirs.size <= 4)
+    assert(scanRoots.map(_.getName).toSet == probedDirs && scanRoots.size == probedDirs.size,
+      s"index scan roots ${scanRoots.mkString(", ")}, probed $probedDirs")
     assert(!plan(fused).contains("FullOuter"),
       s"the blend is a full-outer join again:\n${plan(fused)}")
     val added = queryIdExchanges(fused) - queryIdExchanges(content) - queryIdExchanges(cf)

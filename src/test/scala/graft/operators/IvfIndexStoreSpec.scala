@@ -30,17 +30,6 @@ class IvfIndexStoreSpec extends SparkTestBase {
     assert(served == exact)
   }
 
-  test("indexFrame memoizes per path; upsert invalidation drops the pinned relation") {
-    val d = sf()
-    val f1 = IvfIndexStore.indexFrame(spark, d)
-    assert(IvfIndexStore.indexFrame(spark, d) eq f1) // memoized relation reused
-    // Ivf.upsertIndex calls this hook after appending files: the next
-    // serve must re-list the directory instead of reading a stale
-    // FileIndex that hides the appended rows
-    IvfIndexStore.invalidateIndex(IvfIndexStore.root(d) + "/index")
-    assert(!(IvfIndexStore.indexFrame(spark, d) eq f1))
-  }
-
   test("a corpus regenerated in the same JVM serves the rebuilt quantizers") {
     // the stores' paths carry the embeddings fingerprint, so ensure()
     // rebuilds under a new root after a regeneration; the memoized models
@@ -82,5 +71,57 @@ class IvfIndexStoreSpec extends SparkTestBase {
     assert(Ivf.loadIndex(spark, path).count() == 100)
     Ivf.upsertIndex(model, emb.where(col("vec_id") >= 100 && col("vec_id") < 150), path)
     assert(Ivf.loadIndex(spark, path).count() == 150)
+  }
+
+  test("an upsert costs the next serve no extra job; the upserted copy is served") {
+    // The store serves from the probed cells' directories with its known
+    // schema, so the read right after an upsert lists only those few
+    // directories on the driver and infers no schema: the same jobs as
+    // the read before it. Its reply must carry the appended near-copy as
+    // the top content row (read-your-writes through serve, not only
+    // through loadIndex). A private corpus keeps the upsert out of the
+    // shared sf store.
+    val d = java.nio.file.Files.createTempDirectory("ivf-serve-upsert").toString
+    Tables.embeddingsRaw(spark, sf()).write.parquet(s"$d/embeddings.parquet")
+    IvfIndexStore.ensure(spark, d)
+    val emb = Tables.embeddings(spark, d).select("vec_id", "embedding")
+    // a query whose nearest other vector is clearly not a duplicate, so
+    // the near-copy must outrank every existing row
+    val qid = emb.select("vec_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
+      .collect().sorted.find { id =>
+        val q = emb.where(col("vec_id") === id)
+          .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+        ContentRetriever.topK(emb, q, 1).head().getAs[Double]("sim") < 0.99
+      }.get
+    val query = emb.where(col("vec_id") === qid)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def serveJobs(): (Int, Array[org.apache.spark.sql.Row]) = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      val rows = IvfIndexStore.serve(spark, d, query, 5, 4).collect()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (jobs.get, rows)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      serveJobs() // first use of the index: reads its schema once
+      val (before, _) = serveJobs()
+      val v = emb.where(col("vec_id") === qid).head().getSeq[Float](1).toArray
+      v(0) += 1e-3f
+      val copyId = 20000000000L
+      Ivf.upsertIndex(IvfIndexStore.loadModel(d),
+        spark.createDataFrame(Seq((copyId, v))).toDF("vec_id", "embedding"),
+        IvfIndexStore.root(d) + "/index")
+      val (after, rows) = serveJobs()
+      assert(after == before, s"the post-upsert serve ran $after jobs, the one before it $before")
+      val top = rows.find(_.getAs[Int]("rnk") == 1).map(_.getAs[Long]("vec_id"))
+      assert(top.contains(copyId), s"the upserted copy is not the top row: ${rows.toSeq}")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

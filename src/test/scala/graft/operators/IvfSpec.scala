@@ -68,6 +68,108 @@ class IvfSpec extends SparkTestBase {
     assert(persisted == inMem)
   }
 
+  test("topKPersisted == ranking the whole index filtered to the probed cells, row for row") {
+    // The reference formulation the probed-directory scan replaced: load
+    // the whole index and keep the probed cells by a partition filter.
+    // Exact sims and ranks must match for any nProbe, after an upsert,
+    // and when a probed cell has no directory at all.
+    val model = Ivf.fit(emb, nCells = 8)
+    val indexed = Ivf.assign(model, emb).cache()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "vec_id", "sim", "rnk").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).sorted.toSeq
+    def viaLoad(path: String, q: org.apache.spark.sql.DataFrame, nProbe: Int) = {
+      val cells = Ivf.probeCells(model, q, nProbe)._2
+      Ivf.topK(spark.read.parquet(path).where(col("cell").isin(cells.toIndexedSeq: _*)),
+        model, q, 10, nProbe)
+    }
+    def assertSame(path: String, q: org.apache.spark.sql.DataFrame, nProbe: Int, at: String) = {
+      val served = rows(Ivf.topKPersisted(spark, path, model, q, 10, nProbe))
+      assert(served == rows(viaLoad(path, q, nProbe)), s"$at, nProbe=$nProbe")
+      served
+    }
+    val dir = java.nio.file.Files.createTempDirectory("ivf-probed").toString + "/index"
+    Ivf.writeIndex(indexed.where(col("vec_id") < 150), dir)
+    for (nProbe <- Seq(1, 4, 8)) assert(assertSame(dir, queries, nProbe, "before upsert").nonEmpty)
+    Ivf.upsertIndex(model, emb.where(col("vec_id") >= 150), dir)
+    for (nProbe <- Seq(1, 4, 8)) assertSame(dir, queries, nProbe, "after upsert")
+    assert(rows(Ivf.topKPersisted(spark, dir, model, queries, 10, 8)) ==
+      rows(Ivf.topK(indexed, model, queries, 10, 8)), "the upserted rows are not served")
+
+    // an index written without the rows of query 0's nearest cell: that
+    // cell has no directory, and probing only it serves nothing
+    val q0 = queries.where(col("query_id") === queries.select("query_id").head().getLong(0))
+    val missing = Ivf.probeCells(model, q0, 1)._2.head
+    val holed = java.nio.file.Files.createTempDirectory("ivf-holed").toString + "/index"
+    Ivf.writeIndex(indexed.where(col("cell") =!= missing), holed)
+    assert(!new java.io.File(s"$holed/cell=$missing").exists())
+    assert(assertSame(holed, q0, 1, "missing cell").isEmpty)
+    for (nProbe <- Seq(4, 8)) assertSame(holed, queries, nProbe, "missing cell")
+  }
+
+  test("repeated serves of an unchanged index list nothing; writes under any spelling of the path are seen") {
+    // More than 32 probed directories is where Spark lists in a parallel
+    // job. The index's directory listings are kept per path, so only the
+    // first wide read after a write pays that job; an upsert or an
+    // overwrite, under whatever spelling of the path, is seen by the
+    // next read.
+    val model = Ivf.fit(emb, nCells = 48)
+    val dir = java.nio.file.Files.createTempDirectory("ivf-listing").toString + "/index"
+    Ivf.writeIndex(Ivf.assign(model, emb), dir)
+    val nDirs = new java.io.File(dir).listFiles().count(_.getName.startsWith("cell="))
+    assert(nDirs > 32, s"only $nDirs cell directories")
+    val listings = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith("Listing leaf files"))) listings.incrementAndGet()
+    }
+    def listingJobs[T](body: => T): (Int, T) = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      listings.set(0)
+      val out = body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (listings.get, out)
+    }
+    def serveAll() = Ivf.topKPersisted(spark, dir, model, queries, 10, 48).collect().length
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (first, served) = listingJobs(serveAll())
+      assert(first == 1 && served > 0)
+      assert(listingJobs(serveAll())._1 == 0, "a repeated wide serve listed the index again")
+      assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (0, 200L))
+      Ivf.upsertIndex(model, emb.limit(20).withColumn("vec_id", col("vec_id") + 100000L), dir)
+      assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (1, 220L))
+      assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (0, 220L))
+      // overwrite with an extra column through a qualified, slash-ended
+      // spelling of the same directory
+      val spelled = new java.io.File(dir).toURI.toString
+      assert(spelled.startsWith("file:") && spelled.endsWith("/"))
+      val fewer = emb.where(col("vec_id") < 100)
+      Ivf.writeIndex(Ivf.assign(model, fewer).withColumn("tag", lit("t")), spelled)
+      val reread = Ivf.loadIndex(spark, dir)
+      assert(reread.columns.contains("tag") && reread.count() == fewer.count())
+      assert(fewer.count() < 200)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("out-of-range k or nProbe is rejected before any serve runs") {
+    val model = Ivf.fit(emb, nCells = 8)
+    val indexed = Ivf.assign(model, emb)
+    val dir = java.nio.file.Files.createTempDirectory("ivf-args").toString + "/index"
+    Ivf.writeIndex(indexed, dir)
+    val d = sf()
+    val serves: Seq[(String, (Int, Int) => Unit)] = Seq(
+      "topK" -> ((k, p) => Ivf.topK(indexed, model, queries, k, p)),
+      "topKPersisted" -> ((k, p) => Ivf.topKPersisted(spark, dir, model, queries, k, p)),
+      "knnJoin" -> ((k, p) => Ivf.knnJoin(indexed, model, queries, k, p)),
+      "IvfIndexStore.serve" -> ((k, p) => IvfIndexStore.serve(spark, d, queries, k, p)))
+    for ((name, serve) <- serves; (k, nProbe) <- Seq((10, 0), (10, -1), (0, 4), (-3, 4)))
+      withClue(s"$name(k = $k, nProbe = $nProbe): ") {
+        intercept[IllegalArgumentException](serve(k, nProbe))
+      }
+  }
+
   test("writeIndex emits exactly one file per cell directory") {
     // a plain partitionBy write produces one file per (task × cell) —
     // nCells × parallelism tiny files; measured round 10: 4,168 sub-8KB

@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Waits until every posted listener event has been delivered, so a test
+  * can read a SparkListener's counts right after an action. The bus is
+  * package-private to Spark, so this one call lives in Spark's package. */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
