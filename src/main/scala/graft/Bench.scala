@@ -3,6 +3,7 @@ import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Headline benchmark. Two modes:
   *
@@ -81,7 +82,7 @@ object Bench {
           val f = l.trim.split("\\s+").drop(1).map(_.toLong)
           (if (f.length > 7) f(7) else 0L, f.take(8).sum)
         }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Steal%% across a (before, after) pair of [[stealTotal]] readings. */
   private[graft] def stealPctOf(a: Option[(Long, Long)],
@@ -150,15 +151,7 @@ object Bench {
     }
 
   private def mkSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores(32))
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -173,7 +166,7 @@ object Bench {
     // q31 = the MLlib pipeline path.
     for (w <- Seq("q01_pricing", "q08_knn", "q16_simhash_fp", "q31_embed_docs"))
       try SparkEntry.queries(w)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     // Also warm the iterative-loop machinery — Iterate.roll
     // (localCheckpoint + ContextCleaner release) and
     // observe-on-checkpoint — which no registry warmup touches, yet
@@ -197,27 +190,8 @@ object Bench {
         obs.get("n"); prev = Some(cp); f = cp
       }
       prev.foreach(graft.operators.Iterate.release)
-    } catch { case _: Throwable => () }
-    // ALS solver/codegen warmup (round 15) for the chunk that times
-    // q114: a 200-row in-memory fit touches the MLlib ALS path's
-    // Catalyst/Janino generation and the normal-equation solver JIT —
-    // exactly the machinery AlsProfile characterized as the ~30-job
-    // fit floor. Fresh-JVM A/B (2 reps each arm, fork-chunk flags):
-    // cold q114 19.23/19.87 s unwarmed vs 13.15/12.20 after a ~7 s
-    // UNTIMED tiny fit. Same contract as the q31 pipeline warmup and
-    // the Iterate warmup above: synthetic in-memory rows, nothing read
-    // from the corpus, nothing the timed query reuses but JIT state.
-    // (Round 9's "mini-fit warmer is a net loss" verdict predates the
-    // forked-chunk topology, where the warmup is per-chunk and
-    // untimed; re-measured under the current protocol it wins 3:1.)
-    if (names.contains("q114_als_mf")) try {
-      graft.operators.AlsCf.fitEval(
-        spark.range(200).selectExpr("cast(id % 20 as int) as user",
-          "cast(id % 10 as int) as item",
-          "cast(id % 5 + 1 as double) as rating"),
-        maxIter = 2).count()
-    } catch { case _: Throwable => () }
-    names.zipWithIndex.map { case (name, qIdx) =>
+    } catch { case NonFatal(_) => () }
+    names.map { name =>
       val fn = SparkEntry.queries(name)
       // Build-once artifacts are constructed OUTSIDE the timed region:
       // the benched number is serving cost, matching how the baseline
@@ -227,7 +201,9 @@ object Bench {
       // an in-memory setup artifact would be rebuilt inside repeat 2's
       // timed region (or crash it).
       try SparkEntry.setups.get(name).foreach(_(spark, sfDir))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(t) =>
+        System.err.println(s"[bench] $name setup failed: $t")
+      }
       // SPARK_GRAFT_WARM=N: one untimed warmup run (codegen/broadcast/
       // footer costs), then N timed runs, report the MINIMUM — N=1 is
       // the historical "run twice, report the second" protocol exactly.
@@ -252,16 +228,17 @@ object Bench {
       // The reap (below) runs BETWEEN repeats too, not just between
       // queries (round 13): a query that leaves per-run session state
       // otherwise times repeat N against N−1 runs of ContextCleaner
-      // backlog — Q165RepeatProbe reproduced BENCH_ISOLATED_r12's
-      // monotonic 6.6→28.4→55.2 s repeat growth exactly this way
-      // (superseded localCheckpoint blocks survive until a GC proves
-      // them dead; later block stores then stall 20–30 s per task in
-      // SizeEstimator walks), and an explicit between-repeat reap held
-      // the same query flat at 5–7 s. The reap sits OUTSIDE the timed
-      // region, so samples are iid under the min estimator's model.
+      // backlog — BENCH_ISOLATED_r12's monotonic 6.6→28.4→55.2 s repeat
+      // growth came about exactly this way (SCALE.md round 13, "q165's
+      // monotonic in-JVM growth": superseded localCheckpoint blocks
+      // survive until a GC proves them dead; later block stores then
+      // stall 20–30 s per task in SizeEstimator walks), and an explicit
+      // between-repeat reap held the same query flat at 5–7 s. The reap
+      // sits OUTSIDE the timed region, so samples are iid under the min
+      // estimator's model.
       def reap(): Unit = {
         try spark.catalog.clearCache()
-        catch { case t: Throwable =>
+        catch { case NonFatal(t) =>
           if (!reapClearCacheWarned) {
             reapClearCacheWarned = true
             System.err.println(
@@ -280,7 +257,7 @@ object Bench {
       val samples = (1 to (1 + warmRuns.getOrElse(0))).map { _ =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
+                 catch { case NonFatal(_) => false }
         val el = (System.nanoTime() - t0) / 1e9
         reap()
         if (ok) el else Double.PositiveInfinity
@@ -304,10 +281,9 @@ object Bench {
       // reap() above runs DETERMINISTICALLY after every repeat — so the
       // last repeat's state is already gone before the next query.
       // clearCache() first — defensive: no operator registers a
-      // DataFrame cache today, but if one ever does (Iterate.pin's
-      // rejected cache form, a future setup), dropping only RDD blocks
-      // would leave stale CacheManager entries shadowing later
-      // identical plans.
+      // DataFrame cache today, but if one ever does (a future setup),
+      // dropping only RDD blocks would leave stale CacheManager entries
+      // shadowing later identical plans.
       // BLOCKING unpersist + a GC: the async form left an iterative
       // query's blocks/broadcasts alive into its successor (r7: q65 ran
       // 0.65 s isolated but 30-50 s when it followed q63's ten
@@ -372,7 +348,7 @@ object Bench {
           QueryRun(n, s, l, st)
         })
       else None
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] fork failed: ${e.getMessage}")
       None
     }
@@ -483,9 +459,9 @@ object Bench {
       val cpusKey = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
       for (f <- Seq("BENCH_FULL.json", s"BENCH_FULL_c$cpusKey.json"))
         try Files.writeString(Paths.get(f), payload)
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
     }
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsShort,"sf":"$sfDir"}""")
-    try SparkSession.getActiveSession.foreach(_.stop()) catch { case _: Throwable => () }
+    try SparkSession.getActiveSession.foreach(_.stop()) catch { case NonFatal(_) => () }
   }
 }

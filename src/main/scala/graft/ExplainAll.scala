@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Dev tool: dump `.explain("formatted")` of declared queries to one
   * file per query — the plans/rNN before/after capture loop, and the
@@ -20,15 +20,7 @@ object ExplainAll {
       case Some(list) => list.split(",").toSeq.map(_.trim)
       case None => SparkEntry.queries.keys.toSeq.sorted
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores(8))
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       try {
@@ -36,7 +28,7 @@ object ExplainAll {
         // swallowed OOM/interrupt and then captured plans against
         // missing setup state with no diagnostic
         try SparkEntry.setups.get(n).foreach(_(spark, sfDir))
-        catch { case scala.util.control.NonFatal(t) =>
+        catch { case NonFatal(t) =>
           System.err.println(s"[explainall] $n setup FAILED: $t")
         }
         val df = SparkEntry.queries(n)(spark, sfDir)
@@ -45,7 +37,7 @@ object ExplainAll {
         Files.writeString(outDir.resolve(s"$n.txt"), plan)
         val ex = "Exchange".r.findAllIn(plan).size
         System.err.println(f"[explainall] $n%-28s exchanges=$ex")
-      } catch { case t: Throwable =>
+      } catch { case NonFatal(t) =>
         System.err.println(s"[explainall] $n FAILED: $t")
       }
       // iterative constructions checkpoint; drop their blocks

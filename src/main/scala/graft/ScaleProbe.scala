@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 
 /** Dev tool (round 15): decompose WHERE wall-clock goes for a query at
   * the session's core count — task/stage/job counts, summed executor
@@ -26,6 +27,10 @@ import java.util.concurrent.atomic.AtomicLong
   * a task is blocking (fetch wait, spill I/O, lock contention, GC inside
   * the task thread is jvmGcTime); per-sample lines keep cold (sample 1)
   * and warm states separate because the driver channel times cold.
+  *
+  * Besides registry names, `v186_c<N>` runs q186's HITS at roll cadence
+  * N (the open cold bisect of its cadence). A conf A/B passes the conf
+  * as a `-Dspark.*` JVM system property, which SparkConf reads.
   */
 object ScaleProbe {
   private class Acc extends SparkListener {
@@ -98,25 +103,14 @@ object ScaleProbe {
     // in that state (fresh-JVM cold runs are core-count-neutral)
     val prelude = args.lift(3).filter(_.startsWith("prelude="))
       .map(_.stripPrefix("prelude=").split(",").toSeq).getOrElse(Nil)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    // arbitrary A/B conf injection: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
+    val cpus = GraftSession.envCores(32)
+    val spark = GraftSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)
 
     def reap(): Unit = {
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
+      try spark.catalog.clearCache() catch { case NonFatal(_) => () }
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       System.gc()
@@ -125,51 +119,32 @@ object ScaleProbe {
     for (p <- prelude) {
       try { SparkEntry.setups.get(p).foreach(_(spark, sfDir))
             SparkEntry.queries(p)(spark, sfDir).count() }
-      catch { case _: Throwable => () }
+      catch { case NonFatal(t) =>
+        System.err.println(s"[scaleprobe] prelude $p failed: $t")
+      }
       reap()
     }
     println(s"# ScaleProbe cores=$cpus sf=$sfDir reps=$reps prelude=${prelude.size}")
     println("query\tsample\twall_s\tjobs\tstages\ttasks\trun_s\tcpu_s\tgc_s" +
       "\tdeser_s\tfetch_s\tspill_mem_mb\tspill_disk_mb\tshuf_r_mb\tshuf_w_mb" +
       "\tshufw_s\tpeak_mem_mb\tidle_s\tjobcov_s\tdrivergap_s")
-    // Flag-variant builders for the VERDICT r14 item-1 bisect: names of
-    // the form v{63|94|149}_c<cadence>_sj<0|1> run the PageRank forms
-    // with explicit roll cadence / setupJoin, under the same chunk-state
-    // cold protocol the driver channel times. Registry names pass
-    // through untouched.
-    val vRe = "v(63|94|149)_c(\\d+)_sj([01])".r
     // hits cadence arms: v186_c<N>
     val hRe = "v186_c(\\d+)".r
-    def resolve(name: String): (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame = name match {
-      case vRe(q, c, sj) => (s, d) => {
-        import graft.operators.{CoPurchaseGraph, PageRank}
-        import org.apache.spark.sql.functions.col
-        val edges = CoPurchaseGraph.fromOrders(graft.sources.Tables.lineitem(s, d))
-        val (cad, setup) = (c.toInt, sj == "1")
-        q match {
-          case "63" => PageRank.runImpl(CoPurchaseGraph.symmetrize(edges),
-            10, 0.85, PageRank.BroadcastMaxNodes, cad, setup)
-          case "94" => PageRank.runDirectedImpl(edges, 10, 0.85,
-            PageRank.BroadcastMaxNodes, cad, setup)
-          case _ => PageRank.personalizedImpl(edges,
-            graft.sources.Tables.tableRaw(s, d, "part")
-              .where(col("p_partkey") < 5)
-              .select(col("p_partkey").as("node")),
-            10, 0.85, PageRank.BroadcastMaxNodes, cad, setup)
-        }
+    def resolve(name: String): (SparkSession, String) => DataFrame =
+      name match {
+        case hRe(c) => (s, d) =>
+          graft.operators.GraphMetrics.hitsImpl(
+            graft.operators.CoPurchaseGraph.fromOrders(
+              graft.sources.Tables.lineitem(s, d)), 5,
+            graft.operators.PageRank.BroadcastMaxNodes, c.toInt)
+        case n => SparkEntry.queries(n)
       }
-      case hRe(c) => (s, d) =>
-        graft.operators.GraphMetrics.hitsImpl(
-          graft.operators.CoPurchaseGraph.fromOrders(
-            graft.sources.Tables.lineitem(s, d)), 5,
-          graft.operators.PageRank.BroadcastMaxNodes, c.toInt)
-      case n => SparkEntry.queries(n)
-    }
     for (name <- names) {
       val fn = resolve(name)
       try SparkEntry.setups.get(name).foreach(_(spark, sfDir))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(t) =>
+        System.err.println(s"[scaleprobe] $name setup failed: $t")
+      }
       for (i <- 1 to reps) {
         acc.reset()
         val t0 = System.nanoTime()
@@ -177,7 +152,7 @@ object ScaleProbe {
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(700) // let the async listener bus drain
         val run = acc.runMs.get / 1e3
-        val idle = wall * cpus.toInt - run
+        val idle = wall * cpus - run
         println(f"$name\t$i\t$wall%.2f\t${acc.jobs}\t${acc.stages}\t" +
           f"${acc.tasks.get}\t$run%.1f\t${acc.cpuMs.get / 1e3}%.1f\t" +
           f"${acc.gcMs.get / 1e3}%.1f\t${acc.deserMs.get / 1e3}%.1f\t" +

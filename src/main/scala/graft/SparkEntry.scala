@@ -53,7 +53,7 @@ object SparkEntry {
     * Un-gated serve queries (q37/q43/q92) keep their fixed small nProbe:
     * their contracts are structural, and fixed-nProbe serving is the
     * trade a deployment tunes per its own recall target
-    * (graft.IvfRecallProbe prints the table). */
+    * (SCALE.md, round 10, "Recall contract at the sf dirs"). */
   private def gateProbes(s: SparkSession, d: String): Int =
     math.ceil(0.75 * IvfIndexStore.nCells(s, d)).toInt
 
@@ -1063,8 +1063,8 @@ object SparkEntry {
     // embeddings are near-uniform (no cluster structure), the worst case
     // for IVF recall, so the fraction is what holds the floor here;
     // structured corpora need far less (the 10× replica corpus measured
-    // 0.95 recall at 12/141 probes — graft.IvfScaleProbe). Gates sit
-    // directly under graft.IvfRecallProbe's measured values at that
+    // 0.95 recall at 12/141 probes — SCALE.md round 10). Gates sit
+    // directly under the measured values at that
     // fraction: mean 0.975/0.965/0.935, min 0.8/0.9/0.8 at
     // sf0.01/sf0.001/sf0.1 — deterministic under the seeded KMeans,
     // so a half-broken probe can't hide below a loose floor (round-2

@@ -32,17 +32,13 @@ object AlsCf {
     *
     * @param ratings (user:int-safe, item:int-safe, rating:double)
     * @param margin  contract: rmse_als < margin · rmse_baseline
+    *
+    * MLlib's default block count (10) is kept: other counts measured a
+    * wash or worse at sf0.1 (SCALE.md, round 15, "ALS (q114)").
     */
-  /** @param numBlocks ALS user/item block count; ≤ 0 keeps MLlib's
-    *                   default (10). Blocks only repartition the solve —
-    *                   every output field here (counts + the boolean
-    *                   margin contract) is block-count-invariant by
-    *                   construction (the digest exists precisely because
-    *                   float reduction order is not). Round-15 probe
-    *                   knob, VERDICT r14 item 3. */
   def fitEval(ratings: DataFrame, seed: Long = 42L, rank: Int = 8,
               maxIter: Int = 8, reg: Double = 0.1,
-              margin: Double = 0.5, numBlocks: Int = -1): DataFrame = {
+              margin: Double = 0.5): DataFrame = {
     val bucket = pmod(graft.functions.TextFunctions.hash60(
       concat_ws(":", lit("als"), col("user").cast("string"),
         col("item").cast("string"))), lit(100L))
@@ -54,7 +50,6 @@ object AlsCf {
     val als = new ALS().setRank(rank).setMaxIter(maxIter).setRegParam(reg)
       .setSeed(seed).setUserCol("user").setItemCol("item")
       .setRatingCol("rating").setColdStartStrategy("drop")
-    if (numBlocks > 0) als.setNumBlocks(numBlocks)
     val model = als.fit(train)
     val pred = model.transform(test)
     val rmseAls = pred.agg(

@@ -229,79 +229,30 @@ object CoPurchaseGraph {
     * window's partial WindowGroupLimit caps what that one exchange
     * carries.
     *
+    * Measured and rejected against this form (SCALE.md): per-user heaps
+    * instead of the rank window (round 12, "the q165 heap-vs-sort
+    * trade"), a checkpointed `ui` (round 13, "q165's monotonic in-JVM
+    * growth") and norms attached after the pair fold (round 15, "q165
+    * late-norms arm").
+    *
     * @return (user, neighbor, shared, cosine, rnk) — rnk 1..k */
   def userNeighbors(orders: DataFrame, lineitem: DataFrame, k: Int,
-                    maxUsers: Int = 200): DataFrame =
-    userNeighborsImpl(orders, lineitem, k, maxUsers, heapTopK = false)
-
-  /** [[userNeighbors]] with the per-user rank strategy selectable, for
-    * the round-12 heap-vs-sort A/B (UserKnnAbProbe): `heapTopK = true`
-    * ranks via [[graft.functions.expressions.TopKAggregate
-    * .perGroupTopKCarry]] (bounded per-user heaps, `shared` riding as
-    * cargo) instead of the row_number window. The window remains the
-    * shipped default — see SCALE.md's conversion-criterion entry for
-    * the measured decision.
-    *
-    * `checkpointUi` (round-13 decision, default OFF): `ui` feeds the
-    * norms aggregation AND both postings legs, and an earlier round
-    * materialized it with `localCheckpoint()` so it would compute once.
-    * ReuseExchange already dedupes the identical subtree within the one
-    * plan — measured steady state is the same 5–6 s either way at
-    * sf0.1 — and the checkpoint was the query's ONLY per-call session
-    * state: in a JVM that runs q165 back-to-back without a GC, the
-    * superseded checkpoint blocks accumulate (the ContextCleaner frees
-    * them only after a collection proves the driver handles dead) and
-    * every later store stalls 20–30 s per task inside SizeEstimator
-    * sampling walks — BENCH_ISOLATED_r12's 6.6→28.4→55.2 s monotonic
-    * repeat growth, reproduced and bisected by Q165RepeatProbe (see
-    * SCALE.md round-13). Stateless is strictly better here; the flag
-    * stays as the measurement record. */
-  private[graft] def userNeighborsImpl(orders: DataFrame,
-                                       lineitem: DataFrame, k: Int,
-                                       maxUsers: Int,
-                                       heapTopK: Boolean,
-                                       checkpointUi: Boolean = false,
-                                       lateNorms: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val uiBase = lineitem.select(col("l_orderkey").as("okey"),
+                    maxUsers: Int = 200): DataFrame = {
+    val ui = lineitem.select(col("l_orderkey").as("okey"),
         col("l_partkey").as("item"))
       .join(orders.select(col("o_orderkey").as("okey"),
         col("o_custkey").as("user")), Seq("okey"))
       .select(col("user"), col("item")).distinct()
-    val ui = if (checkpointUi) uiBase.localCheckpoint() else uiBase
     val norms = ui.groupBy("user").agg(count(lit(1)).as("n"))
     val light = ui.groupBy("item").agg(count(lit(1)).as("nu"))
       .where(col("nu") <= maxUsers).select("item")
-    // lateNorms (round-15 probe arm, guide §2.3 "shuffle fewer bytes"):
-    // the pair aggregation's exchange is the query's largest (every
-    // generated pair crosses it) and the norm columns ride it as 16 of
-    // ~40 bytes per row. The late form aggregates `shared` alone and
-    // re-attaches the norms AFTER the fold with two BROADCAST joins of
-    // the user-sized norm frame (map-side; the duplicated norm subtree
-    // is deduped by ReuseExchange). Values identical: min(n) over a
-    // group where n is functionally determined by the user key IS the
-    // joined value. Requires the norm frame to fit a broadcast —
-    // user-count-bounded, the [[PageRank.BroadcastMaxNodes]] class of
-    // deploy knob.
-    val pBase = ui.join(light, Seq("item"))
-    val p = if (lateNorms) pBase else pBase.join(norms, Seq("user"))
-    val pairedBase = p.as("a").join(p.as("b").hint("shuffle_hash"),
+    val p = ui.join(light, Seq("item")).join(norms, Seq("user"))
+    val pairs = p.as("a").join(p.as("b").hint("shuffle_hash"),
         col("a.item") === col("b.item"))
       .where(col("a.user") < col("b.user"))
-    val pairs =
-      if (lateNorms)
-        pairedBase
-          .groupBy(col("a.user").as("ua"), col("b.user").as("ub"))
-          .agg(count(lit(1)).as("shared"))
-          .join(broadcast(norms.select(col("user").as("ua"),
-            col("n").as("na"))), Seq("ua"))
-          .join(broadcast(norms.select(col("user").as("ub"),
-            col("n").as("nb"))), Seq("ub"))
-      else
-        pairedBase
-          .groupBy(col("a.user").as("ua"), col("b.user").as("ub"))
-          .agg(count(lit(1)).as("shared"),
-            min(col("a.n")).as("na"), min(col("b.n")).as("nb"))
+      .groupBy(col("a.user").as("ua"), col("b.user").as("ub"))
+      .agg(count(lit(1)).as("shared"),
+        min(col("a.n")).as("na"), min(col("b.n")).as("nb"))
     val scored = pairs.withColumn("cosine",
       round(col("shared").cast("double") /
         sqrt((col("na") * col("nb")).cast("double")), 6))
@@ -318,19 +269,12 @@ object CoPurchaseGraph {
           col("shared"), col("cosine")))).as("e"))
       .select(col("e.user"), col("e.neighbor"), col("e.shared"),
         col("e.cosine"))
-    if (heapTopK)
-      graft.functions.expressions.TopKAggregate
-        .perGroupTopKCarry(sym, "user", "neighbor", "cosine", k,
-          Seq("shared"))
-        .select(col("user"), col("neighbor"), col("shared"), col("cosine"),
-          col("rnk"))
-    else
-      sym
-        .withColumn("rnk", row_number().over(Window.partitionBy("user")
-          .orderBy(col("cosine").desc, col("neighbor"))))
-        .where(col("rnk") <= k)
-        .select(col("user"), col("neighbor"), col("shared"), col("cosine"),
-          col("rnk"))
+    sym
+      .withColumn("rnk", row_number().over(Window.partitionBy("user")
+        .orderBy(col("cosine").desc, col("neighbor"))))
+      .where(col("rnk") <= k)
+      .select(col("user"), col("neighbor"), col("shared"), col("cosine"),
+        col("rnk"))
   }
 
   /** Per-source max-normalized weight (reference `cf_candidates`

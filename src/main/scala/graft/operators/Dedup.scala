@@ -455,7 +455,7 @@ object Dedup {
     // checkpointed once; each round's join re-exchanges it on y (an AQE
     // checkpoint captures UnknownPartitioning, and the A/B-measured
     // verdict is that the AQE-coalesced re-exchange beats pinning at
-    // bench scale — see Iterate.pin). The frame is near-dup-sliver-
+    // bench scale — SCALE.md round 8). The frame is near-dup-sliver-
     // sized, so the per-round exchange is small regardless.
     val edges = pairs.select(col("a").as("x"), col("b").as("y"))
       .unionByName(pairs.select(col("b").as("x"), col("a").as("y")))

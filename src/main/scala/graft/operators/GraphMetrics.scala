@@ -86,28 +86,15 @@ object GraphMetrics {
     * running all `rounds`, since converged rounds are no-ops. The fixed
     * round budget keeps the operator oracle-replayable (the q94
     * unrolled pattern); `converged` reports whether the fixpoint was
-    * reached within it.
+    * reached within it. One peel per roll: fusing two peels into one
+    * roll measured slower (SCALE.md, round 15, "kcore (q127):
+    * pairwise-peel fusion measured and rejected").
     *
     * @param edges undirected (src, dst), src < dst, one row per edge
     * @return survivors: (node, deg) — degree within the surviving
     *         subgraph — plus constant `converged`.
     */
-  def kcore(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    kcoreImpl(edges, k, rounds, peelsPerRoll = 1)
-
-  /** [[kcore]] with the peel-fusion arm selectable (round-15 probe,
-    * VERDICT r14 item 6): `peelsPerRoll` peels run between
-    * materializations, so the fixpoint observation fires once per
-    * GROUP. Output-equivalent at any value: peeling is monotone and
-    * converged peels are no-ops, so the only divergence is that a
-    * group straddling the fixpoint runs no-op peels inside its fused
-    * plan (same survivor set; the rounds budget is consumed per PEEL
-    * either way). The cost question the probe answers: a fused second
-    * peel's input is unmaterialized and feeds 3 consumers (its degree
-    * aggregate + both semi-joins), so the restriction subtree
-    * re-executes ~3x per unmaterialized peel vs one saved roll. */
-  private[graft] def kcoreImpl(edges: DataFrame, k: Int, rounds: Int,
-                               peelsPerRoll: Int): DataFrame = {
+  def kcore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     // iterate on a SHRINKING edge frame: restricting the full sym edge
     // set against the survivor nodes every round costs the same per
     // round forever; filtering the previous round's alive edges makes
@@ -121,16 +108,12 @@ object GraphMetrics {
     var i = 0
     var fixed = false
     while (i < rounds && !fixed) {
-      val p = math.min(peelsPerRoll, rounds - i)
-      var next = alive
-      for (_ <- 1 to p) {
-        val keep = next.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .where(col("deg") >= k).select("node")
-        next = next
-          .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-      }
+      val keep = alive.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("deg"))
+        .where(col("deg") >= k).select("node")
+      val next = alive
+        .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
+        .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
       // the fixpoint probe rides the roll as an OBSERVED metric — the
       // separate count() used to re-scan the freshly checkpointed
       // edge frame every round (one extra edge-sized job per peel)
@@ -140,11 +123,10 @@ object GraphMetrics {
       val c = obs.get("edges").asInstanceOf[Long]
       // removing any node removes its edges, so an unchanged edge count
       // IS the fixpoint — remaining rounds would be no-ops (this is why
-      // early exit cannot change the fixed-round oracle's answer; a
-      // fused group detects it one group later at worst, via no-ops)
+      // early exit cannot change the fixed-round oracle's answer)
       fixed = c == edgeCount
       edgeCount = c
-      i += p
+      i += 1
     }
     // materialize once: the degree frame feeds both the output and the
     // convergence probe (and the loop's lineage ends here anyway)
@@ -186,7 +168,8 @@ object GraphMetrics {
     // re-exchanges it on src (AQE checkpoints capture UnknownPartitioning
     // — a build-time repartition would be discarded, so none is paid; the
     // AQE-coalesced re-exchange measured cheaper than pinning, see
-    // Iterate.pin), and on the broadcast-frontier path it never does
+    // SCALE.md round 8, "The pinned-partitioning belief was wrong"), and
+    // on the broadcast-frontier path it never does
     val sym = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint()
@@ -291,8 +274,9 @@ object GraphMetrics {
     * argmax arithmetic is integer/long-exact, so this is provable, not
     * a 6-dp argument; GraphMetricsSpec pins cross-form equality.
     *
-    * Round-14 measurement (GraphFuseProbe, same-JVM alternating A/B at
-    * sf0.1, 20 000-row outputs IDENTICAL): join-form med 6.24 s /
+    * Round-14 measurement (SCALE.md "Round-14 ... iterative-loop round
+    * fusion": same-JVM alternating A/B at sf0.1, 20 000-row outputs
+    * IDENTICAL): join-form med 6.24 s /
     * min 5.14 vs fused med 3.90 / min 3.33 — ~1.6×, the largest win of
     * the fusion family, because each round deletes a join AND its roll.
     * At 100 TB the deleted per-round join is a node-frame shuffle (or
@@ -305,7 +289,7 @@ object GraphMetrics {
     // on src per round — an AQE checkpoint captures UnknownPartitioning,
     // so a build-time repartition buys nothing and is not paid; the
     // AQE-coalesced re-exchange measured cheaper than the pinned forms
-    // (Iterate.pin)
+    // (SCALE.md round 8, "The pinned-partitioning belief was wrong")
     val sym = edges.select(col("src"), col("dst"), col("weight"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"),
         col("weight")))
@@ -446,7 +430,8 @@ object GraphMetrics {
     * arithmetic is identical at any cadence. `rollEvery >= rounds`
     * runs the whole loop as one job (only the final materializations
     * remain — those frames are each consumed twice). Round-14
-    * measurement (GraphFuseProbe at sf0.1, outputs IDENTICAL): full
+    * measurement (SCALE.md round-14 fusion table, sf0.1, outputs
+    * IDENTICAL): full
     * fusion is NOT better (med 4.21 s at cadence 2 vs 4.36 at 10) —
     * the half-step broadcast chain serializes inside the job either
     * way — so the historical cadence 2 stays. */
@@ -458,8 +443,9 @@ object GraphMetrics {
     // key — but an AQE checkpoint captures UnknownPartitioning, so the
     // second materialization bought nothing: both half-steps re-exchange
     // the edge frame regardless, and the AQE-coalesced re-exchange
-    // measured cheaper than the partition-pinning forms; Iterate.pin
-    // documents that trade. shuffle_hash still keeps the joins
+    // measured cheaper than the partition-pinning forms; SCALE.md round
+    // 8, "The pinned-partitioning belief was wrong", documents that
+    // trade. shuffle_hash still keeps the joins
     // sort-free.)
     val e = edges.select(col("src"), col("dst"), col("weight"))
       .localCheckpoint()

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{count, lit}
 
 /** Bounded-state iteration helper. Bulk-iterative operators here
   * (PageRank, label propagation, BFS, k-core) truncate lineage with
@@ -21,7 +20,12 @@ import org.apache.spark.sql.functions.{count, lit}
   * Only ever pass frames that ARE localCheckpoint results as `prev`:
   * release() walks the plan for LogicalRDD leaves, and a derived frame
   * would surface (and release) upstream checkpoints still in use. A
-  * checkpointed frame's plan is exactly its own LogicalRDD leaf. */
+  * checkpointed frame's plan is exactly its own LogicalRDD leaf.
+  *
+  * Loop-invariant frames are checkpointed without a build-time
+  * repartition: under AQE a checkpoint captures UnknownPartitioning, and
+  * the partitioning-preserving pins measured slower locally (SCALE.md
+  * round 8, "The pinned-partitioning belief was wrong"). */
 object Iterate {
 
   /** Unpersist the materialized blocks behind a checkpointed frame. */
@@ -38,56 +42,4 @@ object Iterate {
     prev.foreach(release)
     cp
   }
-
-  /** Materialize a loop-INVARIANT frame pinned on `key`: repartition +
-    * eager localCheckpoint built with AQE momentarily OFF.
-    *
-    * Why: under AQE, `localCheckpoint` captures `UnknownPartitioning` —
-    * the adaptive plan's final partitioning is unresolved at capture
-    * time — so every per-round equi-join RE-EXCHANGED the checkpointed
-    * edge frame (verified empirically: `graft.PartProbe`; the
-    * pre-round-8 "pinned partition" comments were wrong at the
-    * physical-plan level). With AQE off for just the materializing
-    * action, the non-adaptive plan's `HashPartitioning(key)` is
-    * captured into the LogicalRDD, and downstream joins (planned with
-    * AQE back on) stream the frame in place: ONE exchange at fill time
-    * buys every round an exchange-free big side, with row-shaped
-    * checkpoint blocks.
-    *
-    * MEASURED VERDICT (quiet-window same-JVM alternating A/B,
-    * PrAbProbe, sf0.1 directed PageRank): the pins LOSE at bench
-    * scale — no-repartition checkpoint med 6.41 s < repartition+
-    * checkpoint 6.77 ≪ cache-pin ~10.7. With UnknownPartitioning AQE
-    * coalesces BOTH join sides to fewer partitions, worth more locally
-    * than the exchange a pin saves (and the cache form pays a columnar
-    * decode every round). So NO operator here uses pin by default; it
-    * exists, spec-gated, for cluster deployments where the per-round
-    * re-exchange is a NETWORK shuffle of the big frame and the trade
-    * flips — re-measure with the PrAbProbe protocol before adopting.
-    *
-    * Thread-safety: the AQE flip is a session-global read-modify-
-    * restore. Concurrent pin() calls are serialized on the session,
-    * but OTHER queries racing on the same session during the fill
-    * would plan without AQE — callers in a parallel driver should pin
-    * from a dedicated session.
-    *
-    * The row count rides the materializing action as an observed
-    * metric (zero extra jobs). Use ONLY for static frames consumed by
-    * every round; rolling per-round state stays on [[roll]].
-    *
-    * @return the pinned frame and its row count */
-  def pin(df: DataFrame, key: Column): (DataFrame, Long) =
-    df.sparkSession.synchronized {
-      val spark = df.sparkSession
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val aqe = spark.conf.get(aqeKey, "true")
-      spark.conf.set(aqeKey, "false")
-      try {
-        val obs = Observation()
-        val p = df.repartition(key)
-          .observe(obs, count(lit(1)).as("n"))
-          .localCheckpoint()
-        (p, obs.get("n").asInstanceOf[Long])
-      } finally spark.conf.set(aqeKey, aqe)
-    }
 }

@@ -38,9 +38,10 @@ import scala.jdk.CollectionConverters._
 object Ivf {
 
   /** Default cell count for an index of `n` vectors: `max(16, ⌈√n⌉)` —
-    * the classic IVF sizing, MEASURED rather than asserted (round-9
-    * `graft.IvfScaleProbe` on the 10× corpus, |C| = 20k, full-width
-    * knnJoin serve, recall truth = exact top-10 on a 500-query sample):
+    * the classic IVF sizing, MEASURED rather than asserted (round 9,
+    * SCALE.md "The IVF `nlist ∝ N` rule": the 10× corpus, |C| = 20k,
+    * full-width knnJoin serve, recall truth = exact top-10 on a
+    * 500-query sample):
     *
     *   nCells 16 (old fixed constant): serve 14.09 s, recall@10 0.9962
     *   nCells 50 (≈ √10·16):           serve  3.72 s, recall@10 0.9630

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Observation}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Weighted PageRank over the co-purchase graph — graph-global item
@@ -40,7 +39,8 @@ object PageRank {
     * memory — and broadcasting it makes the per-round join MAP-SIDE,
     * deleting the edge-frame exchange that otherwise re-runs every
     * round (an AQE checkpoint captures UnknownPartitioning, so the
-    * edge side re-exchanges under shuffle_hash; see [[Iterate.pin]]).
+    * edge side re-exchanges under shuffle_hash; SCALE.md round 8, "The
+    * pinned-partitioning belief was wrong").
     * The only per-round shuffle left is the partially-aggregated
     * groupBy(dst), whose map-side combine bounds it at
     * partitions × |V| rows. Above the bound, the shuffle-hash path
@@ -76,9 +76,9 @@ object PageRank {
 
   /** Shipped roll cadence for [[runDirected]]: rounds between rolls
     * read the dangling mass from an in-plan one-row broadcast instead
-    * of an observed-metric literal. Round-14 measurement
-    * (GraphFuseProbe, 3-arm same-JVM alternating A/B at sf0.1, two
-    * independent windows, outputs IDENTICAL in all arms): cadence 2
+    * of an observed-metric literal. Round-14 measurement (SCALE.md
+    * round-14 fusion table: 3-arm same-JVM alternating A/B at sf0.1,
+    * two independent windows, outputs IDENTICAL in all arms): cadence 2
     * beats 1 on directed PR in both windows (med 7.18→6.37 / 7.23→6.99
     * s, min 7.00→6.15 / 7.00→6.71) — half the roll actions and
     * checkpoint materializations for one extra node-sized one-row
@@ -95,62 +95,40 @@ object PageRank {
     * warm-alternation "small win / wash" (med 7.61→7.18); but the
     * driver contract channel times COLD, and there the fused (cadence
     * 2) q149 plans lose decisively: ScaleProbe under the exact
-    * chunk-prelude cold protocol at 32 cores measured c2+setupJoin
-    * 17.2 s cold (warm 8.9/10.7) vs c1+setupJoin 10.7 cold (warm
-    * 9.2/5.9); the driver's own quiet 32-core row regressed 10.05 →
-    * 15.15 s under cadence 2. Cadence 1 is exactly the r13 shape
+    * chunk-prelude cold protocol at 32 cores measured c2 17.2 s cold
+    * (warm 8.9/10.7) vs c1 10.7 cold (warm 9.2/5.9); the driver's own
+    * quiet 32-core row regressed 10.05 → 15.15 s under cadence 2. Cadence 1 is exactly the r13 shape
     * (every round's dangling mass an observed-metric literal). */
   private[graft] val RollEveryPersonalized: Int = 1
 
-  /** Round-14 setup restructure flag (shipped value measured by
-    * GraphFuseProbe's setup arms): `true` builds the transition
-    * fractions by per-src partial aggregation + an equi-join back onto
-    * the edge frame instead of the historical `sum over
-    * Window.partitionBy(src)`. The weights are integral counts, so the
-    * window sum and the groupBy sum are the SAME exact long and frac
-    * is bit-identical — but the join form never sorts the edge frame:
-    * AQE broadcasts the node-sized totals under its threshold, making
-    * the attach MAP-SIDE (zero edge exchange; the window always pays
-    * one edge exchange + a full per-partition sort), and above the
-    * threshold the totals meet the edges in a regular shuffled join
-    * (deployments with >10 MB node frames size
-    * `spark.sql.autoBroadcastJoinThreshold` accordingly). `true` also
-    * makes the directed/personalized node-frame build read the frac
-    * CHECKPOINT instead of the raw edge plan — the union arms were
-    * silently re-executing the entire edge build a second time per
-    * query (same rows either way; the flag exists so the A/B record
-    * stays runnable).
+  /** Transition fractions (src, dst, frac): per-src partial
+    * aggregation + an equi-join back onto the edge frame. The weights
+    * are integral counts, so the sum is an exact long and frac is
+    * bit-identical to the historical `sum over Window.partitionBy(src)`
+    * — but the join never sorts the edge frame: AQE broadcasts the
+    * node-sized totals under its threshold, making the attach MAP-SIDE
+    * (zero edge exchange; the window always paid one edge exchange + a
+    * full per-partition sort), and above the threshold the totals meet
+    * the edges in a regular shuffled join (deployments with >10 MB node
+    * frames size `spark.sql.autoBroadcastJoinThreshold` accordingly).
+    * The directed/personalized node frames read this CHECKPOINT instead
+    * of the raw edge plan, so the edge build runs once per query.
+    * Round-14 measurement (same-JVM alternating, 5 reps, outputs
+    * IDENTICAL): directed PR med 6.91→4.99 s, personalized med
+    * 6.28→5.00, undirected [[run]] a local wash adopted for the
+    * structural term (SCALE.md round-14 fusion section).
     *
-    * Round-14 measurement (GraphFuseProbe setup arms, same-JVM
-    * alternating, 5 reps, outputs IDENTICAL): directed PR med
-    * 6.91→4.99 s (min 6.00→4.85), personalized med 6.28→5.00 (min
-    * 6.20→4.54) — the deleted second edge-build execution dominates;
-    * undirected [[run]] (whose node frame already read the checkpoint)
-    * is a local wash (med 4.80 vs 4.98, min 4.71 vs 4.73) and adopts
-    * the join for the structural term alone: under the broadcast
-    * threshold the edge frame is never exchanged OR sorted at setup,
-    * where the window always sorts it (the BM25 rule — the exchange
-    * deletion is the 100 TB term, not the local one). */
-  private[graft] val SetupJoin: Boolean = true
-
-  /** Transition fractions (src, dst, frac) — see [[SetupJoin]].
-    *
-    * DETERMINISM REQUIREMENT (ADVICE r14): the join form self-joins the
+    * DETERMINISM REQUIREMENT (ADVICE r14): the join self-joins the
     * raw `edges` plan, so the edge subtree is evaluated twice inside one
     * query (probe side + totals side). Every in-tree edge build is
     * deterministic (pure relational derivations of the parquet scans),
     * so both evaluations see the same rows and fracs sum to 1 per src.
     * A NONDETERMINISTIC upstream plan (sampling, rand-derived weights)
     * would break that invariant — callers must localCheckpoint such an
-    * input once before passing it here (the window form was single-pass
-    * and immune, which is why this is documented at the boundary). */
-  private def fracOf(edges: DataFrame, setupJoin: Boolean): DataFrame =
-    (if (setupJoin)
-       edges.join(edges.groupBy("src").agg(sum(col("weight")).as("__w")),
-         Seq("src"))
-     else
-       edges.withColumn("__w",
-         sum(col("weight")).over(Window.partitionBy("src"))))
+    * input once before passing it here. */
+  private def fracOf(edges: DataFrame): DataFrame =
+    edges.join(edges.groupBy("src").agg(sum(col("weight")).as("__w")),
+        Seq("src"))
       .select(col("src"), col("dst"),
         (col("weight").cast("double") / col("__w")).as("frac"))
       .localCheckpoint()
@@ -164,16 +142,15 @@ object PageRank {
     * `RollEvery` rounds. The cadence is a pure plan/scheduling knob —
     * the arithmetic per round is identical at ANY cadence, so outputs
     * match to the last ulp (PageRankSpec pins equality across
-    * cadences). Round-14 measurement (GraphFuseProbe, same-JVM
-    * alternating A/B at sf0.1, outputs IDENTICAL): cadence 10 (whole
-    * loop in one job) is NOT better than 4 (med 7.35 vs 7.54 s) — the
+    * cadences). Round-14 measurement (SCALE.md round-14 fusion table,
+    * same-JVM alternating A/B at sf0.1, outputs IDENTICAL): cadence 10
+    * (whole loop in one job) is NOT better than 4 (med 7.35 vs 7.54 s) — the
     * broadcast chain serializes inside the job either way — so the
     * historical 4 stays. */
   private[graft] def runImpl(edges: DataFrame, iterations: Int,
                              damping: Double, broadcastMaxNodes: Long,
-                             rollEvery: Int,
-                             setupJoin: Boolean = SetupJoin): DataFrame = {
-    val frac = fracOf(edges, setupJoin)
+                             rollEvery: Int): DataFrame = {
+    val frac = fracOf(edges)
     val nodes = frac.select(col("src").as("node")).distinct()
     val n = nodes.count()
     val base = (1.0 - damping) / n
@@ -190,7 +167,7 @@ object PageRank {
       // on the shuffle path the checkpointed frac re-exchanges on src
       // each round — under AQE a localCheckpoint captures
       // UnknownPartitioning, so the window's src partitioning is NOT
-      // carried (see Iterate.pin; the partitioning-preserving pin forms
+      // carried (SCALE.md round 8; the partitioning-preserving pin forms
       // were A/B-measured SLOWER here because AQE coalesces this
       // re-exchange). The broadcast path deletes that exchange outright
       ranks = frac.join(rankSide(ranks),
@@ -217,8 +194,8 @@ object PageRank {
     * node/edge frames DO re-exchange per round — AQE's checkpoint
     * capture is UnknownPartitioning — and the A/B-measured verdict is
     * that the AQE-coalesced re-exchange is cheaper at bench scale than
-    * either partitioning-preserving pin form; see [[Iterate.pin]] for
-    * the cluster-scale alternative and the numbers.)
+    * either partitioning-preserving pin form; SCALE.md round 8, "The
+    * pinned-partitioning belief was wrong", has the numbers.)
     *
     * The dangling mass is harvested as an OBSERVED metric of the
     * per-round checkpoint (`Iterate.roll`) rather than a standalone
@@ -247,22 +224,21 @@ object PageRank {
   private[graft] def runDirectedImpl(edges: DataFrame, iterations: Int,
                                      damping: Double,
                                      broadcastMaxNodes: Long,
-                                     rollEvery: Int,
-                                     setupJoin: Boolean = SetupJoin): DataFrame = {
-    val frac = fracOf(edges, setupJoin)
-    // setupJoin: the node frame derives from the frac CHECKPOINT (frac
-    // has one row per edge, so its src/dst sets are the edge frame's) —
-    // the raw-plan union arms re-executed the whole edge build
-    val eSrc = if (setupJoin) frac else edges
+                                     rollEvery: Int): DataFrame = {
+    val frac = fracOf(edges)
+    // the node frame derives from the frac CHECKPOINT (frac has one row
+    // per edge, so its src/dst sets are the edge frame's) — raw-plan
+    // union arms would re-execute the whole edge build
     val srcs = frac.select(col("src").as("node"), lit(true).as("__has")).distinct()
     val nObs = Observation()
-    val nodes = eSrc.select(col("src").as("node"))
-      .unionByName(eSrc.select(col("dst").as("node")))
+    val nodes = frac.select(col("src").as("node"))
+      .unionByName(frac.select(col("dst").as("node")))
       .distinct()
       .join(srcs, Seq("node"), "left")
       .select(col("node"), col("__has").isNull.as("dang"))
       // no build-time repartition: an AQE checkpoint would discard the
-      // partitioning anyway (Iterate.pin); n rides the checkpoint action
+      // partitioning anyway (SCALE.md round 8); n rides the checkpoint
+      // action
       .observe(nObs, count(lit(1)).as("n"))
       .localCheckpoint()
     val n = nObs.get("n").asInstanceOf[Long]
@@ -290,7 +266,7 @@ object PageRank {
     for (i <- 1 to iterations) {
       // same discipline as [[run]]: hash join (never sort-merge); on
       // the shuffle path the per-round frac re-exchange is
-      // AQE-coalesced, measured cheaper than pinning ([[Iterate.pin]])
+      // AQE-coalesced, measured cheaper than pinning (SCALE.md round 8)
       val contrib = frac.join(rankSide(ranks.select("node", "rank")),
           frac("src") === col("node"))
         .groupBy(frac("dst").as("node"))
@@ -355,16 +331,14 @@ object PageRank {
   private[graft] def personalizedImpl(edges: DataFrame, seeds: DataFrame,
                                       iterations: Int, damping: Double,
                                       broadcastMaxNodes: Long,
-                                      rollEvery: Int,
-                                      setupJoin: Boolean = SetupJoin): DataFrame = {
-    val frac = fracOf(edges, setupJoin)
-    // see [[runDirectedImpl]]: under setupJoin the union arms read the
-    // frac checkpoint instead of re-executing the edge build
-    val eSrc = if (setupJoin) frac else edges
+                                      rollEvery: Int): DataFrame = {
+    val frac = fracOf(edges)
+    // see [[runDirectedImpl]]: the union arms read the frac checkpoint
+    // instead of re-executing the edge build
     val srcs = frac.select(col("src").as("node"), lit(true).as("__has")).distinct()
     val nObs = Observation()
-    val nodes = eSrc.select(col("src").as("node"))
-      .unionByName(eSrc.select(col("dst").as("node")))
+    val nodes = frac.select(col("src").as("node"))
+      .unionByName(frac.select(col("dst").as("node")))
       .distinct()
       .join(srcs, Seq("node"), "left")
       .join(seeds.select(col("node"), lit(true).as("__seed")).distinct(),

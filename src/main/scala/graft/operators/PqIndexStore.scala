@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * JVM serves from the persisted artifact without refitting or
   * re-encoding anything. Codebooks persist as a tiny parquet
   * (m·ksub rows of dsub doubles — KB), codes as parquet partitioned by
-  * IVF cell so probed serving keeps its partition pruning.
+  * IVF cell so probed serving keeps its partition pruning. The codes are
+  * written and read through [[Ivf.writeIndex]] / [[Ivf.loadIndex]], so
+  * they share the IVF index's per-path listing memo: a repeated serve
+  * lists nothing, and no session is held by the store.
   */
 object PqIndexStore {
 
@@ -21,12 +24,15 @@ object PqIndexStore {
 
   private def root(sfDir: String): String =
     s"${IvfIndexStore.root(sfDir)}/$LayoutVersion"
-  private def codesPath(sfDir: String) = s"${root(sfDir)}/codes"
+  private[graft] def codesPath(sfDir: String) = s"${root(sfDir)}/codes"
   private def booksPath(sfDir: String) = s"${root(sfDir)}/books"
   private def donePath(sfDir: String) = s"${root(sfDir)}/_BUILT"
 
   /** Fit codebooks on the corpus, encode the (cell-assigned) IVF index,
-    * persist both. No-op when already built. */
+    * persist both. No-op when already built. (The _BUILT marker +
+    * `synchronized` guard are single-JVM/local-FS scoped — the
+    * build-coordination story for a shared cluster FS would be a
+    * Hadoop-FS atomic-rename marker, out of scope for local mode.) */
   def ensure(spark: SparkSession, sfDir: String): Unit = synchronized {
     if (new java.io.File(donePath(sfDir)).exists()) return
     IvfIndexStore.ensure(spark, sfDir)
@@ -37,9 +43,8 @@ object PqIndexStore {
       book.zipWithIndex.map { case (center, c) => (j, c, center.toSeq) }
     }.toSeq.toDF("j", "c", "center")
       .coalesce(1).write.mode("overwrite").parquet(booksPath(sfDir))
-    Pq.encode(pq, IvfIndexStore.indexFrame(spark, sfDir)
-        .select("vec_id", "embedding", "cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(codesPath(sfDir))
+    Ivf.writeIndex(Pq.encode(pq, IvfIndexStore.indexFrame(spark, sfDir)
+        .select("vec_id", "embedding", "cell")), codesPath(sfDir))
     new java.io.File(donePath(sfDir)).createNewFile()
   }
 
@@ -62,21 +67,10 @@ object PqIndexStore {
       Pq.PqModel(Dim, m, ksub, books)
     })
 
-  // Keyed by (session, path): a DataFrame is bound to the session that
-  // created it, so a second SparkSession in the same process must not
-  // receive a relation tied to a possibly-stopped session. (The _BUILT
-  // marker + `synchronized` guard are likewise single-JVM/local-FS
-  // scoped — the build-coordination story for a shared cluster FS would
-  // be a Hadoop-FS atomic-rename marker, out of scope for local mode.)
-  private val codesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** The persisted codes as a DataFrame (memoized relation, cell
-    * partition column intact). */
+  /** The persisted codes as a DataFrame (cell partition column intact). */
   def codesFrame(spark: SparkSession, sfDir: String): DataFrame = {
     ensure(spark, sfDir)
-    codesCache.getOrElseUpdate((spark, codesPath(sfDir)),
-      spark.read.parquet(codesPath(sfDir)))
+    Ivf.loadIndex(spark, codesPath(sfDir))
   }
 
   /** Refined PQ serve from the persisted artifacts. */

@@ -78,24 +78,39 @@ class CoPurchaseGraphSpec extends SparkTestBase {
     assert(!got.keySet.exists(_._1 == 3L), "pruned item must not pair user 3")
   }
 
-  test("userNeighbors heap variant == window variant (round-12 A/B " +
-    "candidate): same rows, same ranks, shared rides the heap as cargo") {
+  test("userNeighbors == a plain-Scala cosine top-k, ranks included") {
     import spark.implicits._
-    // several users with overlapping item sets so ranks 1..k differ
+    // several users with overlapping item sets so ranks 1..k differ;
+    // maxUsers = 6 prunes the items most users bought from pairing
     val rows = for {
       u <- 1L to 8L; i <- 1L to 12L if (u + i) % 3 != 0 || i <= u
     } yield (u * 100 + i, u, i)
+    val (k, maxUsers) = (3, 6)
     val orders = rows.map(r => (r._1, r._2)).distinct.toDF("o_orderkey", "o_custkey")
     val lineitem = rows.map(r => (r._1, r._3)).toDF("l_orderkey", "l_partkey")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("user", "rnk").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
-          r.getInt(4))).toSeq
-    val win = canon(CoPurchaseGraph.userNeighborsImpl(orders, lineitem, 3,
-      200, heapTopK = false))
-    val heap = canon(CoPurchaseGraph.userNeighborsImpl(orders, lineitem, 3,
-      200, heapTopK = true))
-    assert(win.nonEmpty && win == heap)
+    val got = CoPurchaseGraph.userNeighbors(orders, lineitem, k, maxUsers)
+      .orderBy("user", "rnk").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
+        r.getInt(4))).toSeq
+    // reference: cosine over full item sets, pairs only through items
+    // with <= maxUsers buyers, rounded to 6 dp, ranked by (cosine desc,
+    // neighbor asc)
+    val items = rows.groupBy(_._2).map { case (u, rs) => u -> rs.map(_._3).toSet }
+    val buyers = rows.groupBy(_._3).map { case (i, rs) => i -> rs.map(_._2).toSet }
+    val light = buyers.collect { case (i, us) if us.size <= maxUsers => i }.toSet
+    assert(light.size < buyers.size, "fixture must exercise the cap")
+    val expect = items.keys.toSeq.sorted.flatMap { u =>
+      items.keys.toSeq.filter(_ != u).flatMap { v =>
+        val shared = (items(u) & items(v) & light).size.toLong
+        if (shared == 0) None
+        else Some((v, shared, BigDecimal(shared /
+          math.sqrt((items(u).size.toLong * items(v).size).toDouble))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+      }.sortBy { case (v, _, c) => (-c, v) }.take(k).zipWithIndex
+        .map { case ((v, sh, c), r) => (u, v, sh, c, r + 1) }
+    }
+    assert(expect.map(_._5).max == k, "fixture must fill every rank")
+    assert(got == expect)
   }
 
   test("frequentTriples: canonical once-per-basket triples, jumbo cap") {

@@ -146,7 +146,7 @@ class DedupSpec extends SparkTestBase {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     def newIds() =
       spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-    // Q165RepeatProbe-style no-reap repeats (VERDICT r13 item 3): a
+    // no-reap repeats, as in SCALE.md round 13 (VERDICT r13 item 3): a
     // serving loop that releases between iterations holds at most ONE
     // call's blocks at any moment — state is bounded by contract, not
     // by GC timing. Each call's result is consumed before release.

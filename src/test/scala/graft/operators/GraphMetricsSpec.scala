@@ -164,7 +164,7 @@ class GraphMetricsSpec extends SparkTestBase {
     // BroadcastMaxNodes, shuffle-hash above) must be a pure plan
     // choice: labelProp/bfsHops are integer-exact and hits rounds to
     // 6 dp inside the operator, so forcing each mode must give the
-    // SAME rows. Mirrors the sf0.1 gate in graft.GmBcProbe.
+    // SAME rows. Mirrors the sf0.1 A/B in SCALE.md round 8.
     val edges = ((0L to 40L).map(i => (i, (i * 7 + 3) % 41, 1L + i % 3)) ++
       (0L to 40L).map(i => (i, (i + 1) % 41, 1L)))
       .filter(e => e._1 != e._2).toDF("src", "dst", "weight")
@@ -230,15 +230,6 @@ class GraphMetricsSpec extends SparkTestBase {
     assert(rows(GraphMetrics.bfsHops(path, seeds, 6, b, consolidateEvery = 2)) ==
       rows(GraphMetrics.bfsHops(path, seeds, 6, b, consolidateEvery = 100)),
       "bfs consolidation diverged")
-    // kcore pairwise peel (probe arm): monotone no-op argument — the
-    // survivor set, degrees, and converged flag must match exactly,
-    // including on a graph that converges mid-pair (the undirected
-    // pendant chain peels over several rounds)
-    val kedges = (Seq((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L), (2L, 4L),
-      (3L, 4L)) ++ (4L until 9L).map(i => (i, i + 1))).toDF("src", "dst")
-    assert(rows(GraphMetrics.kcoreImpl(kedges, 3, 10, peelsPerRoll = 1)) ==
-      rows(GraphMetrics.kcoreImpl(kedges, 3, 10, peelsPerRoll = 2)),
-      "kcore pairwise peel diverged")
   }
 
   test("assortativity: star graph is maximally disassortative (r = -1)") {

@@ -38,24 +38,6 @@ class IterateSpec extends SparkTestBase {
     assert(next.collect().map(_.getInt(0)).sorted.toSeq == Seq(2, 4, 6, 8, 10))
   }
 
-  test("pin captures the hash partitioning: the pinned join side never re-exchanges") {
-    import spark.implicits._
-    // a PLAIN localCheckpoint under AQE captures UnknownPartitioning and
-    // the join re-exchanges the big side every round; pin must not
-    val edges = (1 to 1000).map(i => (i % 50L, i % 97L)).toDF("src", "dst")
-    val ranks = (0L to 49L).map(n => (n, 1.0)).toDF("node", "rank")
-    val (pinned, n) = Iterate.pin(edges, col("src"))
-    assert(n == 1000L)
-    val plan = pinned.join(ranks.hint("shuffle_hash"),
-        pinned("src") === ranks("node"))
-      .queryExecution.executedPlan.toString
-    // exactly ONE exchange: the small ranks side; the pinned side scans
-    // its ExistingRDD in place
-    assert(plan.linesIterator.count(_.contains("Exchange")) == 1, plan)
-    // and AQE is back on for everything after the pin
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-  }
-
   test("a bare select atop a checkpoint still exposes its LogicalRDD to release") {
     import spark.implicits._
     // the dedup-CC loop keeps `labels = next.select(...)` (dropping the

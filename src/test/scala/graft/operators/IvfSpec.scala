@@ -118,39 +118,24 @@ class IvfSpec extends SparkTestBase {
     Ivf.writeIndex(Ivf.assign(model, emb), dir)
     val nDirs = new java.io.File(dir).listFiles().count(_.getName.startsWith("cell="))
     assert(nDirs > 32, s"only $nDirs cell directories")
-    val listings = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-            .exists(_.startsWith("Listing leaf files"))) listings.incrementAndGet()
-    }
-    def listingJobs[T](body: => T): (Int, T) = {
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      listings.set(0)
-      val out = body
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      (listings.get, out)
-    }
+    def listingJobs[T](body: => T): (Int, T) = ListingJobs(spark.sparkContext)(body)
     def serveAll() = Ivf.topKPersisted(spark, dir, model, queries, 10, 48).collect().length
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (first, served) = listingJobs(serveAll())
-      assert(first == 1 && served > 0)
-      assert(listingJobs(serveAll())._1 == 0, "a repeated wide serve listed the index again")
-      assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (0, 200L))
-      Ivf.upsertIndex(model, emb.limit(20).withColumn("vec_id", col("vec_id") + 100000L), dir)
-      assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (1, 220L))
-      assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (0, 220L))
-      // overwrite with an extra column through a qualified, slash-ended
-      // spelling of the same directory
-      val spelled = new java.io.File(dir).toURI.toString
-      assert(spelled.startsWith("file:") && spelled.endsWith("/"))
-      val fewer = emb.where(col("vec_id") < 100)
-      Ivf.writeIndex(Ivf.assign(model, fewer).withColumn("tag", lit("t")), spelled)
-      val reread = Ivf.loadIndex(spark, dir)
-      assert(reread.columns.contains("tag") && reread.count() == fewer.count())
-      assert(fewer.count() < 200)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (first, served) = listingJobs(serveAll())
+    assert(first == 1 && served > 0)
+    assert(listingJobs(serveAll())._1 == 0, "a repeated wide serve listed the index again")
+    assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (0, 200L))
+    Ivf.upsertIndex(model, emb.limit(20).withColumn("vec_id", col("vec_id") + 100000L), dir)
+    assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (1, 220L))
+    assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (0, 220L))
+    // overwrite with an extra column through a qualified, slash-ended
+    // spelling of the same directory
+    val spelled = new java.io.File(dir).toURI.toString
+    assert(spelled.startsWith("file:") && spelled.endsWith("/"))
+    val fewer = emb.where(col("vec_id") < 100)
+    Ivf.writeIndex(Ivf.assign(model, fewer).withColumn("tag", lit("t")), spelled)
+    val reread = Ivf.loadIndex(spark, dir)
+    assert(reread.columns.contains("tag") && reread.count() == fewer.count())
+    assert(fewer.count() < 200)
   }
 
   test("out-of-range k or nProbe is rejected before any serve runs") {

@@ -100,8 +100,8 @@ class PageRankSpec extends SparkTestBase {
     // the adaptive strategy (rank frame broadcast under
     // BroadcastMaxNodes, shuffle-hash above) is a pure plan choice:
     // the output contract rounds to 6 dp inside the operator, so both
-    // forced modes must return the SAME rows. Mirrors the sf0.1 gate
-    // in graft.PrBcProbe (0 of 20000 mismatches).
+    // forced modes must return the SAME rows. Mirrors the sf0.1 A/B in
+    // SCALE.md round 8 (0 of 20000 mismatches).
     val edges = ((0L to 30L).map(i => (i, (i * 5 + 2) % 31, 1L + i % 4)) ++
       (0L to 30L).map(i => (i, (i + 1) % 31, 1L)))
       .filter(e => e._1 != e._2).toDF("src", "dst", "weight")

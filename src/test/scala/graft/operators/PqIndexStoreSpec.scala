@@ -36,4 +36,27 @@ class PqIndexStoreSpec extends SparkTestBase {
     assert(persisted.exceptAll(inMem).count() == 0)
     assert(inMem.exceptAll(persisted).count() == 0)
   }
+
+  test("a repeated serve of an unchanged store lists nothing and returns the same rows") {
+    // The codes share the IVF index's per-path listing memo. The store's
+    // cell directories are fewer than Spark's default parallel-listing
+    // threshold here, so the threshold is lowered to make any listing of
+    // them a counted job.
+    val q = graft.sources.Tables.embeddings(spark, sf())
+      .where(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    def rows() = PqIndexStore.serve(spark, sf(), q, 5, 50, 4)
+      .collect().map(_.toString).sorted.toSeq
+    PqIndexStore.ensure(spark, sf())
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val cells = new java.io.File(PqIndexStore.codesPath(sf()))
+      .listFiles().count(_.getName.startsWith("cell="))
+    assert(cells > 8, s"only $cells cell directories")
+    spark.conf.set(key, "8")
+    try {
+      val first = rows()
+      assert(first.nonEmpty)
+      assert(ListingJobs(spark.sparkContext)(rows()) == (0, first))
+    } finally spark.conf.unset(key)
+  }
 }

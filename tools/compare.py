@@ -33,11 +33,14 @@ def main(sfdir, outdir):
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
-    names = sorted(os.listdir(outdir))
+    # oracle keys as well as output dirs: a query that threw before its
+    # write leaves no directory, and must count as a failure, not vanish
+    dirs = {n for n in os.listdir(outdir)
+            if os.path.isdir(os.path.join(outdir, n))}
     n_pass = n_fail = 0
-    for name in names:
-        if not os.path.isdir(os.path.join(outdir, name)):
-            continue
+    for name in sorted(dirs | set(oracle)):
+        if name not in dirs:
+            print(f"[FAIL] {name}: no output"); n_fail += 1; continue
         got = load_result(outdir, name)
         if got is None:
             print(f"[FAIL] {name}: no parquet output"); n_fail += 1; continue
