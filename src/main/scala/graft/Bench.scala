@@ -1,4 +1,5 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
@@ -17,9 +18,10 @@ import scala.util.control.NonFatal
   *    the BENCH_ISOLATED protocol made official: every published number
   *    is within one JVM of cold, warmed by the untimed warmup set.
   *    JVM/session startup is NOT in any timed region (the baseline
-  *    equally excludes its index build). A failed child falls back to
-  *    in-process execution of that chunk — the artifact always covers
-  *    every query.
+  *    equally excludes its index build). A child that leaves no complete
+  *    artifact falls back to in-process execution of that chunk — the
+  *    artifact always covers every query. Each child's `[bench]` lines
+  *    are copied to this process' stderr.
   *  - IN-PROCESS (SPARK_GRAFT_FORK=0, or small query subsets): the
   *    classic single-JVM loop with the deterministic persistent-block
   *    reap between queries.
@@ -28,10 +30,15 @@ import scala.util.control.NonFatal
   * (comma subset), SPARK_GRAFT_WARM=N (1 untimed warmup then N timed
   * runs, report the MIN; N=1 ≡ the historical run-twice-report-2nd),
   * SPARK_GRAFT_FORK=<chunk size; 0 disables forking>.
+  *
+  * A query whose setup throws, or whose every run throws, is a failure:
+  * it keeps its -1.0 row in "queries", is left out of the total, is
+  * named under "failed" in BENCH_FULL*.json, and makes Bench exit 1
+  * after everything is written.
   */
 object Bench {
 
-  /** Iterative / pair-expansion queries — the ones whose ten join+agg
+  /** The `heavy` specs, in numeric qNN order — the ones whose ten join+agg
     * rounds (or multi-million-row pair shuffles) leave enough JVM state
     * (code cache, GC history, block-manager churn) to inflate whatever
     * runs after them in the same JVM. r7 evidence: with plain
@@ -42,17 +49,8 @@ object Bench {
     * rule: at most ONE of these per fork chunk, always placed LAST, so
     * every heavy runs on light-query context (≈ the isolated-warm
     * protocol) and no light query ever follows a heavy. */
-  private val heavyQueries = Seq(
-    "q14_ngram_jaccard", "q33_brp_pairs", "q44_dedup_keep",
-    "q53_corpus_filter", "q63_pagerank", "q94_pagerank_directed",
-    "q98_rag_retrieve", "q102_triangles", "q114_als_mf",
-    "q119_feature_hash", "q127_kcore", "q130_lsh_quality",
-    "q144_bfs_hops", "q149_ppr", "q163_label_prop", "q165_user_knn",
-    "q167_freq_triples", "q169_retract_agg", "q178_assortativity",
-    "q179_brand_modularity", "q185_kmv_intersect", "q186_hits",
-    "q193_twohop")
-
-  private[graft] val heavySet: Set[String] = heavyQueries.toSet
+  private[graft] val heavyNames: Seq[String] = SparkEntry.specs.filter(_.heavy)
+    .sortBy(_.shortKey.drop(1).toInt).map(_.name)
 
   /** One benched query's reported time plus its own ambient evidence:
     * 1-min load sampled at query start and hypervisor-steal%% across
@@ -63,9 +61,15 @@ object Bench {
     * because the artifact carried load only at chunk starts — a row
     * that carries its own load1/steal%% at measurement time is
     * adjudicable from the artifact alone. -1.0 = not measurable
-    * (non-Linux /proc, or a zero-width window). */
+    * (non-Linux /proc, or a zero-width window). `failure` names what
+    * threw (setup, or every run); a failed row's `sec` is -1.0. */
   private[graft] final case class QueryRun(name: String, sec: Double,
-                                           load1: Double, stealPct: Double)
+                                           load1: Double, stealPct: Double,
+                                           failure: Option[String] = None)
+
+  /** The suite total: failed rows are left out, never summed as -1.0. */
+  private[graft] def total(results: Seq[QueryRun]): Double =
+    results.filter(_.failure.isEmpty).map(_.sec).sum
 
   private[graft] def load1(): Double =
     ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
@@ -120,7 +124,7 @@ object Bench {
     * still be appended to each 1-light group). */
   private[graft] def topoChunks(names: Seq[String],
                                 chunkSize: Int): Seq[Seq[String]] = {
-    val heavy = heavyQueries.filter(names.contains)
+    val heavy = heavyNames.filter(names.contains)
     val light = names.filterNot(heavy.contains)
     if (chunkSize <= 1 || light.isEmpty)
       (light ++ heavy).map(Seq(_))
@@ -156,16 +160,16 @@ object Bench {
     spark
   }
 
-  /** Run `names` in this JVM and return one [[QueryRun]] per query. */
-  private def runInProcess(spark: SparkSession, sfDir: String,
-                           names: Seq[String]): Seq[QueryRun] = {
+  /** Run `specs` in this JVM and return one [[QueryRun]] per query. */
+  private[graft] def runInProcess(spark: SparkSession, sfDir: String,
+                                  specs: Seq[QuerySpec]): Seq[QueryRun] = {
     // Warm the JVM/codegen/parquet-footer paths so the first timed query
     // per family doesn't absorb session cold-start (it would at any scale
     // factor): q01 = relational agg/shuffle machinery, q08 = vector
     // expressions + window rank, q16 = the md5 hash expression family,
     // q31 = the MLlib pipeline path.
     for (w <- Seq("q01_pricing", "q08_knn", "q16_simhash_fp", "q31_embed_docs"))
-      try SparkEntry.queries(w)(spark, sfDir).count()
+      try SparkEntry.byName(w).run(spark, sfDir).count()
       catch { case NonFatal(_) => () }
     // Also warm the iterative-loop machinery — Iterate.roll
     // (localCheckpoint + ContextCleaner release) and
@@ -177,7 +181,7 @@ object Bench {
     // 10.99 off vs 9.8 on; medians 11.4 vs 10.2): ~1.2 s of the cold
     // gap is this machinery; the rest is the query's own per-round
     // codegen, not warmable generically.
-    if (names.exists(heavySet.contains)) try {
+    if (specs.exists(_.heavy)) try {
       import org.apache.spark.sql.{DataFrame, Observation}
       import org.apache.spark.sql.functions.{count, lit, col}
       var f: DataFrame = spark.range(1000).toDF("x")
@@ -191,19 +195,23 @@ object Bench {
       }
       prev.foreach(graft.operators.Iterate.release)
     } catch { case NonFatal(_) => () }
-    names.map { name =>
-      val fn = SparkEntry.queries(name)
+    specs.map { spec =>
+      val name = spec.name
       // Build-once artifacts are constructed OUTSIDE the timed region:
       // the benched number is serving cost, matching how the baseline
       // measures (pre-built index, timed queries). Setups must be
       // DISK-backed (all in-tree ones write stores): the reap between
       // repeats drops every in-memory persisted/checkpointed frame, so
       // an in-memory setup artifact would be rebuilt inside repeat 2's
-      // timed region (or crash it).
-      try SparkEntry.setups.get(name).foreach(_(spark, sfDir))
-      catch { case NonFatal(t) =>
-        System.err.println(s"[bench] $name setup failed: $t")
-      }
+      // timed region (or crash it). A failed setup fails the query
+      // without running it: its body would self-heal the artifact inside
+      // the timed region and report build time as serving time.
+      val setupFailure =
+        try { spec.setup.foreach(_(spark, sfDir)); None }
+        catch { case NonFatal(t) =>
+          System.err.println(s"[bench] $name setup failed: $t")
+          Some(s"setup: $t")
+        }
       // SPARK_GRAFT_WARM=N: one untimed warmup run (codegen/broadcast/
       // footer costs), then N timed runs, report the MINIMUM — N=1 is
       // the historical "run twice, report the second" protocol exactly.
@@ -254,18 +262,26 @@ object Bench {
       // sample, AFTER the last
       val qLoad1 = load1()
       val steal0 = stealTotal()
-      val samples = (1 to (1 + warmRuns.getOrElse(0))).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case NonFatal(_) => false }
-        val el = (System.nanoTime() - t0) / 1e9
-        reap()
-        if (ok) el else Double.PositiveInfinity
-      }
+      var runFailure: Option[String] = None
+      val samples =
+        if (setupFailure.isDefined) Seq(Double.PositiveInfinity)
+        else (1 to (1 + warmRuns.getOrElse(0))).map { _ =>
+          val t0 = System.nanoTime()
+          val ok = try { spec.run(spark, sfDir).count(); true }
+                   catch { case NonFatal(t) =>
+                     if (runFailure.isEmpty) runFailure = Some(s"run: $t")
+                     false
+                   }
+          val el = (System.nanoTime() - t0) / 1e9
+          reap()
+          if (ok) el else Double.PositiveInfinity
+        }
       val qSteal = stealPctOf(steal0, stealTotal())
       val (reported, timed) = pickReported(samples, warmRuns.isDefined)
+      val failure = setupFailure.orElse(runFailure.filter(_ => reported < 0))
       System.err.println(f"[bench] $name%-24s $reported%8.2f s" +
-        (if (reported < 0) "  FAILED (all runs threw)" else "") +
+        (if (setupFailure.isDefined) "  FAILED (setup threw)"
+         else if (reported < 0) "  FAILED (all runs threw)" else "") +
         (if (timed.size > 1)
            timed.map(s => if (s.isInfinity) "fail" else f"$s%.2f")
              .mkString("  (samples: ", " ", ")")
@@ -288,16 +304,38 @@ object Bench {
       // query's blocks/broadcasts alive into its successor (r7: q65 ran
       // 0.65 s isolated but 30-50 s when it followed q63's ten
       // checkpoint rounds in the same JVM).
-      QueryRun(name, reported, qLoad1, qSteal)
+      QueryRun(name, reported, qLoad1, qSteal, failure)
     }
   }
 
+  /** A child's BENCH_FULL.json as [[QueryRun]]s, in file order. Missing
+    * ambient columns read as -1.0 markers, never as a parse failure, so
+    * an ambient-format skew can't discard a chunk's timings. */
+  private[graft] def readArtifact(file: java.io.File): Seq[QueryRun] = {
+    val root = new ObjectMapper().readTree(file)
+    val qs = root.path("queries")
+    qs.fieldNames().asScala.toSeq.map { n =>
+      val amb = root.path("ambient").path(n)
+      QueryRun(n, qs.path(n).asDouble(), amb.path(0).asDouble(-1.0),
+        amb.path(1).asDouble(-1.0),
+        Option(root.path("failed").get(n)).map(_.asText()))
+    }
+  }
+
+  private def deleteTree(dir: java.io.File): Unit =
+    Files.walk(dir.toPath).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.deleteIfExists(p))
+
   /** Spawn one child JVM per chunk (temp cwd: the child's own
-    * BENCH_FULL.json can never clobber the parent artifact). Returns
-    * None if the child failed — caller falls back in-process. */
+    * BENCH_FULL.json can never clobber the parent artifact). The child's
+    * `[bench]` lines are copied to stderr. Returns None if the child left
+    * no complete artifact — caller falls back in-process; a child that
+    * exits 1 over failed queries still returns its rows. The temp dir is
+    * deleted unless the child failed, when its path is printed. */
   private def runChunkForked(chunk: Seq[String]): Option[Seq[QueryRun]] = {
+    var dir: java.io.File = null
     try {
-      val dir = Files.createTempDirectory("graft-bench-").toFile
+      dir = Files.createTempDirectory("graft-bench-").toFile
       val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
       val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments
         .asScala.toSeq.filterNot(a => a.startsWith("-agentlib") ||
@@ -307,7 +345,8 @@ object Bench {
       val pb = new ProcessBuilder(cmd.asJava)
       pb.directory(dir)
       pb.redirectErrorStream(true)
-      pb.redirectOutput(new java.io.File(dir, "child.log"))
+      val log = new java.io.File(dir, "child.log")
+      pb.redirectOutput(log)
       pb.environment().put("SPARK_GRAFT_QUERIES", chunk.mkString(","))
       pb.environment().put("SPARK_GRAFT_FORK", "0") // no recursive forking
       // the child's BENCH_FULL.json (in its temp cwd) is the RESULT
@@ -317,39 +356,22 @@ object Bench {
       pb.environment().remove("SPARK_GRAFT_NO_ARTIFACT")
       val p = pb.start()
       val done = p.waitFor(30, java.util.concurrent.TimeUnit.MINUTES)
-      if (!done) { p.destroyForcibly(); p.waitFor(); return None }
-      if (p.exitValue() != 0) return None
+      if (!done) { p.destroyForcibly(); p.waitFor() }
+      Files.readAllLines(log.toPath).asScala
+        .filter(_.startsWith("[bench]")).foreach(System.err.println)
       val full = new java.io.File(dir, "BENCH_FULL.json")
-      if (!full.exists()) return None
-      val txt = Files.readString(full.toPath)
-      // parse {"queries":{"name":sec,...}} with a line-format regex —
-      // the file is written by this same object, format is ours
-      val qsPart = txt.substring(txt.indexOf("\"queries\":{") + 11)
-      val re = "\"([A-Za-z0-9_]+)\":([-0-9.Ee]+)".r
-      val got = re.findAllMatchIn(qsPart.takeWhile(_ != '}'))
-        .map(m => m.group(1) -> m.group(2).toDouble).toSeq
-      // the child's per-query ambient columns ([load1, steal_pct]
-      // arrays — no nested braces, so the same first-'}' scan is safe);
-      // missing section → -1.0 markers, never a parse failure, so an
-      // ambient-format skew can't discard a chunk's timings
-      val amb: Map[String, (Double, Double)] = {
-        val i = txt.indexOf("\"ambient\":{")
-        if (i < 0) Map.empty
-        else {
-          val aRe = "\"([A-Za-z0-9_]+)\":\\[([-0-9.Ee]+),([-0-9.Ee]+)\\]".r
-          aRe.findAllMatchIn(txt.substring(i + 11).takeWhile(_ != '}'))
-            .map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toDouble))
-            .toMap
-        }
-      }
-      if (got.map(_._1).sorted == chunk.sorted)
-        Some(got.map { case (n, s) =>
-          val (l, st) = amb.getOrElse(n, (-1.0, -1.0))
-          QueryRun(n, s, l, st)
-        })
-      else None
+      val got =
+        if (done && full.exists()) Some(readArtifact(full))
+          .filter(_.map(_.name).sorted == chunk.sorted)
+        else None
+      if (got.isEmpty || p.exitValue() != 0)
+        System.err.println(s"[bench] child exit ${p.exitValue()}" +
+          (if (got.isEmpty) ", no complete artifact" else "") + s"; kept $dir")
+      else deleteTree(dir)
+      got
     } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] fork failed: ${e.getMessage}")
+      System.err.println(s"[bench] fork failed: ${e.getMessage}" +
+        Option(dir).fold("")(d => s"; kept $d"))
       None
     }
   }
@@ -380,11 +402,12 @@ object Bench {
             s"[bench] chunk ${i + 1}/${chunks.size}: ${chunk.head}..${chunk.last}")
           runChunkForked(chunk).getOrElse {
             System.err.println(s"[bench] chunk ${i + 1} fell back in-process")
-            runInProcess(spark, sfDir, chunk)
+            runInProcess(spark, sfDir, chunk.map(SparkEntry.byName))
           }
         }
-      } else runInProcess(spark, sfDir, names)
-    val total = results.map(_.sec).sum
+      } else runInProcess(spark, sfDir, names.map(SparkEntry.byName))
+    val total = Bench.total(results)
+    val failed = results.filter(_.failure.isDefined)
     // The harness keeps only the TAIL of this process' output (2000
     // chars observed) — a full-name 185-query JSON line gets its head
     // cut off and fails to parse (BENCH_r03 "parsed": null). Two
@@ -407,12 +430,8 @@ object Bench {
     def rShort(v: Double) =
       if (v >= 1) BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP)
       else r2(v)
-    // Short keys truncate at the first '_' — two query names sharing a
-    // qNN prefix would silently emit duplicate JSON keys and lose a
-    // measurement to whichever the parser keeps. Fail loudly instead.
-    val shortKeys = results.map(_.name.takeWhile(_ != '_'))
-    require(shortKeys.distinct.size == shortKeys.size,
-      s"bench short-key collision: ${shortKeys.diff(shortKeys.distinct).mkString(",")}")
+    // Short keys truncate at the first '_'; SparkEntry refuses two specs
+    // sharing a qNN, so no key is emitted twice.
     val qsShort = results
       .map(q => "\"" + q.name.takeWhile(_ != '_') + "\":" + rShort(q.sec))
       .mkString("{", ",", "}")
@@ -440,17 +459,19 @@ object Bench {
       Files.exists(Paths.get(".git"))
     if (subsetInRepo)
       System.err.println("[bench] subset run in a repo checkout: NOT writing BENCH_FULL.json")
+    // every failure, name -> what threw; {} on a clean run
+    val failedMap = new java.util.LinkedHashMap[String, String]()
+    failed.foreach(q => failedMap.put(q.name, q.failure.get))
+    val failedPart = ""","failed":""" + new ObjectMapper().writeValueAsString(failedMap)
     // load1 key LAST and only when chunks ran: forked children (FORK=0)
-    // never emit it, and the parent's result-channel parse anchors on
-    // "queries":{ and stops at the first '}', so a trailing key is
-    // invisible to it either way.
+    // never emit it.
     val loadPart =
       if (chunkLoads.isEmpty) ""
       else chunkLoads.map { case (k, v) => "\"" + k + "\":" + r2(v) }
         .mkString(""","load1_at_chunk_start":{""", ",", "}")
     if (!sys.env.contains("SPARK_GRAFT_NO_ARTIFACT") && !subsetInRepo) {
       val payload =
-        s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsFull,"sf":"$sfDir"$ambFull$loadPart}""" + "\n"
+        s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsFull,"sf":"$sfDir"$ambFull$failedPart$loadPart}""" + "\n"
       // BENCH_FULL.json stays (the forked-child result channel and the
       // historical artifact name); the core-count-keyed copy exists so
       // a multi-config driver session (32c then 8c run in the same cwd,
@@ -463,5 +484,10 @@ object Bench {
     }
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsShort,"sf":"$sfDir"}""")
     try SparkSession.getActiveSession.foreach(_.stop()) catch { case NonFatal(_) => () }
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} FAILED: " +
+        failed.map(q => s"${q.name} (${q.failure.get})").mkString(", "))
+      sys.exit(1)
+    }
   }
 }

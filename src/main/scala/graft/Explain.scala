@@ -10,7 +10,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.split(",").foreach { n =>
       println(s"\n########## $n ##########")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      SparkEntry.byName(n).run(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -27,11 +27,12 @@ object ExplainAll {
         // NonFatal only (ADVICE r14): a blanket Throwable catch here
         // swallowed OOM/interrupt and then captured plans against
         // missing setup state with no diagnostic
-        try SparkEntry.setups.get(n).foreach(_(spark, sfDir))
+        val spec = SparkEntry.byName(n)
+        try spec.setup.foreach(_(spark, sfDir))
         catch { case NonFatal(t) =>
           System.err.println(s"[explainall] $n setup FAILED: $t")
         }
-        val df = SparkEntry.queries(n)(spark, sfDir)
+        val df = spec.run(spark, sfDir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(outDir.resolve(s"$n.txt"), plan)

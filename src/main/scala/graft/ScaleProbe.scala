@@ -117,8 +117,9 @@ object ScaleProbe {
     }
 
     for (p <- prelude) {
-      try { SparkEntry.setups.get(p).foreach(_(spark, sfDir))
-            SparkEntry.queries(p)(spark, sfDir).count() }
+      try { val spec = SparkEntry.byName(p)
+            spec.setup.foreach(_(spark, sfDir))
+            spec.run(spark, sfDir).count() }
       catch { case NonFatal(t) =>
         System.err.println(s"[scaleprobe] prelude $p failed: $t")
       }
@@ -137,11 +138,11 @@ object ScaleProbe {
             graft.operators.CoPurchaseGraph.fromOrders(
               graft.sources.Tables.lineitem(s, d)), 5,
             graft.operators.PageRank.BroadcastMaxNodes, c.toInt)
-        case n => SparkEntry.queries(n)
+        case n => SparkEntry.byName(n).run
       }
     for (name <- names) {
       val fn = resolve(name)
-      try SparkEntry.setups.get(name).foreach(_(spark, sfDir))
+      try SparkEntry.byName.get(name).flatMap(_.setup).foreach(_(spark, sfDir))
       catch { case NonFatal(t) =>
         System.err.println(s"[scaleprobe] $name setup failed: $t")
       }

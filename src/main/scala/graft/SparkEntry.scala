@@ -1,5858 +1,43 @@
 package graft
 
-import graft.operators._
-import graft.sources.{AmazonMetaParser, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.queries._
+import graft.queries.QueryHelpers.hybridTopK
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every operator from SURVEY §2 (plus the LLM-data-pipeline extensions)
   * is exposed as a named query over the driver parquet corpus
-  * (TESTDATA.md), with an equivalent ANSI-SQL oracle for DuckDB in
-  * [[oracleSql]]. Determinism rules (SURVEY §7.4): every ranked operator
-  * carries an explicit total-order tiebreaker; every order-dependent
-  * double aggregate is rounded identically on both sides.
+  * (TESTDATA.md), each declared once as a [[QuerySpec]] in its family's
+  * file under `queries/`. The name-keyed maps below are views of
+  * [[specs]].
   */
 object SparkEntry {
 
-  // ---------------------------------------------------------------- helpers
-
-  private def clamp01(c: Column): Column = greatest(lit(0.0), least(lit(1.0), c))
-
-  /** Co-purchase edges from the order basket (SURVEY §2 A1/J1/J2 on the
-    * driver corpus: parts sharing an order; FIXTURES.md §3). */
-  private def basketEdges(s: SparkSession, d: String): DataFrame =
-    CoPurchaseGraph.symmetrize(CoPurchaseGraph.fromOrders(Tables.lineitem(s, d)))
-
-  /** Basket edges pruned to orders touching the query set — same result
-    * for any edge with an endpoint in `queries`, a fraction of the cost
-    * (see CoPurchaseGraph.fromOrdersFor). */
-  private def basketEdgesFor(s: SparkSession, d: String, queries: DataFrame): DataFrame =
-    CoPurchaseGraph.symmetrize(
-      CoPurchaseGraph.fromOrdersFor(Tables.lineitem(s, d), queries))
-
-  /** The restricted query set used by q07/q25/q26 (raw scan: ~100 rows
-    * post-filter, always broadcast). */
-  private def partQueries(s: SparkSession, d: String): DataFrame =
-    Tables.tableRaw(s, d, "part").where(col("p_partkey") <= 100)
-      .select(col("p_partkey").as("query_id"))
-
-  /** Query vectors: the first `n` ids of the embeddings table. Raw scan —
-    * the pushed vec_id filter leaves ≤ n rows headed for a broadcast, so
-    * the fan-out repartition would only add a shuffle stage. */
-  private def queryVecs(s: SparkSession, d: String, n: Int = 20): DataFrame =
-    Tables.embeddingsRaw(s, d).where(col("vec_id") < n)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-
-  /** nProbe for the RECALL-GATED serve queries (q34/q68): 75 % of the
-    * index's adaptive cell count — the 12-of-16 fraction the gates were
-    * originally measured at, held constant so the candidate volume (and
-    * the measured recall floors) survive the √N cell-count default.
-    * Un-gated serve queries (q37/q43/q92) keep their fixed small nProbe:
-    * their contracts are structural, and fixed-nProbe serving is the
-    * trade a deployment tunes per its own recall target
-    * (SCALE.md, round 10, "Recall contract at the sf dirs"). */
-  private def gateProbes(s: SparkSession, d: String): Int =
-    math.ceil(0.75 * IvfIndexStore.nCells(s, d)).toInt
-
-  /** Flagship hybrid top-k (reference E2, `Hybrid_Recom_vecdb.py:213-231`):
-    * content arm = exact cosine top-60 over the embeddings table; CF arm =
-    * co-label graph top-60; blend α=0.6; top-10 per query. */
-  /** Co-label CF arm shared by q27/q74: top-60 co-label neighbors per
-    * query with (src, dst, weight, norm, rnk). The src side is restricted
-    * to the query ids BEFORE the co-label self-join: CfRetriever's
-    * src∈queries semi-join cannot be pushed through the join by Catalyst,
-    * so without this the pair expansion is quadratic in the whole table to
-    * keep |Q| sources (round-1 verdict scale-killer #3). */
-  private def coLabelCf(s: SparkSession, d: String, q: DataFrame): DataFrame = {
-    val lbl = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-    val qlbl = lbl.join(q.select(col("query_id").as("vec_id")).hint("broadcast"),
-      Seq("vec_id"), "left_semi")
-    val edges = qlbl.as("x")
-      .join(lbl.as("y"), col("x.label") === col("y.label") &&
-        col("x.vec_id") =!= col("y.vec_id"))
-      .select(col("x.vec_id").as("src"), col("y.vec_id").as("dst"),
-        lit(1L).as("weight"))
-    CfRetriever.topNFor(edges, q.select(col("query_id")), 60)
-  }
-
-  /** The q27 retrieval arms as score frames: content (query_id, item,
-    * cs) and co-label CF (query_id, item, fs) at depth 60 — shared by
-    * the blend/sweep/calibration queries. */
-  private def hybridArms(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val q = queryVecs(s, d)
-    val content = ContentRetriever.topK(Tables.embeddings(s, d), q, 60)
-      .select(col("query_id"), col("vec_id").as("item"), clamp01(col("sim")).as("cs"))
-    val cf = coLabelCf(s, d, q)
-      .select(col("src").as("query_id"), col("dst").as("item"), col("norm").as("fs"))
-    (content, cf)
-  }
-
-  /** Full fused candidate pool with the α=0.6 blend score and NO
-    * ranking window — what score-distribution consumers (q122
-    * reliability, q126 isotonic) need; blend()'s per-query sort would
-    * be dead work there. Same pool and arithmetic as blend(alpha = 0.6). */
-  private def fusedPool(s: SparkSession, d: String): DataFrame = {
-    val (content, cf) = hybridArms(s, d)
-    HybridScorer.candidatePool(content, cf)
-      .withColumn("score", HybridScorer.blendScore(0.6))
-  }
-
-  private def hybridTopK(s: SparkSession, d: String): DataFrame = {
-    val (content, cf) = hybridArms(s, d)
-    HybridScorer.blend(content, cf, 0.6, 10)
-      .withColumn("cs", round(col("cs"), 6))
-      .withColumn("final", round(col("final"), 6))
-  }
-
-  /** Perturb an orders projection (must carry o_orderkey + cents) into
-    * the "old" snapshot BOTH CDC law queries diff against — q157 (MERGE
-    * apply) and q169 (retractable aggregate maintenance). Keys ≡ 3
-    * (mod 13) dropped → inserts; ≡ 7 price doubled → updates; ≡ 5
-    * re-keyed past 10^9 → ghost rows → deletes. One definition so the
-    * two laws can never drift apart silently. */
-  private def cdcOldSnapshot(ord: DataFrame): DataFrame =
-    ord.where(pmod(col("o_orderkey"), lit(13)) =!= 3)
-      .withColumn("cents", when(pmod(col("o_orderkey"), lit(13)) === 7,
-        col("cents") * 2).otherwise(col("cents")))
-      .unionByName(ord.where(pmod(col("o_orderkey"), lit(13)) === 5)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L)))
-
-  /** Co-label ground truth for the E3 evaluation queries: items sharing
-    * the query's label (the corpus' co-purchase-neighbor analog). */
-  private def coLabelTruth(s: SparkSession, d: String): DataFrame = {
-    val q = Tables.embeddingsRaw(s, d).where(col("vec_id") < 20)
-      .select(col("vec_id"), col("label"))
-    q.as("x")
-      .join(Tables.embeddings(s, d).select(col("vec_id"), col("label")).as("y"),
-        col("x.label") === col("y.label") && col("x.vec_id") =!= col("y.vec_id"))
-      .select(col("x.vec_id").as("query_id"), col("y.vec_id").as("item"))
-  }
-
-  /** Six-product amazon-meta corpus for the composed E2 pipeline (q38)
-    * and the real-file parse path (q41). Titles/groups/similar-lists are
-    * chosen so every operator in the chain has work to do: a substring
-    * resolve ("gamma" → A3), a co-purchase graph with cross-group edges,
-    * and a latin-1 title (Café) exercising the ISO-8859-1 read. */
-  private val e2Stanzas = Seq(
-    "Id:   1\nASIN: A1\n  title: Alpha Book\n  group: Book\n  similar: 2  A2  A3\n  categories: 1\n   |Books[1]",
-    "Id:   2\nASIN: A2\n  title: Beta Book\n  group: Book\n  similar: 1  A1\n  categories: 1\n   |Books[1]",
-    "Id:   3\nASIN: A3\n  title: Gamma Guide\n  group: Book\n  similar: 1  A1\n  categories: 2\n   |Books[1]\n   |Guides[2]",
-    "Id:   4\nASIN: A4\n  title: Delta Music\n  group: Music\n  similar: 1  A5\n  categories: 1\n   |CDs[3]",
-    "Id:   5\nASIN: A5\n  title: Epsilon Music\n  group: Music\n  similar: 2  A4  A1\n  categories: 1\n   |CDs[3]",
-    "Id:   6\nASIN: A6\n  title: Zeta Film Café\n  group: Video\n  similar: 0\n  categories: 1\n   |Video[4]")
-
-  /** Write the e2 corpus as a gzipped ISO-8859-1 amazon-meta dump —
-    * header lines before the first `Id:` included, so the file-read path
-    * (`lineSep = "\nId:"`) proves it drops the header stanza. Idempotent
-    * tmp artifact (q41's fixture). The filename carries a content
-    * fingerprint (like IvfIndexStore.root): editing e2Stanzas can never
-    * hit a stale artifact from an earlier code state. Written via
-    * temp-file-then-rename so a crashed write never persists a
-    * truncated fixture. */
-  private def e2FixturePath(): String = synchronized {
-    val bytes = ("# Full information about the test products\n# (header)\n\n" +
-      e2Stanzas.mkString("\n\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    val fp = java.util.UUID.nameUUIDFromBytes(bytes).toString.take(8)
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val f = new java.io.File(dir, s"graft-amazon-meta-fixture-$fp.txt.gz")
-    if (!f.exists()) {
-      val tmp = java.io.File.createTempFile("graft-amazon-meta-", ".tmp", dir)
-      val out = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(tmp))
-      try out.write(bytes)
-      finally out.close()
-      if (!tmp.renameTo(f) && !f.exists())
-        throw new java.io.IOException(s"could not publish fixture $f")
-    }
-    f.getAbsolutePath
-  }
-
-  /** Build-once half-corpus index + upserted other half for q66
-    * (idempotent via marker file; the root path already fingerprints the
-    * source corpus, so a regenerated corpus rebuilds). The overwrite-
-    * then-append pair is atomic enough for a rerun: the overwrite wipes
-    * the path, so a repeated build never double-appends. */
-  private def ensureUpsertedIndex(s: SparkSession, d: String): String =
-    synchronized {
-      IvfIndexStore.ensure(s, d)
-      val root = IvfIndexStore.root(d) + "/upsert-check"
-      val idx = s"$root/index"
-      val done = new java.io.File(s"$root/_BUILT")
-      if (!done.exists()) {
-        val model = IvfIndexStore.loadModel(d)
-        val emb = Tables.embeddings(s, d)
-        Ivf.writeIndex(Ivf.assign(model, emb.where(col("vec_id") % 2 === 0)), idx)
-        Ivf.upsertIndex(model, emb.where(col("vec_id") % 2 === 1), idx)
-        done.createNewFile()
-      }
-      idx
-    }
-
-  /** PQ codebooks are deterministic under the fixed seed and cheap to
-    * train (m seeded KMeans fits over a bounded sample) — memoized per
-    * sf dir so serve queries never refit; registered as a setup so the
-    * bench measures ADC serving, not codebook training. */
-  // PQ build artifacts (codebooks + cell-partitioned codes) persist via
-  // PqIndexStore — built once per sf dir in setups (untimed, the
-  // reference's build/serve split), served from disk by any JVM.
-
-  /** The e2 corpus as a parsed product DataFrame. */
-  private def e2Products(s: SparkSession): DataFrame = {
-    import s.implicits._
-    s.createDataset(e2Stanzas).flatMap(AmazonMetaParser.parseStanza _).toDF()
-  }
-
-  /** amazon-meta stanza fixture (FIXTURES.md §1 edge cases). */
-  private val stanzaFixture = Seq(
-    "Id:   1\nASIN: A1\n  title: Alpha Beta\n  group: Book\n  similar: 2 A2 A3\n  categories: 2\n   |Books[1]|Fiction[2]\n   |Books[1]|Arts[3]",
-    "Id:   2\nASIN: A2\n  group: Music\n  similar: 1 A1\n  categories: 0",
-    "Id:   3\nASIN: A3\n  title: Gamma\n  group: \n  similar: 0\n  categories: 1\n   |CDs[9]")
-
-  // ---------------------------------------------------------------- contract
-
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query on the sf0.001 corpus: the hybrid top-10 whose rows
+    * the smoke test checks. */
   def entry(spark: SparkSession): DataFrame =
     hybridTopK(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- relational core (scans, filters, aggs, joins, windows) ---------
-    "q01_pricing" -> ((s, d) => Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        round(sum(col("l_quantity")), 4).as("sum_qty"),
-        round(sum(col("l_extendedprice")), 4).as("sum_base"),
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4).as("sum_disc"),
-        round(avg(col("l_quantity")), 6).as("avg_qty"),
-        count(lit(1)).as("cnt"))),
-
-    "q02_top_orders" -> ((s, d) => {
-      // Pre-aggregate lineitem on its own key BEFORE the join: the join
-      // then moves one row per order, not one per line item (o_orderkey
-      // is unique in orders, so group-then-join ≡ join-then-group).
-      val lrev = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4).as("revenue"))
-      val rev = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderdate"))
-        .join(lrev, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_orderkey"), col("o_orderdate"), col("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey").asc)
-        .limit(10)
-      rev.withColumn("rnk",
-        row_number().over(Window.orderBy(col("revenue").desc, col("o_orderkey").asc)))
-    }),
-
-    "q03_nation_revenue" -> ((s, d) => {
-      // Partial-aggregate lineitem per order first: the fact-side shuffle
-      // carries one row per order, and countDistinct(o_orderkey) becomes
-      // a plain count (each surviving row IS one distinct order) — no
-      // distinct expansion in the final aggregate.
-      val lrev = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("orev"))
-      lrev
-        .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(
-          round(sum(col("orev")), 4).as("revenue"),
-          count(lit(1)).as("n_orders"))
-    }),
-
-    "q04_supplier_top_parts" -> ((s, d) => {
-      val agg = Tables.lineitem(s, d).groupBy(col("l_suppkey"), col("l_partkey"))
-        .agg(sum(col("l_quantity")).as("qty"))
-      val w = Window.partitionBy(col("l_suppkey"))
-        .orderBy(col("qty").desc, col("l_partkey").asc)
-      agg.withColumn("rnk", row_number().over(w)).where(col("rnk") <= 3)
-    }),
-
-    // --- co-purchase graph + CF arm (SURVEY A1-A3, J1-J2, P10) ----------
-    "q05_graph_edges" -> ((s, d) =>
-      CoPurchaseGraph.fromOrders(Tables.lineitem(s, d))),
-
-    "q06_cf_topn" -> ((s, d) => CfRetriever.topN(basketEdges(s, d), 10)),
-
-    // --- weighted PageRank: iterative graph analytics -------------------
-    // 10 bulk iterations, one join+groupBy shuffle each, over
-    // checkpointed transition fractions. Oracle = the same 10 rounds as
-    // chained CTEs in DuckDB.
-    "q63_pagerank" -> ((s, d) =>
-      PageRank.run(CoPurchaseGraph.symmetrize(
-        CoPurchaseGraph.fromOrders(Tables.lineitem(s, d))))),
-
-    "q07_cf_for_queries" -> ((s, d) => {
-      val q = partQueries(s, d)
-      CfRetriever.topNFor(basketEdgesFor(s, d, q), q, 5)
-    }),
-
-    // Skew-safe salted top-n must EQUAL the plain window top-n — the
-    // equality is the oracle. Gated on a deterministic 10% source stratum
-    // (src % 10 = 0): same divergence-detection power — salting errors
-    // are not key-value-dependent — at ~10% of the full-graph cost
-    // (round-2 verdict #2: the full equality was 29 s / 14% of the
-    // suite). The FULL-graph equality lives in RetrievalSpec at sf0.01.
-    "q52_cf_salted" -> ((s, d) => {
-      // materialize the stratum once — both comparison sides consume it,
-      // and the equality digest would otherwise run the basket build
-      // twice (ContextCleaner frees the checkpoint blocks on GC)
-      val edges = basketEdges(s, d)
-        .where(col("src") % 10 === 0).localCheckpoint()
-      val plain = CfRetriever.topN(edges, 10)
-        .select(col("src"), col("dst"), col("rnk"), round(col("norm"), 9).as("norm"))
-      val salted = CfRetriever.topNSalted(edges, 10, 8)
-        .select(col("src"), col("dst"), col("rnk"), round(col("norm"), 9).as("norm"))
-      plain.withColumn("side", lit(1))
-        .join(salted.withColumn("side2", lit(1)),
-          Seq("src", "dst", "rnk", "norm"), "full_outer")
-        .agg(count(lit(1)).as("n_rows"),
-          count(when(col("side").isNull || col("side2").isNull, 1)).as("n_diff"))
-        .select(col("n_rows"), (col("n_diff") === 0).as("salted_equals_plain"))
-    }),
-
-    // --- vector retrieval (SURVEY V1-V4) --------------------------------
-    "q08_knn" -> ((s, d) =>
-      ContentRetriever.topK(Tables.embeddings(s, d), queryVecs(s, d), 10)
-        .select(col("query_id"), col("vec_id").as("item"),
-          round(col("sim"), 6).as("sim"), col("rnk"))),
-
-    "q09_knn_by_label" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val q = Tables.embeddingsRaw(s, d).where(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-          col("label"))
-      ContentRetriever.topKByLabel(emb, q, 5)
-        .select(col("query_id"), col("vec_id").as("item"),
-          round(col("sim"), 6).as("sim"), col("rnk"))
-    }),
-
-    "q10_cosine_pairs" -> ((s, d) =>
-      Dedup.cosinePairs(Tables.embeddings(s, d).where(col("vec_id") < 2000), 0.35)
-        .withColumn("sim", round(col("sim"), 6))),
-
-    "q11_lsh_buckets" -> ((s, d) =>
-      Lsh.withBucket(Tables.embeddings(s, d), 8, 64)
-        .select(col("vec_id"), col("bucket"))),
-
-    "q12_lsh_pairs" -> ((s, d) =>
-      Lsh.cosinePairsInBuckets(Tables.embeddings(s, d), 8, 64, 0.1)
-        .withColumn("sim", round(col("sim"), 6))),
-
-    // Multi-probe: Hamming-≤1 bucket pairs on the q10/q33 subset — the
-    // recall-lift variant of the sign-LSH path (10 bits ⇒ 1024 buckets,
-    // 11 probe keys per vector).
-    "q48_lsh_multiprobe" -> ((s, d) =>
-      Lsh.cosinePairsMultiProbe(
-        Tables.embeddings(s, d).where(col("vec_id") < 2000), 10, 64, 0.1)
-        .withColumn("sim", round(col("sim"), 6))),
-
-    // --- dedup suite ----------------------------------------------------
-    "q13_dedup_exact" -> ((s, d) => Dedup.exact(Tables.documents(s, d))),
-
-    // ADAPTIVE df cap (round 12): the default derives maxDf from the
-    // corpus's own df distribution — uncapped while the whole
-    // distribution predicts ≤ 512·|docs| join rows, else the largest
-    // cap fitting a verification-priced 16·|docs| (the old fixed 1000
-    // admitted a measured 4.50G-row join on the adversarial 60× corpus
-    // = spill death; the adaptive default completes it in 237 s). At
-    // every test sf the whole distribution fits the gate, so the cap
-    // resolves to "disabled" and the result is bit-identical to the
-    // uncapped oracle; values stay exact at ANY cap (see
-    // Dedup.ngramJaccard's bound machinery).
-    "q14_ngram_jaccard" -> ((s, d) =>
-      Dedup.ngramJaccard(Tables.documents(s, d), 3, 0.05)),
-
-    "q15_minhash_cand" -> ((s, d) =>
-      Dedup.minhashCandidates(Tables.documents(s, d), 3, 16, 8)),
-
-    "q16_simhash_fp" -> ((s, d) =>
-      Dedup.simhashFingerprints(Tables.documents(s, d))),
-
-    // --- dedup keep-list: evidence union → components → canonical ------
-    // The decision a corpus pipeline actually ships: which docs survive
-    // dedup. Exact-dup + MinHash-LSH-nominated candidates whose TRUE
-    // Jaccard clears τ (exact-verified edges), Hash-Min connected
-    // components, min-id canonical. Oracle = recursive-CTE transitive
-    // closure in DuckDB (hard hash signal on the full clustering).
-    "q44_dedup_keep" -> ((s, d) =>
-      Dedup.keepList(Tables.documents(s, d), 3, 16, 8, 0.5)),
-
-    // --- document-text projection (reference P2) on the parser fixture --
-    "q17_product_text" -> ((s, d) => {
-      import s.implicits._
-      s.createDataset(stanzaFixture).flatMap(AmazonMetaParser.parseStanza _).toDF()
-        .select(col("asin"), OfflineIndexBuild.productText(
-          col("title"), col("group"), col("categories")).as("document"))
-    }),
-
-    // --- text analysis --------------------------------------------------
-    "q18_fingerprints" -> ((s, d) =>
-      TextAnalysis.fingerprints(Tables.documents(s, d))),
-
-    "q19_lang_id" -> ((s, d) => TextAnalysis.langId(Tables.documents(s, d))),
-
-    "q20_quality" -> ((s, d) => TextAnalysis.qualityScore(Tables.documents(s, d))),
-
-    "q21_token_counts" -> ((s, d) => TextAnalysis.tokenCounts(Tables.documents(s, d))),
-
-    // --- resolver / sampling / evaluation -------------------------------
-    "q22_resolver_substr" -> ((s, d) => QueryResolver.resolve(
-      Tables.documents(s, d)
-        .select(col("doc_id").cast("string").as("asin"), col("text").as("title")),
-      "hash value table")),
-
-    "q23_resolver_exact" -> ((s, d) => QueryResolver.resolve(
-      Tables.documents(s, d)
-        .select(col("doc_id").cast("string").as("asin"), col("text").as("title")),
-      "42")),
-
-    "q24_sample_inv" -> ((s, d) =>
-      Sampling.sampleInvariants(Tables.documents(s, d), "doc_id", 100, 42L)),
-
-    "q25_precision" -> ((s, d) => {
-      val queries = partQueries(s, d)
-      val edges = basketEdgesFor(s, d, queries)
-      val ranked = CfRetriever.topNFor(edges, queries, 20)
-        .select(col("src").as("query_id"), col("dst").as("item"), col("rnk"))
-      val truth = edges.where(col("weight") >= 2)
-        .select(col("src").as("query_id"), col("dst").as("item"))
-      Evaluation.precisionAtK(ranked, truth, Seq(5, 10))
-    }),
-
-    "q26_mean_precision" -> ((s, d) => {
-      val queries = partQueries(s, d)
-      val edges = basketEdgesFor(s, d, queries)
-      val ranked = CfRetriever.topNFor(edges, queries, 20)
-        .select(col("src").as("query_id"), col("dst").as("item"), col("rnk"))
-      val truth = edges.where(col("weight") >= 2)
-        .select(col("src").as("query_id"), col("dst").as("item"))
-      Evaluation.meanPrecision(Evaluation.precisionAtK(ranked, truth, Seq(5, 10)))
-        .withColumn("mean_precision", round(col("mean_precision"), 6))
-    }),
-
-    // --- hybrid flagship (reference E2) ---------------------------------
-    "q27_hybrid_topk" -> ((s, d) => hybridTopK(s, d)),
-
-    // --- events: windowed agg + sessionization --------------------------
-    "q28_events_window" -> ((s, d) =>
-      graft.streaming.EventStream.tumblingCounts(Tables.events(s, d))
-        .withColumn("sum_value", round(col("sum_value"), 4))),
-
-    "q47_events_sliding" -> ((s, d) =>
-      graft.streaming.EventStream.slidingCounts(Tables.events(s, d))
-        .withColumn("sum_value", round(col("sum_value"), 4))),
-
-    // Sketch-based cardinality (HyperLogLog++) with its accuracy contract
-    // verified in-plan against the exact distinct count: the sketch is
-    // the 100 TB operator (map-side mergeable state, no distinct
-    // shuffle); the exact side exists to earn the bound. rsd=0.05 ⇒
-    // gate at ±20% (4 sigma: per-group tail ~6e-5, so the gate can't
-    // flake across groups and rounds the way a 3-sigma bound could).
-    "q50_approx_distinct" -> ((s, d) => Tables.events(s, d)
-      .groupBy("event_type")
-      .agg(countDistinct(col("user_id")).as("exact_users"),
-        approx_count_distinct(col("user_id"), 0.05).as("approx_users"))
-      .select(col("event_type"), col("exact_users"),
-        (abs(col("approx_users") - col("exact_users")).cast("double") /
-          col("exact_users") <= 0.20).as("within_bounds"))),
-
-    // Exact order-statistics per group: Spark's sort-based percentile
-    // (linear interpolation) is bit-comparable to DuckDB quantile_cont,
-    // unlike approx_percentile — the deterministic choice when the
-    // oracle hash-matches values.
-    "q49_event_stats" -> ((s, d) => Tables.events(s, d)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        round(min(col("value")), 4).as("vmin"),
-        round(max(col("value")), 4).as("vmax"),
-        round(avg(col("value")), 6).as("vavg"),
-        round(expr("percentile(value, 0.5)"), 6).as("p50"),
-        round(expr("percentile(value, 0.95)"), 6).as("p95"))),
-
-    // --- OLAP cube: (event_type × day) with all rollup margins ----------
-    // One shuffle; Spark expands grouping sets map-side before the
-    // exchange, so margins cost one pass, not one query per margin.
-    "q60_cube" -> ((s, d) => Tables.events(s, d)
-      .select(col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd").as("day"), col("value"))
-      .cube(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"),
-        grouping_id(col("event_type"), col("day")).cast("int").as("gid"))),
-
-    // --- ordered-window analytics: per-user moving average + delta ------
-    // The feature-engineering window shape: one exchange on user_id,
-    // incremental 4-row frame, exact lag delta.
-    "q61_moving_avg" -> ((s, d) => {
-      val w = Window.partitionBy("user_id")
-        .orderBy(unix_micros(col("ts")), col("event_id"))
-      Tables.events(s, d).select(
-        col("event_id"), col("user_id"),
-        unix_millis(col("ts")).as("ts_ms"), col("value"),
-        round(avg(col("value")).over(
-          w.rowsBetween(-3, Window.currentRow)), 6).as("mavg4"),
-        (col("value") - lag(col("value"), 1).over(w)).as("delta"))
-    }),
-
-    // --- replay dedup: exactly-once ingestion, batch backfill form ------
-    // Replays PLANTED (every 50th event re-arrives an hour later with a
-    // corrupted value): keep-first must collapse them to the original
-    // row. The streaming form (dropDuplicatesWithinWatermark) is
-    // MemoryStream-tested in EventStreamSpec.
-    "q62_replay_dedup" -> ((s, d) => {
-      val ev = Tables.events(s, d).select("event_id", "ts", "value")
-      val replay = ev.where(col("event_id") % 50 === 0)
-        .select(col("event_id"), (col("ts") + expr("INTERVAL 1 HOUR")).as("ts"),
-          (col("value") + 1000.0).as("value"))
-      graft.streaming.EventStream.dedupeReplays(ev.unionByName(replay))
-        .select(col("event_id"), unix_millis(col("ts")).as("ts_ms"),
-          col("value"), col("n_arrivals"))
-    }),
-
-    // --- temporal as-of join: latest view before each purchase ----------
-    // The benched plan is the mega-user-safe bucketed form (1-day
-    // buckets): window partitions are (user, day), never a user's whole
-    // history. Bucketed ≡ plain is property-tested for any bucket size.
-    "q57_asof_join" -> ((s, d) =>
-      AsOfJoin.latestBeforeBucketed(Tables.events(s, d), "view", "purchase",
-        86400000000L)),
-
-    // --- attribution funnel: view→purchase conversion per day -----------
-    // Composes the as-of join: a purchase "converts" when the latest
-    // preceding view of the same user is within the 1-hour window.
-    "q67_conversion" -> ((s, d) =>
-      AsOfJoin.latestBeforeBucketed(Tables.events(s, d), "view", "purchase",
-        86400000000L)
-        .select(date_format(timestamp_millis(col("ts_ms")), "yyyy-MM-dd").as("day"),
-          (col("gap_ms").isNotNull && col("gap_ms") <= 3600000L).as("cv"))
-        .groupBy("day")
-        .agg(count(lit(1)).as("n_purchases"),
-          count(when(col("cv"), 1)).as("n_converted"))),
-
-    // --- RAG retrieval capstone: chunk → embed → index → retrieve -------
-    // The full retrieval-augmentation prep pipeline in one plan: docs
-    // chunked (50/40), chunks embedded with ONE fitted TF-IDF pipeline,
-    // every 97th chunk re-embedded as a query string and retrieved.
-    // Contract (q51-style invariants): 10 rows per query, and the
-    // query's own chunk comes back with sim ≈ 1 — querying with a
-    // chunk's exact text must find that chunk (ties with the corpus' 8
-    // duplicate texts are why the gate is "self in top-10 at sim 1",
-    // not "rank 1").
-    "q98_rag_retrieve" -> ((s, d) => {
-      val chunks = TextAnalysis.chunkTexts(Tables.documents(s, d), 50, 40)
-        .withColumn("chunk_uid", col("doc_id") * 1000 + col("chunk_id"))
-      val model = Embedder.fit(chunks, "chunk_text")
-      val emb = Embedder.embed(model, chunks)
-        .select(col("chunk_uid").as("vec_id"), col("embedding"))
-      val queries = Embedder.embed(model,
-          chunks.where(col("chunk_uid") % 97 === 0)
-            .select(col("chunk_uid"), col("chunk_text")))
-        .select(col("chunk_uid").as("query_id"), col("embedding").as("q_emb"))
-      ContentRetriever.topK(emb, queries, 10, excludeSelf = false)
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n"),
-          max(when(col("vec_id") === col("query_id") && col("sim") >= 0.999999, 1)
-            .otherwise(0)).as("self_hit"))
-        .agg(count(lit(1)).as("n_queries"),
-          (min(col("n")) === 10 && max(col("n")) === 10).as("rows_ok"),
-          (min(col("self_hit")) === 1).as("self_found_at_sim1"))
-    }),
-
-    // --- multimodal near-duplicate detection ----------------------------
-    // The media-dedup composition: real container blob → REAL decode →
-    // byte-histogram features over the decoded raster/PCM
-    // (mapInPartitions batch, unit-normalized) → cosine pairs at 0.9999.
-    // Planted byte-identical copies (offset +4000002 ≡ 0 mod 3, so the
-    // copy keeps its media type and therefore its container and decoded
-    // buffer) are the only pairs above the bar — the decision a media
-    // pipeline makes before paying for perceptual hashing.
-    "q97_media_dedup" -> ((s, d) => {
-      val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .where(col("doc_id") % 23 === 0)
-      val planted = base.select((col("doc_id") + 4000002L).as("doc_id"),
-        col("text"))
-      val feats = Multimodal.featuresBatched(
-          Multimodal.withBlob(base.unionByName(planted))).toDF()
-        .select(col("doc_id").as("vec_id"), col("features").as("embedding"))
-      Dedup.cosinePairs(feats, 0.9999)
-        .select(col("a"), col("b"), round(col("sim"), 6).as("sim"))
-    }),
-
-    // --- semi-structured props: JSON extraction + rollup ----------------
-    // events.props is a JSON string; from_json with an explicit schema
-    // (codegen'd Jackson parse, no UDF) extracts k map-side and one
-    // aggregate rolls it up — the semi-structured ingestion path every
-    // event pipeline needs.
-    "q95_json_props" -> ((s, d) =>
-      Tables.events(s, d)
-        .select(col("event_type"),
-          from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("k",
-              org.apache.spark.sql.types.LongType)))).getField("k").as("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          round(avg(col("k")), 6).as("avg_k"))),
-
-    // --- windowed z-score anomaly flags ---------------------------------
-    // Per user, each value against the mean/stddev of its 8 PRECEDING
-    // events (frame excludes current row — no self-inflation); |z| > 2
-    // flags the anomaly. One user_id exchange, incremental frame.
-    "q96_anomaly_zscore" -> ((s, d) => {
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("__t"), col("event_id")).rowsBetween(-8, -1)
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("__t"), col("value"))
-        .withColumn("mu", avg(col("value")).over(w))
-        .withColumn("sd", stddev_samp(col("value")).over(w))
-        .withColumn("z", when(col("sd").isNull || col("sd") === 0.0, lit(null))
-          .otherwise(round((col("value") - col("mu")) / col("sd"), 6)))
-        .select(col("user_id"), col("event_id"), col("value"),
-          round(col("mu"), 6).as("mu"), col("z"),
-          coalesce(abs(col("z")) > 2.0, lit(false)).as("is_anomaly"))
-    }),
-
-    // --- DIRECTED PageRank with dangling-mass redistribution ------------
-    // The q63 contract excluded dangling nodes (symmetrized input); this
-    // runs on the raw src<dst basket DAG where most nodes have no
-    // out-edges — the dangling term keeps total mass at 1 (the general
-    // directed-graph form). 10-round chained-CTE oracle with the same
-    // dangling arithmetic.
-    "q94_pagerank_directed" -> ((s, d) =>
-      PageRank.runDirected(CoPurchaseGraph.fromOrders(Tables.lineitem(s, d)))),
-
-    // --- data mixing: per-language quotas (corpus rebalancing) ----------
-    // Target mix en:60 de:25 fr:15 (es dropped — no quota), drawn
-    // deterministically by md5 rank so the oracle replays the exact
-    // selection; the salted two-phase keeps a dominant language from
-    // becoming one straggler task.
-    "q93_domain_mix" -> ((s, d) =>
-      Sampling.domainMix(Tables.documents(s, d), "lang", "doc_id",
-        Seq("en" -> 60, "de" -> 25, "fr" -> 15), 42L)),
-
-    // --- Z-order (Morton) layout key -----------------------------------
-    // The Delta/Iceberg ZORDER BY primitive as plain Catalyst arithmetic:
-    // interleave (user_id, minutes-since-2024) bits so range-partitioned
-    // files get tight min/max stats on BOTH columns (LayoutSpec proves
-    // per-file spans shrink in the two dimensions simultaneously). The
-    // oracle replays all 42 shift/mask terms exactly.
-    "q91_zorder" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
-        expr("(unix_micros(ts) - 1704067200000000) div 60000000").as("m"))
-      ev.withColumn("zval", Layout.zValue(col("user_id"), col("m")))
-    }),
-
-    // --- statistical curation gate: round-4 filters composed ------------
-    // kept = English ∧ surface-quality ∧ LM-plausible (nll ≤ 0.82) ∧
-    // not boilerplate (dup-span ratio < 0.9) ∧ decontaminated (no
-    // 13-gram overlap with the every-89th-doc eval slice, eval docs
-    // themselves excluded). q53 gates the dedup-side composition; this
-    // is the statistical side — one plan, five filters, each also
-    // individually oracle-proven (q19/q20/q85/q86/q82).
-    "q90_curation_gate" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      // lang + quality are per-row projections over the same tokens —
-      // the fused surfaceGate computes both in ONE corpus pass (the
-      // separate-frames form scanned and re-tokenized twice, then
-      // joined the two back on doc_id for nothing)
-      val surface = TextAnalysis.surfaceGate(docs)
-        .select(col("doc_id"), (col("pred_lang") === "en").as("lang_ok"),
-          (col("quality") >= 0.5).as("quality_ok"))
-      val lm = TextAnalysis.lmScore(docs)
-        .select(col("doc_id"), (col("nll") <= 0.82).as("nll_ok"))
-      val dup = Dedup.dupSpanCoverage(docs, 8)
-        .select(col("doc_id"), (col("dup_ratio") < 0.9).as("dup_ok"))
-      val bench = docs.where(col("doc_id") % 89 === 0)
-      val contaminated = Dedup.decontaminateBloom(
-        docs.where(col("doc_id") % 89 =!= 0), bench, 13)
-        .select(col("doc_id"), lit(true).as("__hit"))
-      docs.select(col("doc_id"))
-        .join(surface, Seq("doc_id"))
-        .join(lm, Seq("doc_id")).join(dup, Seq("doc_id"))
-        .join(contaminated, Seq("doc_id"), "left")
-        .withColumn("clean", col("doc_id") % 89 =!= 0 && col("__hit").isNull)
-        .drop("__hit")
-        .withColumn("kept", col("lang_ok") && col("quality_ok") &&
-          col("nll_ok") && col("dup_ok") && col("clean"))
-    }),
-
-    // --- weekly cohort retention (the OLAP funnel dashboard query) ------
-    // Cohort = week of first signup; activity = any event in week w;
-    // rate = active users / cohort size per (cohort, offset). Two
-    // distinct-aggregates + one join, all equi-keyed on user/week.
-    "q88_retention" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val su = ev.where(col("event_type") === "signup")
-        .groupBy("user_id").agg(min(date_trunc("week", col("ts"))).as("cw"))
-      val act = ev.select(col("user_id"),
-        date_trunc("week", col("ts")).as("aw")).distinct()
-      val coh = su.groupBy("cw").agg(countDistinct("user_id").as("n_cohort"))
-      su.join(act, Seq("user_id")).where(col("aw") >= col("cw"))
-        .withColumn("week_offset",
-          (datediff(col("aw"), col("cw")) / 7).cast("long"))
-        .groupBy("cw", "week_offset")
-        .agg(countDistinct("user_id").as("n_active"))
-        .join(coh, Seq("cw"))
-        .select(date_format(col("cw"), "yyyy-MM-dd").as("cohort_week"),
-          col("week_offset"), col("n_active"), col("n_cohort"),
-          round(col("n_active").cast("double") / col("n_cohort").cast("double"), 6)
-            .as("rate"))
-    }),
-
-    // --- per-label centroids + distance-to-prototype (outlier score) ----
-    // Element-wise mean embedding per label (posexplode → one (label,
-    // pos) aggregate → deterministic re-assembly), then every vector's
-    // cosine to its own class prototype — the embedding-space outlier /
-    // label-noise detector. Centroid table is |labels| rows → broadcast.
-    "q89_label_centroids" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
-        graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-      val cent = e.select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("label", "pos").agg(avg(col("x")).as("m"))
-        .groupBy("label")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("centroid"))
-      e.join(cent.hint("broadcast"), Seq("label"))
-        .select(col("vec_id"), col("label"),
-          round(graft.functions.VectorFunctions.cosine(col("v"), col("centroid")), 6)
-            .as("cos_centroid"))
-    }),
-
-    // --- cross-doc duplicate-span coverage (memorization risk) ----------
-    // Per doc: fraction of its 8-gram occurrences that appear in ≥1
-    // other document — the relational form of the suffix-array dedup
-    // metric; flags boilerplate even when no pair crosses a Jaccard
-    // threshold. Corpus carries planted copies (doc_id+3·10^6 for every
-    // 101st doc) whose coverage must be 1.0 — and it is, by the oracle.
-    "q86_dup_spans" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val planted = docs.where(col("doc_id") % 101 === 0)
-        .select((col("doc_id") + 3000000L).as("doc_id"), col("text"))
-      Dedup.dupSpanCoverage(docs.unionByName(planted), 8)
-    }),
-
-    // --- sketch-guided heavy hitters (exact-verified) -------------------
-    // freqItems nominates ≤1/support candidates in one pass; exact
-    // counts over candidates keep the true >3% terms. The sketch only
-    // accelerates — the output is exact and plain-SQL-replayable.
-    "q87_heavy_hitters" -> ((s, d) =>
-      TextAnalysis.heavyHitters(Tables.documents(s, d), 0.03)),
-
-    // --- char-trigram LM surprise score (statistical quality filter) ----
-    // NLL under an add-one-smoothed conditional trigram model of the
-    // corpus itself; the model is alphabet-bounded (≤|Σ|³ rows at any
-    // corpus size) so scoring is a broadcast join, not a shuffle.
-    "q85_lm_score" -> ((s, d) =>
-      TextAnalysis.lmScore(Tables.documents(s, d))),
-
-    // --- seeded negative sampling (contrastive training pairs) ----------
-    // For each of the 20 eval queries: 5 negatives from the query's hash
-    // pool (1/8 corpus slice), excluding itself and its co-label
-    // positives; ranked by md5(seed:query:cand) so the draw is a pure
-    // function of the pair and the oracle replays it exactly.
-    "q84_negative_sample" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val q = e.where(col("vec_id") < 20).select(col("vec_id").as("query_id"))
-      val corpus = e.select(col("vec_id").as("cand_id"))
-      val pos = coLabelTruth(s, d)
-        .select(col("query_id"), col("item").as("cand_id"))
-      Sampling.negativeSamples(q, corpus, pos, 5, 8, "42")
-    }),
-
-    // --- stream-stream interval join: all view→click pairs in 30 min ---
-    // The benched plan is the bucketed batch form (join key =
-    // (user, 30-min bucket), view explodes to its 2 reachable buckets) —
-    // join buffers bounded by events-per-window, not events-per-user.
-    // The watermarked streaming form of the same semantics is
-    // EventStream.intervalJoin (MemoryStream-tested, proven equal).
-    "q83_interval_join" -> ((s, d) =>
-      graft.streaming.EventStream.intervalJoinBucketed(
-        Tables.events(s, d), "view", "click", 1800000000L)),
-
-    // --- stratified exact sample: k docs per language -------------------
-    "q58_stratified" -> ((s, d) =>
-      Sampling.stratifiedSample(Tables.documents(s, d), "lang", "doc_id", 10, 42L)),
-
-    // --- sketch percentiles with an in-plan accuracy contract -----------
-    // percentile_approx (GK sketch: mergeable, bounded memory) is the
-    // 100 TB operator; the exact sort-based percentile exists to earn
-    // the bound. accuracy=1000 ⇒ rank error ≤ n/1000; gate the VALUE
-    // error at 2% of the per-group range (loose enough for any merge
-    // order, tight enough to catch a broken sketch).
-    "q64_approx_pct" -> ((s, d) => Tables.events(s, d)
-      .groupBy("event_type")
-      .agg(expr("percentile(value, 0.9)").as("exact_p90"),
-        percentile_approx(col("value"), lit(0.9), lit(1000)).as("approx_p90"),
-        (max(col("value")) - min(col("value"))).as("rng"))
-      .select(col("event_type"),
-        (abs(col("approx_p90") - col("exact_p90")) <= col("rng") * 0.02)
-          .as("within_bounds"))),
-
-    // --- corpus vocabulary: term/document frequency -----------------------
-    // The IDF-vocabulary build: explode tokens once, one shuffle on term,
-    // df + tf in the same aggregate; min-df pruning drops the hapax tail
-    // that dominates vocabulary size.
-    "q65_vocabulary" -> ((s, d) => {
-      // per-doc tf is map-side (TermCounts): the old shape exploded one
-      // row per TOKEN and paid a (term, doc) exchange before the term
-      // rollup — now the only exchange is the term-key merge. df counts
-      // doc ROWS per term, so this leans on doc_id being unique (it is:
-      // documents' primary key).
-      val tf = graft.functions.TextFunctions.termCounts(
-        graft.functions.TextFunctions.tokens(col("text")))
-      Tables.documents(s, d)
-        .select(explode(tf).as("tc"))
-        .select(col("tc.term").as("term"), col("tc.tf").as("n"))
-        .groupBy("term").agg(count(lit(1)).as("df"), sum(col("n")).as("tf"))
-        .where(col("df") >= 3)
-    }),
-
-    // Batch path = the relational sessionizer (spillable window sort, no
-    // object state — a mega-user spills instead of OOMing a task; round-2
-    // verdict #1). The result contract stays the mapGroupsWithState final
-    // state: each user's LAST session — selected with one more pass over
-    // the tiny (user, session) frame. EventStreamSpec proves batch ≡
-    // mapGroupsWithState; the streaming runtime keeps sessionize.
-    // --- sliding-window document chunking (RAG / context prep) ---------
-    // 50-token windows every 40 tokens; chunk content digested by md5 so
-    // the oracle hash-checks every chunk's exact tokens without the
-    // output carrying the text.
-    "q72_chunking" -> ((s, d) =>
-      TextAnalysis.chunk(Tables.documents(s, d), 50, 40)),
-
-    // --- per-document TF-IDF keywords -----------------------------------
-    // Top-3 terms per doc by tf·ln((N+1)/(df+1)) — keyword extraction
-    // composed from the vocabulary shuffle + a doc-key ranked window.
-    "q73_keywords" -> ((s, d) =>
-      TextAnalysis.keywords(Tables.documents(s, d), 3)),
-
-    // --- reciprocal-rank fusion (score-free hybrid) ----------------------
-    // The q27 arms re-fused by rank instead of calibrated score:
-    // rrf = Σ 1/(60 + rank_arm). Same full-outer shape as blend.
-    "q74_rrf_fusion" -> ((s, d) => {
-      val q = queryVecs(s, d)
-      val content = ContentRetriever.topK(Tables.embeddings(s, d), q, 60)
-        .select(col("query_id"), col("vec_id").as("item"), col("rnk"))
-      val cf = coLabelCf(s, d, q)
-        .select(col("src").as("query_id"), col("dst").as("item"), col("rnk"))
-      HybridScorer.rrf(content, cf, 60, 10)
-        .withColumn("rrf", round(col("rrf"), 6))
-    }),
-
-    // --- benchmark decontamination --------------------------------------
-    // The eval-set 8-gram contamination sweep: benchmark = every 97th doc;
-    // corpus = the rest PLUS planted full copies of the benchmark docs
-    // (id + 10^6) — guaranteed contamination the sweep must find, on top
-    // of whatever n-grams the corpus shares naturally.
-    "q75_decontaminate" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val bench = docs.where(col("doc_id") % 97 === 0)
-      val corpus = docs.where(col("doc_id") % 97 =!= 0)
-        .unionByName(bench.select((col("doc_id") + 1000000L).as("doc_id"),
-          col("text")))
-      Dedup.decontaminate(corpus, bench, 8)
-    }),
-
-    // --- bloom-prefiltered decontamination (big-benchmark shape) --------
-    // q75 broadcasts the benchmark postings as an exact hash table; this
-    // is the contract when the eval suite is too big for that: a
-    // 10-bits/item bloom sketch prefilters corpus postings MAP-SIDE (no
-    // false negatives), and only survivors pay the exact verify join.
-    // Output is bit-identical to the exact sweep (13-gram GPT-3 rule,
-    // planted copies at +2·10^6) — the oracle proves the sketch lost
-    // nothing and the verify step added nothing.
-    "q82_bloom_decon" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val bench = docs.where(col("doc_id") % 89 === 0)
-      val corpus = docs.where(col("doc_id") % 89 =!= 0)
-        .unionByName(bench.select((col("doc_id") + 2000000L).as("doc_id"),
-          col("text")))
-      Dedup.decontaminateBloom(corpus, bench, 13)
-    }),
-
-    // --- sequence packing (concatenate-and-cut) --------------------------
-    // Every document's tokens on one global tape, cut every 512 tokens;
-    // one row per (doc, bin) overlap. Two-level prefix sum — no global
-    // single-task sort (see TextAnalysis.packSequences).
-    "q76_pack_sequences" -> ((s, d) =>
-      TextAnalysis.packSequences(Tables.documents(s, d), 512, 128)),
-
-    // --- association scores over the co-purchase graph -------------------
-    // Popularity-corrected edge strength: cosine / lift / Jaccard from
-    // exact order counts — the fix for raw-count CF over-recommending
-    // globally popular items.
-    "q77_assoc_scores" -> ((s, d) =>
-      CoPurchaseGraph.assocFromOrders(Tables.lineitem(s, d))),
-
-    // --- within-document repetition (boilerplate filter) -----------------
-    "q78_repetition" -> ((s, d) =>
-      TextAnalysis.repetition(Tables.documents(s, d), 3)),
-
-    // --- PII scrubbing ----------------------------------------------------
-    // Emails/phones are injected deterministically (doc_id % 5 / % 7) so
-    // the redaction has real work; the md5 digests the redacted text.
-    "q79_pii_scrub" -> ((s, d) => {
-      val injected = Tables.documents(s, d).select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 5 === 0,
-            concat(lit(" contact user"), col("doc_id"), lit("@example.com")))
-            .otherwise(lit("")),
-          when(col("doc_id") % 7 === 0, lit(" call 555-123-4567"))
-            .otherwise(lit(""))).as("text"))
-      TextAnalysis.piiScrub(injected)
-    }),
-
-    // --- deterministic train/val/test split ------------------------------
-    // hash60(seed:key) mod 100 < {80,90,100}: pure map-side, stable under
-    // any repartitioning (rand(seed) is not), oracle-replayable.
-    "q80_hash_split" -> ((s, d) =>
-      Sampling.hashSplit(Tables.documents(s, d), "doc_id", "42",
-        Seq("train" -> 80, "val" -> 90, "test" -> 100))),
-
-    "q29_sessions" -> ((s, d) => {
-      val sess = graft.streaming.EventStream.sessionizeBatch(
-        Tables.events(s, d), 28800000L)
-      val w = Window.partitionBy("user_id").orderBy(col("session_id").desc)
-      sess.withColumn("__r", row_number().over(w)).where(col("__r") === 1)
-        .select(col("user_id"), col("session_id"), col("n_events"))
-    }),
-
-    // --- native session windows: the declarative sessionizer ------------
-    // Spark's session_window is the idiomatic form of gap sessionization
-    // (dynamic windows merged in the aggregate — works identically under
-    // readStream with state eviction by watermark). Boundary convention
-    // differs from q29's lag-form: session_window CLOSES at gap-equality
-    // (next.ts >= prev.ts + gap splits), the lag-form splits only when
-    // strictly greater — the oracle encodes >=. Full session list, not
-    // just the last: start, end = last_ts + gap, size.
-    "q69_session_window" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("user_id"), session_window(col("ts"), "8 hours"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          unix_millis(col("session_window.start")).as("win_start_ms"),
-          unix_millis(col("session_window.end")).as("win_end_ms"),
-          col("n_events"))),
-
-    // --- embedding dedup THROUGH the ANN join (the 100 TB shape) --------
-    // q55 proves brute-force cosine pairs find planted duplicates; this
-    // is the same decision made the way a 100 TB pipeline actually makes
-    // it: corpus + planted copies all query the cell-cogrouped kNN join
-    // (nothing broadcasts), and near-dup pairs are the sim≈1 hits. An
-    // identical vector lands in its twin's cell by construction, so ANN
-    // recall on exact duplicates is 1.0 — the in-plan contract: all 10
-    // planted pairs surface with sim ≈ 1.
-    "q70_ann_dedup" -> ((s, d) => {
-      IvfIndexStore.ensure(s, d)
-      val model = IvfIndexStore.loadModel(d)
-      val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val corpus = emb.unionByName(emb.where(col("vec_id") < 10)
-        .withColumn("vec_id", col("vec_id") + 1000000L))
-      val indexed = Ivf.assign(model, corpus)
-      val nn = Ivf.knnJoin(indexed, model,
-        corpus.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-        5, 12)
-      nn.where(col("query_id") < col("vec_id") && col("sim") >= 0.9999)
-        .agg(
-          count(when(col("vec_id") === col("query_id") + 1000000L, 1))
-            .as("n_planted_found"))
-        .select(col("n_planted_found"),
-          (col("n_planted_found") === 10).as("all_planted_found"))
-    }),
-
-    // --- multimodal plumbing --------------------------------------------
-    // REAL codec round-trip (round 9): blobs are genuine PNG / filmstrip
-    // PNG / WAV containers; the emitted width/height/n_frames come from a
-    // real javax.imageio / javax.sound header probe of those bytes. The
-    // oracle can replay the values because the encode side derives the
-    // container dims from the text length and the codecs are lossless.
-    "q30_media_meta" -> ((s, d) =>
-      Multimodal.decodeBatched(Multimodal.withBlob(Tables.documents(s, d))).toDF()),
-
-    // Byte-histogram features over the REAL decoded buffer (PNG raster /
-    // WAV PCM — the feature-extract stage of the media pipeline),
-    // digested bin-by-bin. The payload is the doc's text bytes cycled to
-    // the raster length and the corpus is ASCII, so the oracle can
-    // recompute the decoded-byte counts from character codes with a
-    // cycling-repetition weight.
-    "q45_media_features" -> ((s, d) =>
-      Multimodal.featuresBatched(Multimodal.withBlob(Tables.documents(s, d)))
-        .toDF()
-        .select(col("doc_id"), posexplode(col("features")).as(Seq("bin", "v")))
-        .select(col("doc_id"), col("bin"), round(col("v"), 6).as("v"))),
-
-    // EXECUTED aspect-preserving resize to a 64x64 box (round-10 item 2):
-    // one map-side pass decodes each visual payload, nearest-neighbor
-    // resamples every frame under the integer rule src_x = ⌊x·W/outW⌋
-    // (SQL-replayable position-by-position), re-encodes the real PNG,
-    // decodes THAT back and digests the round-tripped raster — px_sum /
-    // px_wsum are exact integer digests the oracle recomputes from the
-    // text, so the full decode→resample→encode→decode chain is
-    // hash-verified, and roundtrip_ok pins losslessness in-plan.
-    "q54_media_resize" -> ((s, d) =>
-      Multimodal.resizeDigest(Multimodal.withBlob(Tables.documents(s, d)), 64, 64)
-        .toDF()),
-
-    // Every 5th frame index of each video payload (frame-sample stage).
-    "q46_frame_sample" -> ((s, d) =>
-      Multimodal.sampleFrames(
-        Multimodal.decodeBatched(Multimodal.withBlob(Tables.documents(s, d))), 5)
-        .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"))),
-
-    // --- embedding pipeline (MLlib) -------------------------------------
-    // The embedding VALUES are murmur3-hash-dependent (not DuckDB-
-    // reproducible), so the oracle checks the contract instead: every doc
-    // gets a vector of the declared dimension whose L2 norm is exactly 1
-    // (or 0 for a degenerate all-zero TF-IDF) — per-doc scalar digests,
-    // never a raw array column (round-1 q31 crashed the checker on that).
-    "q31_embed_docs" -> ((s, d) => {
-      val emb = Embedder.fitEmbed(Tables.documents(s, d).select(col("doc_id"), col("text")))
-      val norm = sqrt(aggregate(col("embedding"), lit(0.0d),
-        (acc, x) => acc + x.cast("double") * x.cast("double")))
-      emb.select(col("doc_id"), size(col("embedding")).as("dim"),
-        (abs(norm - 1.0d) < 1e-4 || norm < 1e-9).as("norm_ok"))
-    }),
-
-    // --- MLlib BRP-LSH ANN scale path (invariant oracle, q24 pattern) ---
-    // MLlib's seeded hashing is not DuckDB-reproducible, so the hard
-    // signal is a recall contract computed IN-PLAN against the exact
-    // threshold pairs on the same subset (the q10 universe): BRP's sims
-    // are true cosines, so its pairs are a subset of the exact set and
-    // recall = |brp| / |exact|. bucketLength 0.25 (~2 sigma of a unit
-    // vector's projection in 64-d) × 8 tables measured 0.996/0.998
-    // recall at sf0.01/sf0.1; the oracle gates at ≥ 0.9. Wider buckets
-    // would cost less per table but degenerate toward all-pairs (a unit
-    // projection rarely leaves ±4 sigma), so more-tables-at-2-sigma is
-    // the right recall/candidate-volume trade.
-    "q33_brp_pairs" -> ((s, d) => {
-      val sub = Tables.embeddings(s, d).where(col("vec_id") < 2000)
-      val brp = BrpLsh.cosinePairs(BrpLsh.fit(sub, 0.25, 8), sub, 0.35)
-      val exact = Dedup.cosinePairs(sub, 0.35)
-      // One full-outer join + ONE aggregate: each input subtree appears
-      // exactly once in the plan (a per-metric aggregate would re-execute
-      // the LSH join per reference — it is the expensive side).
-      brp.select(col("a"), col("b"), col("sim"), lit(1).as("in_brp"))
-        .join(exact.select(col("a"), col("b"), lit(1).as("in_exact")),
-          Seq("a", "b"), "full_outer")
-        .agg(
-          sum(coalesce(col("in_exact"), lit(0))).as("n_exact"),
-          sum(coalesce(col("in_brp"), lit(0))).as("n_brp"),
-          sum(coalesce(col("in_brp"), lit(0)) * coalesce(col("in_exact"), lit(0)))
-            .as("n_common"),
-          min(col("sim")).as("min_sim"))
-        .select(col("n_exact"),
-          (col("n_common") === col("n_brp")).as("subset_ok"),
-          (col("n_exact") === 0 ||
-            col("n_common").cast("double") / col("n_exact") >= 0.9).as("recall_ok"),
-          (col("n_brp") === 0 || col("min_sim") >= 0.35 - 1e-9).as("threshold_ok"))
-    }),
-
-    // --- IVF ANN recall contract against the persisted index -----------
-    // Serves from the build-once IvfIndexStore artifact (no KMeans re-fit
-    // in the benched query — round-1 verdict #9) and verifies the ANN
-    // contract in-plan: every query gets exactly k rows, and recall@10
-    // vs the exact scan clears the bound. The index carries the ADAPTIVE
-    // √N cell count (round-10 item 1), so the recall-gated probe is a
-    // FRACTION of the cells — ceil(0.75·nCells), the same 12-of-16
-    // fraction the gates were originally measured at. This corpus'
-    // embeddings are near-uniform (no cluster structure), the worst case
-    // for IVF recall, so the fraction is what holds the floor here;
-    // structured corpora need far less (the 10× replica corpus measured
-    // 0.95 recall at 12/141 probes — SCALE.md round 10). Gates sit
-    // directly under the measured values at that
-    // fraction: mean 0.975/0.965/0.935, min 0.8/0.9/0.8 at
-    // sf0.01/sf0.001/sf0.1 — deterministic under the seeded KMeans,
-    // so a half-broken probe can't hide below a loose floor (round-2
-    // verdict ask #8).
-    "q34_ivf_knn" -> ((s, d) => {
-      val q = queryVecs(s, d)
-      val ivf = IvfIndexStore.serve(s, d, q, 10, gateProbes(s, d))
-      val ex = ContentRetriever.topK(Tables.embeddings(s, d), q, 10)
-        .select("query_id", "vec_id")
-      // Hit-flag join + one groupBy chain: the served subtree appears
-      // once in the plan (separate rows/hits aggregates would re-run the
-      // probed scan per metric).
-      ivf.select("query_id", "vec_id")
-        .join(ex.withColumn("in_ex", lit(1)), Seq("query_id", "vec_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n"),
-          sum(coalesce(col("in_ex"), lit(0))).as("h"))
-        .agg(count(lit(1)).as("n_queries"),
-          min(col("n")).as("min_rows"), max(col("n")).as("max_rows"),
-          avg(col("h") / 10.0).as("mean_recall"),
-          min(col("h") / 10.0).as("min_recall"))
-        .select(col("n_queries"),
-          (col("min_rows") === 10 && col("max_rows") === 10).as("rows_ok"),
-          (col("mean_recall") >= 0.9).as("mean_recall_ok"),
-          (col("min_recall") >= 0.7).as("min_recall_ok"))
-    }),
-
-    // --- persisted-index SERVING latency (the baseline's contract) ------
-    // The reference's runtime_total.png times 50 queries against a
-    // pre-built HNSW index (~3.4 ms/query); this query is the analogous
-    // serve-only path: the quantizer + cell-partitioned index come from
-    // IvfIndexStore (built untimed in SparkEntry.setups), the plan probes
-    // 4/16 cells with static partition pruning, and the output digests
-    // the serving invariants so the oracle is a constant row.
-    "q37_ivf_serve" -> ((s, d) => {
-      val served = IvfIndexStore.serve(s, d, queryVecs(s, d), 10, 4)
-      served.groupBy("query_id")
-        .agg(count(lit(1)).as("n"),
-          max(when(col("query_id") === col("vec_id"), 1).otherwise(0)).as("selfhit"),
-          min(col("sim")).as("lo"), max(col("sim")).as("hi"))
-        .agg(count(lit(1)).as("n_queries"),
-          (min(col("n")) === 10 && max(col("n")) === 10).as("rows_ok"),
-          (max(col("selfhit")) === 0).as("self_excluded"),
-          (min(col("lo")) >= -1.000001 && max(col("hi")) <= 1.000001).as("sim_range_ok"))
-    }),
-
-    // --- batch-serving THROUGHPUT against the persisted index -----------
-    // One Spark job amortizes its fixed cost over 1000 queries — the
-    // honest way to compare per-query serving with the baseline's
-    // ~3.4 ms/query HNSW loop: the bench line / 1000 is the per-query
-    // number at batch width, which is how a Spark deployment serves.
-    "q43_ivf_serve_batch" -> ((s, d) => {
-      val served = IvfIndexStore.serve(s, d, queryVecs(s, d, 1000), 10, 4)
-      served.groupBy("query_id")
-        .agg(count(lit(1)).as("n"),
-          max(when(col("query_id") === col("vec_id"), 1).otherwise(0)).as("selfhit"))
-        .agg(count(lit(1)).as("n_queries"),
-          (min(col("n")) === 10 && max(col("n")) === 10).as("rows_ok"),
-          (max(col("selfhit")) === 0).as("self_excluded"))
-    }),
-
-    // --- PQ batch serving at the q43 contract ---------------------------
-    // The q43 amortization story served from CODES: 1000 queries probe
-    // the same IVF cells, ADC-score 16-byte codes (codegen'd AdcScore),
-    // refine the 50-deep shortlist exactly. Same invariant gates as q43
-    // (exact k rows per query, self excluded) — directly comparable
-    // ms/query between the float index and the 21×-compressed one.
-    "q92_pq_serve_batch" -> ((s, d) => {
-      val served = PqIndexStore.serve(s, d, queryVecs(s, d, 1000), 10, 50, 4)
-      served.groupBy("query_id")
-        .agg(count(lit(1)).as("n"),
-          max(when(col("query_id") === col("vec_id"), 1).otherwise(0)).as("selfhit"))
-        .agg(count(lit(1)).as("n_queries"),
-          (min(col("n")) === 10 && max(col("n")) === 10).as("rows_ok"),
-          (max(col("selfhit")) === 0).as("self_excluded"))
-    }),
-
-    // --- incremental index maintenance: upsert ≡ rebuild ----------------
-    // Build the cell-partitioned index on half the corpus, APPEND the
-    // other half with the same quantizer (Ivf.upsertIndex — new files
-    // touch only their cell directories), then serve: results must be
-    // row-identical to serving the one-shot full index. The invariant a
-    // mutable vector store owes its users. The upserted artifact is
-    // built ONCE in setups (untimed, like q34/q37/q43's index — the
-    // bench line measures the serve + equality gate, not construction).
-    "q66_ivf_upsert" -> ((s, d) => {
-      val tmp = ensureUpsertedIndex(s, d)
-      val model = IvfIndexStore.loadModel(d)
-      val viaUpsert = Ivf.topKPersisted(s, tmp, model, queryVecs(s, d), 10, 4)
-      val oneShot = IvfIndexStore.serve(s, d, queryVecs(s, d), 10, 4)
-      viaUpsert.select(col("query_id"), col("vec_id"), col("rnk"), lit(1).as("u"))
-        .join(oneShot.select(col("query_id"), col("vec_id"), col("rnk"),
-          lit(1).as("o")), Seq("query_id", "vec_id", "rnk"), "full_outer")
-        .agg(count(lit(1)).as("n_rows"),
-          count(when(col("u").isNotNull && col("o").isNotNull, 1)).as("n_matched"),
-          (count(when(col("u").isNull || col("o").isNull, 1)) === 0)
-            .as("upsert_equals_rebuild"))
-    }),
-
-    // --- corpus-scale kNN JOIN: every doc queries, nothing broadcasts ---
-    // The q55 dedup shape at FULL width (|Q| = |index| = the whole
-    // embeddings table): each vector's top-10 neighbors via the cell-
-    // cogrouped join (Ivf.knnJoin — map-side probe, equi-join on cell,
-    // WindowGroupLimit top-k). Broadcast-or-bust was round-2's one
-    // missing scale path. Digest: every query present with exactly k
-    // rows, self excluded, and recall@10 vs the exact scan on the
-    // vec_id<20 subset clears the same bounds as q34 (identical probe
-    // parameters ⇒ identical served rows for those queries).
-    "q68_knn_join" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb"))
-      val nn = Ivf.knnJoin(IvfIndexStore.indexFrame(s, d),
-        IvfIndexStore.loadModel(d), queries, 10, gateProbes(s, d))
-      val ex = ContentRetriever.topK(emb, queryVecs(s, d), 10)
-        .select(col("query_id"), col("vec_id"), lit(1).as("in_ex"))
-      nn.select("query_id", "vec_id")
-        .join(ex, Seq("query_id", "vec_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n"),
-          max(when(col("query_id") === col("vec_id"), 1).otherwise(0)).as("selfhit"),
-          sum(coalesce(col("in_ex"), lit(0))).as("h"))
-        .agg(count(lit(1)).as("n_queries"),
-          (min(col("n")) === 10 && max(col("n")) === 10).as("rows_ok"),
-          (max(col("selfhit")) === 0).as("self_excluded"),
-          avg(when(col("query_id") < 20, col("h") / 10.0)).as("mean_recall"),
-          min(when(col("query_id") < 20, col("h") / 10.0)).as("min_recall"))
-        .select(col("n_queries"), col("rows_ok"), col("self_excluded"),
-          (col("mean_recall") >= 0.9).as("mean_recall_ok"),
-          (col("min_recall") >= 0.7).as("min_recall_ok"))
-    }),
-
-    // --- E3: content-arm vs hybrid-arm Precision@K ----------------------
-    // The reference's headline experiment (`Hybrid_Recom_vecdb.py:237-292`
-    // + precision_k.png) evaluates BOTH retrieval arms against
-    // co-purchase ground truth; round 1 only evaluated a CF-ranked list.
-    // Here the full arms feed Evaluation.precisionAtK: truth = co-label
-    // pairs (the corpus' stand-in for co-purchase neighbors).
-    "q35_content_precision" -> ((s, d) => {
-      val ranked = ContentRetriever.topK(Tables.embeddings(s, d), queryVecs(s, d), 20)
-        .select(col("query_id"), col("vec_id").as("item"), col("rnk"))
-      Evaluation.precisionAtK(ranked, coLabelTruth(s, d), Seq(5, 10))
-    }),
-
-    "q36_hybrid_precision" -> ((s, d) => {
-      val ranked = hybridTopK(s, d).select(col("query_id"), col("item"), col("rnk"))
-      Evaluation.precisionAtK(ranked, coLabelTruth(s, d), Seq(5, 10))
-    }),
-
-    // --- text → embedding → k-NN over documents (similarity search on
-    // raw text, the training-pipeline composition: Embedder output feeds
-    // the same retrieval operator as precomputed vectors). Exact-cosine
-    // invariants are earned in-plan; embedding values themselves are
-    // murmur3-dependent, hence the digest oracle.
-    "q51_text_knn" -> ((s, d) => {
-      val emb = Embedder.fitEmbed(Tables.documents(s, d).select(col("doc_id"), col("text")))
-        .select(col("doc_id").as("vec_id"), col("embedding"))
-      val q = emb.where(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      ContentRetriever.topK(emb, q, 10)
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n"),
-          max(when(col("query_id") === col("vec_id"), 1).otherwise(0)).as("selfhit"),
-          min(col("sim")).as("lo"), max(col("sim")).as("hi"))
-        .agg(count(lit(1)).as("n_queries"),
-          (min(col("n")) === 10 && max(col("n")) === 10).as("rows_ok"),
-          (max(col("selfhit")) === 0).as("self_excluded"),
-          (min(col("lo")) >= -1.000001 && max(col("hi")) <= 1.000001).as("sim_range_ok"))
-    }),
-
-    // --- E2 composed end-to-end from a STRING (reference :384-410) ------
-    // The reference's interactive path starts from free text: resolve →
-    // embed the resolved title (a fitted-model transform of a 1-row
-    // frame) → content + CF retrieval → blend. Round 1 had every part
-    // but never the composition (verdict missing #2). Fixture corpus so
-    // the ranking is frozen in a VALUES oracle; float scores are dropped
-    // (rank order is the contract, MLlib hash values are not).
-    "q38_hybrid_from_string" -> ((s, d) => {
-      val products = e2Products(s)
-      val docs = products.withColumn("document", OfflineIndexBuild.productText(
-        col("title"), col("group"), col("categories")))
-      val resolved = QueryResolver.resolve(products, "gamma")
-      val model = Embedder.fit(docs, "document", 64)
-      val index = Embedder.embed(model, docs)
-        .select(col("asin").as("vec_id"), col("embedding"))
-      val qvec = Embedder.embed(model,
-          resolved.select(col("id").as("query_id"), col("title").as("document")))
-        .select(col("query_id"), col("embedding").as("q_emb"))
-      val content = ContentRetriever.topK(index, qvec, 60)
-        .select(col("query_id"), col("vec_id").as("item"),
-          clamp01(col("sim")).as("cs"))
-      val edges = CoPurchaseGraph.fromSimilar(products)
-      val cf = CfRetriever.topNFor(edges, resolved.select(col("id").as("query_id")), 60)
-        .select(col("src").as("query_id"), col("dst").as("item"), col("norm").as("fs"))
-      // J5 title-enrichment lookup on the blended output (reference :229
-      // attaches asin_to_title to every scored candidate).
-      HybridScorer.blend(content, cf, 0.6, 10)
-        .join(broadcast(products.select(col("asin").as("item"),
-          col("title").as("item_title"))), Seq("item"))
-        .select(col("query_id"), col("item"), col("item_title"), col("rnk"))
-    }),
-
-    // --- E1 offline build → parquet sinks → load roundtrip (S6/S7) ------
-    // The reference's full offline pipeline (parse → sample → graph +
-    // text → embed → vector-store sink, `Hybrid_Recom_vecdb.py:331-383`)
-    // against real parquet sinks with overwrite (wipe-every-run)
-    // semantics, then loaded back and digested. Round 1 covered this
-    // unit-only (verdict S6/S7 rows).
-    "q42_offline_build" -> ((s, d) => {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft-offline-e2"
-      val arts = OfflineIndexBuild.run(e2Products(s), sampleN = 100,
-        seed = 42L, dim = 64)
-      OfflineIndexBuild.write(arts, dir)
-      val loaded = OfflineIndexBuild.load(s, dir)
-      val idx = loaded.index.agg(count(lit(1)).as("n_items"),
-        min(size(col("embedding"))).as("dmin"),
-        max(size(col("embedding"))).as("dmax"),
-        count(when(col("document").isNull, 1)).as("null_docs"))
-      val edg = loaded.edges.agg(count(lit(1)).as("n_edges"),
-        sum(col("weight")).as("w_sum"))
-      idx.crossJoin(edg).select(col("n_items"),
-        (col("dmin") === 64 && col("dmax") === 64).as("dim_ok"),
-        (col("null_docs") === 0).as("docs_ok"),
-        col("n_edges"), col("w_sum"))
-    }),
-
-    // --- embedding-cosine near-dup on RAW documents ---------------------
-    // Embed the text, threshold-pair in embedding space. The contract
-    // earned in-plan: every EXACT duplicate pair (md5-equal normalized
-    // text ⇒ identical embedding) must be found with cosine ≈ 1 — the
-    // recall floor of embedding-space dedup. Embedding values are
-    // murmur3-dependent, hence the digest; n_exact_pairs is recomputed
-    // relationally by the oracle.
-    "q55_embed_dups" -> ((s, d) => {
-      // The corpus has no exact duplicates, so 10 known copies are
-      // PLANTED (same text, offset ids) — the recall contract is then
-      // non-vacuous: embedding-space dedup must find every planted pair
-      // at cosine ≈ 1 regardless of what the hashing embeds to.
-      val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val corpus = base.unionByName(base.where(col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      val emb = Embedder.fitEmbed(corpus)
-        .select(col("doc_id").as("vec_id"), col("embedding"))
-      val pairs = Dedup.cosinePairs(emb, 0.995, "vec_id", "embedding")
-      val hashed = corpus.select(col("doc_id"), md5(lower(trim(col("text")))).as("ch"))
-      val exactPairs = hashed.as("x")
-        .join(hashed.as("y"), col("x.ch") === col("y.ch") &&
-          col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      pairs.select(col("a"), col("b"), col("sim"), lit(1).as("in_pairs"))
-        .join(exactPairs.withColumn("in_exact", lit(1)), Seq("a", "b"), "full_outer")
-        .agg(
-          count(when(col("in_exact").isNotNull, 1)).as("n_exact_pairs"),
-          (count(when(col("in_exact").isNotNull, 1)) ===
-            count(when(col("in_exact").isNotNull && col("sim") >= 0.9999, 1)))
-            .as("all_exact_found"))
-    }),
-
-    // --- SQ8 scalar quantization: the ANN-serving compression path ------
-    // Per-vector int8 codes + scale; digest = exact code checksum + the
-    // cosine actually lost to quantization. Map-side only.
-    "q59_quantize" -> ((s, d) =>
-      Quantize.reconstructionDigest(Tables.embeddings(s, d))),
-
-    // --- ANN serving from the SQ8-QUANTIZED index -----------------------
-    // The compression path actually serving: the persisted IVF index is
-    // quantized to int8 codes (~4× less index RAM), dequantized in-plan,
-    // and probed exactly like the float index. Contract: every query
-    // still gets k rows, and the quantized top-10 overlaps the
-    // full-precision top-10 heavily — SQ8's ~1e-2 cosine error may swap
-    // genuine near-ties but must not change what the index finds.
-    "q71_sq8_serve" -> ((s, d) => {
-      val model = IvfIndexStore.loadModel({ IvfIndexStore.ensure(s, d); d })
-      val index = IvfIndexStore.indexFrame(s, d)
-      val q = queryVecs(s, d)
-      val sq = Quantize.dequantized(Quantize.int8(index, "vec_id", "embedding"))
-      val quant = Ivf.topK(sq, model, q, 10, 4)
-      val full = IvfIndexStore.serve(s, d, q, 10, 4)
-      quant.select(col("query_id"), col("vec_id"), lit(1).as("in_q"))
-        .join(full.select(col("query_id"), col("vec_id"), lit(1).as("in_f")),
-          Seq("query_id", "vec_id"), "full_outer")
-        .groupBy("query_id")
-        .agg(count(when(col("in_q").isNotNull, 1)).as("n_q"),
-          count(when(col("in_q").isNotNull && col("in_f").isNotNull, 1)).as("common"))
-        .agg(count(lit(1)).as("n_queries"),
-          (min(col("n_q")) === 10 && max(col("n_q")) === 10).as("rows_ok"),
-          avg(col("common") / 10.0).as("mean_overlap"),
-          min(col("common") / 10.0).as("min_overlap"))
-        .select(col("n_queries"), col("rows_ok"),
-          (col("mean_overlap") >= 0.95).as("mean_overlap_ok"),
-          (col("min_overlap") >= 0.8).as("min_overlap_ok"))
-    }),
-
-    // --- IVF-PQ: product-quantized ADC serving + exact refine -----------
-    // The index's float vectors are replaced by m=16 6-bit codes (~21×
-    // compression at dim 64); serving probes the SAME coarse cells as the
-    // exact path, ADC-scores codes against a per-query lookup table
-    // (codegen'd AdcScore — O(m) adds per candidate) into a 200-deep
-    // shortlist, and ONLY shortlist rows fetch their full vector for the
-    // exact top-10 (FAISS IVFPQ+refine). The overlap gate isolates PQ
-    // loss (the IVF probe is identical in both arms); measured 1.0/1.0
-    // at sf0.01 and sf0.1 — gates carry q34-style headroom.
-    "q81_pq_serve" -> ((s, d) => {
-      IvfIndexStore.ensure(s, d)
-      val q = queryVecs(s, d)
-      val approx = PqIndexStore.serve(s, d, q, 10, 200, 4)
-      val full = IvfIndexStore.serve(s, d, q, 10, 4)
-      approx.select(col("query_id"), col("vec_id"), lit(1).as("in_p"))
-        .join(full.select(col("query_id"), col("vec_id"), lit(1).as("in_f")),
-          Seq("query_id", "vec_id"), "full_outer")
-        .groupBy("query_id")
-        .agg(count(when(col("in_p").isNotNull, 1)).as("n_p"),
-          count(when(col("in_p").isNotNull && col("in_f").isNotNull, 1)).as("common"))
-        .agg(count(lit(1)).as("n_queries"),
-          (min(col("n_p")) === 10 && max(col("n_p")) === 10).as("rows_ok"),
-          avg(col("common") / 10.0).as("mean_overlap"),
-          min(col("common") / 10.0).as("min_overlap"))
-        .select(col("n_queries"), col("rows_ok"),
-          (col("mean_overlap") >= 0.9).as("mean_overlap_ok"),
-          (col("min_overlap") >= 0.7).as("min_overlap_ok"))
-    }),
-
-    // --- SQL surface: SparkSessionExtensions-registered functions -------
-    // The same custom Catalyst expressions that power q10/q15/q16/q18
-    // invoked through spark.sql — gating the GraftExtensions /
-    // FunctionRegistry path with the hard oracle signal. A SQL-only user
-    // gets bit-identical values to the Column API.
-    "q56_sql_fns" -> ((s, d) => {
-      GraftExtensions.register(s)
-      Tables.documents(s, d).createOrReplaceTempView("graft_docs")
-      s.sql(
-        """SELECT doc_id,
-          |  rolling_fingerprint(tk) AS fingerprint,
-          |  simhash60(tk) AS simhash,
-          |  cast(size(word_shingles(tk, 3)) AS BIGINT) AS n_shingles,
-          |  try_element_at(minhash_sig(word_shingles(tk, 3), 16), 1) AS minhash0,
-          |  round(cosine_sim(array(cast(size(tk) AS DOUBLE), 1.0d),
-          |                   array(1.0d, cast(size(tk) AS DOUBLE))), 6) AS cos_toy
-          |FROM (SELECT doc_id,
-          |        filter(split(lower(text), '[^a-z0-9]+'), t -> t != '') AS tk
-          |      FROM graft_docs)""".stripMargin)
-    }),
-
-    // --- capstone corpus filter: what the pipeline actually ships -------
-    // kept = canonical under dedup (exact + MinHash evidence) ∧ English ∧
-    // quality ≥ 0.5 — the keep decision composed from the dedup, language
-    // and quality operators in one plan.
-    "q53_corpus_filter" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val keep = Dedup.keepList(docs, 3, 16, 8, 0.5)
-        .select(col("doc_id"), col("is_kept").as("canonical"))
-      // lang + quality in ONE corpus pass (surfaceGate, the q90 fusion —
-      // identical columns by construction), one join instead of two
-      val gate = TextAnalysis.surfaceGate(docs)
-        .select(col("doc_id"), (col("pred_lang") === "en").as("lang_ok"),
-          (col("quality") >= 0.5).as("quality_ok"))
-      keep.join(gate, Seq("doc_id"))
-        .withColumn("kept", col("canonical") && col("lang_ok") && col("quality_ok"))
-    }),
-
-    // --- SimHash near-dup pairs (pigeonhole chunk join) -----------------
-    "q39_simhash_pairs" -> ((s, d) =>
-      Dedup.simhashPairs(Tables.documents(s, d), 3)),
-
-    // --- A10: title→id dictionary with dedup-on-title -------------------
-    // The reference's title_to_asin dict comprehension keeps the LAST
-    // duplicate title (dict-order accident, `Hybrid_Recom_vecdb.py:348`);
-    // we declare the deterministic min-id keep (SURVEY §2.5 A10 note).
-    "q40_title_dict" -> ((s, d) => Tables.documents(s, d)
-      .groupBy(col("text").as("title"))
-      .agg(min(col("doc_id")).as("id"), count(lit(1)).as("n_dups"))),
-
-    // --- S1/S2: REAL file read (gz, ISO-8859-1, header stanza) ----------
-    // Round 1 only exercised parseStanza on in-memory strings (verdict
-    // missing #3); this parses an actual gzipped dump through the
-    // `lineSep="\nId:"` record-splitting path, header dropped because its
-    // pseudo-stanza has no ASIN.
-    "q41_parse_file" -> ((s, d) => {
-      val path = e2FixturePath()
-      AmazonMetaParser.parseToDf(s, path)
-        .select(col("asin"), col("title"), col("group"),
-          size(col("categories")).cast("long").as("n_categories"),
-          size(col("similar")).cast("long").as("n_similar"))
-    }),
-
-    // --- amazon-meta stanza parser on the FIXTURES.md fixture -----------
-    "q32_parse_products" -> ((s, d) => {
-      import s.implicits._
-      s.createDataset(stanzaFixture).flatMap(AmazonMetaParser.parseStanza _).toDF()
-        .select(col("asin"), col("title"), col("group"),
-          size(col("categories")).cast("long").as("n_categories"),
-          size(col("similar")).cast("long").as("n_similar"))
-    }),
-
-    // --- bucketed co-located fact-fact join ------------------------------
-    // lineitem ⋈ orders where BOTH sides are 100 TB-class: broadcast is
-    // impossible and a plain join shuffles every byte of both tables per
-    // run. The bucketed layout (BucketedStore, 8 buckets on the join key,
-    // written once as an untimed setup) makes the join exchange-FREE —
-    // PlanSpec asserts zero ShuffleExchange under forced sort-merge. The
-    // only shuffle left is the 5-group rollup above it.
-    "q99_bucket_join" -> ((s, d) => {
-      graft.sources.BucketedStore.ensure(s, d)
-      graft.sources.BucketedStore.lineitem(s, d)
-        .join(graft.sources.BucketedStore.orders(s, d),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_items"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4)
-            .as("revenue"))
-    }),
-
-    // --- BM25 ranked keyword retrieval (sparse search arm) ---------------
-    // Lexical top-k over the documents corpus for literal keyword
-    // queries — the sparse retrieval arm hybrid-search stacks pair with
-    // the reference's dense arm. Scores are fixed-point-summed so the
-    // oracle replays them bit-exactly.
-    "q100_bm25" -> ((s, d) => {
-      import s.implicits._
-      val queries = Seq(("kq1", "spark join fast"), ("kq2", "vector table scan"),
-        ("kq3", "stream window agg")).toDF("query_id", "query_text")
-      Bm25.topK(Tables.documents(s, d), queries, 10)
-    }),
-
-    // --- hybrid search: dense ⊕ sparse via reciprocal-rank fusion --------
-    // The E2 hybrid re-expressed as modern hybrid SEARCH: for query docs
-    // (every 100th), the dense arm is exact cosine top-30 over the
-    // embeddings table and the sparse arm is BM25 top-30 on the doc's
-    // first-5-token keyword query; RRF fuses the two rank lists
-    // (q74's fusion, with a lexical arm instead of co-label CF).
-    "q101_hybrid_search" -> ((s, d) => {
-      val queries = Tables.tableRaw(s, d, "documents")
-        .where(col("doc_id") % 100 === 0)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(graft.functions.TextFunctions.tokens(col("text")), 1, 5))
-            .as("query_text"))
-      val sparse = Bm25.topK(Tables.documents(s, d), queries, 30, excludeSelf = true)
-        .select(col("query_id"), col("doc_id").as("item"), col("rnk"))
-      val qv = Tables.embeddingsRaw(s, d).where(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      val dense = ContentRetriever.topK(Tables.embeddings(s, d), qv, 30)
-        .select(col("query_id"), col("vec_id").as("item"), col("rnk"))
-      HybridScorer.rrf(dense, sparse, 60, 10)
-        .select(col("query_id"), col("item"),
-          col("content_rnk").as("dense_rnk"), col("cf_rnk").as("sparse_rnk"),
-          round(col("rrf"), 6).as("rrf"), col("rnk"))
-    }),
-
-    // --- triangle count + clustering coefficient -------------------------
-    // Degree-ordered node-iterator over the co-purchase graph: wedge
-    // out-degree is bounded by O(√E), so no hub blows the join up.
-    "q102_triangles" -> ((s, d) =>
-      GraphMetrics.triangles(CoPurchaseGraph.fromOrders(Tables.lineitem(s, d)))),
-
-    // --- single-pass column profiling (ingest audit) ----------------------
-    // Null/distinct/min/max per column in ONE scan; nulls planted in
-    // c_mktsegment (every 7th customer) so the null counter has work.
-    "q103_profile" -> ((s, d) => {
-      val c = Tables.customer(s, d).withColumn("c_mktsegment",
-        when(col("c_custkey") % 7 === 0, lit(null)).otherwise(col("c_mktsegment")))
-      DataQuality.profile(c, Seq("c_custkey", "c_name", "c_nationkey", "c_mktsegment"))
-    }),
-
-    // --- graded ranking metrics: NDCG@10 / MRR / Recall@10 ----------------
-    // Completes the E3 evaluation family beyond Precision@K: the hybrid
-    // top-10 scored against co-label truth with position-weighted gain.
-    // DCG discounts enter as exact nano-unit integers (the same literals
-    // in the oracle), so DCG/IDCG are exact long sums and every metric
-    // is one identical double division — no float-summation order.
-    "q105_rank_metrics" -> ((s, d) =>
-      Evaluation.rankMetrics(
-        hybridTopK(s, d).select(col("query_id"), col("item"), col("rnk")),
-        coLabelTruth(s, d))),
-
-    // --- per-group winsorization (exact-percentile outlier capping) ------
-    // Feature prep: clamp value to its event_type's [p01, p99]. The
-    // percentile is exact R-7 interpolation computed via window rank —
-    // never `percentile()`'s whole-group aggregation buffer, so a mega
-    // group spills instead of OOMing (FeaturePrep Scaladoc).
-    "q106_winsorize" -> ((s, d) =>
-      FeaturePrep.winsorize(
-        Tables.events(s, d).select(col("event_type"), col("event_id"), col("value")),
-        "event_type", "value", 0.01, 0.99, Seq("event_id"))
-        .select(col("event_type"), col("event_id"),
-          round(col("value_w"), 6).as("value_w"), col("clipped"))),
-
-    // --- referential-integrity audit (orphan counts) ----------------------
-    // Anti-join orphan counts per relationship; the third check audits
-    // against a customer SUBSET (every 10th dropped) so nonzero orphan
-    // counts are exercised, not just zeros.
-    "q104_fk_audit" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-      val o = Tables.orders(s, d)
-      val cust = Tables.customer(s, d)
-      DataQuality.fkAudit(Seq(
-        DataQuality.FkCheck("lineitem_orders", li, "l_orderkey", o, "o_orderkey"),
-        DataQuality.FkCheck("orders_customer", o, "o_custkey", cust, "c_custkey"),
-        DataQuality.FkCheck("orders_customer_subset", o, "o_custkey",
-          cust.where(col("c_custkey") % 10 =!= 0), "c_custkey")))
-    }),
-
-    // --- hourly gap-fill + forward fill (dense time series) ---------------
-    // resample('1H').ffill() as one declarative plan: per-user hourly
-    // fixed-point sums, a per-user hour grid (sequence bounded by each
-    // user's own span), and a running last(ignoreNulls) carrying the
-    // value across gap hours.
-    "q107_gapfill" -> ((s, d) =>
-      Timeseries.gapFill(
-        Tables.events(s, d).where(col("user_id") % 10 === 0),
-        "user_id", "ts", "value")
-        .select(col("user_id"), col("hour"), col("n_events"),
-          round(col("value_filled"), 6).as("value_filled"), col("is_gap"))),
-
-    // --- SCD Type-2 validity intervals (gaps-and-islands) -----------------
-    // Each user's event_type stream compressed to one row per run of
-    // consecutive equal values with [valid_from, valid_to) bounds — the
-    // dimension-history build of a warehouse load, open intervals closed
-    // at a high-date sentinel so no NULL ever reaches a range scan.
-    "q108_scd2" -> ((s, d) =>
-      Timeseries.scd2(
-        Tables.events(s, d).where(col("user_id") % 10 === 0)
-          .select(col("user_id"), col("event_type"), col("ts"), col("event_id")),
-        "user_id", "event_type", "ts", "event_id")
-        .select(col("user_id"), col("version"), col("attr").as("segment"),
-          col("valid_from"), col("valid_to"), col("n_obs"), col("is_current"))),
-
-    // --- next-item prediction examples (sequential recommender prep) ------
-    // (context = previous 3 items oldest→newest, target = current item)
-    // per event with ≥1 predecessor: a bounded lag stack, never a
-    // collect_list, so per-row state is O(historyLen) at any user size.
-    "q109_next_item" -> ((s, d) =>
-      Timeseries.nextItemExamples(
-        Tables.events(s, d)
-          .select(col("user_id"), col("event_type"), col("ts"), col("event_id")),
-        "user_id", "event_type", "ts", "event_id", historyLen = 3)),
-
-    // --- ROC AUC of the hybrid scorer (Mann-Whitney rank-sum) -------------
-    // Threshold-free discrimination over the FULL fused candidate set
-    // (not just top-10): does the blend rank any co-label positive above
-    // any negative? Scores snap to 1e-9 fixed point before ranking so
-    // tie groups are identical across engines; all rank arithmetic is
-    // integral and the one division happens at the end.
-    "q110_auc" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val q = queryVecs(s, d)
-      val content = ContentRetriever.topK(emb, q, 60)
-        .select(col("query_id"), col("vec_id").as("item"),
-          clamp01(col("sim")).as("cs"))
-      val cf = coLabelCf(s, d, q)
-        .select(col("src").as("query_id"), col("dst").as("item"),
-          col("norm").as("fs"))
-      val scored = HybridScorer.blend(content, cf, 0.6, 200)
-        .select(col("query_id"), col("item"),
-          floor(col("final") * lit(1e9) + lit(0.5)).cast("long").as("score"))
-      Evaluation.auc(scored, coLabelTruth(s, d))
-    }),
-
-    // --- fuzzy entity resolution (blocked levenshtein) ---------------------
-    // A dirty feed (every part name with its 3rd character dropped)
-    // resolved against the canonical name catalog: prefix-blocked
-    // candidate join + length-band filter + exact edit-distance verify +
-    // per-probe argmin — never |probes|×|catalog| pairs.
-    "q111_fuzzy_match" -> ((s, d) => {
-      val part = Tables.part(s, d)
-      val catalog = part.groupBy(col("p_name").as("name"))
-        .agg(min(col("p_partkey")).as("cand_id"))
-        .select(col("cand_id"), col("name"))
-      val probes = part.select(col("p_partkey").as("probe_id"),
-        concat(substring(col("p_name"), 1, 2),
-          substring(col("p_name"), 4, 10000)).as("name"))
-      FuzzyJoin.resolve(probes, catalog, maxDist = 2)
-    }),
-
-    // --- weighted sampling without replacement (A-ES) ----------------------
-    // Importance draw over documents with weight = n_chars: inclusion
-    // probability ∝ length, priorities md5-derived so the DuckDB oracle
-    // replays the identical selection.
-    "q112_weighted_sample" -> ((s, d) =>
-      Sampling.weightedSample(
-        Tables.documents(s, d)
-          .select(col("doc_id").as("key"), col("n_chars").cast("double").as("weight")),
-        "key", "weight", 50, "w42")),
-
-    // --- PSI drift audit (train-vs-serve distribution shift) --------------
-    // Population Stability Index of the purchase-value distribution
-    // against the click-value reference, 10 fixed-width bins from the
-    // reference range — the feature-store drift alarm; edges need only a
-    // min/max aggregate, never a global percentile sort.
-    "q113_psi_drift" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      DataQuality.psi(
-        ev.where(col("event_type") === "click"),
-        ev.where(col("event_type") === "purchase"),
-        "value", 10)
-    }),
-
-    // --- ALS matrix factorization (model-based CF arm) ---------------------
-    // MLlib's blocked ALS over the customer×part interaction set with
-    // PLANTED additive structure (rating = user%7 + item%5 + 1 — rank-2,
-    // the q55 planted-signal pattern): the contract is RECOVERY, ALS's
-    // held-out RMSE under half the global-mean baseline's. Counts are
-    // hash-split-deterministic and oracle-replayed; RMSE itself is
-    // float-reduction noisy and never exposed.
-    // Interaction set + planted rating come from AlsCf.Store.ratings —
-    // the SAME definition q129's factor training uses, so the two can
-    // never silently diverge.
-    "q114_als_mf" -> ((s, d) => AlsCf.fitEval(AlsCf.Store.ratings(s, d))),
-
-    // --- exact-arithmetic correlation matrix (profiling audit) ------------
-    // Pearson correlations over the lineitem money/quantity columns with
-    // DECIMAL(38,0) sufficient statistics: bit-identical across runs and
-    // partitionings, unlike corr()'s float accumulator.
-    "q115_corr_matrix" -> ((s, d) =>
-      DataQuality.corrMatrix(Tables.lineitem(s, d),
-        Seq("l_quantity", "l_extendedprice", "l_discount"), 100.0)),
-
-    // --- MMR diversity rerank (serve-time) --------------------------------
-    // Top-20 content retrieval per query, then greedy Maximal Marginal
-    // Relevance to 10 picks at λ=0.7. Inputs snap to 1e-6 before the
-    // greedy trace, so the oracle's unrolled 10-stage argmax replays the
-    // selection bit-exactly.
-    "q116_mmr_rerank" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.where(col("vec_id") < 40)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      val cands = ContentRetriever.topK(emb, queries, 20)
-        .select(col("query_id"), col("vec_id").as("item"),
-          col("sim").as("rel"), col("embedding"))
-      // floor-snap, not round(,6): the raw score doubles are identical on
-      // both engines, but round()'s decimal re-parse can fork at a
-      // 7th-digit half; floor(x*1e6+0.5)/1e6 is pure IEEE on both.
-      Rerank.mmr(cands, 10, 0.7)
-        .withColumn("mmr", floor(col("mmr") * lit(1e6) + lit(0.5)) / lit(1e6))
-    }),
-
-    // --- blend-weight model selection (α sweep) ---------------------------
-    // Precision@10 of the q27 hybrid at six α values from ONE retrieval
-    // pass: the arms are fused once, a broadcast α cross-join inflates
-    // only the bounded candidate pool, and precision aggregates as exact
-    // integer hits with a single final division.
-    "q117_alpha_sweep" -> ((s, d) => {
-      val (content, cf) = hybridArms(s, d)
-      HybridScorer.alphaSweep(content, cf, coLabelTruth(s, d),
-        Seq(0.0, 0.2, 0.4, 0.6, 0.8, 1.0), 10)
-    }),
-
-    // --- out-of-fold target encoding (leakage-safe categorical) -----------
-    "q118_target_encode" -> ((s, d) => {
-      val df = Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("c_mktsegment"),
-          (col("o_orderstatus") === "F").cast("int").as("label"))
-      FeaturePrep.targetEncode(df, "o_orderkey", "c_mktsegment", "label", 5, 10.0)
-    }),
-
-    // --- hashing-trick sparse features (no vocabulary pass) ---------------
-    "q119_feature_hash" -> ((s, d) =>
-      FeaturePrep.featureHash(Tables.documents(s, d), "doc_id", "text", 1024)),
-
-    // --- IVF nprobe sweep: recall-vs-cost tuning curve --------------------
-    // Serves the SAME persisted index at nprobe ∈ {1,2,4,16} and scores
-    // recall@10 against the exact scan. The contracts are STRUCTURAL
-    // guarantees earned in-plan: hits are monotone in nprobe (a larger
-    // probed set can only displace a hit with a better hit, which is
-    // itself in the exact top-10) and the full probe (nprobe = nCells)
-    // IS the exact scan under the shared (sim DESC, vec_id) tie rule.
-    // Recall counts themselves depend on the trained k-means cells, so
-    // like q34 they are gated, never exposed.
-    "q120_nprobe_sweep" -> ((s, d) => {
-      val q = queryVecs(s, d)
-      val ex = ContentRetriever.topK(Tables.embeddings(s, d), q, 10)
-        .select("query_id", "vec_id")
-      // full probe = the index's ACTUAL (adaptive √N) cell count — the
-      // oracle recomputes it as greatest(16, ceil(sqrt(|embeddings|)))
-      val full = IvfIndexStore.nCells(s, d)
-      val served = Seq(1, 2, 4, full).map { p =>
-        IvfIndexStore.serve(s, d, q, 10, p)
-          .select(col("query_id"), col("vec_id")).withColumn("nprobe", lit(p))
-      }.reduce(_ unionByName _)
-      val perProbe = served
-        .join(ex.withColumn("in_ex", lit(1)), Seq("query_id", "vec_id"), "left")
-        .groupBy("nprobe")
-        .agg(countDistinct("query_id").as("n_queries"),
-          count(lit(1)).as("n_rows"),
-          sum(coalesce(col("in_ex"), lit(0))).as("sum_hits"))
-      val w = Window.orderBy("nprobe") // 4 rows: single-partition window OK
-      perProbe
-        .withColumn("prev_hits", lag("sum_hits", 1).over(w))
-        .select(col("nprobe"), col("n_queries"),
-          // partial probes may see cells with < k+1 vectors: bounded
-          // above; the FULL probe must return exactly k per query.
-          (col("n_rows") > 0 && col("n_rows") <= lit(10L) * col("n_queries") &&
-            (col("nprobe") =!= lit(full) ||
-              col("n_rows") === lit(10L) * col("n_queries"))).as("rows_ok"),
-          (col("prev_hits").isNull || col("sum_hits") >= col("prev_hits"))
-            .as("monotone_ok"),
-          (col("nprobe") =!= lit(full) ||
-            col("sum_hits") === col("n_rows")).as("full_probe_exact"))
-    }),
-
-    // --- equal-frequency quantile binning (exact edges) -------------------
-    // Per-returnflag price deciles via deterministic ntile over the
-    // (value, unique-key) total order — the empirical quantile table a
-    // trainer bakes into its feature map.
-    "q121_quantile_bins" -> ((s, d) =>
-      FeaturePrep.quantileBins(
-        Tables.lineitem(s, d).withColumn("__tie",
-          col("l_orderkey") * lit(8L) + col("l_linenumber")),
-        "l_extendedprice", "__tie", 10, Some("l_returnflag"))),
-
-    // --- score calibration audit (reliability bins) -----------------------
-    // Is final≈0.8 an ~80% hit rate? The full fused candidate pool (not
-    // just top-k) bins into score deciles; each bin's exact positive
-    // rate sits next to its fixed-point mean score.
-    "q122_calibration" -> ((s, d) =>
-      Evaluation.reliabilityBins(
-        fusedPool(s, d).select(col("query_id"), col("item"), col("score")),
-        coLabelTruth(s, d), 10)),
-
-    // --- chi-squared feature relevance (segment ⟂ order status?) ----------
-    "q123_chi2" -> ((s, d) =>
-      DataQuality.chi2(
-        Tables.orders(s, d)
-          .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-          .select(col("c_mktsegment"), col("o_orderstatus")),
-        "c_mktsegment", "o_orderstatus")),
-
-    // --- exact covariance sufficient statistics (PCA pass 1) --------------
-    // The oracle replays the full mechanism at 16 dims; q125 runs the
-    // same operator at 64. One scan, one wide aggregate, zero joins.
-    "q124_cov_stats" -> ((s, d) =>
-      Pca.covarianceStats(Tables.embeddings(s, d), "embedding", 16)),
-
-    // --- PCA 64→8: exact covariance → driver eigh → broadcast project ----
-    "q125_pca" -> ((s, d) =>
-      Pca.pcaDigest(Tables.embeddings(s, d), "vec_id", "embedding", 64, 8)),
-
-    // --- isotonic calibration (exact-integer PAV) -------------------------
-    // Fits the monotone step function to (blend score, co-label hit):
-    // the fix for the miscalibration q122 exposes. Merge decisions run
-    // in exact long cross-products; the oracle replays the closed-form
-    // max-min characterization of the same unique L2 projection.
-    "q126_isotonic" -> ((s, d) => {
-      val flagged = fusedPool(s, d)
-        .join(coLabelTruth(s, d).dropDuplicates("query_id", "item")
-          .withColumn("__y", lit(1)), Seq("query_id", "item"), "left_outer")
-        .select(col("score"), coalesce(col("__y"), lit(0)).as("y"))
-      Calibrate.isotonic(flagged, "score", "y")
-    }),
-
-    // --- k-core peeling (dense co-purchase backbone) ----------------------
-    "q127_kcore" -> ((s, d) =>
-      GraphMetrics.kcore(
-        CoPurchaseGraph.fromOrders(Tables.lineitem(s, d)), 3, 10)),
-
-    // --- ALS top-N serving from the persisted factor store ----------------
-    // Completes the factorization loop: q114 proves the model learns;
-    // here the persisted factors serve ranked recommendations (broadcast
-    // user factors × streamed item factors, zip_with dot product,
-    // per-user window, seen-item anti-join) — gated by in-plan contracts.
-    "q129_als_serve" -> ((s, d) => {
-      // user filter FIRST: o_custkey < 50 pushes into the orders scan,
-      // so serve-time work scales with the query users, not the corpus
-      // (seen-item exclusion only needs THESE users' interactions)
-      val inter = AlsCf.Store.ratings(s, d).where(col("user") < 50)
-        .select(col("user"), col("item")).localCheckpoint()
-      val users = inter.select("user").distinct()
-      val served = AlsCf.serveTopN(users,
-        AlsCf.Store.userFactors(s, d), AlsCf.Store.itemFactors(s, d),
-        inter, 10)
-      served
-        .withColumn("prev", lag("score", 1).over(
-          Window.partitionBy("user").orderBy("rnk")))
-        .join(inter.withColumn("__seen", lit(1)), Seq("user", "item"), "left")
-        .agg(countDistinct("user").as("n_users"), count(lit(1)).as("n_rows"),
-          sum(when(col("prev").isNotNull && col("prev") < col("score"), 1)
-            .otherwise(0)).as("__bad_sort"),
-          sum(coalesce(col("__seen"), lit(0))).as("__seen_cnt"))
-        .select(col("n_users"),
-          (col("n_rows") === col("n_users") * 10).as("rows_ok"),
-          (col("__bad_sort") === 0).as("sorted_ok"),
-          (col("__seen_cnt") === 0).as("unseen_ok"))
-    }),
-
-    // --- LSH sketch-quality audit (candidates vs exact Jaccard) -----------
-    // The audit that justifies trusting MinHash at 100 TB where the
-    // exact join is unaffordable: precision/recall of the band-bucket
-    // candidates against the exact n-gram Jaccard pairs at τ=0.2, every
-    // count an exact integer, one division per metric.
-    "q130_lsh_quality" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val exact = Dedup.ngramJaccard(docs, 3, 0.2, maxDf = 1000)
-        .select(col("a"), col("b")).withColumn("__e", lit(1))
-      val cand = Dedup.minhashCandidates(docs, 3, 16, 8)
-        .select(col("a"), col("b")).withColumn("__c", lit(1))
-      exact.join(cand, Seq("a", "b"), "full_outer")
-        .agg(sum(coalesce(col("__e"), lit(0))).as("n_exact"),
-          sum(coalesce(col("__c"), lit(0))).as("n_cand"),
-          sum(when(col("__e") === 1 && col("__c") === 1, 1).otherwise(0))
-            .as("n_hit"))
-        .select(col("n_exact"), col("n_cand"), col("n_hit"),
-          (col("n_hit").cast("double") / col("n_cand").cast("double"))
-            .as("precision"),
-          (col("n_hit").cast("double") / col("n_exact").cast("double"))
-            .as("recall"))
-    }),
-
-    // --- star-schema denormalization (ETL flatten) ------------------------
-    // The warehouse flatten: bucketed fact-fact join on orderkey (zero
-    // fact shuffle) + broadcast joins for every dimension.
-    "q131_star_flatten" -> ((s, d) => {
-      val li = graft.sources.BucketedStore.lineitem(s, d)
-      val or = graft.sources.BucketedStore.orders(s, d)
-      li.join(or, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.customer(s, d)),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d)),
-          col("n_regionkey") === col("r_regionkey"))
-        .join(broadcast(Tables.part(s, d)),
-          col("l_partkey") === col("p_partkey"))
-        .join(broadcast(Tables.supplier(s, d)),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"),
-          col("o_orderpriority"), col("c_mktsegment"), col("n_name"),
-          col("r_name"), col("p_brand"), col("p_type"), col("s_name"))
-    }),
-
-    // --- Naive Bayes language classifier (training = relational algebra) --
-    // The model is two count tables, training one groupBy over the 80%
-    // hash split, inference a token⋈model join with fixed-point log
-    // sums; predictions replay bit-exactly on any engine.
-    "q133_naive_bayes" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val bucket = pmod(graft.functions.TextFunctions.hash60(
-        concat(lit("nb:"), col("doc_id").cast("string"))), lit(5L))
-      NaiveBayes.classify(docs.where(bucket =!= 0), docs.where(bucket === 0),
-        "doc_id", "text", "lang")
-    }),
-
-    // --- Johnson-Lindenstrauss random projection (64→16, all-integer) -----
-    "q134_jl_project" -> ((s, d) =>
-      Pca.jlProject(Tables.embeddings(s, d), "vec_id", "embedding", 64, 16)),
-
-    // --- partitioned publish + manifest verification (sink) ---------------
-    // The setup writes documents partitioned by lang; the query digests
-    // the READ-BACK data per partition. The oracle computes the same
-    // digests from the SOURCE table, so a hash-match proves the publish
-    // lost, duplicated, and mangled nothing.
-    "q138_export_manifest" -> ((s, d) =>
-      graft.sources.ExportStore.manifest(
-        graft.sources.ExportStore.documents(s, d))),
-
-    // --- team-draft interleaving (online ranker A/B) ----------------------
-    // One merged list per query from the content and CF rankers; each
-    // slot remembers which team drafted it. Ranks and tie coins are
-    // deterministic, so the draft replays exactly (unrolled oracle).
-    "q137_team_draft" -> ((s, d) => {
-      val q = queryVecs(s, d)
-      val content = ContentRetriever.topK(Tables.embeddings(s, d), q, 10)
-        .select(col("query_id"), col("vec_id").as("item"), col("rnk"))
-      val cf = coLabelCf(s, d, q).where(col("rnk") <= 10)
-        .select(col("src").as("query_id"), col("dst").as("item"), col("rnk"))
-      Rerank.teamDraft(content, cf, 8)
-    }),
-
-    // --- declarative data-contract suite ----------------------------------
-    // The expectation run a pipeline gates promotion on: each declared
-    // check becomes one aggregate; the report is exact violation counts.
-    // The FK check intentionally FAILS on this corpus (planted orphans,
-    // same ground truth q104 audits).
-    "q136_expectations" -> ((s, d) => {
-      val li = Tables.lineitem(s, d); val or = Tables.orders(s, d)
-      val cu = Tables.customer(s, d)
-      Expectations.run(Seq(
-        Expectations.NotNull("customer_name_not_null", cu, "c_name"),
-        Expectations.UniqueKey("orders_pk", or, Seq("o_orderkey")),
-        Expectations.UniqueKey("lineitem_pk", li,
-          Seq("l_orderkey", "l_linenumber")),
-        Expectations.InRange("quantity_1_50", li, "l_quantity", 1, 50),
-        Expectations.Accepted("status_domain", or, "o_orderstatus",
-          Seq("F", "O", "P")),
-        Expectations.Ref("orders_customer_fk", or, "o_custkey",
-          cu, "c_custkey")))
-    }),
-
-    // --- training-feature-matrix capstone ---------------------------------
-    // The assembled per-order training row a downstream trainer reads:
-    // leakage-safe target encoding (q118's operator), per-segment price
-    // decile (exact ntile), basket size, binary label. One composition,
-    // fully oracle-replayed.
-    "q135_feature_matrix" -> ((s, d) => {
-      val base = Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("c_mktsegment"), col("o_totalprice"),
-          (col("o_orderstatus") === "F").cast("int").as("label"))
-      val te = FeaturePrep.targetEncode(base, "o_orderkey", "c_mktsegment",
-        "label", 5, 10.0).select(col("o_orderkey"), col("te"))
-      val items = Tables.lineitem(s, d).groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_items"))
-      base.join(te, Seq("o_orderkey"))
-        .join(items, col("o_orderkey") === col("l_orderkey"))
-        .withColumn("price_bin", ntile(10).over(
-          Window.partitionBy("c_mktsegment")
-            .orderBy(col("o_totalprice").asc, col("o_orderkey").asc)))
-        .select(col("o_orderkey"), col("c_mktsegment"), col("te"),
-          col("price_bin"), col("n_items"), col("label"))
-    }),
-
-    // --- CUPED variance-reduced A/B readout -------------------------------
-    // Hash-assigned arms over event users; pre-period (Jan 1-14) value
-    // sums are the covariate, post-period the metric. Per-event values
-    // snap to cents BEFORE summing, so every sufficient statistic is an
-    // exact integer and θ/x̄/means are a fixed handful of double ops.
-    "q132_cuped" -> ((s, d) => {
-      val cut = lit("2024-01-15").cast("timestamp")
-      val cents = floor(col("value") * lit(100) + lit(0.5)).cast("long")
-      val perUnit = Tables.events(s, d)
-        .groupBy(col("user_id"),
-          pmod(graft.functions.TextFunctions.hash60(
-            concat(lit("ab:"), col("user_id").cast("string"))), lit(2L))
-            .as("arm"))
-        .agg(sum(when(col("ts") < cut, cents).otherwise(lit(0L))).as("xs"),
-          sum(when(col("ts") >= cut, cents).otherwise(lit(0L))).as("ys"))
-      Experiment.cuped(perUnit, 100.0)
-    }),
-
-    // --- incremental aggregate maintenance (merge ≡ recompute) ------------
-    // Spark serves the MERGE of two disjoint partitions' summaries; the
-    // oracle recomputes from the full fact table. Hash-match proves the
-    // materialized-view fold is exact.
-    "q128_incremental_agg" -> ((s, d) => {
-      val li = Tables.lineitem(s, d)
-      val base = Incremental.stats(
-        li.where(col("l_orderkey") % 10 =!= 0), "l_partkey", "l_quantity")
-      val delta = Incremental.stats(
-        li.where(col("l_orderkey") % 10 === 0), "l_partkey", "l_quantity")
-      Incremental.merge(base, delta, "l_partkey")
-    }),
-
-    // --- pivot report (wide crosstab in one aggregation) -------------------
-    // Orders by year × status: Spark's groupBy().pivot() with explicit
-    // value list compiles to ONE hash aggregate with conditional
-    // accumulators — no per-status scans, no join. Revenue pre-snaps to
-    // cents so the pivoted sums are exact longs.
-    "q139_pivot" -> ((s, d) => {
-      val cents = floor(col("o_totalprice") * lit(100) + lit(0.5)).cast("long")
-      Tables.orders(s, d)
-        .select(year(col("o_orderdate")).as("order_year"),
-          col("o_orderstatus").as("st"), cents.as("cents"))
-        .groupBy("order_year")
-        .pivot("st", Seq("F", "O", "P"))
-        .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("cents"))
-        .select(col("order_year"),
-          coalesce(col("F_cnt"), lit(0L)).as("f_cnt"),
-          coalesce(col("F_cents"), lit(0L)).as("f_cents"),
-          coalesce(col("O_cnt"), lit(0L)).as("o_cnt"),
-          coalesce(col("O_cents"), lit(0L)).as("o_cents"),
-          coalesce(col("P_cnt"), lit(0L)).as("p_cnt"),
-          coalesce(col("P_cents"), lit(0L)).as("p_cents"))
-    }),
-
-    // --- unpivot / melt (wide → long for metric-agnostic pipelines) -------
-    // The inverse reshape: lineitem's three measure columns become
-    // (metric, cents) rows via Spark's native unpivot (Expand — one pass,
-    // no union of scans). Values pre-snap to cents for exact compare.
-    "q140_unpivot" -> ((s, d) => {
-      def cents(c: String) =
-        floor(col(c) * lit(100) + lit(0.5)).cast("long").as(c)
-      Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          cents("l_quantity"), cents("l_extendedprice"), cents("l_discount"))
-        .unpivot(
-          Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_quantity"), col("l_extendedprice"), col("l_discount")),
-          "metric", "cents")
-    }),
-
-    // --- CDC snapshot diff --------------------------------------------------
-    // Two deterministic versions of orders (rows dropped on each side +
-    // price bumps on the overlap) diffed into insert/delete/update — the
-    // MERGE INTO delta. Payload compare is a map-side digest; one
-    // equi-join on the key moves only (key, digest).
-    "q141_snapshot_diff" -> ((s, d) => {
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey"), col("o_orderstatus"),
-        floor(col("o_totalprice") * lit(100) + lit(0.5)).cast("long")
-          .as("cents"))
-      val old = base.where(pmod(col("o_orderkey"), lit(7)) =!= 0)
-      val neu = base.where(pmod(col("o_orderkey"), lit(5)) =!= 0)
-        .withColumn("cents", when(pmod(col("o_orderkey"), lit(3)) === 0,
-          col("cents") + 100).otherwise(col("cents")))
-      Cdc.snapshotDiff(old, neu, Seq("o_orderkey"),
-        Seq("o_custkey", "o_orderstatus", "cents"))
-    }),
-
-    // --- per-group OLS regression (exact sufficient statistics) -----------
-    // Price-vs-quantity trend per returnflag: slope/intercept from
-    // DECIMAL(38,0)-exact sums (regr_slope's double accumulator is
-    // partition-order-dependent — unusable under a hash-match gate).
-    "q142_grouped_ols" -> ((s, d) =>
-      Regression.groupedOls(Tables.lineitem(s, d), "l_returnflag",
-        "l_quantity", "l_extendedprice", 1.0, 100.0)),
-
-    // --- Markov transition matrix over user event sequences ---------------
-    // P(next event type | type) from adjacent pairs in (ts, event_id)
-    // order — integer counts, one double division per cell.
-    "q143_transitions" -> ((s, d) =>
-      Timeseries.transitions(Tables.events(s, d), "user_id", "event_type",
-        "ts", "event_id")),
-
-    // --- multi-source BFS hop distance -------------------------------------
-    // Frontier expansion from anchor products over the co-purchase
-    // graph, 3 synchronous rounds — per-round cost is frontier-sized
-    // (two equi-joins), not graph-sized.
-    "q144_bfs_hops" -> ((s, d) =>
-      GraphMetrics.bfsHops(
-        CoPurchaseGraph.fromOrders(Tables.lineitem(s, d)),
-        Tables.tableRaw(s, d, "part").where(col("p_partkey") < 5)
-          .select(col("p_partkey").as("node")),
-        3)),
-
-    // --- recommendation coverage + Gini concentration ----------------------
-    // Health metrics over the q06 CF surface: how much of the catalog is
-    // ever recommended, and how concentrated the impressions are.
-    "q145_rec_coverage" -> ((s, d) =>
-      Evaluation.coverageGini(
-        CfRetriever.topN(basketEdges(s, d), 10), "dst",
-        Tables.part(s, d), "p_partkey")),
-
-    // --- 2-D skyline (Pareto frontier) --------------------------------------
-    // Cheapest-for-its-size part shortlist: minimize price, maximize
-    // size. Per-price max folds in one shuffle; the strictly-cheaper
-    // prefix max runs two-phase (bucket-local window + broadcast bucket
-    // prefix) — no global single-partition sort.
-    "q146_skyline" -> ((s, d) =>
-      Skyline.frontier2d(Tables.part(s, d), "p_retailprice", "p_size",
-        100.0, 1000L)),
-
-    // --- per-language token entropy + type-token ratio ---------------------
-    // Corpus-diversity audit for data mixing: Shannon entropy of each
-    // language's token distribution, fixed-point Σ c·ln c so the big sum
-    // is exact integers.
-    "q147_entropy" -> ((s, d) =>
-      TextAnalysis.sliceEntropy(Tables.documents(s, d), "lang")),
-
-    // --- strict ordered conversion funnel -----------------------------------
-    // view → click → purchase where each step counts only at-or-after
-    // the user's first completion of the previous step.
-    "q148_funnel" -> ((s, d) =>
-      Timeseries.funnel(Tables.events(s, d), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"))),
-
-    // --- personalized PageRank (random walk with restart) -------------------
-    // Seed-conditioned relatedness over the directed co-purchase graph:
-    // teleport AND dangling mass return to the anchor products only.
-    "q149_ppr" -> ((s, d) =>
-      PageRank.personalized(
-        CoPurchaseGraph.fromOrders(Tables.lineitem(s, d)),
-        Tables.tableRaw(s, d, "part").where(col("p_partkey") < 5)
-          .select(col("p_partkey").as("node")))),
-
-    // --- bounded-lag EWMA smoothing ------------------------------------------
-    // Per-user exponentially-weighted value signal, truncated at 6 lags
-    // so each row is a fixed lag-stack combination (no sequential scan).
-    "q150_ewma" -> ((s, d) =>
-      Timeseries.ewma(Tables.events(s, d), "user_id", "ts", "event_id",
-        "value", 0.5, 6)),
-
-    // --- robust median/MAD outliers ------------------------------------------
-    // Price outliers per returnflag on the median/MAD scale (k=1.5 —
-    // a uniform distribution has max |dev| ≈ 2·MAD, so the tails flag).
-    "q151_mad_outliers" -> ((s, d) =>
-      DataQuality.madOutliers(Tables.lineitem(s, d), "l_returnflag",
-        "l_extendedprice", 1.5, Seq("l_orderkey", "l_linenumber"))),
-
-    // --- order-free table integrity digest -----------------------------------
-    // Merkle-style proof a copy moved every lineitem row unchanged:
-    // per-row 60-bit hash summed exactly — no sort, any engine replays.
-    "q152_table_digest" -> ((s, d) =>
-      DataQuality.tableDigest(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_returnflag"),
-          floor(col("l_extendedprice") * lit(100) + lit(0.5)).cast("long")
-            .as("cents")),
-        Seq("l_orderkey", "l_linenumber", "l_partkey", "l_returnflag",
-          "cents"))),
-
-    // --- HyperLogLog distinct sketch ------------------------------------------
-    // Three key columns sketched in ONE pass; register state is 4096
-    // BIGINTs per column, mergeable by max — the 100 TB count-distinct.
-    // sf0.01 orderkeys (~15k) exercise the raw estimator; partkeys /
-    // suppkeys (~2k/100) the sparse linear-counting branch.
-    "q153_hll_distinct" -> ((s, d) =>
-      Sketch.hllDistinct(Tables.lineitem(s, d),
-        Seq("l_orderkey", "l_partkey", "l_suppkey"))),
-
-    // --- count-min frequency sketch -------------------------------------------
-    // Part-quantity heavy-hitter estimates from a 4×1024 counter grid
-    // (one map-side pass over lineitem); point queries for a fixed
-    // candidate set. est ≥ exact always (CMS one-sided error).
-    "q154_count_min" -> ((s, d) =>
-      Sketch.cmsEstimate(
-        Sketch.cmsBuild(Tables.lineitem(s, d), "l_partkey",
-          floor(col("l_quantity") * lit(100) + lit(0.5)).cast("long")),
-        Tables.tableRaw(s, d, "part").where(col("p_partkey") < 100)
-          .select("p_partkey"),
-        "p_partkey")),
-
-    // --- cohort retention matrix ----------------------------------------------
-    "q155_retention" -> ((s, d) =>
-      Timeseries.retentionCohorts(Tables.events(s, d), "user_id", "ts")),
-
-    // --- rolling active users (DAU/WAU/MAU) ------------------------------------
-    // Exact sliding distinct counts via bounded ×28 fan-out of the
-    // distinct (user, day) set — no range join, no per-user sort.
-    "q156_active_users" -> ((s, d) =>
-      Timeseries.activeUsers(Tables.events(s, d), "user_id", "ts")),
-
-    // --- CDC apply (MERGE INTO law) ---------------------------------------------
-    // Perturb orders into an "old" snapshot (drop every 13th key →
-    // inserts; double every 7th-of-13 price → updates; fabricate ghost
-    // keys → deletes), diff old→orders, apply the delta back onto old,
-    // and digest the result. The oracle digests `orders` directly: the
-    // apply must reconstruct the target table EXACTLY, row for row.
-    "q157_cdc_apply" -> ((s, d) => {
-      val keys = Seq("o_orderkey")
-      val payload = Seq("o_custkey", "o_orderstatus", "cents", "oday")
-      val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
-        col("o_orderstatus"),
-        floor(col("o_totalprice") * lit(100) + lit(0.5)).cast("long").as("cents"),
-        to_date(col("o_orderdate")).cast("string").as("oday"))
-      val old = cdcOldSnapshot(ord)
-      val delta = Cdc.snapshotDiff(old, ord, keys, payload)
-        .join(ord, keys, "left") // payload for inserts/updates; NULL on deletes
-      val applied = Cdc.applyDelta(old, delta, keys, payload)
-      DataQuality.tableDigest(applied, keys ++ payload)
-    }),
-
-    // --- CUSUM mean-shift changepoint flags -------------------------------------
-    // Rows where a user's cumulative deviation from their own mean value
-    // exceeds $300 — all-integer statistic, threshold in cents.
-    "q158_cusum" -> ((s, d) =>
-      Timeseries.cusumFlags(Tables.events(s, d), "user_id", "ts",
-        "event_id", "value", 30000L)),
-
-    // --- last-touch attribution ---------------------------------------------------
-    // Revenue credited to the day of the most recent click preceding each
-    // purchase (the as-of join re-aggregated to the TOUCH day, not the
-    // conversion day — marketing's view of the same events).
-    "q159_attribution" -> ((s, d) =>
-      AsOfJoin.latestBefore(Tables.events(s, d), "click", "purchase")
-        .where(col("asof_event_id").isNotNull)
-        .groupBy(to_date(timestamp_millis(col("asof_ts_ms"))).as("touch_day"))
-        .agg(count(lit(1)).as("n_conversions"),
-          sum(floor(col("value") * lit(100) + lit(0.5)).cast("long"))
-            .as("attributed_cents"))),
-
-    // --- Bloom membership filter ------------------------------------------------
-    // Build over every lineitem partkey; probe 200 known keys + 200
-    // fabricated absent keys. No false negatives by construction; the
-    // absent side exercises the false-positive path at the documented
-    // ~3e-5 rate (0 expected hits among 200).
-    "q160_bloom" -> ((s, d) => {
-      val present = Tables.tableRaw(s, d, "part")
-        .where(col("p_partkey") < 200).select(col("p_partkey").as("key"))
-      val cand = present.unionByName(
-        present.select((col("key") + lit(5000000L)).as("key")))
-      Sketch.bloomProbe(
-        Sketch.bloomBuild(Tables.lineitem(s, d), "l_partkey"), cand, "key")
-    }),
-
-    // --- mergeable histogram quantiles ------------------------------------------
-    // p50/p95/p99 of event values per type from $1 bins — exact integer
-    // readout, error ≤ bin width, state sums across shards/days.
-    "q161_hist_quantiles" -> ((s, d) =>
-      Sketch.histQuantiles(Tables.events(s, d), "event_type", "value")),
-
-    // --- window-over-window trending --------------------------------------------
-    // Rising suppliers: order-line volume in the trailing 180 days vs
-    // the 180 before, anchored at the corpus max order date.
-    "q162_trending" -> ((s, d) =>
-      Timeseries.trending(
-        Tables.lineitem(s, d)
-          .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-          .select(col("l_suppkey"), to_date(col("o_orderdate")).as("day")),
-        "l_suppkey", "day", 180, 5L, 10)),
-
-    // --- label-propagation communities --------------------------------------------
-    // 5 synchronous weighted rounds over the co-purchase graph; the
-    // min-label tie rule makes the fixed-round outcome exact-replayable.
-    "q163_label_prop" -> ((s, d) =>
-      GraphMetrics.labelProp(
-        CoPurchaseGraph.fromOrders(Tables.lineitem(s, d)), 5)),
-
-    // --- hour-of-day seasonal profile ---------------------------------------------
-    "q164_seasonal" -> ((s, d) =>
-      Timeseries.seasonalProfile(Tables.events(s, d), "event_type", "ts",
-        "value")),
-
-    // --- user-user CF neighbors ---------------------------------------------------
-    // Top-5 "customers like you" by item-set cosine; ubiquitous items
-    // (>200 buyers) pruned from pair generation, norms stay exact.
-    "q165_user_knn" -> ((s, d) =>
-      CoPurchaseGraph.userNeighbors(Tables.orders(s, d),
-        Tables.lineitem(s, d), 5)),
-
-    // --- Pareto contribution analysis ---------------------------------------------
-    // Revenue concentration by part brand: share, cumulative share in
-    // rank order, and the 80%-club flag — all comparisons on exact
-    // integer cents (no double boundary ambiguity).
-    "q166_pareto" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val rev = Tables.lineitem(s, d)
-        .join(Tables.tableRaw(s, d, "part"),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(sum(floor(col("l_extendedprice") * lit(100) + lit(0.5))
-          .cast("long")).as("rev_cents"))
-      // brand frame is dimension-sized (25 rows) — the single-partition
-      // windows below sort 25 rows, not lineitem
-      val wCum = Window.orderBy(col("rev_cents").desc, col("p_brand"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      rev
-        .withColumn("total", sum("rev_cents").over(
-          Window.rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)))
-        .withColumn("cum", sum("rev_cents").over(wCum))
-        .select(col("p_brand"), col("rev_cents"),
-          round(col("rev_cents").cast("double") /
-            col("total").cast("double"), 6).as("share"),
-          round(col("cum").cast("double") /
-            col("total").cast("double"), 6).as("cum_share"),
-          // DECIMAL sides: cum·100 would wrap a 100 TB cents total
-          (col("cum").cast("decimal(38,0)") * 100 <=
-            col("total").cast("decimal(38,0)") * 80).as("in_top80"))
-    }),
-
-    // --- frequent 3-itemsets (brand level) ----------------------------------------
-    // Part-level triples are support-≤2 sparse at test scale; brand
-    // baskets give real co-occurrence mass while exercising the same
-    // canonical triple expansion.
-    "q167_freq_triples" -> ((s, d) =>
-      CoPurchaseGraph.frequentTriples(
-        Tables.lineitem(s, d)
-          .join(Tables.tableRaw(s, d, "part"),
-            col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey").as("okey"), col("p_brand").as("item")),
-        10L, 20)),
-
-    // --- top session paths --------------------------------------------------------
-    // First 5 event types per 8h-gap session (the q29 sessionization
-    // rule), counted corpus-wide.
-    "q168_session_paths" -> ((s, d) =>
-      Timeseries.sessionPaths(Tables.events(s, d), "user_id", "ts",
-        "event_id", "event_type", 28800000L, 5, 10)),
-
-    // --- retractable aggregate maintenance (incremental view + CDC) ---------------
-    // Maintain per-customer (n_orders, sum_cents) under the q157 delta:
-    // signed contributions fold delta-side, one full-outer join updates
-    // the summary — the fact table is never rescanned. The oracle
-    // recomputes from `orders` from scratch: the maintained view must
-    // equal it exactly, zero-count groups dropped.
-    "q169_retract_agg" -> ((s, d) => {
-      val ord = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_custkey"),
-        floor(col("o_totalprice") * lit(100) + lit(0.5)).cast("long")
-          .as("cents"))
-      val old = cdcOldSnapshot(ord)
-      val aggOld = old.groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_v"))
-      val diff = Cdc.snapshotDiff(old, ord, Seq("o_orderkey"),
-        Seq("o_custkey", "cents"))
-      // retract OLD payload for deletes+updates; apply NEW for inserts+updates
-      val minus = diff.where(col("change_type").isin("delete", "update"))
-        .join(old, Seq("o_orderkey"))
-        .select(col("o_custkey"), lit(-1L).as("dn"), (-col("cents")).as("dv"))
-      val plus = diff.where(col("change_type").isin("insert", "update"))
-        .join(ord, Seq("o_orderkey"))
-        .select(col("o_custkey"), lit(1L).as("dn"), col("cents").as("dv"))
-      Incremental.retract(aggOld, minus.unionByName(plus), "o_custkey")
-        .select(col("o_custkey"), col("n"), col("sum_v").as("sum_cents"))
-    }),
-
-    // --- quantile-sketch audit (in-plan accuracy contract) ------------------------
-    // The q161 sketch readout vs the exact discrete quantile, per group:
-    // the upper-bin-edge readout must sit in (v_q, v_q + binCents] — the
-    // q33/q34-style self-auditing contract, all in integer arithmetic.
-    "q170_quantile_audit" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val sk = Sketch.histQuantiles(Tables.events(s, d), "event_type", "value")
-      val cents = floor(col("value") * lit(100) + lit(0.5)).cast("long")
-      val w = Window.partitionBy("event_type").orderBy(col("__c"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val ranked = Tables.events(s, d)
-        .select(col("event_type"), cents.as("__c"))
-        .withColumn("__rn", count(lit(1)).over(w))
-        .withColumn("__n", count(lit(1)).over(Window.partitionBy("event_type")))
-      def vq(pct: Int) =
-        min(when(col("__rn") * 100 >= lit(pct) * col("__n"), col("__c")))
-          .as(s"v$pct")
-      val exact = ranked.groupBy("event_type").agg(vq(50), vq(95), vq(99))
-      sk.join(exact, Seq("event_type"))
-        .select(col("event_type"), col("n"),
-          col("p50_cents"), col("v50"),
-          (col("v50") < col("p50_cents") &&
-            col("p50_cents") <= col("v50") + 100).as("p50_ok"),
-          col("p95_cents"), col("v95"),
-          (col("v95") < col("p95_cents") &&
-            col("p95_cents") <= col("v95") + 100).as("p95_ok"),
-          col("p99_cents"), col("v99"),
-          (col("v99") < col("p99_cents") &&
-            col("p99_cents") <= col("v99") + 100).as("p99_ok"))
-    }),
-
-    // --- cumulative reach curve ---------------------------------------------------
-    "q171_reach" -> ((s, d) =>
-      Timeseries.reachCurve(Tables.events(s, d), "user_id", "ts")),
-
-    // --- weekly growth accounting -------------------------------------------------
-    // new / retained / resurrected decomposition of weekly actives +
-    // the churn identity (actives(w−1) − retained(w)).
-    "q172_growth" -> ((s, d) =>
-      Timeseries.growthAccounting(Tables.events(s, d), "user_id", "ts")),
-
-    // --- grouped HLL rollup (distinct users per event type via per-day state) -----
-    // Registers materialize per (type, day) and roll up by max — the
-    // any-period count-distinct a lake answers from state alone. The
-    // in-plan contract checks the estimate against exact within 5%.
-    "q173_hll_grouped" -> ((s, d) => {
-      val ev = Tables.events(s, d).withColumn("day", to_date(col("ts")))
-      val est = Sketch.hllDistinctBy(ev, Seq("event_type"), "day", "user_id")
-      val exact = ev.groupBy("event_type")
-        .agg(count_distinct(col("user_id")).as("exact_distinct"))
-      est.join(exact, Seq("event_type"))
-        .select(col("event_type"), col("n_buckets"), col("z_scaled"),
-          col("est_distinct"), col("exact_distinct"),
-          (abs(col("est_distinct") - col("exact_distinct").cast("double")) <=
-            lit(0.05) * col("exact_distinct").cast("double")).as("err_ok"))
-    }),
-
-    // --- revenue inequality (per-nation Gini) ------------------------------------
-    // How unevenly is order revenue spread across a nation's customers?
-    // Exact rank-form Gini: every sum DECIMAL(38,0), one final double
-    // division. The rank window sorts |customers|/|nations| per frame.
-    "q174_nation_gini" -> ((s, d) => {
-      val rev = Tables.orders(s, d)
-        .groupBy(col("o_custkey"))
-        .agg(sum(floor(col("o_totalprice") * lit(100) + lit(0.5))
-          .cast("long")).as("cents"))
-        .join(Tables.customer(s, d).select(col("c_custkey"),
-          col("c_nationkey")), col("o_custkey") === col("c_custkey"))
-      Concentration.giniBy(rev, "c_nationkey", "o_custkey", "cents")
-        .join(broadcast(Tables.tableRaw(s, d, "nation")
-          .select(col("n_nationkey"), col("n_name"))),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"), col("n_units").as("n_cust"),
-          col("sum_value").as("sum_cents"), col("gini"))
-    }),
-
-    // --- cohort LTV triangle -----------------------------------------------------
-    // Cumulative revenue by (first-order-month cohort, months since) —
-    // the payback-period matrix. Integer cents throughout; the cum
-    // window sorts the months² grid, not orders.
-    "q175_ltv_triangle" -> ((s, d) => {
-      val o = Tables.orders(s, d).select(col("o_custkey"),
-        to_date(col("o_orderdate")).as("oday"),
-        floor(col("o_totalprice") * lit(100) + lit(0.5)).cast("long")
-          .as("cents"))
-      Timeseries.ltvTriangle(o, "o_custkey", "oday", "cents")
-    }),
-
-    // --- supplier market concentration (per-nation HHI) --------------------------
-    // Herfindahl index of lineitem revenue across each nation's
-    // suppliers: Σxᵢ²/(Σx)², numerator exact DECIMAL — two hash aggs,
-    // no rank, no window.
-    "q176_supplier_hhi" -> ((s, d) => {
-      val rev = Tables.lineitem(s, d)
-        .select(col("l_suppkey"),
-          floor(col("l_extendedprice") * lit(100) + lit(0.5)).cast("long")
-            .as("cents"))
-        .join(broadcast(Tables.supplier(s, d).select(col("s_suppkey"),
-          col("s_nationkey"))), col("l_suppkey") === col("s_suppkey"))
-      Concentration.hhiBy(rev, "s_nationkey", "l_suppkey", "cents")
-        .join(broadcast(Tables.tableRaw(s, d, "nation")
-          .select(col("n_nationkey"), col("n_name"))),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"), col("n_units").as("n_suppliers"),
-          col("sum_value").as("sum_cents"), col("hhi"))
-    }),
-
-    // --- customer-lifetime Kaplan–Meier ------------------------------------------
-    // Survivor curve over customer lifetimes (first→last order, days);
-    // a customer whose last order is within 90 days of the corpus edge
-    // is censored, not churned. Product-limit estimate via the
-    // snapped-ln integer fold — the windows sort the distinct-duration
-    // frame only.
-    "q177_survival" -> ((s, d) => {
-      val o = Tables.orders(s, d).select(col("o_custkey"),
-        to_date(col("o_orderdate")).as("oday"))
-      val life = o.groupBy(col("o_custkey"))
-        .agg(min(col("oday")).as("f"), max(col("oday")).as("l"))
-      val mx = o.agg(max(col("oday")).as("mxd"))
-      val durations = life.crossJoin(broadcast(mx))
-        .select(datediff(col("l"), col("f")).as("t"),
-          when(col("l") <= date_sub(col("mxd"), 90), lit(1L))
-            .otherwise(lit(0L)).as("ev"))
-      Timeseries.kmSurvival(durations, "t", "ev")
-    }),
-
-    // --- degree assortativity of the co-purchase graph ---------------------------
-    // Do popular products co-purchase with popular products? Newman's r
-    // over edge-endpoint degrees — exact moments, one degree build, two
-    // edge decorations, one global fold.
-    "q178_assortativity" -> ((s, d) =>
-      GraphMetrics.assortativity(
-        CoPurchaseGraph.fromOrders(Tables.lineitem(s, d)))),
-
-    // --- brand-partition modularity ----------------------------------------------
-    // Does the co-purchase graph cluster along brand lines? Modularity
-    // of the GIVEN p_brand partition — an attribute-community quality
-    // score, exact per-community contributions that sum to Q.
-    "q179_brand_modularity" -> ((s, d) => {
-      val edges = CoPurchaseGraph.fromOrders(Tables.lineitem(s, d))
-      val partition = Tables.tableRaw(s, d, "part")
-        .select(col("p_partkey").as("node"), col("p_brand").as("community"))
-      GraphMetrics.modularity(edges, partition)
-    }),
-
-    // --- inter-arrival burstiness per event type ---------------------------------
-    // Goh–Barabási B = (σ−μ)/(σ+μ) over the gaps between consecutive
-    // events of a type — n²σ² = nΣd²−(Σd)² folds exact in DECIMAL, and
-    // IEEE sqrt is correctly rounded, so the statistic replays
-    // bit-for-bit in any engine.
-    "q180_burstiness" -> ((s, d) =>
-      Timeseries.burstiness(Tables.events(s, d), "event_type", "ts",
-        "event_id")),
-
-    // --- Benford first-digit audit -----------------------------------------------
-    // Does o_totalprice follow the log-law a natural multi-magnitude
-    // amount should? Digit histogram + snapped-grid expectation + χ²
-    // contributions; one map-side extraction, one 9-key aggregate.
-    "q181_benford" -> ((s, d) =>
-      DataQuality.benfordAudit(Tables.orders(s, d), "o_totalprice")),
-
-    // --- lead–lag cross-correlation ----------------------------------------------
-    // By how many days do views lead purchases? corr(views(t),
-    // purchases(t+lag)) for lag ∈ [−7, 7] — exact moments per lag over
-    // the calendar-bounded daily frame.
-    "q182_lag_corr" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .where(col("event_type").isin("view", "purchase"))
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(count(when(col("event_type") === "view", 1)).as("a"),
-          count(when(col("event_type") === "purchase", 1)).as("b"))
-      Timeseries.lagCorrelation(daily, "day", "a", "b", 7)
-    }),
-
-    // --- KMV set-operation sketch: distinct-INTERSECTION estimates ---------------
-    // "How many user-days did both event types" from per-type KMV
-    // states alone — the set operation HLL registers cannot answer.
-    // Estimates gated against the exact intersections with a 25% error
-    // contract (k=1024 → Jaccard rel std ≈ 6%, ≈3.5σ headroom).
-    "q185_kmv_intersect" -> ((s, d) => {
-      // NULL components are excluded identically on both engines: the
-      // oracle's || would propagate NULL through the hash while
-      // concat_ws would silently drop the field — filter, don't coalesce
-      val ev = Tables.events(s, d)
-        .where(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("event_type").as("key"),
-          concat_ws(":", col("user_id"), to_date(col("ts"))).as("val"))
-      val st = Sketch.kmvSketch(ev, "key", "val")
-      val est = Sketch.kmvIntersect(st)
-      val vd = ev.distinct()
-      val exact = vd.as("x").join(vd.as("y"),
-          col("x.val") === col("y.val") && col("x.key") < col("y.key"))
-        .groupBy(col("x.key").as("ka"), col("y.key").as("kb"))
-        .agg(count(lit(1)).as("exact_intersect"))
-      est.join(exact, Seq("ka", "kb"))
-        .select(col("ka"), col("kb"), col("n_union_minima"), col("n_both"),
-          col("est_union"), col("est_intersect"), col("exact_intersect"),
-          (abs(col("est_intersect") - col("exact_intersect").cast("double"))
-            <= lit(0.25) * col("exact_intersect").cast("double"))
-            .as("err_ok"))
-    }),
-
-    // --- GLOBAL Gini via the two-phase distributed rank --------------------------
-    // The lake-scale form of q174: one worldwide coefficient with NO
-    // single-partition window — range-partitioned sort + zipWithIndex
-    // global ordinals, moments folded exactly as the grouped form.
-    "q184_global_gini" -> ((s, d) => {
-      val rev = Tables.orders(s, d)
-        .groupBy(col("o_custkey"))
-        .agg(sum(floor(col("o_totalprice") * lit(100) + lit(0.5))
-          .cast("long")).as("cents"))
-      Concentration.giniGlobal(rev, "o_custkey", "cents")
-    }),
-
-    // --- IPS off-policy replay ---------------------------------------------------
-    // Counterfactual value of "per segment, play the best logged
-    // action" under a declared uniform-over-5-arms behavior policy —
-    // the offline sibling of q137's team-draft interleaving. Segments =
-    // user_id mod 10; reward = event value in cents.
-    "q183_ips_replay" -> ((s, d) => {
-      val log = Tables.events(s, d).select(
-        pmod(col("user_id"), lit(10)).as("segment"),
-        col("event_type"),
-        floor(col("value") * lit(100) + lit(0.5)).cast("long").as("r"))
-      Experiment.ipsReplay(log, "segment", "event_type", "r", 5)
-    }),
-
-    // --- HITS hubs & authorities over the directed basket DAG --------------------
-    // PageRank's link-analysis complement: separates gateway products
-    // (hubs — point into the catalog) from destination products
-    // (authorities — baskets converge on them). 5 raw power iterations
-    // + one final L1 normalization (the labelProp round budget: each
-    // HITS round is TWO join+fold half-steps, so 5 rounds costs what
-    // 10 PageRank rounds cost); oracle = the same 5 rounds as chained
-    // CTEs.
-    "q186_hits" -> ((s, d) =>
-      GraphMetrics.hits(
-        CoPurchaseGraph.fromOrders(Tables.lineitem(s, d)), 5)),
-
-    // --- centroid silhouette: is the label partition geometrically real? ---------
-    // a = distance to own prototype, b = nearest other prototype,
-    // s = (b−a)/max(a,b) — the O(n·|labels|) scale form of the O(n²)
-    // silhouette. Prototypes and distances snap to 6 dp before any
-    // compare, so both engines branch identically.
-    "q187_silhouette" -> ((s, d) =>
-      ClusterEval.centroidSilhouette(
-        Tables.embeddings(s, d), "vec_id", "label", "embedding")),
-
-    // --- intra-list diversity of the served top-10 (beyond-accuracy audit) -------
-    // Mean pairwise cosine distance WITHIN each query's rec list —
-    // catches the precise-but-monotone page. Pair expansion is
-    // k(k−1)/2 per list, never corpus × corpus.
-    "q188_ild" -> ((s, d) => {
-      val ranked = ContentRetriever.topK(
-          Tables.embeddings(s, d), queryVecs(s, d), 10)
-        .select(col("query_id"), col("vec_id").as("item"), col("rnk"))
-      Evaluation.intraListDiversity(ranked,
-        Tables.embeddings(s, d), "vec_id", "embedding")
-    }),
-
-    // --- split-conformal prediction intervals ------------------------------------
-    // Distribution-free ŷ ± q̂ coverage: per-quantity train-fold mean as
-    // the predictor, q̂ = ⌈(n_cal+1)·0.9⌉-th smallest calibration
-    // residual (integer order statistic over snapped cents — no float
-    // quantile anywhere), audited by the test-fold coverage table.
-    "q189_conformal" -> ((s, d) => {
-      val li = Tables.lineitem(s, d).select(
-        col("l_quantity").cast("long").as("qty_group"),
-        floor(col("l_extendedprice") * lit(100) + lit(0.5)).cast("long")
-          .as("cents"),
-        pmod(col("l_orderkey"), lit(4)).as("fold"))
-      Calibrate.conformalSplit(li, "qty_group", "cents", "fold")
-    }),
-
-    // --- Wald SPRT early stopping (sequential A/B) -------------------------------
-    // Per segment, the running Bernoulli log-likelihood ratio of
-    // "purchase share ≥ 0.20" vs "≤ 0.15" with α = β = 0.05; both log
-    // terms and both thresholds are 1e-9-snapped integer literals, so
-    // the prefix sum is exact and the first-crossing index replays on
-    // any engine.
-    "q190_sprt" -> ((s, d) =>
-      Experiment.sprt(
-        // NULL user/ts rows are excluded on BOTH engines: the two
-        // disagree on default NULL placement in window orders
-        Tables.events(s, d)
-          .where(col("user_id").isNotNull && col("ts").isNotNull)
-          .select(
-            pmod(col("user_id"), lit(10)).as("seg"),
-            (col("event_type") === "purchase").cast("int").as("x"),
-            col("ts"), col("event_id")),
-        "seg", "x", "ts", "event_id", 0.15, 0.20)),
-
-    // --- difference-in-differences (quasi-experimental lift) ---------------------
-    // Treated = nations 0-11, cutover 1996-01-01 on the order date:
-    // (ΔT) − (ΔC) over order-value cents — one 4-cell aggregate, means
-    // rounded before the fixed DiD expression.
-    "q191_did" -> ((s, d) => {
-      val o = Tables.orders(s, d).select(col("o_custkey"),
-        (col("o_orderdate") >= lit("1996-01-01")).as("post"),
-        floor(col("o_totalprice") * lit(100) + lit(0.5)).cast("long")
-          .as("cents"))
-      val cust = Tables.customer(s, d).select(
-        col("c_custkey").as("o_custkey"),
-        (col("c_nationkey") < 12).as("treated"))
-      Experiment.diffInDiff(o.join(cust, Seq("o_custkey")),
-        "treated", "post", "cents")
-    }),
-
-    // --- RFM segmentation (recency / frequency / monetary quintiles) -------------
-    // The CRM customer-value partition: per customer days-since-last-
-    // order / order count / lifetime cents, ntile(5) scores over total
-    // orders (value, then customer — both engines bucket identically),
-    // fixed anchor date.
-    "q192_rfm" -> ((s, d) =>
-      Timeseries.rfm(
-        Tables.orders(s, d).select(col("o_custkey"), col("o_orderdate"),
-          floor(col("o_totalprice") * lit(100) + lit(0.5)).cast("long")
-            .as("cents")),
-        "o_custkey", "o_orderdate", "cents", "1998-08-02")),
-
-    // --- two-hop co-purchase expansion ("also-bought-also-bought") ---------------
-    // score(a,c) = Σ_b w(a,b)·w(b,c) over shared mids with hub mids
-    // (>200 neighbors) excluded before pairing and anchors pushed into
-    // the left side — work scales with the query set. Top-10 per
-    // anchor, direct neighbors flagged for the re-ranker.
-    "q193_twohop" -> ((s, d) =>
-      CoPurchaseGraph.twoHop(
-        CoPurchaseGraph.fromOrders(Tables.lineitem(s, d)),
-        Tables.tableRaw(s, d, "part").where(col("p_partkey") < 50)
-          .select(col("p_partkey").as("node")), 200, 10)),
-  )
-
-  /** Pre-query setup the harnesses run OUTSIDE the timed/verified region:
-    * build-once artifacts (the persisted IVF index) whose construction
-    * must not be attributed to the queries that serve from them — the
-    * reference's build/serve split (`Hybrid_Recom_vecdb.py:331-383` build
-    * vs `:384-410` serve). Each is idempotent; the query functions also
-    * self-heal by calling ensure() themselves, so running a query without
-    * its setup is correct, just slower on first touch. */
-  def setups: Map[String, (SparkSession, String) => Unit] = Map(
-    "q34_ivf_knn" -> ((s, d) => IvfIndexStore.ensure(s, d)),
-    "q37_ivf_serve" -> ((s, d) => IvfIndexStore.ensure(s, d)),
-    "q43_ivf_serve_batch" -> ((s, d) => IvfIndexStore.ensure(s, d)),
-    "q68_knn_join" -> ((s, d) => IvfIndexStore.ensure(s, d)),
-    "q66_ivf_upsert" -> ((s, d) => { ensureUpsertedIndex(s, d); () }),
-    "q70_ann_dedup" -> ((s, d) => IvfIndexStore.ensure(s, d)),
-    "q120_nprobe_sweep" -> ((s, d) => IvfIndexStore.ensure(s, d)),
-    "q129_als_serve" -> ((s, d) => AlsCf.Store.ensure(s, d)),
-    "q71_sq8_serve" -> ((s, d) => IvfIndexStore.ensure(s, d)),
-    "q81_pq_serve" -> ((s, d) => PqIndexStore.ensure(s, d)),
-    "q92_pq_serve_batch" -> ((s, d) => PqIndexStore.ensure(s, d)),
-    "q99_bucket_join" -> ((s, d) => graft.sources.BucketedStore.ensure(s, d)),
-    "q131_star_flatten" -> ((s, d) => graft.sources.BucketedStore.ensure(s, d)),
-    "q138_export_manifest" -> ((s, d) => graft.sources.ExportStore.ensure(s, d)),
-  )
-
-  // ------------------------------------------------------------- oracle SQL
-
-  /** Shared DuckDB CTE fragments (kept identical across oracle queries). */
-  private val toksCte =
-    "toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t != '') AS tk FROM documents)"
-  private val shCte =
-    "sh AS (SELECT doc_id, CASE WHEN len(tk) < 3 THEN []::VARCHAR[] ELSE list_distinct(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) END AS s FROM toks)"
-  private val basketCtes =
-    """items AS (SELECT DISTINCT l_orderkey AS okey, l_partkey AS item FROM lineitem),
-      |e AS (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-      |      FROM items a JOIN items b USING (okey) WHERE a.item < b.item GROUP BY 1, 2),
-      |sym AS (SELECT src, dst, weight FROM e
-      |        UNION ALL SELECT dst AS src, src AS dst, weight FROM e)""".stripMargin
-  /** The 42 Morton shift/mask terms of Layout.zValue as DuckDB SQL. */
-  private def zSql(a: String, b: String): String =
-    (0 until 21).flatMap(i => Seq(
-      s"((($a >> $i) & 1) << ${2 * i})",
-      s"((($b >> $i) & 1) << ${2 * i + 1})")).mkString(" + ")
-
-  private def cosSql(a: String, b: String): String =
-    s"CASE WHEN sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b)) = 0 THEN 0.0 " +
-      s"ELSE list_dot_product($a,$b) / (sqrt(list_dot_product($a,$a)) * sqrt(list_dot_product($b,$b))) END"
-
-  /** Decoded-payload replay for the real-codec Multimodal oracles. Given
-    * a CTE/table `src(doc_id, text)`, emits `mm(doc_id, n, tt)` — payload
-    * byte length and REAL decoded-buffer length per media type (image
-    * W·H, filmstrip W·H·frames, WAV one byte per sample; dims rule
-    * W=16+n%240, H=16+7n%240, frames=1+n%30 — [[Multimodal.withBlob]]) —
-    * and `mh(doc_id, bin, c)`, the 16-bin histogram of the decoded
-    * buffer: byte i of the text repeats `reps(i) = ⌊(tt-1-i)/n⌋+1` times
-    * (0 when i ≥ tt) under the cycle-fill rule, so the histogram of real
-    * lossless-codec output is recomputable from the text alone.
-    *
-    * Empty-payload rule (round-9 ADVICE): an EMPTY text on a visual doc
-    * still carries a real tt-byte raster — [[Multimodal.withBlob]]'s
-    * cycle() zero-fills it — so all tt bytes land in bin 0 (0 % 16);
-    * the `n = 0 AND tt > 0` branch pins that on the oracle side. An
-    * empty AUDIO payload has tt = 0 and stays the all-zero vector. */
-  private def mediaHistSql(src: String): String =
-    s"""mm AS (SELECT doc_id, text, octet_length(encode(text)) AS n,
-      |    CASE doc_id % 3
-      |      WHEN 0 THEN (16 + octet_length(encode(text)) % 240)
-      |                  * (16 + (octet_length(encode(text)) * 7) % 240)
-      |      WHEN 1 THEN octet_length(encode(text))
-      |      ELSE (16 + octet_length(encode(text)) % 240)
-      |           * (16 + (octet_length(encode(text)) * 7) % 240)
-      |           * (1 + octet_length(encode(text)) % 30)
-      |    END AS tt
-      |  FROM $src),
-      |mpos AS (SELECT doc_id, n, tt, unnest(range(0, n)) AS i, text FROM mm),
-      |mrep AS (SELECT doc_id, ord(substr(text, i + 1, 1)) % 16 AS bin,
-      |    CASE WHEN i >= tt THEN 0 ELSE (tt - 1 - i) // n + 1 END AS reps
-      |  FROM mpos),
-      |mh0 AS (SELECT doc_id, bin, sum(reps)::DOUBLE AS c FROM mrep
-      |        GROUP BY 1, 2 HAVING sum(reps) > 0),
-      |mh AS (SELECT doc_id, bin, c FROM mh0
-      |       UNION ALL
-      |       SELECT doc_id, 0 AS bin, tt::DOUBLE AS c FROM mm
-      |       WHERE n = 0 AND tt > 0),
-      |mn AS (SELECT doc_id, sqrt(sum(c * c)) AS nrm FROM mh GROUP BY 1)""".stripMargin
-
-  /** BM25 CTE chain mirroring [[Bm25.topK]] operation-for-operation
-    * (every fractional literal carries ::DOUBLE so DuckDB never slips
-    * into DECIMAL arithmetic; per-term contributions snap to 1e-9 via
-    * floor(x+0.5) fixed-point exactly like the Spark side). Caller
-    * supplies the query-terms CTE `qt(query_id, term)`; the chain ends
-    * in `bmr(query_id, doc_id, score, rnk)` with rnk <= `k`. */
-  private def bm25Sql(qtCte: String, k: Int, excludeSelf: Boolean): String = {
-    val excl = if (excludeSelf) "WHERE doc_id != query_id " else ""
-    s"""$toksCte,
-      |bpost AS (SELECT doc_id, term, count(*)::BIGINT AS tf
-      |  FROM (SELECT doc_id, unnest(tk) AS term FROM toks) GROUP BY 1, 2),
-      |bdl AS (SELECT doc_id, sum(tf)::BIGINT AS dl FROM bpost GROUP BY 1),
-      |bdf AS (SELECT term, count(*)::BIGINT AS df FROM bpost GROUP BY 1),
-      |bst AS (SELECT count(*)::BIGINT AS n_docs,
-      |  sum(len(tk))::DOUBLE / count(*) AS avgdl FROM toks),
-      |$qtCte,
-      |bc AS (SELECT qt.query_id, p.doc_id,
-      |    ln(1.0::DOUBLE + (bst.n_docs - f.df + 0.5::DOUBLE) / (f.df + 0.5::DOUBLE)) *
-      |      (p.tf * (1.2::DOUBLE + 1.0)) /
-      |      (p.tf + 1.2::DOUBLE * (0.25::DOUBLE + (0.75::DOUBLE * bdl.dl) / bst.avgdl))
-      |    AS contrib
-      |  FROM bpost p JOIN bdf f USING (term) JOIN qt USING (term)
-      |  JOIN bdl ON p.doc_id = bdl.doc_id CROSS JOIN bst),
-      |bsc AS (SELECT query_id, doc_id,
-      |    sum(floor(contrib * 1e9 + 0.5::DOUBLE)::BIGINT)::BIGINT / 1e9 AS s
-      |  FROM bc ${excl}GROUP BY 1, 2),
-      |bmr AS (SELECT query_id, doc_id, round(s, 6) AS score,
-      |    row_number() OVER (PARTITION BY query_id ORDER BY s DESC, doc_id) AS rnk
-      |  FROM bsc QUALIFY rnk <= $k)""".stripMargin
-  }
-
-  /** The q27 hybrid pipeline as a reusable CTE chain ending in `r`
-    * (ranked blended candidates with rnk). */
-  private lazy val hybridCtes: String =
-    s"""e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-      |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
-      |sc AS (SELECT q.query_id, e.vec_id AS item, ${cosSql("q.qv", "e.v")} AS s
-      |       FROM q CROSS JOIN e WHERE q.query_id != e.vec_id),
-      |content AS (SELECT query_id, item, greatest(0.0, least(1.0, s)) AS cs,
-      |    row_number() OVER (PARTITION BY query_id ORDER BY s DESC, item) AS rr
-      |  FROM sc QUALIFY rr <= 60),
-      |cf AS (SELECT a.vec_id AS query_id, b.vec_id AS item, 1.0::DOUBLE AS fs,
-      |    row_number() OVER (PARTITION BY a.vec_id ORDER BY b.vec_id) AS rr
-      |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id != b.vec_id
-      |  WHERE a.vec_id < 20 QUALIFY rr <= 60),
-      |fu AS (SELECT coalesce(c.query_id, g.query_id) AS query_id,
-      |    coalesce(c.item, g.item) AS item,
-      |    coalesce(c.cs, 0.0) AS cs, coalesce(g.fs, 0.0) AS fs,
-      |    0.6 * coalesce(c.cs, 0.0) + 0.4 * coalesce(g.fs, 0.0) AS fin
-      |  FROM content c FULL OUTER JOIN cf g ON c.query_id = g.query_id AND c.item = g.item),
-      |r AS (SELECT query_id, item, cs, fs, fin,
-      |    row_number() OVER (PARTITION BY query_id ORDER BY fin DESC, item) AS rnk FROM fu)""".stripMargin
-
-  /** Co-label ground truth CTE (expects an `e` CTE carrying label). */
-  private val truthCte: String =
-    """truth AS (SELECT a.vec_id AS query_id, b.vec_id AS item
-      |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id != b.vec_id
-      |  WHERE a.vec_id < 20)""".stripMargin
-
-  /** Precision@K tail over `ranked`(query_id,item,rnk) and `truth`. */
-  private val precisionTail: String =
-    """hits AS (SELECT r2.query_id, r2.item, r2.rnk FROM ranked r2
-      |         SEMI JOIN truth t ON r2.query_id = t.query_id AND r2.item = t.item),
-      |qq AS (SELECT DISTINCT query_id FROM ranked),
-      |ks AS (SELECT unnest([5, 10]) AS k)
-      |SELECT qq.query_id, ks.k,
-      |  count(CASE WHEN h.rnk <= ks.k THEN 1 END) AS hits,
-      |  count(CASE WHEN h.rnk <= ks.k THEN 1 END)::DOUBLE / ks.k::DOUBLE AS "precision"
-      |FROM qq CROSS JOIN ks LEFT JOIN hits h ON qq.query_id = h.query_id
-      |GROUP BY 1, 2""".stripMargin
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (q31_embed_docs: fitted MLlib IDF) → driver records rows-only check. */
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 4) AS sum_qty,
-        |  round(sum(l_extendedprice), 4) AS sum_base,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc,
-        |  round(avg(l_quantity), 6) AS avg_qty,
-        |  count(*) AS cnt
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-
-    "q02_top_orders" ->
-      """WITH rev AS (
-        |  SELECT o_orderkey, o_orderdate,
-        |    round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |  GROUP BY 1, 2)
-        |SELECT o_orderkey, o_orderdate, revenue,
-        |  row_number() OVER (ORDER BY revenue DESC, o_orderkey) AS rnk
-        |FROM rev ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q03_nation_revenue" ->
-      """SELECT n_name,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-        |  count(DISTINCT o_orderkey) AS n_orders
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY 1""".stripMargin,
-
-    "q04_supplier_top_parts" ->
-      """SELECT l_suppkey, l_partkey, qty, rnk FROM (
-        |  SELECT l_suppkey, l_partkey, sum(l_quantity) AS qty,
-        |    row_number() OVER (PARTITION BY l_suppkey ORDER BY sum(l_quantity) DESC, l_partkey) AS rnk
-        |  FROM lineitem GROUP BY 1, 2) WHERE rnk <= 3""".stripMargin,
-
-    "q05_graph_edges" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey AS okey, l_partkey AS item FROM lineitem)
-        |SELECT a.item AS src, b.item AS dst, count(*) AS weight
-        |FROM items a JOIN items b USING (okey) WHERE a.item < b.item GROUP BY 1, 2""".stripMargin,
-
-    "q63_pagerank" -> {
-      val rounds = (1 to 10).map { i =>
-        s"""r$i AS (SELECT e.dst AS node, min(bb.base) + 0.85 * sum(r.rank * e.frac) AS rank
-           |  FROM norm e JOIN r${i - 1} r ON e.src = r.node CROSS JOIN bb GROUP BY e.dst)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $basketCtes,
-        |deg AS (SELECT src, sum(weight) AS w FROM sym GROUP BY 1),
-        |norm AS (SELECT s.src, s.dst, s.weight::DOUBLE / d.w AS frac
-        |         FROM sym s JOIN deg d USING (src)),
-        |nn AS (SELECT count(*)::DOUBLE AS n FROM deg),
-        |bb AS (SELECT (1.0 - 0.85) / n AS base, n FROM nn),
-        |r0 AS (SELECT d.src AS node, 1.0 / bb.n AS rank FROM deg d CROSS JOIN bb),
-        |$rounds
-        |SELECT r10.node, round(r10.rank * bb.n, 6) AS pr_scaled
-        |FROM r10 CROSS JOIN bb""".stripMargin
-    },
-
-    "q06_cf_topn" ->
-      s"""WITH $basketCtes,
-        |n AS (SELECT src, dst, weight,
-        |        weight::DOUBLE / max(weight) OVER (PARTITION BY src) AS norm FROM sym)
-        |SELECT src, dst, weight, norm,
-        |  row_number() OVER (PARTITION BY src ORDER BY weight DESC, dst) AS rnk
-        |FROM n QUALIFY rnk <= 10""".stripMargin,
-
-    "q07_cf_for_queries" ->
-      s"""WITH $basketCtes,
-        |f AS (SELECT * FROM sym WHERE src IN (SELECT p_partkey FROM part WHERE p_partkey <= 100)),
-        |n AS (SELECT src, dst, weight,
-        |        weight::DOUBLE / max(weight) OVER (PARTITION BY src) AS norm FROM f)
-        |SELECT src, dst, weight, norm,
-        |  row_number() OVER (PARTITION BY src ORDER BY weight DESC, dst) AS rnk
-        |FROM n QUALIFY rnk <= 5""".stripMargin,
-
-    "q52_cf_salted" ->
-      s"""WITH $basketCtes,
-        |strat AS (SELECT * FROM sym WHERE src % 10 = 0),
-        |n AS (SELECT src, dst, weight,
-        |        weight::DOUBLE / max(weight) OVER (PARTITION BY src) AS norm FROM strat),
-        |r AS (SELECT src, dst,
-        |        row_number() OVER (PARTITION BY src ORDER BY weight DESC, dst) AS rnk
-        |      FROM n QUALIFY rnk <= 10)
-        |SELECT count(*) AS n_rows, true AS salted_equals_plain FROM r""".stripMargin,
-
-    "q08_knn" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
-        |sc AS (SELECT q.query_id, e.vec_id AS item, ${cosSql("q.qv", "e.v")} AS sim
-        |       FROM q CROSS JOIN e WHERE q.query_id != e.vec_id),
-        |r AS (SELECT query_id, item, sim,
-        |        row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, item) AS rnk FROM sc)
-        |SELECT query_id, item, round(sim, 6) AS sim, rnk FROM r WHERE rnk <= 10""".stripMargin,
-
-    "q09_knn_by_label" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, label, v AS qv FROM e WHERE vec_id < 20),
-        |sc AS (SELECT q.query_id, e.vec_id AS item, ${cosSql("q.qv", "e.v")} AS sim
-        |       FROM q JOIN e ON q.label = e.label AND q.query_id != e.vec_id),
-        |r AS (SELECT query_id, item, sim,
-        |        row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, item) AS rnk FROM sc)
-        |SELECT query_id, item, round(sim, 6) AS sim, rnk FROM r WHERE rnk <= 5""".stripMargin,
-
-    "q10_cosine_pairs" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id < 2000),
-        |p AS (SELECT a.vec_id AS a, b.vec_id AS b, ${cosSql("a.v", "b.v")} AS sim
-        |      FROM e a JOIN e b ON a.vec_id < b.vec_id)
-        |SELECT a, b, round(sim, 6) AS sim FROM p WHERE sim >= 0.35""".stripMargin,
-
-    "q11_lsh_buckets" ->
-      """SELECT vec_id,
-        |  list_sum(list_transform(range(0, 8), j ->
-        |    CASE WHEN list_sum(list_transform(range(0, 64), i ->
-        |           embedding[i+1]::DOUBLE * ((((j*64 + i) * 2654435761) % 4294967296)::DOUBLE / 4294967296.0 - 0.5))) > 0
-        |         THEN (1::BIGINT << j) ELSE 0::BIGINT END))::BIGINT AS bucket
-        |FROM embeddings""".stripMargin,
-
-    "q12_lsh_pairs" ->
-      s"""WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-        |  list_sum(list_transform(range(0, 8), j ->
-        |    CASE WHEN list_sum(list_transform(range(0, 64), i ->
-        |           embedding[i+1]::DOUBLE * ((((j*64 + i) * 2654435761) % 4294967296)::DOUBLE / 4294967296.0 - 0.5))) > 0
-        |         THEN (1::BIGINT << j) ELSE 0::BIGINT END))::BIGINT AS bucket
-        |  FROM embeddings),
-        |p AS (SELECT x.vec_id AS a, y.vec_id AS b, ${cosSql("x.v", "y.v")} AS sim
-        |      FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id)
-        |SELECT a, b, round(sim, 6) AS sim FROM p WHERE sim >= 0.1""".stripMargin,
-
-    "q48_lsh_multiprobe" ->
-      s"""WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-        |  list_sum(list_transform(range(0, 10), j ->
-        |    CASE WHEN list_sum(list_transform(range(0, 64), i ->
-        |           embedding[i+1]::DOUBLE * ((((j*64 + i) * 2654435761) % 4294967296)::DOUBLE / 4294967296.0 - 0.5))) > 0
-        |         THEN (1::BIGINT << j) ELSE 0::BIGINT END))::BIGINT AS bucket
-        |  FROM embeddings WHERE vec_id < 2000),
-        |p AS (SELECT x.vec_id AS a, y.vec_id AS b, ${cosSql("x.v", "y.v")} AS sim
-        |      FROM b x JOIN b y ON x.vec_id < y.vec_id
-        |        AND bit_count(xor(x.bucket, y.bucket)) <= 1)
-        |SELECT a, b, round(sim, 6) AS sim FROM p WHERE sim >= 0.1""".stripMargin,
-
-    "q13_dedup_exact" ->
-      """WITH h AS (SELECT doc_id, md5(lower(trim(text))) AS content_hash FROM documents)
-        |SELECT doc_id, content_hash,
-        |  count(*) OVER (PARTITION BY content_hash) AS group_size,
-        |  min(doc_id) OVER (PARTITION BY content_hash) AS canonical_id,
-        |  doc_id != min(doc_id) OVER (PARTITION BY content_hash) AS is_duplicate
-        |FROM h""".stripMargin,
-
-    "q14_ngram_jaccard" ->
-      s"""WITH $toksCte,
-        |$shCte,
-        |cards AS (SELECT doc_id, len(s)::BIGINT AS card FROM sh),
-        |inv AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-        |p AS (SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
-        |      FROM inv x JOIN inv y USING (shingle) WHERE x.doc_id < y.doc_id GROUP BY 1, 2)
-        |SELECT a, b, inter, ca.card AS card_a, cb.card AS card_b,
-        |  inter::DOUBLE / (ca.card + cb.card - inter)::DOUBLE AS jaccard
-        |FROM p JOIN cards ca ON p.a = ca.doc_id JOIN cards cb ON p.b = cb.doc_id
-        |WHERE inter::DOUBLE / (ca.card + cb.card - inter)::DOUBLE >= 0.05""".stripMargin,
-
-    "q15_minhash_cand" ->
-      s"""WITH $toksCte,
-        |$shCte,
-        |sig AS (SELECT doc_id, list_transform(range(0, 16), j ->
-        |    list_min(list_transform(s, x ->
-        |      (((j * 2654435761) % 2147483647 + 1) * (cast('0x' || substr(md5(x), 1, 15) AS BIGINT) % 2147483647)
-        |        + ((j * 40503 + 11) % 2147483647)) % 2147483647))) AS sg
-        |  FROM sh WHERE len(s) > 0),
-        |keyed AS (SELECT doc_id, sg,
-        |    unnest(list_transform(range(0, 8), b -> b || ':' || array_to_string(sg[b*2+1:b*2+2], ','))) AS band_key
-        |  FROM sig),
-        |p AS (SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS bands_matched
-        |      FROM keyed x JOIN keyed y USING (band_key) WHERE x.doc_id < y.doc_id GROUP BY 1, 2)
-        |SELECT a, b, bands_matched,
-        |  list_sum(list_transform(range(1, 17), i -> CASE WHEN sa.sg[i] = sb.sg[i] THEN 1 ELSE 0 END))::DOUBLE / 16 AS est_jaccard
-        |FROM p JOIN sig sa ON p.a = sa.doc_id JOIN sig sb ON p.b = sb.doc_id""".stripMargin,
-
-    "q44_dedup_keep" ->
-      s"""WITH RECURSIVE
-        |$toksCte,
-        |$shCte,
-        |sig AS (SELECT doc_id, list_transform(range(0, 16), j ->
-        |    list_min(list_transform(s, x ->
-        |      (((j * 2654435761) % 2147483647 + 1) * (cast('0x' || substr(md5(x), 1, 15) AS BIGINT) % 2147483647)
-        |        + ((j * 40503 + 11) % 2147483647)) % 2147483647))) AS sg
-        |  FROM sh WHERE len(s) > 0),
-        |keyed AS (SELECT doc_id, sg,
-        |    unnest(list_transform(range(0, 8), b -> b || ':' || array_to_string(sg[b*2+1:b*2+2], ','))) AS band_key
-        |  FROM sig),
-        |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-        |      FROM keyed x JOIN keyed y USING (band_key) WHERE x.doc_id < y.doc_id),
-        |mh AS (SELECT a, b FROM cand JOIN sh sa ON cand.a = sa.doc_id JOIN sh sb ON cand.b = sb.doc_id
-        |  WHERE len(list_intersect(sa.s, sb.s))::DOUBLE
-        |    / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)))::DOUBLE >= 0.5),
-        |eh AS (SELECT doc_id, md5(lower(trim(text))) AS ch FROM documents),
-        |exct AS (SELECT x.doc_id AS a, y.doc_id AS b FROM eh x JOIN eh y ON x.ch = y.ch AND x.doc_id < y.doc_id),
-        |allp AS (SELECT a, b FROM exct UNION SELECT a, b FROM mh),
-        |sym AS (SELECT a AS x, b AS y FROM allp UNION SELECT b AS x, a AS y FROM allp),
-        |reach(x, y) AS (
-        |  SELECT doc_id AS x, doc_id AS y FROM documents
-        |  UNION
-        |  SELECT r.x, s.y FROM reach r JOIN sym s ON r.y = s.x)
-        |SELECT doc_id, component, component = doc_id AS is_kept FROM (
-        |  SELECT x AS doc_id, min(y) AS component FROM reach GROUP BY 1)""".stripMargin,
-
-    "q55_embed_dups" ->
-      """WITH corpus AS (SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 10),
-        |h AS (SELECT doc_id, md5(lower(trim(text))) AS ch FROM corpus)
-        |SELECT count(*) AS n_exact_pairs, true AS all_exact_found
-        |FROM h x JOIN h y ON x.ch = y.ch AND x.doc_id < y.doc_id""".stripMargin,
-
-    "q59_quantize" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |s AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
-        |c AS (SELECT vec_id, v, scale,
-        |  CASE WHEN scale = 0 THEN list_transform(v, x -> 0::BIGINT)
-        |       ELSE list_transform(v, x -> greatest(-127.0, least(127.0, floor(x / scale + 0.5)))::BIGINT)
-        |  END AS codes FROM s),
-        |d AS (SELECT vec_id, scale, codes,
-        |  list_transform(codes, q -> q::DOUBLE * scale) AS dq, v FROM c)
-        |SELECT vec_id, scale,
-        |  list_sum(list_transform(codes, x -> abs(x)))::BIGINT AS l1_codes,
-        |  round(${cosSql("v", "dq")}, 6) AS cos_recon
-        |FROM d""".stripMargin,
-
-    "q56_sql_fns" ->
-      s"""WITH $toksCte,
-        |$shCte,
-        |f AS (SELECT doc_id,
-        |  list_reduce(list_prepend(0::BIGINT, list_transform(tk, x ->
-        |    cast('0x' || substr(md5(x), 1, 15) AS BIGINT) % 2147483647)),
-        |    (a, b) -> (a * 31 + b) % 2147483647) AS fingerprint FROM toks),
-        |t AS (SELECT doc_id, unnest(tk) AS tok FROM toks),
-        |hh AS (SELECT doc_id, cast('0x' || substr(md5(tok), 1, 15) AS BIGINT) AS h60 FROM t),
-        |bits AS (SELECT doc_id, bb.b AS b,
-        |    sum(CASE WHEN (h60 >> bb.b) % 2 = 1 THEN 1 ELSE -1 END) AS c
-        |  FROM hh CROSS JOIN (SELECT unnest(range(0, 60)) AS b) bb GROUP BY 1, 2),
-        |sm AS (SELECT doc_id, sum(CASE WHEN c > 0 THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS v
-        |       FROM bits GROUP BY 1),
-        |m AS (SELECT doc_id, CASE WHEN len(s) = 0 THEN NULL ELSE
-        |    list_min(list_transform(s, x ->
-        |      (cast('0x' || substr(md5(x), 1, 15) AS BIGINT) % 2147483647 + 11) % 2147483647))
-        |  END AS minhash0 FROM sh)
-        |SELECT toks.doc_id, f.fingerprint,
-        |  coalesce(sm.v, 0)::BIGINT AS simhash,
-        |  len(sh.s)::BIGINT AS n_shingles,
-        |  m.minhash0,
-        |  round(${cosSql("[len(tk)::DOUBLE, 1.0]", "[1.0, len(tk)::DOUBLE]")}, 6) AS cos_toy
-        |FROM toks JOIN f USING (doc_id) JOIN sh USING (doc_id)
-        |  JOIN m USING (doc_id) LEFT JOIN sm USING (doc_id)""".stripMargin,
-
-    "q53_corpus_filter" ->
-      s"""WITH RECURSIVE
-        |$toksCte,
-        |$shCte,
-        |sig AS (SELECT doc_id, list_transform(range(0, 16), j ->
-        |    list_min(list_transform(s, x ->
-        |      (((j * 2654435761) % 2147483647 + 1) * (cast('0x' || substr(md5(x), 1, 15) AS BIGINT) % 2147483647)
-        |        + ((j * 40503 + 11) % 2147483647)) % 2147483647))) AS sg
-        |  FROM sh WHERE len(s) > 0),
-        |keyed AS (SELECT doc_id, sg,
-        |    unnest(list_transform(range(0, 8), b -> b || ':' || array_to_string(sg[b*2+1:b*2+2], ','))) AS band_key
-        |  FROM sig),
-        |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-        |      FROM keyed x JOIN keyed y USING (band_key) WHERE x.doc_id < y.doc_id),
-        |mh AS (SELECT a, b FROM cand JOIN sh sa ON cand.a = sa.doc_id JOIN sh sb ON cand.b = sb.doc_id
-        |  WHERE len(list_intersect(sa.s, sb.s))::DOUBLE
-        |    / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)))::DOUBLE >= 0.5),
-        |eh AS (SELECT doc_id, md5(lower(trim(text))) AS ch FROM documents),
-        |exct AS (SELECT x.doc_id AS a, y.doc_id AS b FROM eh x JOIN eh y ON x.ch = y.ch AND x.doc_id < y.doc_id),
-        |allp AS (SELECT a, b FROM exct UNION SELECT a, b FROM mh),
-        |sym AS (SELECT a AS x, b AS y FROM allp UNION SELECT b AS x, a AS y FROM allp),
-        |reach(x, y) AS (
-        |  SELECT doc_id AS x, doc_id AS y FROM documents
-        |  UNION
-        |  SELECT r.x, s2.y FROM reach r JOIN sym s2 ON r.y = s2.x),
-        |comp AS (SELECT x AS doc_id, min(y) AS component FROM reach GROUP BY 1),
-        |lh AS (SELECT doc_id,
-        |  len(list_filter(tk, t -> list_contains(['the','a','of','and','to','in','is','it'], t)))::BIGINT AS hits_en,
-        |  len(list_filter(tk, t -> list_contains(['der','die','das','und','ist','ein','nicht','mit'], t)))::BIGINT AS hits_de,
-        |  len(list_filter(tk, t -> list_contains(['le','la','les','et','est','un','une','dans'], t)))::BIGINT AS hits_fr,
-        |  len(list_filter(tk, t -> list_contains(['el','la','los','y','es','un','una','en'], t)))::BIGINT AS hits_es
-        |  FROM toks),
-        |lang AS (SELECT doc_id,
-        |  CASE WHEN greatest(hits_en, hits_de, hits_fr, hits_es) = 0 THEN 'und'
-        |       WHEN hits_en = greatest(hits_en, hits_de, hits_fr, hits_es) THEN 'en'
-        |       WHEN hits_de = greatest(hits_en, hits_de, hits_fr, hits_es) THEN 'de'
-        |       WHEN hits_fr = greatest(hits_en, hits_de, hits_fr, hits_es) THEN 'fr'
-        |       ELSE 'es' END AS pred_lang
-        |  FROM lh),
-        |qc AS (SELECT d.doc_id, len(t.tk)::BIGINT AS n_tokens, length(d.text) AS n_char,
-        |  length(regexp_replace(d.text, '[^a-zA-Z]', '', 'g')) AS alpha_chars,
-        |  length(regexp_replace(d.text, '[^.,;:!?]', '', 'g')) AS punct_chars,
-        |  CASE WHEN len(t.tk) = 0 THEN 0.0 ELSE list_sum(list_transform(t.tk, x -> length(x)))::DOUBLE / len(t.tk)::DOUBLE END AS mean_token_len
-        |  FROM documents d JOIN toks t USING (doc_id)),
-        |qual AS (SELECT doc_id,
-        |  (CASE WHEN n_tokens >= 10 THEN 0.25 ELSE 0.0 END
-        |   + CASE WHEN mean_token_len >= 3.0 AND mean_token_len <= 10.0 THEN 0.25 ELSE 0.0 END
-        |   + CASE WHEN (CASE WHEN n_char = 0 THEN 0.0 ELSE alpha_chars::DOUBLE / n_char::DOUBLE END) >= 0.6 THEN 0.25 ELSE 0.0 END
-        |   + CASE WHEN (CASE WHEN n_char = 0 THEN 0.0 ELSE punct_chars::DOUBLE / n_char::DOUBLE END) <= 0.1 THEN 0.25 ELSE 0.0 END) AS quality
-        |  FROM qc)
-        |SELECT c.doc_id, (c.component = c.doc_id) AS canonical,
-        |  (lang.pred_lang = 'en') AS lang_ok, (qual.quality >= 0.5) AS quality_ok,
-        |  ((c.component = c.doc_id) AND lang.pred_lang = 'en' AND qual.quality >= 0.5) AS kept
-        |FROM comp c JOIN lang USING (doc_id) JOIN qual USING (doc_id)""".stripMargin,
-
-    "q16_simhash_fp" ->
-      s"""WITH $toksCte,
-        |t AS (SELECT doc_id, unnest(tk) AS tok FROM toks),
-        |h AS (SELECT doc_id, cast('0x' || substr(md5(tok), 1, 15) AS BIGINT) AS h60 FROM t),
-        |bits AS (SELECT doc_id, bb.b AS b,
-        |    sum(CASE WHEN (h60 >> bb.b) % 2 = 1 THEN 1 ELSE -1 END) AS c
-        |  FROM h CROSS JOIN (SELECT unnest(range(0, 60)) AS b) bb GROUP BY 1, 2),
-        |s AS (SELECT doc_id, sum(CASE WHEN c > 0 THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS sh
-        |      FROM bits GROUP BY 1)
-        |SELECT d.doc_id, coalesce(s.sh, 0)::BIGINT AS simhash
-        |FROM documents d LEFT JOIN s USING (doc_id)""".stripMargin,
-
-    "q17_product_text" ->
-      """SELECT * FROM (VALUES
-        |  ('A1', 'Alpha Beta | Group: Book | Category: |Books[1]|Fiction[2]'),
-        |  ('A3', 'Gamma | Category: |CDs[9]'))
-        |AS t(asin, document)""".stripMargin,
-
-    "q18_fingerprints" ->
-      s"""WITH $toksCte
-        |SELECT doc_id,
-        |  list_reduce(list_prepend(0::BIGINT, list_transform(tk, x ->
-        |    cast('0x' || substr(md5(x), 1, 15) AS BIGINT) % 2147483647)),
-        |    (a, b) -> (a * 31 + b) % 2147483647) AS fingerprint
-        |FROM toks""".stripMargin,
-
-    "q19_lang_id" ->
-      s"""WITH $toksCte,
-        |h AS (SELECT doc_id, len(tk)::BIGINT AS n_tokens,
-        |  len(list_filter(tk, t -> list_contains(['the','a','of','and','to','in','is','it'], t)))::BIGINT AS hits_en,
-        |  len(list_filter(tk, t -> list_contains(['der','die','das','und','ist','ein','nicht','mit'], t)))::BIGINT AS hits_de,
-        |  len(list_filter(tk, t -> list_contains(['le','la','les','et','est','un','une','dans'], t)))::BIGINT AS hits_fr,
-        |  len(list_filter(tk, t -> list_contains(['el','la','los','y','es','un','una','en'], t)))::BIGINT AS hits_es
-        |  FROM toks)
-        |SELECT doc_id, n_tokens, hits_en, hits_de, hits_fr, hits_es,
-        |  CASE WHEN greatest(hits_en, hits_de, hits_fr, hits_es) = 0 THEN 'und'
-        |       WHEN hits_en = greatest(hits_en, hits_de, hits_fr, hits_es) THEN 'en'
-        |       WHEN hits_de = greatest(hits_en, hits_de, hits_fr, hits_es) THEN 'de'
-        |       WHEN hits_fr = greatest(hits_en, hits_de, hits_fr, hits_es) THEN 'fr'
-        |       ELSE 'es' END AS pred_lang
-        |FROM h""".stripMargin,
-
-    "q20_quality" ->
-      s"""WITH $toksCte,
-        |m AS (SELECT d.doc_id, d.text, t.tk FROM documents d JOIN toks t USING (doc_id)),
-        |c AS (SELECT doc_id, len(tk)::BIGINT AS n_tokens, length(text) AS n_char,
-        |  length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS alpha_chars,
-        |  length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS punct_chars,
-        |  len(list_filter(tk, t -> list_contains(['the','a','of','and','to','in','is','it','der','die','das','und','ist','ein','nicht','mit','le','la','les','et','est','un','une','dans','el','la','los','y','es','un','una','en'], t))) AS stop_hits,
-        |  CASE WHEN len(tk) = 0 THEN 0.0 ELSE list_sum(list_transform(tk, x -> length(x)))::DOUBLE / len(tk)::DOUBLE END AS mean_token_len
-        |  FROM m)
-        |SELECT doc_id, n_tokens, mean_token_len,
-        |  CASE WHEN n_char = 0 THEN 0.0 ELSE punct_chars::DOUBLE / n_char::DOUBLE END AS punct_ratio,
-        |  CASE WHEN n_char = 0 THEN 0.0 ELSE alpha_chars::DOUBLE / n_char::DOUBLE END AS alpha_ratio,
-        |  CASE WHEN n_tokens = 0 THEN 0.0 ELSE stop_hits::DOUBLE / n_tokens::DOUBLE END AS stopword_ratio,
-        |  (CASE WHEN n_tokens >= 10 THEN 0.25 ELSE 0.0 END
-        |   + CASE WHEN mean_token_len >= 3.0 AND mean_token_len <= 10.0 THEN 0.25 ELSE 0.0 END
-        |   + CASE WHEN (CASE WHEN n_char = 0 THEN 0.0 ELSE alpha_chars::DOUBLE / n_char::DOUBLE END) >= 0.6 THEN 0.25 ELSE 0.0 END
-        |   + CASE WHEN (CASE WHEN n_char = 0 THEN 0.0 ELSE punct_chars::DOUBLE / n_char::DOUBLE END) <= 0.1 THEN 0.25 ELSE 0.0 END
-        |  )::DOUBLE AS quality
-        |FROM c""".stripMargin,
-
-    "q21_token_counts" ->
-      """SELECT doc_id,
-        |  len(list_filter(string_split_regex(text, '\s+'), t -> t != ''))::BIGINT AS ws_tokens,
-        |  len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\s]'))::BIGINT AS bpe_tokens
-        |FROM documents""".stripMargin,
-
-    "q22_resolver_substr" ->
-      """WITH items AS (SELECT doc_id::VARCHAR AS id, text AS title FROM documents),
-        |cand AS (
-        |  SELECT id, title, 'exact_id' AS matched_by, 0 AS prec FROM items WHERE id = 'hash value table'
-        |  UNION ALL
-        |  SELECT id, title, 'substring' AS matched_by, 1 AS prec FROM items
-        |  WHERE title IS NOT NULL AND contains(lower(title), 'hash value table'))
-        |SELECT id, title, matched_by FROM cand
-        |ORDER BY prec, length(title), id LIMIT 1""".stripMargin,
-
-    "q23_resolver_exact" ->
-      """WITH items AS (SELECT doc_id::VARCHAR AS id, text AS title FROM documents),
-        |cand AS (
-        |  SELECT id, title, 'exact_id' AS matched_by, 0 AS prec FROM items WHERE id = '42'
-        |  UNION ALL
-        |  SELECT id, title, 'substring' AS matched_by, 1 AS prec FROM items
-        |  WHERE title IS NOT NULL AND contains(lower(title), '42'))
-        |SELECT id, title, matched_by FROM cand
-        |ORDER BY prec, length(title), id LIMIT 1""".stripMargin,
-
-    "q24_sample_inv" ->
-      "SELECT 100::BIGINT AS n_rows, 100::BIGINT AS n_distinct, true AS in_range",
-
-    "q25_precision" ->
-      s"""WITH $basketCtes,
-        |f AS (SELECT * FROM sym WHERE src IN (SELECT p_partkey FROM part WHERE p_partkey <= 100)),
-        |ranked AS (SELECT src AS query_id, dst AS item,
-        |    row_number() OVER (PARTITION BY src ORDER BY weight DESC, dst) AS rnk
-        |  FROM f QUALIFY rnk <= 20),
-        |truth AS (SELECT src AS query_id, dst AS item FROM sym WHERE weight >= 2),
-        |hits AS (SELECT r.query_id, r.item, r.rnk FROM ranked r
-        |         SEMI JOIN truth t ON r.query_id = t.query_id AND r.item = t.item),
-        |q AS (SELECT DISTINCT query_id FROM ranked),
-        |ks AS (SELECT unnest([5, 10]) AS k)
-        |SELECT q.query_id, ks.k,
-        |  count(CASE WHEN h.rnk <= ks.k THEN 1 END) AS hits,
-        |  count(CASE WHEN h.rnk <= ks.k THEN 1 END)::DOUBLE / ks.k::DOUBLE AS "precision"
-        |FROM q CROSS JOIN ks LEFT JOIN hits h ON q.query_id = h.query_id
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q26_mean_precision" ->
-      s"""WITH $basketCtes,
-        |f AS (SELECT * FROM sym WHERE src IN (SELECT p_partkey FROM part WHERE p_partkey <= 100)),
-        |ranked AS (SELECT src AS query_id, dst AS item,
-        |    row_number() OVER (PARTITION BY src ORDER BY weight DESC, dst) AS rnk
-        |  FROM f QUALIFY rnk <= 20),
-        |truth AS (SELECT src AS query_id, dst AS item FROM sym WHERE weight >= 2),
-        |hits AS (SELECT r.query_id, r.item, r.rnk FROM ranked r
-        |         SEMI JOIN truth t ON r.query_id = t.query_id AND r.item = t.item),
-        |q AS (SELECT DISTINCT query_id FROM ranked),
-        |ks AS (SELECT unnest([5, 10]) AS k),
-        |pq AS (SELECT q.query_id, ks.k,
-        |    count(CASE WHEN h.rnk <= ks.k THEN 1 END)::DOUBLE / ks.k::DOUBLE AS prec
-        |  FROM q CROSS JOIN ks LEFT JOIN hits h ON q.query_id = h.query_id
-        |  GROUP BY 1, 2)
-        |SELECT k, round(avg(prec), 6) AS mean_precision, count(*) AS n_queries
-        |FROM pq GROUP BY 1""".stripMargin,
-
-    "q27_hybrid_topk" ->
-      s"""WITH $hybridCtes
-        |SELECT query_id, item, round(cs, 6) AS cs, fs, round(fin, 6) AS "final", rnk
-        |FROM r WHERE rnk <= 10""".stripMargin,
-
-    "q35_content_precision" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
-        |sc AS (SELECT q.query_id, e.vec_id AS item, ${cosSql("q.qv", "e.v")} AS sim
-        |       FROM q CROSS JOIN e WHERE q.query_id != e.vec_id),
-        |ranked AS (SELECT query_id, item,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, item) AS rnk
-        |  FROM sc QUALIFY rnk <= 20),
-        |$truthCte,
-        |$precisionTail""".stripMargin,
-
-    "q36_hybrid_precision" ->
-      s"""WITH $hybridCtes,
-        |ranked AS (SELECT query_id, item, rnk FROM r WHERE rnk <= 10),
-        |$truthCte,
-        |$precisionTail""".stripMargin,
-
-    "q28_events_window" ->
-      """SELECT time_bucket(INTERVAL '5 minutes', ts) AS win_start,
-        |  time_bucket(INTERVAL '5 minutes', ts) + INTERVAL '5 minutes' AS win_end,
-        |  event_type, count(*) AS cnt, round(sum(value), 4) AS sum_value
-        |FROM events GROUP BY 1, 2, 3""".stripMargin,
-
-    "q47_events_sliding" ->
-      """WITH w AS (SELECT
-        |    unnest([time_bucket(INTERVAL '5 minutes', ts),
-        |            time_bucket(INTERVAL '5 minutes', ts) - INTERVAL '5 minutes']) AS win_start,
-        |    event_type, value
-        |  FROM events)
-        |SELECT win_start, win_start + INTERVAL '10 minutes' AS win_end,
-        |  event_type, count(*) AS cnt, round(sum(value), 4) AS sum_value
-        |FROM w GROUP BY 1, 2, 3""".stripMargin,
-
-    "q51_text_knn" ->
-      """SELECT (SELECT count(*) FROM documents WHERE doc_id < 20)::BIGINT AS n_queries,
-        |  true AS rows_ok, true AS self_excluded, true AS sim_range_ok""".stripMargin,
-
-    "q50_approx_distinct" ->
-      """SELECT event_type, count(DISTINCT user_id) AS exact_users,
-        |  true AS within_bounds
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q49_event_stats" ->
-      """SELECT event_type, count(*) AS n,
-        |  round(min(value), 4) AS vmin, round(max(value), 4) AS vmax,
-        |  round(avg(value), 6) AS vavg,
-        |  round(quantile_cont(value, 0.5), 6) AS p50,
-        |  round(quantile_cont(value, 0.95), 6) AS p95
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q64_approx_pct" ->
-      """SELECT DISTINCT event_type, true AS within_bounds FROM events""",
-
-    "q65_vocabulary" ->
-      s"""WITH $toksCte,
-        |t AS (SELECT doc_id, unnest(tk) AS term FROM toks),
-        |g AS (SELECT term, doc_id, count(*) AS n FROM t GROUP BY 1, 2)
-        |SELECT term, count(*) AS df, sum(n)::BIGINT AS tf
-        |FROM g GROUP BY term HAVING count(*) >= 3""".stripMargin,
-
-    "q72_chunking" ->
-      s"""WITH $toksCte,
-        |st AS (SELECT doc_id, tk, unnest(range(0, len(tk), 40)) AS start
-        |       FROM toks WHERE len(tk) > 0)
-        |SELECT doc_id, (start // 40)::BIGINT AS chunk_id,
-        |  least(50, len(tk) - start)::BIGINT AS n_tokens,
-        |  md5(array_to_string(tk[start+1:start+50], ' ')) AS chunk_md5
-        |FROM st""".stripMargin,
-
-    "q73_keywords" ->
-      s"""WITH $toksCte,
-        |t AS (SELECT doc_id, unnest(tk) AS term FROM toks),
-        |tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM t GROUP BY 1, 2),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |sc AS (SELECT doc_id, term, tf * ln((n_docs + 1.0) / (df + 1.0)) AS score
-        |       FROM tf JOIN df USING (term) CROSS JOIN n),
-        |r AS (SELECT doc_id, term, score,
-        |        row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rnk FROM sc)
-        |SELECT doc_id, term, rnk, round(score, 6) AS score FROM r WHERE rnk <= 3""".stripMargin,
-
-    "q74_rrf_fusion" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
-        |sc AS (SELECT q.query_id, e.vec_id AS item, ${cosSql("q.qv", "e.v")} AS s
-        |       FROM q CROSS JOIN e WHERE q.query_id != e.vec_id),
-        |content AS (SELECT query_id, item,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY s DESC, item) AS rr
-        |  FROM sc QUALIFY rr <= 60),
-        |cf AS (SELECT a.vec_id AS query_id, b.vec_id AS item,
-        |    row_number() OVER (PARTITION BY a.vec_id ORDER BY b.vec_id) AS rr
-        |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id != b.vec_id
-        |  WHERE a.vec_id < 20 QUALIFY rr <= 60),
-        |fu AS (SELECT coalesce(c.query_id, g.query_id) AS query_id,
-        |    coalesce(c.item, g.item) AS item,
-        |    coalesce(c.rr, 0)::BIGINT AS content_rnk,
-        |    coalesce(g.rr, 0)::BIGINT AS cf_rnk,
-        |    coalesce(1.0::DOUBLE / (60 + c.rr), 0.0) +
-        |      coalesce(1.0::DOUBLE / (60 + g.rr), 0.0) AS rrf
-        |  FROM content c FULL OUTER JOIN cf g
-        |    ON c.query_id = g.query_id AND c.item = g.item),
-        |r AS (SELECT query_id, item, content_rnk, cf_rnk, rrf,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY rrf DESC, item) AS rnk
-        |  FROM fu)
-        |SELECT query_id, item, content_rnk, cf_rnk, round(rrf, 6) AS rrf, rnk
-        |FROM r WHERE rnk <= 10""".stripMargin,
-
-    "q75_decontaminate" ->
-      s"""WITH $toksCte,
-        |g0 AS (SELECT doc_id, unnest(CASE WHEN len(tk) < 8 THEN []::VARCHAR[]
-        |    ELSE list_distinct(list_transform(range(1, len(tk) - 6),
-        |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' ||
-        |           tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7])) END) AS gram
-        |  FROM toks),
-        |bench AS (SELECT doc_id AS bench_id, gram FROM g0 WHERE doc_id % 97 = 0),
-        |corp AS (SELECT doc_id, gram FROM g0 WHERE doc_id % 97 != 0
-        |         UNION ALL
-        |         SELECT doc_id + 1000000 AS doc_id, gram FROM g0 WHERE doc_id % 97 = 0)
-        |SELECT c.doc_id, count(DISTINCT c.gram) AS n_overlap_grams,
-        |  count(DISTINCT b.bench_id) AS n_bench_docs
-        |FROM corp c JOIN bench b ON c.gram = b.gram GROUP BY 1""".stripMargin,
-
-    "q98_rag_retrieve" ->
-      s"""WITH $toksCte,
-        |st AS (SELECT doc_id, tk, unnest(range(0, len(tk), 40)) AS start
-        |       FROM toks WHERE len(tk) > 0),
-        |ch AS (SELECT doc_id * 1000 + (start // 40) AS chunk_uid FROM st)
-        |SELECT (SELECT count(*) FROM ch WHERE chunk_uid % 97 = 0)::BIGINT AS n_queries,
-        |  true AS rows_ok, true AS self_found_at_sim1""".stripMargin,
-
-    // Plant offset +4000002 ≡ 0 (mod 3) so the copy keeps its media type
-    // (same container, same decoded buffer → sim 1 through the REAL
-    // codec); the histogram replays the decoded raster/PCM bytes.
-    "q97_media_dedup" ->
-      s"""WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 23 = 0),
-        |u AS (SELECT doc_id, text FROM base
-        |      UNION ALL SELECT doc_id + 4000002 AS doc_id, text FROM base),
-        |${mediaHistSql("u")},
-        |grid AS (SELECT u.doc_id, bb.bin FROM u
-        |         CROSS JOIN (SELECT unnest(range(0, 16)) AS bin) bb),
-        |v AS (SELECT g.doc_id,
-        |        list(CASE WHEN mn.nrm IS NULL OR mn.nrm = 0 THEN 0.0
-        |                  ELSE coalesce(mh.c, 0.0) / mn.nrm END ORDER BY g.bin) AS vec
-        |      FROM grid g
-        |      LEFT JOIN mh ON g.doc_id = mh.doc_id AND g.bin = mh.bin
-        |      LEFT JOIN mn ON g.doc_id = mn.doc_id
-        |      GROUP BY g.doc_id)
-        |SELECT x.doc_id AS a, y.doc_id AS b,
-        |  round(list_dot_product(x.vec, y.vec), 6) AS sim
-        |FROM v x JOIN v y ON x.doc_id < y.doc_id
-        |WHERE list_dot_product(x.vec, y.vec) >= 0.9999""".stripMargin,
-
-    "q95_json_props" ->
-      """SELECT event_type, count(*)::BIGINT AS n,
-        |  sum(json_extract_string(props, '$.k')::BIGINT)::BIGINT AS sum_k,
-        |  round(avg(json_extract_string(props, '$.k')::BIGINT), 6) AS avg_k
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q96_anomaly_zscore" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS t, value FROM events),
-        |s AS (SELECT user_id, event_id, value,
-        |    avg(value) OVER w AS mu, stddev_samp(value) OVER w AS sd
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id
-        |                      ROWS BETWEEN 8 PRECEDING AND 1 PRECEDING))
-        |SELECT user_id, event_id, value, round(mu, 6) AS mu,
-        |  CASE WHEN sd IS NULL OR sd = 0 THEN NULL
-        |       ELSE round((value - mu) / sd, 6) END AS z,
-        |  coalesce(abs(CASE WHEN sd IS NULL OR sd = 0 THEN NULL
-        |                    ELSE round((value - mu) / sd, 6) END) > 2.0, false)
-        |    AS is_anomaly
-        |FROM s""".stripMargin,
-
-    "q94_pagerank_directed" -> {
-      // MATERIALIZED: DuckDB otherwise inlines each CTE per reference
-      // and the 10-round chain re-opens the lineitem scan enough times
-      // to exhaust file handles.
-      val rounds = (1 to 10).map { i =>
-        s"""c$i AS MATERIALIZED (SELECT e.dst AS node, sum(r.rank * e.frac) AS m
-           |  FROM norm e JOIN r${i - 1} r ON e.src = r.node GROUP BY e.dst),
-           |d$i AS MATERIALIZED (SELECT coalesce(sum(r.rank), 0.0) AS dm
-           |  FROM r${i - 1} r SEMI JOIN dangset g ON r.node = g.node),
-           |r$i AS MATERIALIZED (SELECT nd.node,
-           |    bb.base + 0.85 * (coalesce(c.m, 0.0) + d$i.dm / bb.n) AS rank
-           |  FROM nodes nd LEFT JOIN c$i c ON nd.node = c.node
-           |  CROSS JOIN d$i CROSS JOIN bb)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS okey, l_partkey AS item FROM lineitem),
-        |e AS MATERIALIZED (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-        |      FROM items a JOIN items b USING (okey) WHERE a.item < b.item GROUP BY 1, 2),
-        |nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst AS node FROM e),
-        |deg AS MATERIALIZED (SELECT src, sum(weight) AS w FROM e GROUP BY 1),
-        |norm AS MATERIALIZED (SELECT s.src, s.dst, s.weight::DOUBLE / d.w AS frac
-        |         FROM e s JOIN deg d USING (src)),
-        |dangset AS MATERIALIZED (SELECT node FROM nodes
-        |         WHERE node NOT IN (SELECT src FROM deg)),
-        |nn AS (SELECT count(*)::DOUBLE AS n FROM nodes),
-        |bb AS MATERIALIZED (SELECT (1.0 - 0.85) / n AS base, n FROM nn),
-        |r0 AS MATERIALIZED (SELECT nd.node, 1.0 / bb.n AS rank FROM nodes nd CROSS JOIN bb),
-        |$rounds
-        |SELECT r10.node, round(r10.rank * bb.n, 6) AS pr_scaled
-        |FROM r10 CROSS JOIN bb""".stripMargin
-    },
-
-    "q93_domain_mix" ->
-      """WITH q AS (SELECT * FROM (VALUES ('en', 60), ('de', 25), ('fr', 15)) v(stratum, quota)),
-        |r AS (SELECT d.lang AS stratum, d.doc_id AS key, q.quota,
-        |    row_number() OVER (PARTITION BY d.lang
-        |      ORDER BY md5('42:' || d.doc_id::VARCHAR), d.doc_id) AS rnk
-        |  FROM documents d JOIN q ON d.lang = q.stratum)
-        |SELECT stratum, key, rnk, quota::BIGINT AS quota
-        |FROM r WHERE rnk <= quota""".stripMargin,
-
-    "q91_zorder" ->
-      s"""WITH e AS (SELECT event_id, user_id,
-        |  (epoch_us(ts) - 1704067200000000) // 60000000 AS m FROM events)
-        |SELECT event_id, user_id, m, (${zSql("user_id", "m")})::BIGINT AS zval
-        |FROM e""".stripMargin,
-
-    "q90_curation_gate" ->
-      s"""WITH $toksCte,
-        |lang AS (SELECT doc_id,
-        |  len(list_filter(tk, t -> list_contains(['the','a','of','and','to','in','is','it'], t)))::BIGINT AS h_en,
-        |  len(list_filter(tk, t -> list_contains(['der','die','das','und','ist','ein','nicht','mit'], t)))::BIGINT AS h_de,
-        |  len(list_filter(tk, t -> list_contains(['le','la','les','et','est','un','une','dans'], t)))::BIGINT AS h_fr,
-        |  len(list_filter(tk, t -> list_contains(['el','la','los','y','es','un','una','en'], t)))::BIGINT AS h_es
-        |  FROM toks),
-        |lok AS (SELECT doc_id, (greatest(h_en, h_de, h_fr, h_es) > 0
-        |                        AND h_en = greatest(h_en, h_de, h_fr, h_es)) AS lang_ok FROM lang),
-        |qc AS (SELECT d.doc_id, len(t.tk)::BIGINT AS n_tokens, length(d.text) AS n_char,
-        |  length(regexp_replace(d.text, '[^a-zA-Z]', '', 'g')) AS alpha_chars,
-        |  length(regexp_replace(d.text, '[^.,;:!?]', '', 'g')) AS punct_chars,
-        |  CASE WHEN len(t.tk) = 0 THEN 0.0 ELSE list_sum(list_transform(t.tk, x -> length(x)))::DOUBLE / len(t.tk)::DOUBLE END AS mtl
-        |  FROM documents d JOIN toks t USING (doc_id)),
-        |qok AS (SELECT doc_id,
-        |  ((CASE WHEN n_tokens >= 10 THEN 0.25 ELSE 0.0 END
-        |   + CASE WHEN mtl >= 3.0 AND mtl <= 10.0 THEN 0.25 ELSE 0.0 END
-        |   + CASE WHEN (CASE WHEN n_char = 0 THEN 0.0 ELSE alpha_chars::DOUBLE / n_char::DOUBLE END) >= 0.6 THEN 0.25 ELSE 0.0 END
-        |   + CASE WHEN (CASE WHEN n_char = 0 THEN 0.0 ELSE punct_chars::DOUBLE / n_char::DOUBLE END) <= 0.1 THEN 0.25 ELSE 0.0 END) >= 0.5) AS quality_ok
-        |  FROM qc),
-        |sN AS (SELECT doc_id, array_to_string(tk, ' ') AS s FROM toks),
-        |tris AS (SELECT doc_id, unnest(list_transform(range(1, len(s) - 1),
-        |           i -> substr(s, i, 3))) AS tri FROM sN),
-        |model AS (SELECT tri, count(*)::BIGINT AS cnt3 FROM tris GROUP BY 1),
-        |pre AS (SELECT substr(tri, 1, 2) AS pre, sum(cnt3)::BIGINT AS cnt2 FROM model GROUP BY 1),
-        |vv AS (SELECT count(DISTINCT substr(tri, 3, 1)) AS v FROM model),
-        |nok AS (SELECT t.doc_id,
-        |    (round(-avg(ln((m.cnt3 + 1.0) / (p.cnt2 + vv.v))), 6) <= 0.82) AS nll_ok
-        |  FROM tris t JOIN model m ON t.tri = m.tri
-        |  JOIN pre p ON substr(t.tri, 1, 2) = p.pre CROSS JOIN vv
-        |  GROUP BY t.doc_id),
-        |occ8 AS (SELECT doc_id, unnest(CASE WHEN len(tk) < 8 THEN []::VARCHAR[]
-        |    ELSE list_transform(range(1, len(tk) - 6),
-        |      i -> array_to_string(tk[i:i+7], ' ')) END) AS gram FROM toks),
-        |df8 AS (SELECT gram, count(DISTINCT doc_id) AS df FROM occ8 GROUP BY 1),
-        |dok AS (SELECT o.doc_id,
-        |    (count(CASE WHEN df8.df >= 2 THEN 1 END)::DOUBLE / count(*)::DOUBLE < 0.9) AS dup_ok
-        |  FROM occ8 o JOIN df8 ON o.gram = df8.gram GROUP BY 1),
-        |g13 AS (SELECT doc_id, unnest(CASE WHEN len(tk) < 13 THEN []::VARCHAR[]
-        |    ELSE list_distinct(list_transform(range(1, len(tk) - 11),
-        |      i -> array_to_string(tk[i:i+12], ' '))) END) AS gram FROM toks),
-        |contam AS (SELECT DISTINCT c.doc_id FROM g13 c
-        |           JOIN (SELECT gram FROM g13 WHERE doc_id % 89 = 0) b ON c.gram = b.gram
-        |           WHERE c.doc_id % 89 != 0)
-        |SELECT d.doc_id, lok.lang_ok, qok.quality_ok, nok.nll_ok, dok.dup_ok,
-        |  (d.doc_id % 89 != 0 AND contam.doc_id IS NULL) AS clean,
-        |  (lok.lang_ok AND qok.quality_ok AND nok.nll_ok AND dok.dup_ok
-        |   AND d.doc_id % 89 != 0 AND contam.doc_id IS NULL) AS kept
-        |FROM documents d
-        |JOIN lok USING (doc_id) JOIN qok USING (doc_id)
-        |JOIN nok USING (doc_id) JOIN dok USING (doc_id)
-        |LEFT JOIN contam ON d.doc_id = contam.doc_id""".stripMargin,
-
-    "q88_retention" ->
-      """WITH su AS (SELECT user_id, min(date_trunc('week', ts)) AS cw
-        |           FROM events WHERE event_type = 'signup' GROUP BY 1),
-        |act AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS aw FROM events),
-        |coh AS (SELECT cw, count(DISTINCT user_id) AS n_cohort FROM su GROUP BY 1),
-        |j AS (SELECT su.user_id, su.cw, act.aw,
-        |        date_diff('day', su.cw, act.aw) // 7 AS week_offset
-        |      FROM su JOIN act USING (user_id) WHERE act.aw >= su.cw),
-        |g AS (SELECT cw, week_offset, count(DISTINCT user_id) AS n_active
-        |      FROM j GROUP BY 1, 2)
-        |SELECT strftime(g.cw, '%Y-%m-%d') AS cohort_week,
-        |  g.week_offset::BIGINT AS week_offset, g.n_active::BIGINT AS n_active,
-        |  coh.n_cohort::BIGINT AS n_cohort,
-        |  round(g.n_active::DOUBLE / coh.n_cohort::DOUBLE, 6) AS rate
-        |FROM g JOIN coh ON g.cw = coh.cw""".stripMargin,
-
-    "q89_label_centroids" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        |p AS (SELECT label, i, avg(v[i]) AS m
-        |  FROM e CROSS JOIN (SELECT unnest(range(1,
-        |    (SELECT max(len(v)) FROM e) + 1)) AS i) idx
-        |  GROUP BY 1, 2),
-        |c AS (SELECT label, list(m ORDER BY i) AS cent FROM p GROUP BY 1)
-        |SELECT vec_id, e.label, round(${cosSql("e.v", "c.cent")}, 6) AS cos_centroid
-        |FROM e JOIN c ON e.label = c.label""".stripMargin,
-
-    "q86_dup_spans" ->
-      s"""WITH $toksCte,
-        |base AS (SELECT doc_id, tk FROM toks
-        |         UNION ALL
-        |         SELECT doc_id + 3000000 AS doc_id, tk FROM toks WHERE doc_id % 101 = 0),
-        |occ AS (SELECT doc_id, unnest(CASE WHEN len(tk) < 8 THEN []::VARCHAR[]
-        |    ELSE list_transform(range(1, len(tk) - 6),
-        |      i -> array_to_string(tk[i:i+7], ' ')) END) AS gram
-        |  FROM base),
-        |df AS (SELECT gram, count(DISTINCT doc_id) AS df FROM occ GROUP BY 1),
-        |per AS (SELECT o.doc_id, count(*)::BIGINT AS n_grams,
-        |    count(CASE WHEN df.df >= 2 THEN 1 END)::BIGINT AS n_dup
-        |  FROM occ o JOIN df ON o.gram = df.gram GROUP BY 1)
-        |SELECT b.doc_id, coalesce(per.n_grams, 0)::BIGINT AS n_grams,
-        |  coalesce(per.n_dup, 0)::BIGINT AS n_dup,
-        |  CASE WHEN coalesce(per.n_grams, 0) = 0 THEN 0.0
-        |       ELSE round(per.n_dup::DOUBLE / per.n_grams::DOUBLE, 6) END AS dup_ratio
-        |FROM (SELECT DISTINCT doc_id FROM base) b
-        |LEFT JOIN per ON b.doc_id = per.doc_id""".stripMargin,
-
-    "q87_heavy_hitters" ->
-      s"""WITH $toksCte,
-        |t AS (SELECT unnest(tk) AS term FROM toks),
-        |n AS (SELECT count(*) AS n_total FROM t),
-        |c AS (SELECT term, count(*)::BIGINT AS cnt FROM t GROUP BY 1)
-        |SELECT term, cnt, round(cnt::DOUBLE / n_total::DOUBLE, 6) AS freq
-        |FROM c CROSS JOIN n WHERE cnt > 0.03 * n_total""".stripMargin,
-
-    "q85_lm_score" ->
-      s"""WITH $toksCte,
-        |s AS (SELECT doc_id, array_to_string(tk, ' ') AS s FROM toks),
-        |tris AS (SELECT doc_id, unnest(list_transform(range(1, len(s) - 1),
-        |           i -> substr(s, i, 3))) AS tri FROM s),
-        |model AS (SELECT tri, count(*)::BIGINT AS cnt3 FROM tris GROUP BY 1),
-        |pre AS (SELECT substr(tri, 1, 2) AS pre, sum(cnt3)::BIGINT AS cnt2
-        |        FROM model GROUP BY 1),
-        |v AS (SELECT count(DISTINCT substr(tri, 3, 1)) AS v FROM model)
-        |SELECT t.doc_id, count(*)::BIGINT AS n_tris,
-        |  round(-avg(ln((m.cnt3 + 1.0) / (p.cnt2 + v.v))), 6) AS nll
-        |FROM tris t JOIN model m ON t.tri = m.tri
-        |JOIN pre p ON substr(t.tri, 1, 2) = p.pre
-        |CROSS JOIN v
-        |GROUP BY t.doc_id""".stripMargin,
-
-    "q84_negative_sample" ->
-      """WITH e AS (SELECT vec_id, label FROM embeddings),
-        |q AS (SELECT vec_id AS query_id FROM e WHERE vec_id < 20),
-        |pos AS (SELECT a.vec_id AS query_id, b.vec_id AS cand
-        |        FROM e a JOIN e b ON a.label = b.label AND a.vec_id != b.vec_id
-        |        WHERE a.vec_id < 20),
-        |pool AS (SELECT vec_id AS cand,
-        |    CAST('0x' || substr(md5('42:' || vec_id::VARCHAR), 1, 15) AS BIGINT) % 8 AS p
-        |  FROM e),
-        |elig AS (SELECT query_id, cand FROM q JOIN pool ON pool.p = q.query_id % 8
-        |         WHERE cand != query_id),
-        |neg AS (SELECT g.query_id, g.cand FROM elig g
-        |        ANTI JOIN pos ON pos.query_id = g.query_id AND pos.cand = g.cand),
-        |r AS (SELECT query_id, cand AS neg_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY md5('42:' || query_id::VARCHAR || ':' || cand::VARCHAR), cand) AS rnk
-        |  FROM neg)
-        |SELECT query_id, neg_id, rnk FROM r WHERE rnk <= 5""".stripMargin,
-
-    "q83_interval_join" ->
-      """WITH v AS (SELECT user_id, event_id AS view_id, epoch_us(ts) AS v_ts_us
-        |           FROM events WHERE event_type = 'view'),
-        |c AS (SELECT user_id, event_id AS click_id, epoch_us(ts) AS c_ts_us
-        |      FROM events WHERE event_type = 'click')
-        |SELECT v.user_id, view_id, click_id, v_ts_us, c_ts_us,
-        |  (c_ts_us - v_ts_us) AS gap_us
-        |FROM v JOIN c ON v.user_id = c.user_id
-        |WHERE c_ts_us >= v_ts_us AND c_ts_us - v_ts_us <= 1800000000""".stripMargin,
-
-    "q82_bloom_decon" ->
-      s"""WITH $toksCte,
-        |g0 AS (SELECT doc_id, unnest(CASE WHEN len(tk) < 13 THEN []::VARCHAR[]
-        |    ELSE list_distinct(list_transform(range(1, len(tk) - 11),
-        |      i -> array_to_string(tk[i:i+12], ' '))) END) AS gram
-        |  FROM toks),
-        |bench AS (SELECT doc_id AS bench_id, gram FROM g0 WHERE doc_id % 89 = 0),
-        |corp AS (SELECT doc_id, gram FROM g0 WHERE doc_id % 89 != 0
-        |         UNION ALL
-        |         SELECT doc_id + 2000000 AS doc_id, gram FROM g0 WHERE doc_id % 89 = 0)
-        |SELECT c.doc_id, count(DISTINCT c.gram) AS n_overlap_grams,
-        |  count(DISTINCT b.bench_id) AS n_bench_docs
-        |FROM corp c JOIN bench b ON c.gram = b.gram GROUP BY 1""".stripMargin,
-
-    "q76_pack_sequences" ->
-      s"""WITH $toksCte,
-        |nt AS (SELECT doc_id, len(tk)::BIGINT AS n_tokens FROM toks WHERE len(tk) > 0),
-        |o AS (SELECT doc_id, n_tokens,
-        |    coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS start
-        |  FROM nt),
-        |b AS (SELECT doc_id, n_tokens, start,
-        |    unnest(range(start // 512, (start + n_tokens - 1) // 512 + 1)) AS bin_id
-        |  FROM o)
-        |SELECT doc_id, n_tokens, start, bin_id::BIGINT AS bin_id,
-        |  (least(start + n_tokens, (bin_id + 1) * 512) -
-        |   greatest(start, bin_id * 512))::BIGINT AS tok_in_bin
-        |FROM b""".stripMargin,
-
-    "q77_assoc_scores" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey AS okey, l_partkey AS item FROM lineitem),
-        |e AS (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-        |      FROM items a JOIN items b USING (okey) WHERE a.item < b.item GROUP BY 1, 2),
-        |cnt AS (SELECT item, count(*) AS n FROM items GROUP BY 1),
-        |tot AS (SELECT count(DISTINCT okey) AS n_orders FROM items)
-        |SELECT src, dst, weight,
-        |  round(weight::DOUBLE / sqrt((a.n * b.n)::DOUBLE), 6) AS cosine,
-        |  round((weight * n_orders)::DOUBLE / (a.n * b.n)::DOUBLE, 6) AS lift,
-        |  round(weight::DOUBLE / (a.n + b.n - weight)::DOUBLE, 6) AS jaccard
-        |FROM e JOIN cnt a ON e.src = a.item JOIN cnt b ON e.dst = b.item
-        |CROSS JOIN tot""".stripMargin,
-
-    "q78_repetition" ->
-      s"""WITH $toksCte,
-        |g AS (SELECT doc_id, CASE WHEN len(tk) < 3 THEN []::VARCHAR[]
-        |    ELSE list_transform(range(1, len(tk) - 1),
-        |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) END AS gr
-        |  FROM toks)
-        |SELECT doc_id, len(gr)::BIGINT AS n_grams,
-        |  len(list_distinct(gr))::BIGINT AS n_distinct,
-        |  CASE WHEN len(gr) = 0 THEN 0.0
-        |       ELSE round(1.0::DOUBLE - len(list_distinct(gr))::DOUBLE / len(gr)::DOUBLE, 6)
-        |  END AS rep_ratio
-        |FROM g""".stripMargin,
-
-    "q79_pii_scrub" ->
-      """WITH t AS (SELECT doc_id, text ||
-        |    CASE WHEN doc_id % 5 = 0
-        |         THEN ' contact user' || doc_id::VARCHAR || '@example.com' ELSE '' END ||
-        |    CASE WHEN doc_id % 7 = 0 THEN ' call 555-123-4567' ELSE '' END AS txt
-        |  FROM documents)
-        |SELECT doc_id,
-        |  len(regexp_extract_all(txt, '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}'))::BIGINT AS n_emails,
-        |  len(regexp_extract_all(txt, '[0-9]{3}-[0-9]{3}-[0-9]{4}'))::BIGINT AS n_phones,
-        |  md5(regexp_replace(regexp_replace(txt,
-        |    '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
-        |    '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g')) AS redacted_md5
-        |FROM t""".stripMargin,
-
-    "q80_hash_split" ->
-      """WITH b AS (SELECT doc_id AS key,
-        |    CAST('0x' || substr(md5('42:' || doc_id::VARCHAR), 1, 15) AS BIGINT) % 100 AS bucket
-        |  FROM documents)
-        |SELECT key, bucket,
-        |  CASE WHEN bucket < 80 THEN 'train'
-        |       WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split
-        |FROM b""".stripMargin,
-
-    "q62_replay_dedup" ->
-      """WITH u AS (
-        |  SELECT event_id, ts, value FROM events
-        |  UNION ALL
-        |  SELECT event_id, ts + INTERVAL 1 HOUR AS ts, value + 1000.0 AS value
-        |  FROM events WHERE event_id % 50 = 0),
-        |r AS (SELECT event_id, ts, value,
-        |    count(*) OVER (PARTITION BY event_id) AS n_arrivals,
-        |    row_number() OVER (PARTITION BY event_id
-        |      ORDER BY epoch_us(ts), value) AS rn
-        |  FROM u)
-        |SELECT event_id, epoch_ms(ts) AS ts_ms, value, n_arrivals
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    "q60_cube" ->
-      """SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-        |  count(*) AS n, round(sum(value), 4) AS sum_value,
-        |  GROUPING(event_type, day)::INT AS gid
-        |FROM events GROUP BY CUBE (event_type, day)""".stripMargin,
-
-    "q61_moving_avg" ->
-      """SELECT event_id, user_id, epoch_ms(ts) AS ts_ms, value,
-        |  round(avg(value) OVER (PARTITION BY user_id
-        |    ORDER BY epoch_us(ts), event_id
-        |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 6) AS mavg4,
-        |  value - lag(value, 1) OVER (PARTITION BY user_id
-        |    ORDER BY epoch_us(ts), event_id) AS delta
-        |FROM events""".stripMargin,
-
-    "q57_asof_join" ->
-      """WITH ev AS (SELECT event_id, user_id, ts, value,
-        |    (event_type = 'purchase') AS is_probe
-        |  FROM events WHERE event_type IN ('view', 'purchase')),
-        |o AS (SELECT *,
-        |    last_value(CASE WHEN NOT is_probe THEN event_id END IGNORE NULLS)
-        |      OVER w AS asof_event_id,
-        |    last_value(CASE WHEN NOT is_probe THEN epoch_ms(ts) END IGNORE NULLS)
-        |      OVER w AS asof_ts_ms
-        |  FROM ev
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), is_probe, event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT event_id, user_id, epoch_ms(ts) AS ts_ms, value,
-        |  asof_event_id, asof_ts_ms, epoch_ms(ts) - asof_ts_ms AS gap_ms
-        |FROM o WHERE is_probe""".stripMargin,
-
-    "q67_conversion" ->
-      """WITH ev AS (SELECT event_id, user_id, ts,
-        |    (event_type = 'purchase') AS is_probe
-        |  FROM events WHERE event_type IN ('view', 'purchase')),
-        |o AS (SELECT *,
-        |    last_value(CASE WHEN NOT is_probe THEN epoch_ms(ts) END IGNORE NULLS)
-        |      OVER w AS asof_ts_ms
-        |  FROM ev
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), is_probe, event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT strftime(ts, '%Y-%m-%d') AS day, count(*) AS n_purchases,
-        |  count(CASE WHEN asof_ts_ms IS NOT NULL
-        |             AND epoch_ms(ts) - asof_ts_ms <= 3600000 THEN 1 END) AS n_converted
-        |FROM o WHERE is_probe GROUP BY 1""".stripMargin,
-
-    "q58_stratified" ->
-      """WITH r AS (SELECT lang AS stratum, doc_id AS key,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY md5('42:' || doc_id::VARCHAR), doc_id) AS rnk
-        |  FROM documents)
-        |SELECT stratum, key, rnk FROM r WHERE rnk <= 10""".stripMargin,
-
-    "q29_sessions" ->
-      """WITH e AS (SELECT user_id, epoch_ms(ts) AS t, event_id FROM events),
-        |s AS (SELECT user_id, t, event_id,
-        |  CASE WHEN lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id) IS NULL THEN 0
-        |       WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id) > 28800000 THEN 1
-        |       ELSE 0 END AS brk
-        |  FROM e),
-        |c AS (SELECT user_id,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY t, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM s),
-        |g AS (SELECT user_id, sid, count(*) AS n FROM c GROUP BY 1, 2)
-        |SELECT user_id, sid::BIGINT AS session_id, n::BIGINT AS n_events FROM g
-        |QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY sid DESC) = 1""".stripMargin,
-
-    // Real-codec contract: width/height/n_frames/decoded_bytes come from
-    // a real PNG/WAV header probe on the Spark side; the oracle replays
-    // the encode-side dimension rule (audio has no raster → 0×0, one PCM
-    // frame per text byte; stills decode 1 frame; filmstrips
-    // height/frame_h = 1+n%30 frames).
-    "q30_media_meta" ->
-      """WITH m AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents)
-        |SELECT doc_id,
-        |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-        |  (CASE WHEN doc_id % 3 = 1 THEN 0 ELSE 16 + n % 240 END)::INT AS width,
-        |  (CASE WHEN doc_id % 3 = 1 THEN 0 ELSE 16 + (n * 7) % 240 END)::INT AS height,
-        |  (CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN n ELSE 1 + n % 30 END)::INT AS n_frames,
-        |  (CASE doc_id % 3
-        |     WHEN 0 THEN (16 + n % 240) * (16 + (n * 7) % 240)
-        |     WHEN 1 THEN n
-        |     ELSE (16 + n % 240) * (16 + (n * 7) % 240) * (1 + n % 30)
-        |   END)::BIGINT AS decoded_bytes
-        |FROM m""".stripMargin,
-
-    "q31_embed_docs" ->
-      "SELECT doc_id, 64 AS dim, true AS norm_ok FROM documents",
-
-    // Invariant oracles (q24 pattern): the non-constant column (n_exact)
-    // is recomputed relationally by DuckDB; the contract booleans are
-    // constants the Spark side must earn.
-    "q33_brp_pairs" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id < 2000),
-        |p AS (SELECT a.vec_id AS a, b.vec_id AS b, ${cosSql("a.v", "b.v")} AS sim
-        |      FROM e a JOIN e b ON a.vec_id < b.vec_id)
-        |SELECT count(*) AS n_exact, true AS subset_ok, true AS recall_ok,
-        |  true AS threshold_ok
-        |FROM p WHERE sim >= 0.35""".stripMargin,
-
-    "q34_ivf_knn" ->
-      """SELECT 20::BIGINT AS n_queries, true AS rows_ok,
-        |  true AS mean_recall_ok, true AS min_recall_ok""".stripMargin,
-
-    "q37_ivf_serve" ->
-      """SELECT 20::BIGINT AS n_queries, true AS rows_ok,
-        |  true AS self_excluded, true AS sim_range_ok""".stripMargin,
-
-    // Full-width kNN join: every embedding is a query (the non-constant
-    // column recomputed relationally); the contract booleans are earned
-    // in-plan, incl. recall vs the exact scan on the vec_id<20 subset.
-    "q68_knn_join" ->
-      """SELECT (SELECT count(*) FROM embeddings)::BIGINT AS n_queries,
-        |  true AS rows_ok, true AS self_excluded,
-        |  true AS mean_recall_ok, true AS min_recall_ok""".stripMargin,
-
-    // session_window boundary convention: >= gap splits (see the query).
-    "q69_session_window" ->
-      """WITH e AS (SELECT user_id, epoch_ms(ts) AS t, event_id FROM events),
-        |s AS (SELECT user_id, t, event_id,
-        |  CASE WHEN lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id) IS NULL THEN 0
-        |       WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t, event_id) >= 28800000 THEN 1
-        |       ELSE 0 END AS brk
-        |  FROM e),
-        |c AS (SELECT user_id, t,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY t, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM s)
-        |SELECT user_id, min(t)::BIGINT AS win_start_ms,
-        |  (max(t) + 28800000)::BIGINT AS win_end_ms, count(*)::BIGINT AS n_events
-        |FROM c GROUP BY user_id, sid""".stripMargin,
-
-    "q70_ann_dedup" ->
-      """SELECT 10::BIGINT AS n_planted_found, true AS all_planted_found""",
-
-    "q71_sq8_serve" ->
-      """SELECT 20::BIGINT AS n_queries, true AS rows_ok,
-        |  true AS mean_overlap_ok, true AS min_overlap_ok""".stripMargin,
-
-    "q81_pq_serve" ->
-      """SELECT 20::BIGINT AS n_queries, true AS rows_ok,
-        |  true AS mean_overlap_ok, true AS min_overlap_ok""".stripMargin,
-
-    "q43_ivf_serve_batch" ->
-      """SELECT (SELECT count(*) FROM embeddings WHERE vec_id < 1000)::BIGINT AS n_queries,
-        |  true AS rows_ok, true AS self_excluded""".stripMargin,
-
-    "q92_pq_serve_batch" ->
-      """SELECT (SELECT count(*) FROM embeddings WHERE vec_id < 1000)::BIGINT AS n_queries,
-        |  true AS rows_ok, true AS self_excluded""".stripMargin,
-
-    "q66_ivf_upsert" ->
-      """SELECT 200::BIGINT AS n_rows, 200::BIGINT AS n_matched,
-        |  true AS upsert_equals_rebuild""".stripMargin,
-
-    // Frozen expected ranking for the fixture corpus: the CF arm boosts
-    // A1 (A3's co-purchase neighbor, fs=1) to rank 1; the content arm
-    // orders the rest by TF-IDF cosine against "Gamma Guide", ties by id.
-    "q38_hybrid_from_string" ->
-      """SELECT * FROM (VALUES
-        |  ('A3', 'A1', 'Alpha Book', 1), ('A3', 'A2', 'Beta Book', 2),
-        |  ('A3', 'A4', 'Delta Music', 3), ('A3', 'A5', 'Epsilon Music', 4),
-        |  ('A3', 'A6', 'Zeta Film Café', 5))
-        |AS t(query_id, item, item_title, rnk)""".stripMargin,
-
-    // Fixture-derived constants: 6 products survive the sample (all of
-    // them; sampleN > |corpus|), directed similar-edges (A1→A2, A1→A3,
-    // A2→A1, A3→A1, A4→A5, A5→A4, A5→A1) = 7 edges of weight 1.
-    "q42_offline_build" ->
-      """SELECT 6::BIGINT AS n_items, true AS dim_ok, true AS docs_ok,
-        |  7::BIGINT AS n_edges, 7::BIGINT AS w_sum""".stripMargin,
-
-    "q39_simhash_pairs" ->
-      s"""WITH $toksCte,
-        |t AS (SELECT doc_id, unnest(tk) AS tok FROM toks),
-        |h AS (SELECT doc_id, cast('0x' || substr(md5(tok), 1, 15) AS BIGINT) AS h60 FROM t),
-        |bits AS (SELECT doc_id, bb.b AS b,
-        |    sum(CASE WHEN (h60 >> bb.b) % 2 = 1 THEN 1 ELSE -1 END) AS c
-        |  FROM h CROSS JOIN (SELECT unnest(range(0, 60)) AS b) bb GROUP BY 1, 2),
-        |s AS (SELECT doc_id, sum(CASE WHEN c > 0 THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS sh
-        |      FROM bits GROUP BY 1),
-        |fp AS (SELECT d.doc_id, coalesce(s.sh, 0)::BIGINT AS sh
-        |       FROM documents d LEFT JOIN s USING (doc_id)),
-        |keyed AS (SELECT doc_id, sh,
-        |    unnest(list_transform(range(0, 4), c -> c || ':' || ((sh >> (c*15)) % 32768))) AS chunk_key
-        |  FROM fp),
-        |p AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-        |      FROM keyed x JOIN keyed y USING (chunk_key) WHERE x.doc_id < y.doc_id)
-        |SELECT a, b, bit_count(xor(fa.sh, fb.sh))::INT AS hamming
-        |FROM p JOIN fp fa ON p.a = fa.doc_id JOIN fp fb ON p.b = fb.doc_id
-        |WHERE bit_count(xor(fa.sh, fb.sh)) <= 3""".stripMargin,
-
-    "q40_title_dict" ->
-      "SELECT text AS title, min(doc_id) AS id, count(*) AS n_dups FROM documents GROUP BY 1",
-
-    "q41_parse_file" ->
-      """SELECT * FROM (VALUES
-        |  ('A1', 'Alpha Book', 'Book', 1::BIGINT, 2::BIGINT),
-        |  ('A2', 'Beta Book', 'Book', 1::BIGINT, 1::BIGINT),
-        |  ('A3', 'Gamma Guide', 'Book', 2::BIGINT, 1::BIGINT),
-        |  ('A4', 'Delta Music', 'Music', 1::BIGINT, 1::BIGINT),
-        |  ('A5', 'Epsilon Music', 'Music', 1::BIGINT, 2::BIGINT),
-        |  ('A6', 'Zeta Film Café', 'Video', 1::BIGINT, 0::BIGINT))
-        |AS t(asin, title, "group", n_categories, n_similar)""".stripMargin,
-
-    "q45_media_features" ->
-      s"""WITH ${mediaHistSql("documents")},
-        |grid AS (SELECT d.doc_id, bb.bin FROM documents d
-        |         CROSS JOIN (SELECT unnest(range(0, 16)) AS bin) bb)
-        |SELECT g.doc_id, g.bin::INT AS bin,
-        |  round(CASE WHEN mn.nrm IS NULL OR mn.nrm = 0 THEN 0.0
-        |             ELSE coalesce(mh.c, 0.0) / mn.nrm END, 6) AS v
-        |FROM grid g
-        |LEFT JOIN mh ON g.doc_id = mh.doc_id AND g.bin = mh.bin
-        |LEFT JOIN mn ON g.doc_id = mn.doc_id""".stripMargin,
-
-    // Visual rows only (audio has no raster). The oracle replays the
-    // EXECUTED resample: out pixel (f,y,x) reads source position
-    // (f·H + ⌊y·H/out_h⌋)·W + ⌊x·W/out_w⌋ of the cycled text payload,
-    // and the digests sum the round-tripped bytes — so a DuckDB
-    // recomputation from raw text must hash-match what Spark read back
-    // out of the re-encoded PNG. Empty text ⇒ zero-filled raster
-    // (cycle()'s rule), pinned here as byte = 0 when n = 0.
-    "q54_media_resize" ->
-      """WITH m AS (SELECT doc_id, text, octet_length(encode(text)) AS n
-        |  FROM documents WHERE doc_id % 3 <> 1),
-        |d AS (SELECT doc_id, text, n,
-        |    (16 + n % 240)::INT AS width,
-        |    (16 + (n * 7) % 240)::INT AS height,
-        |    CASE WHEN doc_id % 3 = 2 THEN 1 + n % 30 ELSE 1 END AS frames
-        |  FROM m),
-        |o AS (SELECT doc_id, text, n, width, height, frames,
-        |    greatest(1, floor(width * least(64.0 / width, 64.0 / height, 1.0)))::INT AS out_w,
-        |    greatest(1, floor(height * least(64.0 / width, 64.0 / height, 1.0)))::INT AS out_h
-        |  FROM d),
-        |pos AS (SELECT doc_id, text, n, width, height, frames, out_w, out_h,
-        |    unnest(range(0, frames * out_h * out_w)) AS p
-        |  FROM o),
-        |px AS (SELECT doc_id, width, height, out_w, out_h, frames, p,
-        |    CASE WHEN n = 0 THEN 0
-        |         ELSE ord(substr(text,
-        |           ((((p // (out_h * out_w)) * height
-        |              + ((p % (out_h * out_w)) // out_w) * height // out_h) * width
-        |             + (p % out_w) * width // out_w) % n) + 1, 1))
-        |    END AS byte
-        |  FROM pos)
-        |SELECT doc_id, width, height, out_w, out_h, frames::INT AS n_frames,
-        |  sum(byte)::BIGINT AS px_sum, sum((p + 1) * byte)::BIGINT AS px_wsum,
-        |  true AS roundtrip_ok
-        |FROM px GROUP BY 1, 2, 3, 4, 5, 6""".stripMargin,
-
-    "q46_frame_sample" ->
-      """SELECT doc_id, unnest(range(1, n_frames + 1, 5))::BIGINT AS frame_idx
-        |FROM (SELECT doc_id, 1 + (octet_length(encode(text)) % 30) AS n_frames
-        |      FROM documents WHERE doc_id % 3 = 2)""".stripMargin,
-
-    "q32_parse_products" ->
-      """SELECT * FROM (VALUES
-        |  ('A1', 'Alpha Beta', 'Book', 2::BIGINT, 2::BIGINT),
-        |  ('A3', 'Gamma', '', 1::BIGINT, 0::BIGINT))
-        |AS t(asin, title, "group", n_categories, n_similar)""".stripMargin,
-
-    "q99_bucket_join" ->
-      """SELECT o_orderpriority, count(*)::BIGINT AS n_items,
-        |  round(sum(l_extendedprice * (1.0::DOUBLE - l_discount)), 4) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-
-    "q100_bm25" ->
-      s"""WITH ${bm25Sql(
-        """qv AS (SELECT * FROM (VALUES ('kq1', 'spark join fast'),
-          |    ('kq2', 'vector table scan'), ('kq3', 'stream window agg'))
-          |    AS v(query_id, qtext)),
-          |qt AS (SELECT query_id, unnest(list_distinct(list_filter(
-          |    string_split_regex(lower(qtext), '[^a-z0-9]+'), x -> x != ''))) AS term
-          |  FROM qv)""".stripMargin, 10, excludeSelf = false)}
-        |SELECT query_id, doc_id, score, rnk FROM bmr""".stripMargin,
-
-    "q101_hybrid_search" ->
-      s"""WITH ${bm25Sql(
-        """qt AS (SELECT doc_id AS query_id, unnest(list_distinct(tk[1:5])) AS term
-          |  FROM toks WHERE doc_id % 100 = 0)""".stripMargin, 30, excludeSelf = true)},
-        |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |qd AS (SELECT vec_id AS query_id, v AS qv2 FROM e WHERE vec_id % 100 = 0),
-        |dsc AS (SELECT qd.query_id, e.vec_id AS item, ${cosSql("qd.qv2", "e.v")} AS s
-        |  FROM qd CROSS JOIN e WHERE qd.query_id != e.vec_id),
-        |dense AS (SELECT query_id, item,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY s DESC, item) AS rr
-        |  FROM dsc QUALIFY rr <= 30),
-        |sp AS (SELECT query_id, doc_id AS item, rnk AS rr FROM bmr),
-        |fu AS (SELECT coalesce(dn.query_id, sp.query_id) AS query_id,
-        |    coalesce(dn.item, sp.item) AS item,
-        |    coalesce(dn.rr, 0)::BIGINT AS dense_rnk,
-        |    coalesce(sp.rr, 0)::BIGINT AS sparse_rnk,
-        |    coalesce(1.0::DOUBLE / (60 + dn.rr), 0.0) +
-        |      coalesce(1.0::DOUBLE / (60 + sp.rr), 0.0) AS rrf
-        |  FROM dense dn FULL OUTER JOIN sp
-        |    ON dn.query_id = sp.query_id AND dn.item = sp.item),
-        |fr AS (SELECT query_id, item, dense_rnk, sparse_rnk, rrf,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY rrf DESC, item) AS rnk
-        |  FROM fu)
-        |SELECT query_id, item, dense_rnk, sparse_rnk, round(rrf, 6) AS rrf, rnk
-        |FROM fr WHERE rnk <= 10""".stripMargin,
-
-    "q102_triangles" ->
-      s"""WITH $basketCtes,
-        |deg AS (SELECT node, count(*)::BIGINT AS deg FROM
-        |    (SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e)
-        |  GROUP BY 1),
-        |o AS (SELECT CASE WHEN ds < dd OR (ds = dd AND src < dst) THEN src ELSE dst END AS lo,
-        |             CASE WHEN ds < dd OR (ds = dd AND src < dst) THEN dst ELSE src END AS hi
-        |      FROM (SELECT e.src, e.dst, d1.deg AS ds, d2.deg AS dd
-        |            FROM e JOIN deg d1 ON e.src = d1.node
-        |            JOIN deg d2 ON e.dst = d2.node)),
-        |tri AS (SELECT w1.lo AS x, w1.hi AS y, w2.hi AS z
-        |        FROM o w1 JOIN o w2 ON w1.lo = w2.lo AND w1.hi != w2.hi
-        |        JOIN o c ON c.lo = w1.hi AND c.hi = w2.hi),
-        |pn AS (SELECT node, count(*)::BIGINT AS n_tri FROM
-        |    (SELECT x AS node FROM tri UNION ALL SELECT y AS node FROM tri
-        |     UNION ALL SELECT z AS node FROM tri) GROUP BY 1)
-        |SELECT d.node, d.deg, coalesce(pn.n_tri, 0)::BIGINT AS n_tri,
-        |  CASE WHEN d.deg < 2 THEN 0.0
-        |       ELSE round(2.0::DOUBLE * coalesce(pn.n_tri, 0) / (d.deg * (d.deg - 1)), 6)
-        |  END AS clustering
-        |FROM deg d LEFT JOIN pn ON d.node = pn.node""".stripMargin,
-
-    "q103_profile" -> {
-      val cols = Seq("c_custkey", "c_name", "c_nationkey", "c_mktsegment")
-      val per = cols.map { c =>
-        s"""SELECT '$c' AS "column", count(*)::BIGINT AS n_rows,
-           |  sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_null,
-           |  count(DISTINCT $c)::BIGINT AS n_distinct,
-           |  min($c)::VARCHAR AS min_val, max($c)::VARCHAR AS max_val FROM c""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH c AS (SELECT c_custkey, c_name, c_nationkey,
-        |  CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_mktsegment END AS c_mktsegment
-        |  FROM customer)
-        |$per""".stripMargin
-    },
-
-    "q105_rank_metrics" -> {
-      val wt = Evaluation.DcgNanoWeights
-        .map { case (r, w) => s"($r, ${w}::BIGINT)" }.mkString(", ")
-      val ideal = Evaluation.DcgNanoWeights
-        .scanLeft(0 -> 0L) { case ((_, acc), (r, w)) => r -> (acc + w) }.tail
-        .map { case (r, s) => s"($r, ${s}::BIGINT)" }.mkString(", ")
-      s"""WITH $hybridCtes,
-        |$truthCte,
-        |ranked AS (SELECT query_id, item, rnk FROM r WHERE rnk <= 10),
-        |wt AS (SELECT * FROM (VALUES $wt) AS w(rnk, w_n)),
-        |ideal AS (SELECT * FROM (VALUES $ideal) AS i(n_cap, idcg_n)),
-        |nrel AS (SELECT query_id, count(*)::BIGINT AS n_rel FROM truth GROUP BY 1),
-        |rel AS (SELECT rk.query_id, rk.rnk, w.w_n,
-        |    CASE WHEN t.item IS NOT NULL THEN 1 ELSE 0 END AS hit
-        |  FROM ranked rk JOIN wt w USING (rnk)
-        |  LEFT JOIN truth t ON rk.query_id = t.query_id AND rk.item = t.item),
-        |pq AS (SELECT query_id,
-        |    sum(CASE WHEN hit = 1 THEN w_n ELSE 0 END)::BIGINT AS dcg_n,
-        |    min(CASE WHEN hit = 1 THEN rnk END) AS first_hit,
-        |    count(CASE WHEN hit = 1 THEN 1 END)::BIGINT AS n_hits
-        |  FROM rel GROUP BY 1)
-        |SELECT p.query_id, coalesce(n.n_rel, 0)::BIGINT AS n_rel,
-        |  CASE WHEN coalesce(n.n_rel, 0) = 0 THEN 0.0
-        |       ELSE round(p.dcg_n::DOUBLE / i.idcg_n, 6) END AS ndcg10,
-        |  coalesce(round(1.0::DOUBLE / p.first_hit, 6), 0.0) AS mrr,
-        |  CASE WHEN coalesce(n.n_rel, 0) = 0 THEN 0.0
-        |       ELSE round(p.n_hits::DOUBLE / n.n_rel, 6) END AS recall10
-        |FROM pq p LEFT JOIN nrel n ON p.query_id = n.query_id
-        |LEFT JOIN ideal i ON i.n_cap = least(coalesce(n.n_rel, 0), 10)""".stripMargin
-    },
-
-    "q106_winsorize" ->
-      """WITH b AS (SELECT event_type, quantile_cont(value, 0.01) AS lo,
-        |    quantile_cont(value, 0.99) AS hi FROM events GROUP BY 1)
-        |SELECT e.event_type, e.event_id,
-        |  round(greatest(b.lo, least(b.hi, e.value)), 6) AS value_w,
-        |  (e.value < b.lo OR e.value > b.hi) AS clipped
-        |FROM events e JOIN b USING (event_type)""".stripMargin,
-
-    "q104_fk_audit" ->
-      """SELECT 'lineitem_orders' AS relation,
-        |  (SELECT count(*) FROM lineitem)::BIGINT AS n_child,
-        |  (SELECT count(*) FROM lineitem l WHERE NOT EXISTS
-        |    (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey))::BIGINT AS n_orphans
-        |UNION ALL
-        |SELECT 'orders_customer',
-        |  (SELECT count(*) FROM orders)::BIGINT,
-        |  (SELECT count(*) FROM orders o WHERE NOT EXISTS
-        |    (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))::BIGINT
-        |UNION ALL
-        |SELECT 'orders_customer_subset',
-        |  (SELECT count(*) FROM orders)::BIGINT,
-        |  (SELECT count(*) FROM orders o WHERE NOT EXISTS
-        |    (SELECT 1 FROM customer c WHERE c.c_custkey % 10 != 0
-        |       AND c.c_custkey = o.o_custkey))::BIGINT""".stripMargin,
-
-    "q107_gapfill" ->
-      """WITH h AS (SELECT user_id, date_trunc('hour', ts) AS hour,
-        |    sum(floor(value * 1e6 + 0.5::DOUBLE)::BIGINT)::BIGINT / 1e6 AS v,
-        |    count(*)::BIGINT AS n
-        |  FROM events WHERE user_id % 10 = 0 GROUP BY 1, 2),
-        |span AS (SELECT user_id, min(hour) AS lo, max(hour) AS hi FROM h GROUP BY 1),
-        |grid AS (SELECT user_id,
-        |    unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour FROM span)
-        |SELECT g.user_id, g.hour, coalesce(h.n, 0)::BIGINT AS n_events,
-        |  round(last_value(h.v IGNORE NULLS) OVER (PARTITION BY g.user_id
-        |    ORDER BY g.hour ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)
-        |    AS value_filled,
-        |  h.n IS NULL AS is_gap
-        |FROM grid g LEFT JOIN h ON g.user_id = h.user_id AND g.hour = h.hour""".stripMargin,
-
-    "q108_scd2" ->
-      """WITH src AS (SELECT user_id, event_type, ts, event_id FROM events
-        |  WHERE user_id % 10 = 0),
-        |flg AS (SELECT *, CASE WHEN lag(event_type) OVER w IS NULL
-        |      OR lag(event_type) OVER w != event_type THEN 1 ELSE 0 END AS chg
-        |  FROM src WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |runs0 AS (SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS version
-        |  FROM flg),
-        |runs AS (SELECT user_id, version, max(event_type) AS segment,
-        |    min(ts) AS valid_from, count(*)::BIGINT AS n_obs
-        |  FROM runs0 GROUP BY 1, 2)
-        |SELECT user_id, version, segment, valid_from,
-        |  coalesce(lead(valid_from) OVER wv,
-        |    TIMESTAMP_NS '2100-01-01 00:00:00') AS valid_to,
-        |  n_obs, lead(valid_from) OVER wv IS NULL AS is_current
-        |FROM runs WINDOW wv AS (PARTITION BY user_id ORDER BY version)""".stripMargin,
-
-    "q109_next_item" ->
-      """WITH w0 AS (SELECT user_id, event_id, event_type,
-        |    row_number() OVER w AS position,
-        |    lag(event_type, 3) OVER w AS l3, lag(event_type, 2) OVER w AS l2,
-        |    lag(event_type, 1) OVER w AS l1
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT user_id, event_id, position,
-        |  concat_ws(' > ', l3, l2, l1) AS context, event_type AS target
-        |FROM w0 WHERE l1 IS NOT NULL""".stripMargin,
-
-    "q110_auc" ->
-      s"""WITH $hybridCtes,
-        |$truthCte,
-        |cand AS (SELECT query_id, item,
-        |    floor(fin * 1e9 + 0.5::DOUBLE)::BIGINT AS score
-        |  FROM r WHERE rnk <= 200),
-        |lab AS (SELECT c.query_id, c.item, c.score,
-        |    CASE WHEN t.item IS NOT NULL THEN 1 ELSE 0 END AS pos
-        |  FROM cand c LEFT JOIN truth t
-        |    ON c.query_id = t.query_id AND c.item = t.item),
-        |rk AS (SELECT *, 2 * rank() OVER (PARTITION BY query_id ORDER BY score ASC)
-        |    + count(*) OVER (PARTITION BY query_id, score) - 1 AS two_avg
-        |  FROM lab),
-        |ag AS (SELECT query_id, sum(pos)::BIGINT AS n_pos,
-        |    (count(*) - sum(pos))::BIGINT AS n_neg,
-        |    sum(CASE WHEN pos = 1 THEN two_avg END)::BIGINT AS s2
-        |  FROM rk GROUP BY 1)
-        |SELECT query_id, n_pos, n_neg,
-        |  CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
-        |       ELSE round((s2 - n_pos * (n_pos + 1))::DOUBLE /
-        |                  (2.0::DOUBLE * n_pos * n_neg), 6) END AS auc
-        |FROM ag""".stripMargin,
-
-    "q111_fuzzy_match" ->
-      """WITH cat AS (SELECT min(p_partkey)::BIGINT AS cand_id, p_name AS name
-        |  FROM part GROUP BY p_name),
-        |pr AS (SELECT p_partkey AS probe_id,
-        |    substr(p_name, 1, 2) || substr(p_name, 4) AS name FROM part),
-        |cand AS (SELECT pr.probe_id, cat.cand_id,
-        |    levenshtein(lower(pr.name), lower(cat.name))::BIGINT AS dist
-        |  FROM pr JOIN cat
-        |    ON substr(lower(pr.name), 1, 2) = substr(lower(cat.name), 1, 2)
-        |   AND abs(len(pr.name) - len(cat.name)) <= 2
-        |  WHERE levenshtein(lower(pr.name), lower(cat.name)) <= 2)
-        |SELECT probe_id, cand_id, dist FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY probe_id
-        |      ORDER BY dist, cand_id) AS rn FROM cand)
-        |WHERE rn = 1""".stripMargin,
-
-    "q112_weighted_sample" ->
-      """WITH w AS (SELECT doc_id AS key, n_chars::DOUBLE AS weight,
-        |    ln((CAST('0x' || substr(md5('w42:' || doc_id::VARCHAR), 1, 15) AS BIGINT) + 1)::DOUBLE
-        |       / 1152921504606846976.0::DOUBLE) / n_chars::DOUBLE AS es
-        |  FROM documents WHERE n_chars > 0),
-        |r AS (SELECT key, weight,
-        |    row_number() OVER (ORDER BY es DESC, key) AS rnk FROM w)
-        |SELECT key, weight, rnk FROM r WHERE rnk <= 50""".stripMargin,
-
-    "q113_psi_drift" ->
-      """WITH ref AS (SELECT value::DOUBLE AS v FROM events WHERE event_type = 'click'),
-        |cur AS (SELECT value::DOUBLE AS v FROM events WHERE event_type = 'purchase'),
-        |e AS (SELECT min(v) AS lo, max(v) AS hi FROM ref),
-        |br AS (SELECT least(9, greatest(0, CASE WHEN e.hi = e.lo THEN 0
-        |      ELSE floor((v - e.lo) / (e.hi - e.lo) * 10)::BIGINT END))::BIGINT AS bin
-        |  FROM ref CROSS JOIN e),
-        |bc AS (SELECT least(9, greatest(0, CASE WHEN e.hi = e.lo THEN 0
-        |      ELSE floor((v - e.lo) / (e.hi - e.lo) * 10)::BIGINT END))::BIGINT AS bin
-        |  FROM cur CROSS JOIN e),
-        |nr AS (SELECT bin, count(*)::BIGINT AS n_ref FROM br GROUP BY 1),
-        |nc AS (SELECT bin, count(*)::BIGINT AS n_cur FROM bc GROUP BY 1),
-        |spine AS (SELECT unnest(range(0, 10))::BIGINT AS bin),
-        |cnt AS (SELECT s.bin, coalesce(nr.n_ref, 0)::BIGINT AS n_ref,
-        |    coalesce(nc.n_cur, 0)::BIGINT AS n_cur
-        |  FROM spine s LEFT JOIN nr ON s.bin = nr.bin LEFT JOIN nc ON s.bin = nc.bin),
-        |tot AS (SELECT sum(n_ref)::DOUBLE AS tr, sum(n_cur)::DOUBLE AS tc FROM cnt),
-        |ctb AS (SELECT bin, n_ref, n_cur,
-        |    floor(((n_cur + 0.5::DOUBLE) / (tc + 5.0::DOUBLE)
-        |         - (n_ref + 0.5::DOUBLE) / (tr + 5.0::DOUBLE)) *
-        |      ln(((n_cur + 0.5::DOUBLE) / (tc + 5.0::DOUBLE)) /
-        |         ((n_ref + 0.5::DOUBLE) / (tr + 5.0::DOUBLE))) * 1e9
-        |      + 0.5::DOUBLE)::BIGINT AS c_n
-        |  FROM cnt CROSS JOIN tot)
-        |SELECT bin, n_ref, n_cur, round(c_n / 1e9, 6) AS psi_contrib,
-        |  round(sum(c_n) OVER () / 1e9, 6) AS psi_total
-        |FROM ctb""".stripMargin,
-
-    // Counts replay the deterministic hash split exactly; the recovery
-    // boolean is the in-plan contract (TRUE literal here, computed there).
-    "q114_als_mf" ->
-      """WITH inter AS (SELECT DISTINCT o_custkey AS u, l_partkey AS i
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |b AS (SELECT u, i, CAST('0x' || substr(md5('als:' || u::VARCHAR
-        |    || ':' || i::VARCHAR), 1, 15) AS BIGINT) % 100 AS bk FROM inter),
-        |tr AS (SELECT u, i FROM b WHERE bk < 80),
-        |te AS (SELECT u, i FROM b WHERE bk >= 80),
-        |ev AS (SELECT te.u, te.i FROM te
-        |  SEMI JOIN (SELECT DISTINCT u FROM tr) tu ON te.u = tu.u
-        |  SEMI JOIN (SELECT DISTINCT i FROM tr) ti ON te.i = ti.i)
-        |SELECT (SELECT count(*) FROM tr)::BIGINT AS n_train,
-        |  (SELECT count(*) FROM te)::BIGINT AS n_test,
-        |  (SELECT count(*) FROM ev)::BIGINT AS n_eval,
-        |  TRUE AS als_beats_baseline""".stripMargin,
-
-    "q115_corr_matrix" ->
-      """WITH f AS (SELECT floor(l_quantity * 100 + 0.5::DOUBLE)::BIGINT AS q,
-        |    floor(l_extendedprice * 100 + 0.5::DOUBLE)::BIGINT AS p,
-        |    floor(l_discount * 100 + 0.5::DOUBLE)::BIGINT AS d FROM lineitem),
-        |s AS (SELECT count(*)::HUGEINT AS n,
-        |    sum(q::HUGEINT) AS sq, sum(p::HUGEINT) AS sp, sum(d::HUGEINT) AS sd,
-        |    sum(q::HUGEINT * q::HUGEINT) AS sqq, sum(p::HUGEINT * p::HUGEINT) AS spp,
-        |    sum(d::HUGEINT * d::HUGEINT) AS sdd, sum(q::HUGEINT * p::HUGEINT) AS sqp,
-        |    sum(q::HUGEINT * d::HUGEINT) AS sqd, sum(p::HUGEINT * d::HUGEINT) AS spd
-        |  FROM f)
-        |SELECT 'l_quantity' AS col_x, 'l_extendedprice' AS col_y, n::BIGINT AS n,
-        |  round((n*sqp - sq*sp)::DOUBLE /
-        |    (sqrt((n*sqq - sq*sq)::DOUBLE) * sqrt((n*spp - sp*sp)::DOUBLE)), 6) AS corr
-        |FROM s
-        |UNION ALL
-        |SELECT 'l_quantity', 'l_discount', n::BIGINT,
-        |  round((n*sqd - sq*sd)::DOUBLE /
-        |    (sqrt((n*sqq - sq*sq)::DOUBLE) * sqrt((n*sdd - sd*sd)::DOUBLE)), 6)
-        |FROM s
-        |UNION ALL
-        |SELECT 'l_extendedprice', 'l_discount', n::BIGINT,
-        |  round((n*spd - sp*sd)::DOUBLE /
-        |    (sqrt((n*spp - sp*sp)::DOUBLE) * sqrt((n*sdd - sd*sd)::DOUBLE)), 6)
-        |FROM s""".stripMargin,
-
-    // Greedy MMR unrolled to 10 argmax stages (the q94 unrolled-iteration
-    // pattern): stage t scores the not-yet-picked candidates as
-    // λ·rel − (1−λ)·max sim to sel{t-1} over 1e-6-snapped inputs — the
-    // exact doubles the Spark greedy compares — and picks (score DESC,
-    // item ASC). The complement is (1.0-0.7) computed IN DOUBLES, not a
-    // 0.3 literal: they differ by 1 ulp and would fork the argmax.
-    "q116_mmr_rerank" -> {
-      val stages = (1 to 10).map { t =>
-        s"""ms$t AS (SELECT c.query_id, c.item,
-           |    0.7::DOUBLE * c.rel - (1.0::DOUBLE - 0.7::DOUBLE) *
-           |      coalesce(mx.m, 0.0::DOUBLE) AS score
-           |  FROM cand c
-           |  LEFT JOIN (SELECT p.query_id, p.i, max(p.sim) AS m
-           |      FROM pair p JOIN sel${t - 1} s
-           |        ON p.query_id = s.query_id AND p.j = s.item
-           |      GROUP BY 1, 2) mx
-           |    ON c.query_id = mx.query_id AND c.item = mx.i
-           |  ANTI JOIN sel${t - 1} s2
-           |    ON c.query_id = s2.query_id AND c.item = s2.item),
-           |pk$t AS MATERIALIZED (SELECT query_id, item, score, $t AS rnk
-           |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-           |          ORDER BY score DESC, item) AS rn FROM ms$t)
-           |  WHERE rn = 1),
-           |sel$t AS MATERIALIZED (SELECT query_id, item FROM sel${t - 1}
-           |  UNION ALL SELECT query_id, item FROM pk$t)""".stripMargin
-      }.mkString(",\n")
-      val picks = (1 to 10).map(t => s"SELECT * FROM pk$t")
-        .mkString(" UNION ALL ")
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 40),
-        |sc AS (SELECT q.query_id, e.vec_id AS item, ${cosSql("q.qv", "e.v")} AS s, e.v
-        |       FROM q CROSS JOIN e WHERE q.query_id != e.vec_id),
-        |cand AS MATERIALIZED (SELECT query_id, item,
-        |    floor(s * 1e6 + 0.5::DOUBLE) / 1e6 AS rel, v,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY s DESC, item) AS rr
-        |  FROM sc QUALIFY rr <= 20),
-        |pair AS MATERIALIZED (SELECT a.query_id, a.item AS i, b.item AS j,
-        |    floor((${cosSql("a.v", "b.v")}) * 1e6 + 0.5::DOUBLE) / 1e6 AS sim
-        |  FROM cand a JOIN cand b
-        |    ON a.query_id = b.query_id AND a.item != b.item),
-        |sel0 AS (SELECT CAST(NULL AS BIGINT) AS query_id,
-        |  CAST(NULL AS BIGINT) AS item WHERE false),
-        |$stages
-        |SELECT query_id, item, rnk,
-        |  floor(score * 1e6 + 0.5::DOUBLE) / 1e6 AS mmr FROM ($picks)""".stripMargin
-    },
-
-    // The α-dependent blend re-ranks the SAME fused pool the q27 chain
-    // builds (`fu` carries zero-filled cs/fs); every α's complement is
-    // computed in doubles to match Spark's (1.0 - α) column op.
-    "q117_alpha_sweep" ->
-      s"""WITH $hybridCtes,
-        |al AS (SELECT unnest([0.0::DOUBLE, 0.2::DOUBLE, 0.4::DOUBLE,
-        |                      0.6::DOUBLE, 0.8::DOUBLE, 1.0::DOUBLE]) AS alpha),
-        |sa AS (SELECT al.alpha, f.query_id, f.item,
-        |    al.alpha * f.cs + (1.0::DOUBLE - al.alpha) * f.fs AS fin
-        |  FROM fu f CROSS JOIN al),
-        |ra AS (SELECT alpha, query_id, item,
-        |    row_number() OVER (PARTITION BY alpha, query_id
-        |      ORDER BY fin DESC, item) AS rnk
-        |  FROM sa QUALIFY rnk <= 10),
-        |$truthCte,
-        |fl AS (SELECT r.alpha, r.query_id,
-        |    CASE WHEN t.query_id IS NULL THEN 0 ELSE 1 END AS hit
-        |  FROM ra r LEFT JOIN truth t
-        |    ON r.query_id = t.query_id AND r.item = t.item)
-        |SELECT alpha, sum(hit)::BIGINT AS sum_hits,
-        |  count(DISTINCT query_id)::BIGINT AS n_queries,
-        |  sum(hit)::DOUBLE /
-        |    (10.0::DOUBLE * count(DISTINCT query_id)::DOUBLE) AS precision
-        |FROM fl GROUP BY 1""".stripMargin,
-
-    // te = ONE double division per row over exact integer sums; the prior
-    // mean is a single double both engines compute identically.
-    "q118_target_encode" ->
-      """WITH t AS (SELECT o_orderkey AS k, c_mktsegment AS cat,
-        |    (o_orderstatus = 'F')::BIGINT AS y,
-        |    CAST('0x' || substr(md5('te:' || o_orderkey::VARCHAR), 1, 15)
-        |      AS BIGINT) % 5 AS fold
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |pf AS (SELECT cat, fold, sum(y)::BIGINT AS fs, count(*)::BIGINT AS fc
-        |  FROM t GROUP BY 1, 2),
-        |pc AS (SELECT cat, sum(fs)::BIGINT AS ts, sum(fc)::BIGINT AS tc
-        |  FROM pf GROUP BY 1),
-        |pr AS (SELECT sum(y)::DOUBLE / count(*)::DOUBLE AS mu FROM t)
-        |SELECT t.k AS o_orderkey, t.cat AS c_mktsegment, t.fold,
-        |  ((pc.ts - pf.fs)::DOUBLE + 10.0::DOUBLE * pr.mu) /
-        |    ((pc.tc - pf.fc)::DOUBLE + 10.0::DOUBLE) AS te
-        |FROM t JOIN pf ON t.cat = pf.cat AND t.fold = pf.fold
-        |JOIN pc ON t.cat = pc.cat CROSS JOIN pr""".stripMargin,
-
-    "q119_feature_hash" ->
-      s"""WITH $toksCte,
-        |x AS (SELECT doc_id, unnest(tk) AS tok FROM toks)
-        |SELECT doc_id,
-        |  CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % 1024 AS idx,
-        |  count(*)::BIGINT AS cnt
-        |FROM x GROUP BY 1, 2""".stripMargin,
-
-    // Recall counts depend on the trained cells (q34 pattern): the oracle
-    // pins the sweep grid — the full-probe point is the ADAPTIVE cell
-    // count, greatest(16, ceil(sqrt(N))) (Ivf.nCellsFor) — and the
-    // in-plan structural contracts.
-    "q120_nprobe_sweep" ->
-      """SELECT unnest([1, 2, 4,
-        |    (SELECT greatest(16, ceil(sqrt(count(*)))::INT) FROM embeddings)])
-        |    AS nprobe,
-        |  20::BIGINT AS n_queries,
-        |  true AS rows_ok, true AS monotone_ok, true AS full_probe_exact""".stripMargin,
-
-    "q121_quantile_bins" ->
-      """WITH t AS (SELECT l_returnflag, l_extendedprice,
-        |    l_orderkey * 8 + l_linenumber AS tie FROM lineitem),
-        |b AS (SELECT l_returnflag, l_extendedprice,
-        |    ntile(10) OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_extendedprice, tie) AS bin FROM t)
-        |SELECT l_returnflag, bin, count(*)::BIGINT AS cnt,
-        |  min(l_extendedprice) AS lo, max(l_extendedprice) AS hi
-        |FROM b GROUP BY 1, 2""".stripMargin,
-
-    // Bins over the RAW fin doubles (identical per-row arithmetic both
-    // engines); the mean score fixed-point sums 1e-6 micro-units.
-    "q122_calibration" ->
-      s"""WITH $hybridCtes,
-        |$truthCte,
-        |fl AS (SELECT f.query_id, f.item, f.fin AS score,
-        |    CASE WHEN t.query_id IS NULL THEN 0 ELSE 1 END AS pos
-        |  FROM fu f LEFT JOIN truth t
-        |    ON f.query_id = t.query_id AND f.item = t.item),
-        |nb AS (SELECT query_id, item, score, pos,
-        |    ntile(10) OVER (ORDER BY score, query_id, item) AS bin FROM fl)
-        |SELECT bin, count(*)::BIGINT AS n, sum(pos)::BIGINT AS n_pos,
-        |  sum(floor(score * 1e6 + 0.5::DOUBLE)::BIGINT)::DOUBLE /
-        |    (1e6 * count(*)::DOUBLE) AS avg_score,
-        |  sum(pos)::DOUBLE / count(*)::DOUBLE AS pos_rate
-        |FROM nb GROUP BY 1""".stripMargin,
-
-    // Exact integer contingency; e is one double expression, contribs
-    // fixed-point-snap at 1e-9 before the (exact long) total.
-    "q123_chi2" ->
-      """WITH t AS (SELECT c_mktsegment AS cat, o_orderstatus AS lab
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |o AS (SELECT cat, lab, count(*)::BIGINT AS o FROM t GROUP BY 1, 2),
-        |rt AS (SELECT cat, sum(o)::BIGINT AS rt FROM o GROUP BY 1),
-        |ct AS (SELECT lab, sum(o)::BIGINT AS ct FROM o GROUP BY 1),
-        |n AS (SELECT sum(o)::BIGINT AS n FROM o),
-        |ce AS (SELECT o.cat, o.lab, o.o,
-        |    (rt.rt::HUGEINT * ct.ct::HUGEINT)::DOUBLE / n.n::DOUBLE AS e
-        |  FROM o JOIN rt USING (cat) JOIN ct USING (lab) CROSS JOIN n),
-        |cc AS (SELECT cat, lab, o, e,
-        |    floor((o::DOUBLE - e) * (o::DOUBLE - e) / e * 1e9
-        |      + 0.5::DOUBLE)::BIGINT AS c FROM ce)
-        |SELECT cat AS c_mktsegment, lab AS o_orderstatus, o, e,
-        |  c / 1e9 AS contrib, sum(c) OVER () / 1e9 AS chi2_total
-        |FROM cc""".stripMargin,
-
-    // The 1e-6 snapped grid makes every sum an exact integer; cov is one
-    // double division per cell, identical on both engines.
-    "q124_cov_stats" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding::DOUBLE[],
-        |    x -> floor(x * 1000000.0 + 0.5::DOUBLE)::BIGINT) AS f
-        |  FROM embeddings),
-        |x AS (SELECT vec_id, unnest(range(0, 16)) AS i, f FROM e),
-        |v AS (SELECT vec_id, i, f[i + 1] AS v FROM x),
-        |pr AS (SELECT a.i AS i, b.i AS j,
-        |    sum(a.v::HUGEINT * b.v::HUGEINT) AS s_ij
-        |  FROM v a JOIN v b ON a.vec_id = b.vec_id AND a.i <= b.i
-        |  GROUP BY 1, 2),
-        |sm AS (SELECT i, sum(v)::BIGINT AS s FROM v GROUP BY 1),
-        |nn AS (SELECT count(*)::BIGINT AS n FROM e)
-        |SELECT p.i, p.j, nn.n::BIGINT AS n,
-        |  si.s::BIGINT AS s_i, sj.s::BIGINT AS s_j,
-        |  p.s_ij::BIGINT AS s_ij,
-        |  (nn.n * p.s_ij - si.s::HUGEINT * sj.s::HUGEINT)::DOUBLE /
-        |    (nn.n * (nn.n - 1))::DOUBLE AS cov
-        |FROM pr p JOIN sm si ON p.i = si.i JOIN sm sj ON p.j = sj.i
-        |CROSS JOIN nn""".stripMargin,
-
-    // Eigenvectors are float driver-side work (q34 pattern): the oracle
-    // pins shape; orthonormality/ordering/Bessel are earned in-plan.
-    "q125_pca" ->
-      """SELECT (SELECT count(*) FROM embeddings)::BIGINT AS n_rows,
-        |  64 AS dim_in, 8 AS dim_out, true AS orthonormal_ok,
-        |  true AS eigen_ok, true AS bessel_ok""".stripMargin,
-
-    // PAV's unique solution via the closed-form max-min characterization:
-    // fitted(k) = max_{i<=k} min_{j>=k} avg(y[i..j]) over score-pooled
-    // blocks. avg ratios divide once into doubles; correctly-rounded
-    // division is monotone in the rationals, so min/max over the doubles
-    // equals the double of the rational min/max — bit-identical to the
-    // Spark PAV's single output division.
-    "q126_isotonic" ->
-      s"""WITH $hybridCtes,
-        |$truthCte,
-        |fli AS (SELECT f.fin AS score,
-        |    CASE WHEN t.query_id IS NULL THEN 0 ELSE 1 END AS y
-        |  FROM fu f LEFT JOIN truth t
-        |    ON f.query_id = t.query_id AND f.item = t.item),
-        |blk AS (SELECT score, count(*)::BIGINT AS c, sum(y)::BIGINT AS p
-        |  FROM fli GROUP BY 1),
-        |ps AS (SELECT score, c, p,
-        |    row_number() OVER (ORDER BY score) AS r,
-        |    sum(c) OVER (ORDER BY score) AS cc,
-        |    sum(p) OVER (ORDER BY score) AS cp FROM blk),
-        |pairs AS (SELECT a.r AS i, b.r AS j,
-        |    (b.cp - a.cp + a.p)::DOUBLE / (b.cc - a.cc + a.c)::DOUBLE AS avgv
-        |  FROM ps a JOIN ps b ON a.r <= b.r),
-        |mm AS (SELECT i, j,
-        |    min(avgv) OVER (PARTITION BY i ORDER BY j DESC) AS m FROM pairs),
-        |ft AS (SELECT j AS r, max(m) AS fitted FROM mm GROUP BY 1)
-        |SELECT ps.score, ps.c AS n, ps.p AS n_pos, ft.fitted
-        |FROM ps JOIN ft USING (r)""".stripMargin,
-
-    // Synchronous peel unrolled to 10 rounds (q94 pattern); the final
-    // degree pass and convergence probe mirror the Spark operator.
-    "q127_kcore" -> {
-      val rounds = (1 to 10).map { t =>
-        s"""d$t AS MATERIALIZED (SELECT s.src AS node, count(*)::BIGINT AS deg
-           |  FROM sym s SEMI JOIN n${t - 1} a ON s.src = a.node
-           |  SEMI JOIN n${t - 1} b ON s.dst = b.node GROUP BY 1),
-           |n$t AS MATERIALIZED (SELECT node FROM d$t WHERE deg >= 3)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $basketCtes,
-        |n0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM sym),
-        |$rounds,
-        |df AS MATERIALIZED (SELECT s.src AS node, count(*)::BIGINT AS deg
-        |  FROM sym s SEMI JOIN n10 a ON s.src = a.node
-        |  SEMI JOIN n10 b ON s.dst = b.node GROUP BY 1)
-        |SELECT node, deg,
-        |  (SELECT count(*) FROM df) =
-        |    (SELECT count(*) FROM df WHERE deg >= 3) AS converged
-        |FROM df""".stripMargin
-    },
-
-    "q128_incremental_agg" ->
-      """SELECT l_partkey, count(*)::BIGINT AS n, sum(l_quantity) AS sum_v,
-        |  min(l_quantity) AS min_v, max(l_quantity) AS max_v
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    // Factor values are training floats (q34 pattern): the oracle pins
-    // the query-user count; ranking/coverage/no-seen are earned in-plan.
-    "q129_als_serve" ->
-      """SELECT (SELECT count(DISTINCT o_custkey) FROM orders
-        |    JOIN lineitem ON l_orderkey = o_orderkey
-        |    WHERE o_custkey < 50)::BIGINT AS n_users,
-        |  true AS rows_ok, true AS sorted_ok, true AS unseen_ok""".stripMargin,
-
-    // Exact pairs at τ=0.2 (the q14 chain) vs band-bucket candidates
-    // (the q15 chain); INTERSECT of distinct pair sets, one division
-    // per metric.
-    "q130_lsh_quality" ->
-      s"""WITH $toksCte,
-        |$shCte,
-        |cards AS (SELECT doc_id, len(s)::BIGINT AS card FROM sh),
-        |inv AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-        |p1 AS (SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
-        |      FROM inv x JOIN inv y USING (shingle) WHERE x.doc_id < y.doc_id GROUP BY 1, 2),
-        |ex AS (SELECT a, b FROM p1
-        |  JOIN cards ca ON p1.a = ca.doc_id JOIN cards cb ON p1.b = cb.doc_id
-        |  WHERE inter::DOUBLE / (ca.card + cb.card - inter)::DOUBLE >= 0.2),
-        |sig AS (SELECT doc_id, list_transform(range(0, 16), j ->
-        |    list_min(list_transform(s, x ->
-        |      (((j * 2654435761) % 2147483647 + 1) * (cast('0x' || substr(md5(x), 1, 15) AS BIGINT) % 2147483647)
-        |        + ((j * 40503 + 11) % 2147483647)) % 2147483647))) AS sg
-        |  FROM sh WHERE len(s) > 0),
-        |keyed AS (SELECT doc_id,
-        |    unnest(list_transform(range(0, 8), b -> b || ':' || array_to_string(sg[b*2+1:b*2+2], ','))) AS band_key
-        |  FROM sig),
-        |cd AS (SELECT x.doc_id AS a, y.doc_id AS b FROM keyed x
-        |  JOIN keyed y USING (band_key) WHERE x.doc_id < y.doc_id GROUP BY 1, 2),
-        |cnt AS (SELECT (SELECT count(*) FROM ex) AS ne,
-        |  (SELECT count(*) FROM cd) AS nc,
-        |  (SELECT count(*) FROM (SELECT * FROM cd INTERSECT SELECT * FROM ex)) AS nh)
-        |SELECT ne::BIGINT AS n_exact, nc::BIGINT AS n_cand, nh::BIGINT AS n_hit,
-        |  nh::DOUBLE / nc::DOUBLE AS precision, nh::DOUBLE / ne::DOUBLE AS recall
-        |FROM cnt""".stripMargin,
-
-    "q131_star_flatten" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice, o_orderpriority,
-        |  c_mktsegment, n_name, r_name, p_brand, p_type, s_name
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey""".stripMargin,
-
-    // Training counts are exact integers; each Laplace log-likelihood is
-    // one ln on an integer-derived ratio, snapped to 1e-9 before the
-    // per-doc sum (the q85 ln-parity discipline); argmax ties on cls.
-    "q133_naive_bayes" ->
-      """WITH b AS (SELECT doc_id, text, lang,
-        |    CAST('0x' || substr(md5('nb:' || doc_id::VARCHAR), 1, 15)
-        |      AS BIGINT) % 5 AS bk FROM documents),
-        |trn AS (SELECT * FROM b WHERE bk != 0),
-        |tst AS (SELECT * FROM b WHERE bk = 0),
-        |ttk AS (SELECT lang AS cls,
-        |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |      t -> t != '')) AS tok FROM trn),
-        |cnt AS (SELECT cls, tok, count(*)::BIGINT AS c FROM ttk GROUP BY 1, 2),
-        |tt AS (SELECT cls, sum(c)::BIGINT AS t FROM cnt GROUP BY 1),
-        |vv AS (SELECT count(DISTINCT tok)::BIGINT AS v FROM cnt),
-        |pri AS (SELECT lang AS cls, count(*)::BIGINT AS nd FROM trn GROUP BY 1),
-        |nt AS (SELECT count(*)::BIGINT AS ntot FROM trn),
-        |cc AS (SELECT p.cls, tt.t, vv.v,
-        |    floor(ln(p.nd::DOUBLE / nt.ntot::DOUBLE) * 1e9
-        |      + 0.5::DOUBLE)::BIGINT AS prior_n
-        |  FROM pri p JOIN tt USING (cls) CROSS JOIN vv CROSS JOIN nt),
-        |stk AS (SELECT doc_id, lang AS actual,
-        |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |      t -> t != '')) AS tok FROM tst),
-        |sc AS (SELECT k.doc_id, k.actual, cc.cls,
-        |    floor(ln((coalesce(c.c, 0) + 1)::DOUBLE / (cc.t + cc.v)::DOUBLE)
-        |      * 1e9 + 0.5::DOUBLE)::BIGINT AS ll_n
-        |  FROM stk k CROSS JOIN cc
-        |  LEFT JOIN cnt c ON c.cls = cc.cls AND c.tok = k.tok),
-        |ds AS (SELECT doc_id, actual, cls, sum(ll_n)::BIGINT AS ll
-        |  FROM sc GROUP BY 1, 2, 3),
-        |fin AS (SELECT ds.doc_id, ds.actual, ds.cls,
-        |    row_number() OVER (PARTITION BY ds.doc_id
-        |      ORDER BY ds.ll + c2.prior_n DESC, ds.cls) AS rn
-        |  FROM ds JOIN cc c2 ON ds.cls = c2.cls)
-        |SELECT doc_id, cls AS pred, actual, cls = actual AS correct
-        |FROM fin WHERE rn = 1""".stripMargin,
-
-    // The ±1 matrix regenerates from md5('jl:c:d'); on the snapped grid
-    // the projection is all-integer arithmetic.
-    "q134_jl_project" -> {
-      val comps = (0 until 16).map { c =>
-        s"""  list_sum(list_transform(range(0, 64), d -> f[d + 1] *
-           |    (CASE WHEN CAST('0x' || substr(md5('jl:$c:' || d::VARCHAR), 1, 15)
-           |      AS BIGINT) % 2 = 0 THEN 1 ELSE -1 END)))::BIGINT AS rp$c""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding::DOUBLE[],
-        |    x -> floor(x * 1000000.0 + 0.5::DOUBLE)::BIGINT) AS f
-        |  FROM embeddings)
-        |SELECT vec_id,
-        |$comps
-        |FROM e""".stripMargin
-    },
-
-    // Digests computed from the SOURCE; the Spark side reads the export.
-    "q138_export_manifest" ->
-      """SELECT lang, count(*)::BIGINT AS n_rows,
-        |  sum(CAST('0x' || substr(md5(text), 1, 15) AS BIGINT)
-        |    % 2147483647)::BIGINT AS content_sum
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    // The draft unrolled to 8 slots (MMR/q94 pattern): stage i computes
-    // each query's available head of both lists (anti-join vs picks so
-    // far), resolves team preference from pick counts + the md5 coin,
-    // and falls back to the other team on an exhausted pool.
-    "q137_team_draft" -> {
-      val stages = (1 to 8).map { i =>
-        s"""aA$i AS (SELECT l.query_id, l.item FROM listA l
-           |  ANTI JOIN sel${i - 1} s ON l.query_id = s.query_id AND l.item = s.item
-           |  QUALIFY row_number() OVER (PARTITION BY l.query_id ORDER BY l.rr) = 1),
-           |bB$i AS (SELECT l.query_id, l.item FROM listB l
-           |  ANTI JOIN sel${i - 1} s ON l.query_id = s.query_id AND l.item = s.item
-           |  QUALIFY row_number() OVER (PARTITION BY l.query_id ORDER BY l.rr) = 1),
-           |pk$i AS MATERIALIZED (SELECT query_id, $i AS pos,
-           |    CASE WHEN pick_a THEN a_item ELSE b_item END AS item,
-           |    CASE WHEN pick_a THEN 'A' ELSE 'B' END AS team, pick_a
-           |  FROM (SELECT s.query_id,
-           |      CASE WHEN (CASE WHEN s.ca < s.cb THEN 0
-           |                      WHEN s.cb < s.ca THEN 1
-           |                      WHEN CAST('0x' || substr(md5('td:' || s.query_id::VARCHAR || ':' || '$i'), 1, 15) AS BIGINT) % 2 = 0 THEN 0
-           |                      ELSE 1 END) = 0
-           |        THEN (a.item IS NOT NULL) ELSE (b.item IS NULL) END AS pick_a,
-           |      a.item AS a_item, b.item AS b_item
-           |    FROM st${i - 1} s
-           |    LEFT JOIN aA$i a ON s.query_id = a.query_id
-           |    LEFT JOIN bB$i b ON s.query_id = b.query_id
-           |    WHERE a.item IS NOT NULL OR b.item IS NOT NULL)),
-           |sel$i AS MATERIALIZED (SELECT query_id, item FROM sel${i - 1}
-           |  UNION ALL SELECT query_id, item FROM pk$i),
-           |st$i AS MATERIALIZED (SELECT s.query_id,
-           |    s.ca + coalesce((SELECT CASE WHEN p.pick_a THEN 1 ELSE 0 END
-           |      FROM pk$i p WHERE p.query_id = s.query_id), 0) AS ca,
-           |    s.cb + coalesce((SELECT CASE WHEN p.pick_a THEN 0 ELSE 1 END
-           |      FROM pk$i p WHERE p.query_id = s.query_id), 0) AS cb
-           |  FROM st${i - 1} s)""".stripMargin
-      }.mkString(",\n")
-      val picks = (1 to 8).map(i =>
-        s"SELECT query_id, pos, item, team FROM pk$i").mkString(" UNION ALL ")
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
-        |sc AS (SELECT q.query_id, e.vec_id AS item, ${cosSql("q.qv", "e.v")} AS s
-        |       FROM q CROSS JOIN e WHERE q.query_id != e.vec_id),
-        |listA AS MATERIALIZED (SELECT query_id, item,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY s DESC, item) AS rr
-        |  FROM sc QUALIFY rr <= 10),
-        |listB AS MATERIALIZED (SELECT a.vec_id AS query_id, b.vec_id AS item,
-        |    row_number() OVER (PARTITION BY a.vec_id ORDER BY b.vec_id) AS rr
-        |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id != b.vec_id
-        |  WHERE a.vec_id < 20 QUALIFY rr <= 10),
-        |sel0 AS (SELECT CAST(NULL AS BIGINT) AS query_id,
-        |  CAST(NULL AS BIGINT) AS item WHERE false),
-        |st0 AS (SELECT query_id, 0 AS ca, 0 AS cb FROM q),
-        |$stages
-        |SELECT query_id, pos, item, team FROM ($picks)""".stripMargin
-    },
-
-    "q136_expectations" ->
-      """SELECT 'customer_name_not_null' AS check_name,
-        |  (SELECT count(*) FROM customer)::BIGINT AS n_rows,
-        |  (SELECT count(*) FROM customer WHERE c_name IS NULL)::BIGINT AS n_violations,
-        |  (SELECT count(*) FROM customer WHERE c_name IS NULL) = 0 AS pass
-        |UNION ALL
-        |SELECT 'orders_pk', (SELECT count(*) FROM orders)::BIGINT,
-        |  (SELECT count(*) - count(DISTINCT o_orderkey) FROM orders)::BIGINT,
-        |  (SELECT count(*) - count(DISTINCT o_orderkey) FROM orders) = 0
-        |UNION ALL
-        |SELECT 'lineitem_pk', (SELECT count(*) FROM lineitem)::BIGINT,
-        |  (SELECT count(*) FROM lineitem)::BIGINT -
-        |    (SELECT count(*) FROM (SELECT 1 FROM lineitem
-        |      WHERE l_orderkey IS NOT NULL AND l_linenumber IS NOT NULL
-        |      GROUP BY l_orderkey, l_linenumber))::BIGINT,
-        |  (SELECT count(*) FROM lineitem) =
-        |    (SELECT count(*) FROM (SELECT 1 FROM lineitem
-        |      WHERE l_orderkey IS NOT NULL AND l_linenumber IS NOT NULL
-        |      GROUP BY l_orderkey, l_linenumber))
-        |UNION ALL
-        |SELECT 'quantity_1_50', (SELECT count(*) FROM lineitem)::BIGINT,
-        |  (SELECT count(*) FROM lineitem
-        |    WHERE l_quantity IS NULL OR l_quantity < 1 OR l_quantity > 50)::BIGINT,
-        |  (SELECT count(*) FROM lineitem
-        |    WHERE l_quantity IS NULL OR l_quantity < 1 OR l_quantity > 50) = 0
-        |UNION ALL
-        |SELECT 'status_domain', (SELECT count(*) FROM orders)::BIGINT,
-        |  (SELECT count(*) FROM orders
-        |    WHERE o_orderstatus IS NULL OR o_orderstatus NOT IN ('F', 'O', 'P'))::BIGINT,
-        |  (SELECT count(*) FROM orders
-        |    WHERE o_orderstatus IS NULL OR o_orderstatus NOT IN ('F', 'O', 'P')) = 0
-        |UNION ALL
-        |SELECT 'orders_customer_fk', (SELECT count(*) FROM orders)::BIGINT,
-        |  (SELECT count(*) FROM orders ANTI JOIN customer ON o_custkey = c_custkey)::BIGINT,
-        |  (SELECT count(*) FROM orders ANTI JOIN customer ON o_custkey = c_custkey) = 0""".stripMargin,
-
-    "q135_feature_matrix" ->
-      """WITH base AS (SELECT o_orderkey AS k, c_mktsegment AS cat,
-        |    o_totalprice, (o_orderstatus = 'F')::BIGINT AS y,
-        |    CAST('0x' || substr(md5('te:' || o_orderkey::VARCHAR), 1, 15)
-        |      AS BIGINT) % 5 AS fold
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |pf AS (SELECT cat, fold, sum(y)::BIGINT AS fs, count(*)::BIGINT AS fc
-        |  FROM base GROUP BY 1, 2),
-        |pc AS (SELECT cat, sum(fs)::BIGINT AS ts, sum(fc)::BIGINT AS tc
-        |  FROM pf GROUP BY 1),
-        |pr AS (SELECT sum(y)::DOUBLE / count(*)::DOUBLE AS mu FROM base),
-        |it AS (SELECT l_orderkey, count(*)::BIGINT AS n_items
-        |  FROM lineitem GROUP BY 1)
-        |SELECT b.k AS o_orderkey, b.cat AS c_mktsegment,
-        |  ((pc.ts - pf.fs)::DOUBLE + 10.0::DOUBLE * pr.mu) /
-        |    ((pc.tc - pf.fc)::DOUBLE + 10.0::DOUBLE) AS te,
-        |  ntile(10) OVER (PARTITION BY b.cat
-        |    ORDER BY b.o_totalprice, b.k) AS price_bin,
-        |  it.n_items, b.y::INT AS label
-        |FROM base b JOIN pf ON b.cat = pf.cat AND b.fold = pf.fold
-        |JOIN pc ON b.cat = pc.cat CROSS JOIN pr
-        |JOIN it ON b.k = it.l_orderkey""".stripMargin,
-
-    "q132_cuped" ->
-      """WITH pu AS (SELECT user_id,
-        |    CAST('0x' || substr(md5('ab:' || user_id::VARCHAR), 1, 15)
-        |      AS BIGINT) % 2 AS arm,
-        |    sum(CASE WHEN ts < TIMESTAMP '2024-01-15'
-        |      THEN floor(value * 100 + 0.5::DOUBLE)::BIGINT ELSE 0 END) AS xs,
-        |    sum(CASE WHEN ts >= TIMESTAMP '2024-01-15'
-        |      THEN floor(value * 100 + 0.5::DOUBLE)::BIGINT ELSE 0 END) AS ys
-        |  FROM events GROUP BY 1, 2),
-        |g AS (SELECT count(*)::HUGEINT AS n, sum(xs::HUGEINT) AS sx,
-        |  sum(ys::HUGEINT) AS sy, sum(xs::HUGEINT * xs::HUGEINT) AS sxx,
-        |  sum(xs::HUGEINT * ys::HUGEINT) AS sxy FROM pu),
-        |th AS (SELECT (n*sxy - sx*sy)::DOUBLE / (n*sxx - sx*sx)::DOUBLE AS theta,
-        |  sx::DOUBLE / n::DOUBLE AS xbar FROM g),
-        |a AS (SELECT arm, count(*)::BIGINT AS n_units, sum(xs)::BIGINT AS sax,
-        |  sum(ys)::BIGINT AS say FROM pu GROUP BY 1)
-        |SELECT arm, n_units,
-        |  (say::DOUBLE / n_units::DOUBLE) / 100.0::DOUBLE AS mean_y,
-        |  ((say::DOUBLE / n_units::DOUBLE) - th.theta *
-        |    ((sax::DOUBLE / n_units::DOUBLE) - th.xbar)) / 100.0::DOUBLE AS adj_mean,
-        |  th.theta AS theta
-        |FROM a CROSS JOIN th""".stripMargin,
-
-    "q139_pivot" ->
-      """SELECT year(o_orderdate) AS order_year,
-        |  count(*) FILTER (WHERE o_orderstatus = 'F')::BIGINT AS f_cnt,
-        |  coalesce(sum(floor(o_totalprice * 100 + 0.5::DOUBLE)::BIGINT)
-        |    FILTER (WHERE o_orderstatus = 'F'), 0)::BIGINT AS f_cents,
-        |  count(*) FILTER (WHERE o_orderstatus = 'O')::BIGINT AS o_cnt,
-        |  coalesce(sum(floor(o_totalprice * 100 + 0.5::DOUBLE)::BIGINT)
-        |    FILTER (WHERE o_orderstatus = 'O'), 0)::BIGINT AS o_cents,
-        |  count(*) FILTER (WHERE o_orderstatus = 'P')::BIGINT AS p_cnt,
-        |  coalesce(sum(floor(o_totalprice * 100 + 0.5::DOUBLE)::BIGINT)
-        |    FILTER (WHERE o_orderstatus = 'P'), 0)::BIGINT AS p_cents
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q140_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric,
-        |  floor(l_quantity * 100 + 0.5::DOUBLE)::BIGINT AS cents FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_extendedprice',
-        |  floor(l_extendedprice * 100 + 0.5::DOUBLE)::BIGINT FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_discount',
-        |  floor(l_discount * 100 + 0.5::DOUBLE)::BIGINT FROM lineitem""".stripMargin,
-
-    "q141_snapshot_diff" ->
-      """WITH base AS (SELECT o_orderkey AS k, o_custkey AS c1,
-        |    o_orderstatus AS c2,
-        |    floor(o_totalprice * 100 + 0.5::DOUBLE)::BIGINT AS cents
-        |  FROM orders),
-        |o AS (SELECT * FROM base WHERE k % 7 <> 0),
-        |n AS (SELECT k, c1, c2,
-        |    CASE WHEN k % 3 = 0 THEN cents + 100 ELSE cents END AS cents
-        |  FROM base WHERE k % 5 <> 0),
-        |j AS (SELECT coalesce(o.k, n.k) AS o_orderkey,
-        |    CASE WHEN o.k IS NULL THEN 'insert'
-        |         WHEN n.k IS NULL THEN 'delete'
-        |         WHEN o.c1 <> n.c1 OR o.c2 <> n.c2 OR o.cents <> n.cents
-        |           THEN 'update' END AS change_type
-        |  FROM o FULL JOIN n ON o.k = n.k)
-        |SELECT o_orderkey, change_type FROM j
-        |WHERE change_type IS NOT NULL""".stripMargin,
-
-    "q142_grouped_ols" ->
-      """WITH f AS (SELECT l_returnflag AS g,
-        |    floor(l_quantity * 1.0::DOUBLE + 0.5::DOUBLE)::BIGINT AS x,
-        |    floor(l_extendedprice * 100 + 0.5::DOUBLE)::BIGINT AS y
-        |  FROM lineitem),
-        |s AS (SELECT g, count(*)::HUGEINT AS n, sum(x::HUGEINT) AS sx,
-        |    sum(y::HUGEINT) AS sy, sum(x::HUGEINT * y::HUGEINT) AS sxy,
-        |    sum(x::HUGEINT * x::HUGEINT) AS sxx
-        |  FROM f GROUP BY 1),
-        |t AS (SELECT g, n, sx, sy,
-        |    CASE WHEN n >= 2 AND (n * sxx - sx * sx) <> 0
-        |      THEN (n * sxy - sx * sy)::DOUBLE / (n * sxx - sx * sx)::DOUBLE
-        |        * 0.01::DOUBLE END AS slope
-        |  FROM s)
-        |SELECT g AS l_returnflag, n::BIGINT AS n, round(slope, 6) AS slope,
-        |  round(CASE WHEN slope IS NOT NULL THEN
-        |    sy::DOUBLE / n::DOUBLE / 100.0::DOUBLE
-        |      - slope * (sx::DOUBLE / n::DOUBLE / 1.0::DOUBLE) END, 6)
-        |    AS intercept
-        |FROM t""".stripMargin,
-
-    "q143_transitions" ->
-      """WITH p AS (SELECT event_type AS src_state,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS dst_state
-        |  FROM events),
-        |c AS (SELECT src_state, dst_state, count(*)::BIGINT AS n FROM p
-        |  WHERE dst_state IS NOT NULL GROUP BY 1, 2)
-        |SELECT src_state, dst_state, n,
-        |  round(n::DOUBLE / (sum(n) OVER (PARTITION BY src_state))::DOUBLE, 6)
-        |    AS p
-        |FROM c""".stripMargin,
-
-    "q144_bfs_hops" ->
-      s"""WITH $basketCtes,
-        |v0 AS (SELECT DISTINCT p_partkey AS node FROM part WHERE p_partkey < 5),
-        |h0 AS (SELECT node, 0 AS hop FROM v0),
-        |n1 AS (SELECT DISTINCT s.dst AS node FROM sym s JOIN h0 ON s.src = h0.node
-        |       WHERE s.dst NOT IN (SELECT node FROM h0)),
-        |h1 AS (SELECT * FROM h0 UNION ALL SELECT node, 1 FROM n1),
-        |n2 AS (SELECT DISTINCT s.dst AS node FROM sym s JOIN n1 ON s.src = n1.node
-        |       WHERE s.dst NOT IN (SELECT node FROM h1)),
-        |h2 AS (SELECT * FROM h1 UNION ALL SELECT node, 2 FROM n2),
-        |n3 AS (SELECT DISTINCT s.dst AS node FROM sym s JOIN n2 ON s.src = n2.node
-        |       WHERE s.dst NOT IN (SELECT node FROM h2))
-        |SELECT node, hop FROM h2 UNION ALL SELECT node, 3 FROM n3""".stripMargin,
-
-    "q145_rec_coverage" ->
-      s"""WITH $basketCtes,
-        |r AS (SELECT src, dst,
-        |    row_number() OVER (PARTITION BY src ORDER BY weight DESC, dst) AS rnk
-        |  FROM sym QUALIFY rnk <= 10),
-        |c AS (SELECT dst AS item, count(*)::BIGINT AS cnt FROM r GROUP BY 1),
-        |k AS (SELECT item, cnt, row_number() OVER (ORDER BY cnt, item) AS rnk
-        |  FROM c),
-        |g AS (SELECT count(*)::BIGINT AS rec_items, sum(cnt)::BIGINT AS total_recs,
-        |    sum(rnk::HUGEINT * cnt::HUGEINT) AS rw FROM k),
-        |p AS (SELECT count(*)::BIGINT AS catalog_n FROM part)
-        |SELECT catalog_n, rec_items, total_recs,
-        |  round(rec_items::DOUBLE / catalog_n::DOUBLE, 6) AS coverage,
-        |  round(2.0::DOUBLE * rw::DOUBLE
-        |      / (rec_items::DOUBLE * total_recs::DOUBLE)
-        |    - (rec_items::DOUBLE + 1.0::DOUBLE) / rec_items::DOUBLE, 6) AS gini
-        |FROM g CROSS JOIN p""".stripMargin,
-
-    "q146_skyline" ->
-      """WITH c AS (SELECT floor(p_retailprice * 100 + 0.5::DOUBLE)::BIGINT AS xi,
-        |    max(p_size) AS y
-        |  FROM part GROUP BY 1)
-        |SELECT xi::DOUBLE / 100.0::DOUBLE AS x, y FROM c a
-        |WHERE NOT EXISTS (SELECT 1 FROM c b WHERE b.xi < a.xi AND b.y >= a.y)""".stripMargin,
-
-    "q147_entropy" ->
-      """WITH tk AS (SELECT lang,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |      t -> t != '') AS tk
-        |  FROM documents),
-        |t AS (SELECT lang, unnest(tk) AS term FROM tk),
-        |c AS (SELECT lang, term, count(*)::BIGINT AS c FROM t GROUP BY 1, 2),
-        |a AS (SELECT lang, sum(c)::BIGINT AS n_tokens, count(*)::BIGINT AS n_types,
-        |    sum(floor(c::DOUBLE * ln(c::DOUBLE) * 1000000.0::DOUBLE
-        |      + 0.5::DOUBLE)::BIGINT)::BIGINT AS s
-        |  FROM c GROUP BY 1)
-        |SELECT lang, n_tokens, n_types,
-        |  round(n_types::DOUBLE / n_tokens::DOUBLE, 6) AS ttr,
-        |  round((ln(n_tokens::DOUBLE)
-        |    - s::DOUBLE / 1000000.0::DOUBLE / n_tokens::DOUBLE)
-        |    / ln(2.0::DOUBLE), 6) AS entropy_bits
-        |FROM a""".stripMargin,
-
-    "q148_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-        |  JOIN s1 ON e.user_id = s1.user_id AND e.ts >= s1.t
-        |  WHERE e.event_type = 'click' GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-        |  JOIN s2 ON e.user_id = s2.user_id AND e.ts >= s2.t
-        |  WHERE e.event_type = 'purchase' GROUP BY 1)
-        |SELECT 1 AS step, 'view' AS step_name,
-        |  (SELECT count(*) FROM s1)::BIGINT AS n_keys
-        |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)""".stripMargin,
-
-    "q149_ppr" -> {
-      // q94's chained-CTE unroll with the restart vector: teleport and
-      // dangling mass return to the seeds only. (1.0 - 0.85) stays an
-      // EXPRESSION — as a 0.15 literal it differs by 1 ulp from the
-      // double Spark computes.
-      val rounds = (1 to 10).map { i =>
-        s"""c$i AS MATERIALIZED (SELECT e.dst AS node, sum(r.rank * e.frac) AS m
-           |  FROM norm e JOIN r${i - 1} r ON e.src = r.node GROUP BY e.dst),
-           |d$i AS MATERIALIZED (SELECT coalesce(sum(r.rank), 0.0) AS dm
-           |  FROM r${i - 1} r SEMI JOIN dangset g ON r.node = g.node),
-           |r$i AS MATERIALIZED (SELECT t.node,
-           |    (1.0 - 0.85) * t.rv + 0.85 * (coalesce(c.m, 0.0) + d$i.dm * t.rv) AS rank
-           |  FROM rst t LEFT JOIN c$i c ON t.node = c.node
-           |  CROSS JOIN d$i)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS okey, l_partkey AS item FROM lineitem),
-        |e AS MATERIALIZED (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-        |      FROM items a JOIN items b USING (okey) WHERE a.item < b.item GROUP BY 1, 2),
-        |nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst AS node FROM e),
-        |deg AS MATERIALIZED (SELECT src, sum(weight) AS w FROM e GROUP BY 1),
-        |norm AS MATERIALIZED (SELECT s.src, s.dst, s.weight::DOUBLE / d.w AS frac
-        |         FROM e s JOIN deg d USING (src)),
-        |dangset AS MATERIALIZED (SELECT node FROM nodes
-        |         WHERE node NOT IN (SELECT src FROM deg)),
-        |seedset AS MATERIALIZED (SELECT node FROM nodes
-        |         WHERE node IN (SELECT p_partkey FROM part WHERE p_partkey < 5)),
-        |ns AS (SELECT count(*)::DOUBLE AS ns FROM seedset),
-        |rst AS MATERIALIZED (SELECT nd.node,
-        |    CASE WHEN s.node IS NOT NULL THEN 1.0 / ns.ns ELSE 0.0 END AS rv
-        |  FROM nodes nd LEFT JOIN seedset s ON nd.node = s.node CROSS JOIN ns),
-        |r0 AS MATERIALIZED (SELECT node, rv AS rank FROM rst),
-        |$rounds,
-        |nn AS (SELECT count(*)::DOUBLE AS n FROM nodes)
-        |SELECT r10.node, round(r10.rank * nn.n, 6) AS ppr_scaled
-        |FROM r10 CROSS JOIN nn""".stripMargin
-    },
-
-    "q150_ewma" -> {
-      // α = 0.5 keeps every weight an exact binary double (1, 0.5,
-      // 0.25, …) — the lag-chain addition order mirrors the Spark
-      // reduceLeft term by term.
-      val num = (0 to 6).map {
-        case 0 => "cents::DOUBLE * 1.0"
-        case i =>
-          s"CASE WHEN x$i IS NOT NULL THEN x$i::DOUBLE * ${math.pow(0.5, i)} ELSE 0.0 END"
-      }.mkString(" + ")
-      val den = (0 to 6).map {
-        case 0 => "1.0"
-        case i => s"CASE WHEN x$i IS NOT NULL THEN ${math.pow(0.5, i)} ELSE 0.0 END"
-      }.mkString(" + ")
-      s"""WITH b AS (SELECT user_id, event_id, ts,
-        |    floor(value * 100 + 0.5::DOUBLE)::BIGINT AS cents FROM events),
-        |l AS (SELECT user_id, event_id, cents,
-        |    ${(1 to 6).map(i => s"lag(cents, $i) OVER w AS x$i").mkString(", ")}
-        |  FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT user_id, event_id, cents,
-        |  round(($num) / ($den), 6) AS ewma
-        |FROM l""".stripMargin
-    },
-
-    "q151_mad_outliers" ->
-      """WITH c AS (SELECT l_returnflag AS g, l_orderkey, l_linenumber,
-        |    floor(l_extendedprice * 100 + 0.5::DOUBLE)::BIGINT AS cents
-        |  FROM lineitem),
-        |m AS (SELECT g, median(cents) AS med FROM c GROUP BY 1),
-        |d AS (SELECT c.g, c.l_orderkey, c.l_linenumber, c.cents, m.med,
-        |    abs(c.cents::DOUBLE - m.med) AS dev
-        |  FROM c JOIN m USING (g)),
-        |m2 AS (SELECT g, median(dev) AS mad FROM d GROUP BY 1)
-        |SELECT d.g AS l_returnflag, d.l_orderkey, d.l_linenumber,
-        |  d.cents, d.med, m2.mad
-        |FROM d JOIN m2 USING (g)
-        |WHERE m2.mad > 0 AND d.dev > 1.5 * m2.mad""".stripMargin,
-
-    "q152_table_digest" ->
-      """SELECT count(*)::BIGINT AS n_rows,
-        |  (sum(CAST('0x' || substr(md5(
-        |    l_orderkey::VARCHAR || chr(1) || l_linenumber::VARCHAR || chr(1) ||
-        |    l_partkey::VARCHAR || chr(1) || l_returnflag || chr(1) ||
-        |    floor(l_extendedprice * 100 + 0.5::DOUBLE)::BIGINT::VARCHAR),
-        |    1, 15) AS BIGINT)::HUGEINT)
-        |   % 4611686018427387904::HUGEINT)::BIGINT AS digest
-        |FROM lineitem""".stripMargin,
-
-    "q153_hll_distinct" ->
-      // registers: bucket = low 12 hash bits, rho = 1 + trailing zeros of
-      // the other 48; Z folds as exact integers (Σ 2^(49−reg) + zeros·2^49)
-      // so only the final fixed double expression — and the sparse-branch
-      // m·ln(m/V) — touches floating point. Literal arithmetic like
-      // 0.7213/(1.0 + 1.079/4096.0) is written as the EXPRESSION, not a
-      // decimal: both engines then compute the identical IEEE double.
-      """WITH src AS (
-        |  SELECT 'l_orderkey' AS tag, l_orderkey::VARCHAR AS v FROM lineitem
-        |  UNION ALL SELECT 'l_partkey', l_partkey::VARCHAR FROM lineitem
-        |  UNION ALL SELECT 'l_suppkey', l_suppkey::VARCHAR FROM lineitem),
-        |h AS (SELECT tag,
-        |    CAST('0x' || substr(md5('hll:' || v), 1, 15) AS BIGINT) AS h FROM src),
-        |b AS (SELECT tag, h & 4095 AS bucket, h >> 12 AS r FROM h),
-        |regs AS (SELECT tag, bucket,
-        |    max(CASE WHEN r = 0 THEN 49
-        |             ELSE bit_count(((r & -r) - 1)::BIGINT) + 1 END) AS reg
-        |  FROM b GROUP BY 1, 2),
-        |e AS (SELECT tag, count(*)::BIGINT AS n_buckets,
-        |    (sum(1::BIGINT << (49 - reg))
-        |      + (4096 - count(*)) * (1::BIGINT << 49))::BIGINT AS z_scaled
-        |  FROM regs GROUP BY 1),
-        |est AS (SELECT tag, n_buckets, z_scaled,
-        |    (0.7213 / (1.0 + 1.079 / 4096.0)) * 16777216.0 * 562949953421312.0
-        |      / z_scaled::DOUBLE AS raw,
-        |    (4096 - n_buckets)::BIGINT AS v FROM e)
-        |SELECT tag, n_buckets, z_scaled,
-        |  round(CASE WHEN raw <= 10240.0 AND v > 0
-        |             THEN 4096.0 * ln(4096.0 / v::DOUBLE) ELSE raw END, 4)
-        |    AS est_distinct
-        |FROM est""".stripMargin,
-
-    "q154_count_min" ->
-      """WITH it AS (SELECT l_partkey::VARCHAR AS v,
-        |    floor(l_quantity * 100 + 0.5::DOUBLE)::BIGINT AS w FROM lineitem),
-        |g AS (SELECT j,
-        |    CAST('0x' || substr(md5('cms' || j::VARCHAR || ':' || v), 1, 15)
-        |      AS BIGINT) & 1023 AS slot,
-        |    w FROM it CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j)),
-        |sk AS (SELECT j, slot, sum(w) AS cnt FROM g GROUP BY 1, 2),
-        |cand AS (SELECT p_partkey, p_partkey::VARCHAR AS v FROM part
-        |         WHERE p_partkey < 100),
-        |cq AS (SELECT p_partkey, j,
-        |    CAST('0x' || substr(md5('cms' || j::VARCHAR || ':' || v), 1, 15)
-        |      AS BIGINT) & 1023 AS slot
-        |  FROM cand CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j))
-        |SELECT cq.p_partkey, min(coalesce(sk.cnt, 0))::BIGINT AS est_count
-        |FROM cq LEFT JOIN sk USING (j, slot) GROUP BY 1""".stripMargin,
-
-    "q155_retention" ->
-      """WITH pairs AS (SELECT DISTINCT user_id AS k,
-        |    date_trunc('week', ts)::DATE AS wk FROM events),
-        |c AS (SELECT k, min(wk) AS cohort_week FROM pairs GROUP BY 1)
-        |SELECT c.cohort_week,
-        |  (date_diff('day', c.cohort_week, p.wk) // 7)::BIGINT AS week_offset,
-        |  count(*) AS n_users
-        |FROM pairs p JOIN c USING (k) GROUP BY 1, 2""".stripMargin,
-
-    "q156_active_users" ->
-      """WITH pairs AS (SELECT DISTINCT user_id AS k, ts::DATE AS d FROM events),
-        |days AS (SELECT DISTINCT d AS day FROM pairs)
-        |SELECT dy.day,
-        |  count(DISTINCT CASE WHEN p.d = dy.day THEN p.k END) AS dau,
-        |  count(DISTINCT CASE WHEN date_diff('day', p.d, dy.day) < 7 THEN p.k END)
-        |    AS wau,
-        |  count(DISTINCT p.k) AS mau
-        |FROM pairs p JOIN days dy ON dy.day BETWEEN p.d AND p.d + 27
-        |GROUP BY 1""".stripMargin,
-
-    "q157_cdc_apply" ->
-      // the LAW is the oracle: applying diff(old, orders) onto old must
-      // reconstruct `orders` exactly, so the expected digest is computed
-      // from orders directly — any apply/diff defect hash-mismatches.
-      """SELECT count(*)::BIGINT AS n_rows,
-        |  (sum(CAST('0x' || substr(md5(
-        |    o_orderkey::VARCHAR || chr(1) || o_custkey::VARCHAR || chr(1) ||
-        |    o_orderstatus || chr(1) ||
-        |    floor(o_totalprice * 100 + 0.5::DOUBLE)::BIGINT::VARCHAR || chr(1) ||
-        |    (o_orderdate::DATE)::VARCHAR),
-        |    1, 15) AS BIGINT)::HUGEINT)
-        |   % 4611686018427387904::HUGEINT)::BIGINT AS digest
-        |FROM orders""".stripMargin,
-
-    "q158_cusum" ->
-      """WITH b AS (SELECT user_id, event_id, ts,
-        |    floor(value * 100 + 0.5::DOUBLE)::BIGINT AS c FROM events),
-        |w AS (SELECT user_id, event_id,
-        |    sum(c) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                 ROWS UNBOUNDED PRECEDING) AS prefix,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS i,
-        |    count(*) OVER (PARTITION BY user_id) AS n,
-        |    sum(c) OVER (PARTITION BY user_id) AS s
-        |  FROM b)
-        |SELECT user_id, event_id,
-        |  (n::HUGEINT * prefix::HUGEINT - i::HUGEINT * s::HUGEINT)
-        |    ::BIGINT AS cusum_scaled,
-        |  n::BIGINT AS n
-        |FROM w
-        |WHERE abs(n::HUGEINT * prefix::HUGEINT - i::HUGEINT * s::HUGEINT)
-        |      > 30000::HUGEINT * n::HUGEINT""".stripMargin,
-
-    "q159_attribution" ->
-      """WITH ev AS (SELECT event_id, user_id, ts, value,
-        |    (event_type = 'purchase') AS is_probe
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        |o AS (SELECT *,
-        |    last_value(CASE WHEN NOT is_probe THEN event_id END IGNORE NULLS)
-        |      OVER w AS asof_event_id,
-        |    last_value(CASE WHEN NOT is_probe THEN epoch_ms(ts) END IGNORE NULLS)
-        |      OVER w AS asof_ts_ms
-        |  FROM ev
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), is_probe, event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT make_timestamp(asof_ts_ms * 1000)::DATE AS touch_day,
-        |  count(*) AS n_conversions,
-        |  sum(floor(value * 100 + 0.5::DOUBLE)::BIGINT)::BIGINT
-        |    AS attributed_cents
-        |FROM o WHERE is_probe AND asof_event_id IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-
-    "q160_bloom" ->
-      // 2^20 bit positions packed into 32-bit words (bit ≤ 31: DuckDB's
-      // checked << overflows at 63) — word = pos >> 5, mask = 1 << (pos & 31)
-      """WITH b AS (SELECT l_partkey::VARCHAR AS v FROM lineitem),
-        |p AS (SELECT CAST('0x' || substr(md5('bloom' || j::VARCHAR || ':' || v),
-        |        1, 15) AS BIGINT) & 1048575 AS pos
-        |      FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j)),
-        |f AS (SELECT pos >> 5 AS word,
-        |        bit_or(1::BIGINT << (pos & 31)) AS bits FROM p GROUP BY 1),
-        |cand AS (SELECT p_partkey AS key FROM part WHERE p_partkey < 200
-        |         UNION ALL
-        |         SELECT p_partkey + 5000000 FROM part WHERE p_partkey < 200),
-        |cp AS (SELECT key,
-        |        CAST('0x' || substr(md5('bloom' || j::VARCHAR || ':' ||
-        |          key::VARCHAR), 1, 15) AS BIGINT) & 1048575 AS pos
-        |      FROM cand CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j)),
-        |cj AS (SELECT key, pos >> 5 AS word, pos & 31 AS bit FROM cp)
-        |SELECT key,
-        |  (count(CASE WHEN coalesce(f.bits, 0) & (1::BIGINT << bit) != 0
-        |              THEN 1 END) = 4) AS may_contain
-        |FROM cj LEFT JOIN f USING (word) GROUP BY key""".stripMargin,
-
-    "q161_hist_quantiles" ->
-      """WITH b AS (SELECT event_type,
-        |    least(floor(value * 100 + 0.5::DOUBLE)::BIGINT // 100, 1023) AS bin
-        |  FROM events),
-        |g AS (SELECT event_type, bin, count(*) AS c FROM b GROUP BY 1, 2),
-        |w AS (SELECT event_type, bin, c,
-        |    sum(c) OVER (PARTITION BY event_type ORDER BY bin
-        |                 ROWS UNBOUNDED PRECEDING) AS cum,
-        |    sum(c) OVER (PARTITION BY event_type) AS n FROM g)
-        |SELECT event_type, max(n)::BIGINT AS n,
-        |  min(CASE WHEN cum * 100 >= 50 * n THEN (bin + 1) * 100 END)::BIGINT
-        |    AS p50_cents,
-        |  min(CASE WHEN cum * 100 >= 95 * n THEN (bin + 1) * 100 END)::BIGINT
-        |    AS p95_cents,
-        |  min(CASE WHEN cum * 100 >= 99 * n THEN (bin + 1) * 100 END)::BIGINT
-        |    AS p99_cents
-        |FROM w GROUP BY 1""".stripMargin,
-
-    "q162_trending" ->
-      """WITH li AS (SELECT l.l_suppkey, o.o_orderdate::DATE AS day
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |mx AS (SELECT max(day) AS maxd FROM li),
-        |c AS (SELECT l_suppkey AS key,
-        |    count(CASE WHEN date_diff('day', day, maxd) >= 180 THEN 1 END)
-        |      AS c_prior,
-        |    count(CASE WHEN date_diff('day', day, maxd) < 180 THEN 1 END)
-        |      AS c_recent
-        |  FROM li CROSS JOIN mx
-        |  WHERE date_diff('day', day, maxd) < 360 GROUP BY 1)
-        |SELECT key, c_prior, c_recent,
-        |  round((c_recent + 1)::DOUBLE / (c_prior + 1)::DOUBLE, 6) AS lift
-        |FROM c WHERE c_recent >= 5
-        |ORDER BY lift DESC, key LIMIT 10""".stripMargin,
-
-    "q163_label_prop" -> {
-      // 5 synchronous rounds unrolled (the q94/q149 chained-CTE pattern);
-      // argmax = row_number over (weight DESC, label ASC) — the min-label
-      // tie rule that makes fixed-round LPA deterministic.
-      val rounds = (1 to 5).map { i =>
-        s"""c$i AS MATERIALIZED (SELECT e.dst AS node, l.community,
-           |    sum(e.weight) AS w
-           |  FROM e JOIN l${i - 1} l ON e.src = l.node GROUP BY 1, 2),
-           |l$i AS MATERIALIZED (SELECT node, community FROM (
-           |    SELECT node, community, row_number() OVER (
-           |      PARTITION BY node ORDER BY w DESC, community) AS rn
-           |    FROM c$i) WHERE rn = 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS okey,
-        |    l_partkey AS item FROM lineitem),
-        |e0 AS MATERIALIZED (SELECT a.item AS src, b.item AS dst,
-        |    count(*) AS weight
-        |  FROM items a JOIN items b USING (okey) WHERE a.item < b.item
-        |  GROUP BY 1, 2),
-        |e AS MATERIALIZED (SELECT src, dst, weight FROM e0
-        |  UNION ALL SELECT dst, src, weight FROM e0),
-        |l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS community
-        |  FROM e),
-        |$rounds
-        |SELECT node, community FROM l5""".stripMargin
-    },
-
-    "q164_seasonal" ->
-      """SELECT event_type, hour(ts)::BIGINT AS hour, count(*) AS n,
-        |  round(sum(floor(value * 100 + 0.5::DOUBLE)::BIGINT)::DOUBLE
-        |    / count(*)::DOUBLE, 6) AS mean_cents
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q165_user_knn" ->
-      """WITH ui AS (SELECT DISTINCT o.o_custkey AS usr, l.l_partkey AS item
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |norms AS (SELECT usr, count(*) AS n FROM ui GROUP BY 1),
-        |light AS (SELECT item FROM (
-        |    SELECT item, count(*) AS nu FROM ui GROUP BY 1) WHERE nu <= 200),
-        |p AS (SELECT usr, item FROM ui SEMI JOIN light USING (item)),
-        |pairs AS (SELECT a.usr AS ua, b.usr AS ub, count(*) AS shared
-        |  FROM p a JOIN p b USING (item) WHERE a.usr < b.usr GROUP BY 1, 2),
-        |sym AS (SELECT ua AS usr, ub AS neighbor, shared FROM pairs
-        |  UNION ALL SELECT ub, ua, shared FROM pairs),
-        |sc AS (SELECT s.usr, s.neighbor, s.shared,
-        |    round(s.shared::DOUBLE / sqrt((na.n * nb.n)::DOUBLE), 6) AS cosine
-        |  FROM sym s JOIN norms na ON s.usr = na.usr
-        |  JOIN norms nb ON s.neighbor = nb.usr)
-        |SELECT usr AS "user", neighbor, shared, cosine, rn::BIGINT AS rnk
-        |FROM (SELECT *, row_number() OVER (
-        |    PARTITION BY usr ORDER BY cosine DESC, neighbor) AS rn FROM sc)
-        |WHERE rn <= 5""".stripMargin,
-
-    "q166_pareto" ->
-      """WITH rev AS (SELECT p.p_brand,
-        |    sum(floor(l.l_extendedprice * 100 + 0.5::DOUBLE)::BIGINT) AS rc
-        |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |  GROUP BY 1),
-        |w AS (SELECT p_brand, rc,
-        |    sum(rc) OVER () AS total,
-        |    sum(rc) OVER (ORDER BY rc DESC, p_brand
-        |                  ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM rev)
-        |SELECT p_brand, rc::BIGINT AS rev_cents,
-        |  round(rc::DOUBLE / total::DOUBLE, 6) AS share,
-        |  round(cum::DOUBLE / total::DOUBLE, 6) AS cum_share,
-        |  (cum::HUGEINT * 100 <= total::HUGEINT * 80) AS in_top80
-        |FROM w""".stripMargin,
-
-    "q167_freq_triples" ->
-      """WITH it AS (SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS item
-        |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-        |sz AS (SELECT okey FROM it GROUP BY okey HAVING count(*) <= 32),
-        |s AS (SELECT it.okey, it.item FROM it SEMI JOIN sz USING (okey))
-        |SELECT a.item AS x, b.item AS y, c.item AS z, count(*) AS support
-        |FROM s a JOIN s b USING (okey) JOIN s c USING (okey)
-        |WHERE a.item < b.item AND b.item < c.item
-        |GROUP BY 1, 2, 3 HAVING count(*) >= 10
-        |ORDER BY support DESC, x, y, z LIMIT 20""".stripMargin,
-
-    "q168_session_paths" ->
-      """WITH b AS (SELECT user_id, event_id, epoch_ms(ts) AS t, event_type
-        |  FROM events),
-        |w AS (SELECT *, CASE WHEN lag(t) OVER sw IS NULL THEN 0
-        |    WHEN t - lag(t) OVER sw >= 28800000 THEN 1 ELSE 0 END AS brk
-        |  FROM b WINDOW sw AS (PARTITION BY user_id ORDER BY t, event_id)),
-        |s AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY t, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS sid FROM w),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY user_id, sid
-        |    ORDER BY t, event_id) AS rn FROM s),
-        |p AS (SELECT user_id, sid,
-        |    string_agg(event_type, '>' ORDER BY t, event_id) AS path
-        |  FROM r WHERE rn <= 5 GROUP BY 1, 2)
-        |SELECT path, count(*) AS n FROM p GROUP BY 1
-        |ORDER BY n DESC, path LIMIT 10""".stripMargin,
-
-    "q169_retract_agg" ->
-      // the LAW is the oracle (q157 pattern): the maintained view after
-      // applying the delta must equal a from-scratch recompute of the
-      // target table — any signed-contribution defect hash-mismatches.
-      """WITH c AS (SELECT o_custkey,
-        |    floor(o_totalprice * 100 + 0.5::DOUBLE)::BIGINT AS cents
-        |  FROM orders)
-        |SELECT o_custkey, count(*) AS n, sum(cents)::BIGINT AS sum_cents
-        |FROM c GROUP BY 1""".stripMargin,
-
-    "q170_quantile_audit" ->
-      """WITH b AS (SELECT event_type,
-        |    floor(value * 100 + 0.5::DOUBLE)::BIGINT AS c,
-        |    least(floor(value * 100 + 0.5::DOUBLE)::BIGINT // 100, 1023) AS bin
-        |  FROM events),
-        |g AS (SELECT event_type, bin, count(*) AS cnt FROM b GROUP BY 1, 2),
-        |wn AS (SELECT event_type, bin,
-        |    sum(cnt) OVER (PARTITION BY event_type ORDER BY bin
-        |                   ROWS UNBOUNDED PRECEDING) AS cum,
-        |    sum(cnt) OVER (PARTITION BY event_type) AS n FROM g),
-        |sk AS (SELECT event_type, max(n)::BIGINT AS n,
-        |    min(CASE WHEN cum * 100 >= 50 * n THEN (bin + 1) * 100 END)::BIGINT
-        |      AS p50_cents,
-        |    min(CASE WHEN cum * 100 >= 95 * n THEN (bin + 1) * 100 END)::BIGINT
-        |      AS p95_cents,
-        |    min(CASE WHEN cum * 100 >= 99 * n THEN (bin + 1) * 100 END)::BIGINT
-        |      AS p99_cents
-        |  FROM wn GROUP BY 1),
-        |r AS (SELECT event_type, c,
-        |    count(*) OVER (PARTITION BY event_type ORDER BY c
-        |                   ROWS UNBOUNDED PRECEDING) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS nn FROM b),
-        |ex AS (SELECT event_type,
-        |    min(CASE WHEN rn * 100 >= 50 * nn THEN c END) AS v50,
-        |    min(CASE WHEN rn * 100 >= 95 * nn THEN c END) AS v95,
-        |    min(CASE WHEN rn * 100 >= 99 * nn THEN c END) AS v99
-        |  FROM r GROUP BY 1)
-        |SELECT sk.event_type, sk.n,
-        |  p50_cents, v50,
-        |  (v50 < p50_cents AND p50_cents <= v50 + 100) AS p50_ok,
-        |  p95_cents, v95,
-        |  (v95 < p95_cents AND p95_cents <= v95 + 100) AS p95_ok,
-        |  p99_cents, v99,
-        |  (v99 < p99_cents AND p99_cents <= v99 + 100) AS p99_ok
-        |FROM sk JOIN ex USING (event_type)""".stripMargin,
-
-    "q171_reach" ->
-      """WITH days AS (SELECT DISTINCT ts::DATE AS day FROM events),
-        |fd AS (SELECT user_id, min(ts::DATE) AS day FROM events GROUP BY 1),
-        |npd AS (SELECT day, count(*) AS n_new FROM fd GROUP BY 1)
-        |SELECT d.day, coalesce(npd.n_new, 0)::BIGINT AS n_new,
-        |  sum(coalesce(npd.n_new, 0)) OVER (ORDER BY d.day
-        |    ROWS UNBOUNDED PRECEDING)::BIGINT AS cum_users
-        |FROM days d LEFT JOIN npd USING (day)""".stripMargin,
-
-    "q172_growth" ->
-      """WITH uw AS (SELECT DISTINCT user_id AS k,
-        |    date_trunc('week', ts)::DATE AS week FROM events),
-        |lg AS (SELECT week,
-        |    lag(week) OVER (PARTITION BY k ORDER BY week) AS prev FROM uw),
-        |st AS (SELECT week, CASE WHEN prev IS NULL THEN 'new'
-        |    WHEN date_diff('day', prev, week) = 7 THEN 'retained'
-        |    ELSE 'resurrected' END AS s FROM lg),
-        |wk AS (SELECT week, count(*) AS n_active,
-        |    count(CASE WHEN s = 'new' THEN 1 END) AS n_new,
-        |    count(CASE WHEN s = 'retained' THEN 1 END) AS n_retained,
-        |    count(CASE WHEN s = 'resurrected' THEN 1 END) AS n_resurrected
-        |  FROM st GROUP BY 1),
-        |pa AS (SELECT week + 7 AS week, n_active AS prev_active FROM wk)
-        |SELECT wk.week, wk.n_active, wk.n_new, wk.n_retained,
-        |  wk.n_resurrected,
-        |  (coalesce(pa.prev_active, 0) - wk.n_retained)::BIGINT AS n_churned
-        |FROM wk LEFT JOIN pa USING (week)""".stripMargin,
-
-    "q173_hll_grouped" ->
-      // register max telescopes, so the per-day rollup the Spark side
-      // materializes is bit-identical to sketching each type directly —
-      // which is what this replay does (and what MAKES it a correct
-      // oracle for the rolled-up state).
-      """WITH h AS (SELECT event_type,
-        |    CAST('0x' || substr(md5('hll:' || user_id::VARCHAR), 1, 15)
-        |      AS BIGINT) AS h FROM events),
-        |b AS (SELECT event_type, h & 4095 AS bucket, h >> 12 AS r FROM h),
-        |regs AS (SELECT event_type, bucket,
-        |    max(CASE WHEN r = 0 THEN 49
-        |             ELSE bit_count(((r & -r) - 1)::BIGINT) + 1 END) AS reg
-        |  FROM b GROUP BY 1, 2),
-        |e AS (SELECT event_type, count(*)::BIGINT AS n_buckets,
-        |    (sum(1::BIGINT << (49 - reg))
-        |      + (4096 - count(*)) * (1::BIGINT << 49))::BIGINT AS z_scaled
-        |  FROM regs GROUP BY 1),
-        |est AS (SELECT event_type, n_buckets, z_scaled,
-        |    (0.7213 / (1.0 + 1.079 / 4096.0)) * 16777216.0 * 562949953421312.0
-        |      / z_scaled::DOUBLE AS raw,
-        |    (4096 - n_buckets)::BIGINT AS v FROM e),
-        |fin AS (SELECT event_type, n_buckets, z_scaled,
-        |    round(CASE WHEN raw <= 10240.0 AND v > 0
-        |               THEN 4096.0 * ln(4096.0 / v::DOUBLE) ELSE raw END, 4)
-        |      AS est_distinct FROM est),
-        |ex AS (SELECT event_type, count(DISTINCT user_id) AS exact_distinct
-        |  FROM events GROUP BY 1)
-        |SELECT f.event_type, f.n_buckets, f.z_scaled, f.est_distinct,
-        |  ex.exact_distinct,
-        |  (abs(f.est_distinct - ex.exact_distinct::DOUBLE)
-        |    <= 0.05 * ex.exact_distinct::DOUBLE) AS err_ok
-        |FROM fin f JOIN ex USING (event_type)""".stripMargin,
-
-    "q174_nation_gini" ->
-      // rank-form Gini, every sum HUGEINT-exact; the single double op is
-      // the final exact::DOUBLE / exact::DOUBLE both engines share
-      """WITH r AS (SELECT c.c_nationkey AS nk, o.o_custkey AS ck,
-        |    sum(floor(o.o_totalprice * 100 + 0.5::DOUBLE)::BIGINT) AS cents
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  GROUP BY 1, 2),
-        |w AS (SELECT nk, cents,
-        |    row_number() OVER (PARTITION BY nk ORDER BY cents, ck) AS i
-        |  FROM r),
-        |g AS (SELECT nk, count(*)::BIGINT AS n_cust,
-        |    sum(cents)::BIGINT AS sum_cents,
-        |    sum(i::HUGEINT * cents::HUGEINT) AS t FROM w GROUP BY 1)
-        |SELECT n.n_name AS nation, g.n_cust, g.sum_cents,
-        |  round((2::HUGEINT * g.t
-        |      - (g.n_cust + 1)::HUGEINT * g.sum_cents::HUGEINT)::DOUBLE
-        |    / (g.n_cust::DOUBLE * g.sum_cents::DOUBLE), 6) AS gini
-        |FROM g JOIN nation n ON g.nk = n.n_nationkey""".stripMargin,
-
-    "q175_ltv_triangle" ->
-      """WITH o AS (SELECT o_custkey AS ck,
-        |    date_trunc('month', o_orderdate::DATE) AS m,
-        |    floor(o_totalprice * 100 + 0.5::DOUBLE)::BIGINT AS v
-        |  FROM orders),
-        |c AS (SELECT ck, m, v, min(m) OVER (PARTITION BY ck) AS m0 FROM o),
-        |t AS (SELECT m0,
-        |    (date_part('year', m) - date_part('year', m0)) * 12
-        |      + (date_part('month', m) - date_part('month', m0)) AS age,
-        |    count(*)::BIGINT AS n_orders,
-        |    count(DISTINCT ck)::BIGINT AS n_active,
-        |    sum(v)::BIGINT AS cents
-        |  FROM c GROUP BY 1, 2)
-        |SELECT m0::VARCHAR AS cohort_month, age, n_orders, n_active, cents,
-        |  (sum(cents) OVER (PARTITION BY m0 ORDER BY age
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT
-        |    AS cum_cents
-        |FROM t""".stripMargin,
-
-    "q176_supplier_hhi" ->
-      """WITH r AS (SELECT s.s_nationkey AS nk, l.l_suppkey AS sk,
-        |    sum(floor(l.l_extendedprice * 100 + 0.5::DOUBLE)::BIGINT)
-        |      AS cents
-        |  FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |  GROUP BY 1, 2),
-        |g AS (SELECT nk, count(*)::BIGINT AS n_suppliers,
-        |    sum(cents)::BIGINT AS sum_cents,
-        |    sum(cents::HUGEINT * cents::HUGEINT) AS q FROM r GROUP BY 1)
-        |SELECT n.n_name AS nation, g.n_suppliers, g.sum_cents,
-        |  round(g.q::DOUBLE
-        |    / (g.sum_cents::DOUBLE * g.sum_cents::DOUBLE), 6) AS hhi
-        |FROM g JOIN nation n ON g.nk = n.n_nationkey""".stripMargin,
-
-    "q177_survival" ->
-      // product-limit survival via the snapped-ln integer fold (the
-      // sliceEntropy pattern): per-row ln floored to a 1e-6 grid, then a
-      // pure-BIGINT ordered cumulative sum
-      """WITH d AS (SELECT o_custkey, min(o_orderdate::DATE) AS f,
-        |    max(o_orderdate::DATE) AS l
-        |  FROM orders GROUP BY 1),
-        |mx AS (SELECT max(o_orderdate::DATE) AS mxd FROM orders),
-        |u AS (SELECT (l - f) AS t,
-        |    CASE WHEN l <= mxd - 90 THEN 1 ELSE 0 END AS ev FROM d, mx),
-        |g AS (SELECT t, sum(ev)::BIGINT AS d_ev, count(*)::BIGINT AS c
-        |  FROM u GROUP BY 1),
-        |r AS (SELECT t, d_ev, c,
-        |    (sum(c) OVER ()
-        |      - coalesce(sum(c) OVER (ORDER BY t
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    )::BIGINT AS n_risk
-        |  FROM g),
-        |s AS (SELECT t, n_risk, d_ev, c,
-        |    CASE WHEN d_ev = 0 OR d_ev >= n_risk THEN 0
-        |         ELSE floor(ln((n_risk - d_ev)::DOUBLE / n_risk::DOUBLE)
-        |                * 1e6 + 0.5)::BIGINT END AS term
-        |  FROM r),
-        |f AS (SELECT t, n_risk, d_ev, c,
-        |    sum(term) OVER (ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM s)
-        |SELECT t, n_risk, d_ev AS n_events, (c - d_ev)::BIGINT AS n_censored,
-        |  CASE WHEN d_ev >= n_risk THEN 0.0
-        |       ELSE round(exp(cum::DOUBLE / 1e6), 6) END AS survival
-        |FROM f""".stripMargin,
-
-    "q178_assortativity" ->
-      s"""WITH $basketCtes,
-        |deg AS (SELECT node, count(*)::BIGINT AS deg FROM (
-        |    SELECT src AS node FROM e UNION ALL SELECT dst FROM e) t
-        |  GROUP BY 1),
-        |x AS (SELECT du.deg AS du, dv.deg AS dv FROM e
-        |  JOIN deg du ON e.src = du.node JOIN deg dv ON e.dst = dv.node),
-        |s AS (SELECT 2 * count(*)::HUGEINT AS m,
-        |    2 * sum(du::HUGEINT * dv::HUGEINT) AS sxy,
-        |    sum(du::HUGEINT + dv::HUGEINT) AS sx,
-        |    sum(du::HUGEINT * du::HUGEINT + dv::HUGEINT * dv::HUGEINT)
-        |      AS sx2
-        |  FROM x)
-        |SELECT m::BIGINT AS m_pairs, sx::BIGINT AS sum_x,
-        |  sxy::BIGINT AS sum_xy, sx2::BIGINT AS sum_x2,
-        |  round((m * sxy - sx * sx)::DOUBLE
-        |    / (m * sx2 - sx * sx)::DOUBLE, 6) AS assortativity
-        |FROM s""".stripMargin,
-
-    "q179_brand_modularity" ->
-      s"""WITH $basketCtes,
-        |pm AS (SELECT p_partkey AS node, p_brand AS community FROM part),
-        |de AS (SELECT pu.community AS cu, pv.community AS cv FROM e
-        |  JOIN pm pu ON e.src = pu.node JOIN pm pv ON e.dst = pv.node),
-        |m AS (SELECT count(*)::BIGINT AS m FROM de),
-        |ew AS (SELECT cu AS community, count(*)::BIGINT AS e_within
-        |  FROM de WHERE cu = cv GROUP BY 1),
-        |ad AS (SELECT community, count(*)::BIGINT AS a_degree FROM (
-        |    SELECT cu AS community FROM de UNION ALL SELECT cv FROM de) t
-        |  GROUP BY 1),
-        |nn AS (SELECT community, count(*)::BIGINT AS n_nodes FROM pm
-        |  GROUP BY 1)
-        |SELECT nn.community, nn.n_nodes,
-        |  coalesce(ew.e_within, 0)::BIGINT AS e_within,
-        |  coalesce(ad.a_degree, 0)::BIGINT AS a_degree,
-        |  round((4::HUGEINT * m.m::HUGEINT
-        |      * coalesce(ew.e_within, 0)::HUGEINT
-        |      - coalesce(ad.a_degree, 0)::HUGEINT
-        |        * coalesce(ad.a_degree, 0)::HUGEINT)::DOUBLE
-        |    / (4::HUGEINT * m.m::HUGEINT * m.m::HUGEINT)::DOUBLE, 6)
-        |      AS dq
-        |FROM nn LEFT JOIN ad USING (community)
-        |  LEFT JOIN ew USING (community), m""".stripMargin,
-
-    "q180_burstiness" ->
-      // ties ordered by (epoch_us(ts), event_id) to match Spark's
-      // micros-truncated reader (q57 precedent)
-      """WITH g AS (SELECT event_type, event_id,
-        |    epoch_us(ts) - lag(epoch_us(ts), 1) OVER (
-        |      PARTITION BY event_type
-        |      ORDER BY epoch_us(ts), event_id) AS d
-        |  FROM events),
-        |a AS (SELECT event_type, count(*)::BIGINT AS n_gaps,
-        |    sum(d::HUGEINT) AS s, sum(d::HUGEINT * d::HUGEINT) AS q
-        |  FROM g WHERE d IS NOT NULL GROUP BY 1)
-        |SELECT event_type, n_gaps, s::BIGINT AS sum_micros,
-        |  round((sqrt((n_gaps::HUGEINT * q - s * s)::DOUBLE) - s::DOUBLE)
-        |    / (sqrt((n_gaps::HUGEINT * q - s * s)::DOUBLE) + s::DOUBLE), 6)
-        |    AS burstiness,
-        |  round(sqrt((n_gaps::HUGEINT * q - s * s)::DOUBLE) / s::DOUBLE, 6)
-        |    AS cv
-        |FROM a""".stripMargin,
-
-    "q181_benford" ->
-      // the Benford expectation is snapped to a 1e-9 grid on BOTH sides
-      // before the χ² arithmetic — the snap absorbs the one cross-engine
-      // ±ulp ln (margins of the 9 constants verified ≥1e-4 of the grid)
-      """WITH obs AS (SELECT
-        |    substr(floor(o_totalprice)::BIGINT::VARCHAR, 1, 1)::INT
-        |      AS digit,
-        |    count(*)::BIGINT AS n
-        |  FROM orders WHERE o_totalprice >= 1 GROUP BY 1),
-        |h AS (SELECT d.range::INT AS digit, coalesce(obs.n, 0)::BIGINT AS n
-        |  FROM range(1, 10) d LEFT JOIN obs ON d.range = obs.digit),
-        |t AS (SELECT sum(n)::BIGINT AS total FROM h),
-        |p AS (SELECT digit, n, total,
-        |    floor(ln(1 + 1.0 / digit::DOUBLE) / ln(10) * 1e9 + 0.5) / 1e9
-        |      AS pe
-        |  FROM h, t)
-        |SELECT digit, n, round(n::DOUBLE / total::DOUBLE, 6) AS share,
-        |  round(pe, 6) AS expected,
-        |  round((n::DOUBLE - total::DOUBLE * pe)
-        |      * (n::DOUBLE - total::DOUBLE * pe)
-        |    / (total::DOUBLE * pe), 6) AS chi2_term
-        |FROM p""".stripMargin,
-
-    "q182_lag_corr" ->
-      """WITH daily AS (SELECT ts::DATE AS day,
-        |    count(CASE WHEN event_type = 'view' THEN 1 END)::BIGINT AS a,
-        |    count(CASE WHEN event_type = 'purchase' THEN 1 END)::BIGINT
-        |      AS b
-        |  FROM events WHERE event_type IN ('view', 'purchase')
-        |  GROUP BY 1),
-        |l AS (SELECT range::INT AS lag FROM range(-7, 8)),
-        |j AS (SELECT l.lag, x.a AS xa, y.b AS yb
-        |  FROM daily x CROSS JOIN l JOIN daily y ON x.day + l.lag = y.day),
-        |g AS (SELECT lag, count(*)::BIGINT AS n_days,
-        |    sum(xa::HUGEINT) AS sa, sum(yb::HUGEINT) AS sb,
-        |    sum(xa::HUGEINT * yb::HUGEINT) AS sab,
-        |    sum(xa::HUGEINT * xa::HUGEINT) AS saa,
-        |    sum(yb::HUGEINT * yb::HUGEINT) AS sbb
-        |  FROM j GROUP BY 1)
-        |SELECT lag, n_days,
-        |  round((n_days::HUGEINT * sab - sa * sb)::DOUBLE
-        |    / (sqrt((n_days::HUGEINT * saa - sa * sa)::DOUBLE)
-        |      * sqrt((n_days::HUGEINT * sbb - sb * sb)::DOUBLE)), 6)
-        |    AS corr
-        |FROM g""".stripMargin,
-
-    "q185_kmv_intersect" ->
-      // full KMV replay: per-type bottom-k (k = Sketch.KmvK = 1024) of
-      // the kmv: hash space,
-      // pair union minima (set-dedup on h), Jaccard numerator, and the
-      // (k-1)*2^60/h_k union estimate — plus the exact intersections
-      """WITH ev AS (SELECT DISTINCT event_type AS key,
-        |    user_id::VARCHAR || ':' || (ts::DATE)::VARCHAR AS val
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |v AS (SELECT key,
-        |    CAST('0x' || substr(md5('kmv:' || val), 1, 15) AS BIGINT) AS h
-        |  FROM ev),
-        |st AS (SELECT key, h FROM (SELECT key, h,
-        |      row_number() OVER (PARTITION BY key ORDER BY h) AS rk
-        |    FROM (SELECT DISTINCT key, h FROM v) dv) t WHERE rk <= 1024),
-        |keys AS (SELECT DISTINCT key FROM st),
-        |pk AS (SELECT a.key AS ka, b.key AS kb FROM keys a, keys b
-        |  WHERE a.key < b.key),
-        |u AS (SELECT ka, kb, h, max(ia)::BIGINT AS ia,
-        |    max(ib)::BIGINT AS ib FROM (
-        |    SELECT pk.ka, pk.kb, st.h, 1 AS ia, 0 AS ib FROM st
-        |      JOIN pk ON st.key = pk.ka
-        |    UNION ALL
-        |    SELECT pk.ka, pk.kb, st.h, 0 AS ia, 1 AS ib FROM st
-        |      JOIN pk ON st.key = pk.kb) t GROUP BY 1, 2, 3),
-        |uk AS (SELECT * FROM (SELECT ka, kb, h, ia, ib,
-        |      row_number() OVER (PARTITION BY ka, kb ORDER BY h) AS rk
-        |    FROM u) t WHERE rk <= 1024),
-        |ag AS (SELECT ka, kb, count(*)::BIGINT AS n_union_minima,
-        |    max(h) AS hk, sum(ia * ib)::BIGINT AS n_both
-        |  FROM uk GROUP BY 1, 2),
-        |es AS (SELECT ka, kb, n_union_minima, n_both,
-        |    CASE WHEN n_union_minima < 1024 THEN n_union_minima::DOUBLE
-        |         ELSE 1023.0 * (1::BIGINT << 60)::DOUBLE / hk::DOUBLE
-        |    END AS eu FROM ag),
-        |ex AS (SELECT p.ka, p.kb, count(*)::BIGINT AS exact_intersect
-        |  FROM pk p JOIN ev x ON x.key = p.ka
-        |  JOIN ev y ON y.key = p.kb AND y.val = x.val GROUP BY 1, 2)
-        |SELECT e.ka, e.kb, e.n_union_minima, e.n_both,
-        |  round(e.eu, 4) AS est_union,
-        |  round(e.n_both::DOUBLE / e.n_union_minima::DOUBLE * e.eu, 4)
-        |    AS est_intersect,
-        |  ex.exact_intersect,
-        |  (abs(round(e.n_both::DOUBLE / e.n_union_minima::DOUBLE * e.eu, 4)
-        |      - ex.exact_intersect::DOUBLE)
-        |    <= 0.25 * ex.exact_intersect::DOUBLE) AS err_ok
-        |FROM es e JOIN ex ON e.ka = ex.ka AND e.kb = ex.kb""".stripMargin,
-
-    "q184_global_gini" ->
-      """WITH r AS (SELECT o_custkey AS ck,
-        |    sum(floor(o_totalprice * 100 + 0.5::DOUBLE)::BIGINT) AS cents
-        |  FROM orders GROUP BY 1),
-        |w AS (SELECT cents,
-        |    row_number() OVER (ORDER BY cents, ck) AS i FROM r),
-        |g AS (SELECT count(*)::BIGINT AS n_cust,
-        |    sum(cents)::BIGINT AS sum_cents,
-        |    sum(i::HUGEINT * cents::HUGEINT) AS t FROM w)
-        |SELECT n_cust AS n_units, sum_cents AS sum_value,
-        |  round((2::HUGEINT * t
-        |      - (n_cust + 1)::HUGEINT * sum_cents::HUGEINT)::DOUBLE
-        |    / (n_cust::DOUBLE * sum_cents::DOUBLE), 6) AS gini
-        |FROM g""".stripMargin,
-
-    "q183_ips_replay" ->
-      // deterministic argmax: rank by (mean reward DESC, action DESC) —
-      // the mean is one division of two exact integers, identical in
-      // both engines, so the rank (and thus the policy) replays exactly
-      """WITH log AS (SELECT user_id % 10 AS segment, event_type,
-        |    floor(value * 100 + 0.5::DOUBLE)::BIGINT AS r FROM events),
-        |cells AS (SELECT segment, event_type AS action,
-        |    count(*)::BIGINT AS n_cell, sum(r)::BIGINT AS r_cell
-        |  FROM log GROUP BY 1, 2),
-        |best AS (SELECT segment, action AS target_action,
-        |    n_cell AS n_matched, r_cell AS r_best,
-        |    row_number() OVER (PARTITION BY segment
-        |      ORDER BY r_cell::DOUBLE / n_cell::DOUBLE DESC,
-        |        action DESC) AS rk
-        |  FROM cells),
-        |segs AS (SELECT segment, sum(n_cell)::BIGINT AS n_log,
-        |    sum(r_cell)::BIGINT AS r_log FROM cells GROUP BY 1)
-        |SELECT s.segment, s.n_log, b.target_action, b.n_matched,
-        |  round(s.r_log::DOUBLE / s.n_log::DOUBLE, 6) AS v_logged,
-        |  round(5 * b.r_best::DOUBLE / s.n_log::DOUBLE, 6) AS v_ips
-        |FROM segs s JOIN best b ON s.segment = b.segment AND b.rk = 1""".stripMargin,
-
-    "q186_hits" -> {
-      // the same 5 RAW half-step pairs as GraphMetrics.hits, unrolled:
-      // auth round = join on src + dst-grouped fold, hub round = join
-      // on dst + src-grouped fold; ONE L1 normalization at the end
-      // (scaling commutes through the linear half-steps). Every chained
-      // CTE is MATERIALIZED: inlined, the recursive references
-      // re-expand the basket scan per round (DuckDB runs out of file
-      // handles before finishing)
-      val rounds = (1 to 5).map { i =>
-        s"""a$i AS MATERIALIZED (SELECT e.dst AS node, sum(e.weight * h.hub) AS auth
-           |  FROM e JOIN h${i - 1} h ON e.src = h.node GROUP BY 1),
-           |h$i AS MATERIALIZED (SELECT e.src AS node, sum(e.weight * a.auth) AS hub
-           |  FROM e JOIN a$i a ON e.dst = a.node GROUP BY 1)"""
-          .stripMargin
-      }.mkString(",\n")
-      s"""WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS okey, l_partkey AS item FROM lineitem),
-        |e AS MATERIALIZED (SELECT a.item AS src, b.item AS dst, count(*) AS weight
-        |      FROM items a JOIN items b USING (okey) WHERE a.item < b.item GROUP BY 1, 2),
-        |nodes AS MATERIALIZED (SELECT DISTINCT node FROM
-        |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-        |h0 AS (SELECT node, 1.0::DOUBLE AS hub FROM nodes),
-        |$rounds
-        |SELECT n.node,
-        |  round(coalesce(h5.hub, 0) / (SELECT sum(hub) FROM h5), 6) AS hub,
-        |  round(coalesce(a5.auth, 0) / (SELECT sum(auth) FROM a5), 6) AS auth
-        |FROM nodes n LEFT JOIN h5 ON n.node = h5.node
-        |LEFT JOIN a5 ON n.node = a5.node""".stripMargin
-    },
-
-    "q187_silhouette" ->
-      // prototypes round to 6 dp BEFORE distances, distances round to
-      // 6 dp BEFORE the a/b compare — mirrors ClusterEval exactly
-      """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        |p AS (SELECT label, i, avg(v[i]) AS m
-        |  FROM e CROSS JOIN (SELECT unnest(range(1,
-        |    (SELECT max(len(v)) FROM e) + 1)) AS i) idx
-        |  GROUP BY 1, 2),
-        |c AS (SELECT label, list(round(m, 6) ORDER BY i) AS cent FROM p GROUP BY 1),
-        |d AS (SELECT e.vec_id, e.label, c.label AS clabel,
-        |    round(sqrt(list_sum(list_transform(range(1, len(e.v) + 1),
-        |      i -> (e.v[i] - c.cent[i]) * (e.v[i] - c.cent[i])))), 6) AS d
-        |  FROM e CROSS JOIN c),
-        |per AS (SELECT vec_id, label,
-        |    max(CASE WHEN clabel = label THEN d END) AS a,
-        |    min(CASE WHEN clabel != label THEN d END) AS b
-        |  FROM d GROUP BY 1, 2),
-        |s AS (SELECT label, CASE WHEN greatest(a, b) = 0 THEN 0.0
-        |    ELSE (b - a) / greatest(a, b) END AS sil FROM per)
-        |SELECT label, count(*)::BIGINT AS n, round(avg(sil), 6) AS mean_sil
-        |FROM s GROUP BY 1""".stripMargin,
-
-    "q188_ild" ->
-      // the q08 top-10 lists re-derived, then pairwise within each list
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
-        |sc AS (SELECT q.query_id, e.vec_id AS item, ${cosSql("q.qv", "e.v")} AS sim
-        |       FROM q CROSS JOIN e WHERE q.query_id != e.vec_id),
-        |r AS (SELECT query_id, item,
-        |        row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, item) AS rnk
-        |      FROM sc),
-        |t AS (SELECT * FROM r WHERE rnk <= 10),
-        |pr AS (SELECT a.query_id,
-        |    1.0::DOUBLE - round(${cosSql("x.v", "y.v")}, 6) AS d
-        |  FROM t a JOIN t b ON a.query_id = b.query_id AND a.rnk < b.rnk
-        |  JOIN e x ON x.vec_id = a.item JOIN e y ON y.vec_id = b.item)
-        |SELECT query_id, count(*)::BIGINT AS n_pairs, round(avg(d), 6) AS ild
-        |FROM pr GROUP BY 1""".stripMargin,
-
-    "q189_conformal" ->
-      // integer order statistic: k = ceil((n_cal+1)*0.9) over snapped
-      // residual units — no float quantile interpolation on either side
-      """WITH b AS (SELECT l_quantity::BIGINT AS g,
-        |    floor(l_extendedprice * 100 + 0.5::DOUBLE)::BIGINT AS cents,
-        |    l_orderkey % 4 AS fold FROM lineitem),
-        |m AS (SELECT g, sum(cents)::DOUBLE / count(*)::DOUBLE AS yhat
-        |  FROM b WHERE fold <= 1 GROUP BY 1),
-        |cal AS (SELECT floor(abs(b.cents::DOUBLE - m.yhat) * 100 + 0.5::DOUBLE)::BIGINT AS ru
-        |  FROM b JOIN m USING (g) WHERE fold = 2),
-        |k AS (SELECT ((count(*) + 1) * 90 + 99) // 100 AS k FROM cal),
-        |byv AS (SELECT ru, count(*)::BIGINT AS c FROM cal GROUP BY 1),
-        |cum AS (SELECT ru, sum(c) OVER (ORDER BY ru) AS cum FROM byv),
-        |qh AS (SELECT min(ru) AS qhat_u FROM cum CROSS JOIN k WHERE cum >= k.k),
-        |test AS (SELECT b.g,
-        |    floor(abs(b.cents::DOUBLE - m.yhat) * 100 + 0.5::DOUBLE)::BIGINT AS ru
-        |  FROM b JOIN m USING (g) WHERE fold = 3)
-        |SELECT g AS qty_group, count(*)::BIGINT AS n_test,
-        |  count(CASE WHEN ru <= qh.qhat_u THEN 1 END)::BIGINT AS n_covered,
-        |  round(count(CASE WHEN ru <= qh.qhat_u THEN 1 END)::DOUBLE
-        |    / count(*)::DOUBLE, 6) AS coverage,
-        |  qh.qhat_u::DOUBLE / 100.0 AS qhat
-        |FROM test CROSS JOIN qh GROUP BY 1, qh.qhat_u""".stripMargin,
-
-    "q190_sprt" -> {
-      // the SAME 1e-9-snapped integer weights/thresholds the Spark side
-      // computes (identical Scala expressions → identical literals)
-      val w1 = math.round(math.log(0.20 / 0.15) * 1e9)
-      val w0 = math.round(math.log((1 - 0.20) / (1 - 0.15)) * 1e9)
-      val hi = math.round(math.log((1 - 0.05) / 0.05) * 1e9)
-      val lo = math.round(math.log(0.05 / (1 - 0.05)) * 1e9)
-      s"""WITH obs AS (SELECT user_id % 10 AS segment,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS x,
-        |    ts, event_id FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |r AS (SELECT segment, x,
-        |    count(*) OVER (PARTITION BY segment ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS step,
-        |    sum(CASE WHEN x = 1 THEN $w1 ELSE $w0 END)
-        |      OVER (PARTITION BY segment ORDER BY ts, event_id
-        |        ROWS UNBOUNDED PRECEDING) AS llr
-        |  FROM obs),
-        |cr AS (SELECT segment, step, llr FROM r
-        |  WHERE llr >= $hi OR llr <= $lo),
-        |fc AS (SELECT segment, min(step) AS fstep FROM cr GROUP BY 1),
-        |fl AS (SELECT r.segment, r.step, r.llr FROM r
-        |  JOIN fc ON r.segment = fc.segment AND r.step = fc.fstep),
-        |ls AS (SELECT segment, max(step) AS lstep FROM r GROUP BY 1),
-        |ll AS (SELECT r.segment, r.llr FROM r
-        |  JOIN ls ON r.segment = ls.segment AND r.step = ls.lstep),
-        |g AS (SELECT segment, count(*)::BIGINT AS n_obs,
-        |    sum(x)::BIGINT AS n_pos FROM obs GROUP BY 1)
-        |SELECT g.segment, g.n_obs, g.n_pos,
-        |  CASE WHEN fl.llr IS NULL THEN 'continue'
-        |       WHEN fl.llr >= $hi THEN 'accept_h1'
-        |       ELSE 'accept_h0' END AS decision,
-        |  fl.step AS first_cross_step,
-        |  round(ll.llr::DOUBLE / 1e9, 6) AS llr_final
-        |FROM g LEFT JOIN fl ON g.segment = fl.segment
-        |JOIN ll ON g.segment = ll.segment""".stripMargin
-    },
-
-    "q191_did" ->
-      """WITH j AS (SELECT (c.c_nationkey < 12) AS treated,
-        |    (o.o_orderdate >= DATE '1996-01-01') AS post,
-        |    floor(o.o_totalprice * 100 + 0.5::DOUBLE)::BIGINT AS cents
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
-        |cells AS (SELECT treated, post, count(*)::BIGINT AS n,
-        |    sum(cents)::BIGINT AS s FROM j GROUP BY 1, 2),
-        |cm AS (SELECT treated, post, n,
-        |    round(s::DOUBLE / n::DOUBLE, 6) AS mean_cents FROM cells),
-        |d AS (SELECT round(
-        |    max(CASE WHEN treated AND post THEN mean_cents END)
-        |  - max(CASE WHEN treated AND NOT post THEN mean_cents END)
-        |  - (max(CASE WHEN NOT treated AND post THEN mean_cents END)
-        |    - max(CASE WHEN NOT treated AND NOT post THEN mean_cents END)),
-        |    6) AS did FROM cm)
-        |SELECT treated, post, n, mean_cents, did FROM cm CROSS JOIN d""".stripMargin,
-
-    "q192_rfm" ->
-      """WITH per AS (SELECT o_custkey AS customer,
-        |    date_diff('day', max(o_orderdate), DATE '1998-08-02')::BIGINT AS recency_days,
-        |    count(*)::BIGINT AS frequency,
-        |    sum(floor(o_totalprice * 100 + 0.5::DOUBLE)::BIGINT)::BIGINT AS monetary_cents
-        |  FROM orders GROUP BY 1),
-        |s AS (SELECT customer, recency_days, frequency, monetary_cents,
-        |    ntile(5) OVER (ORDER BY recency_days DESC, customer)::BIGINT AS r_score,
-        |    ntile(5) OVER (ORDER BY frequency ASC, customer)::BIGINT AS f_score,
-        |    ntile(5) OVER (ORDER BY monetary_cents ASC, customer)::BIGINT AS m_score
-        |  FROM per)
-        |SELECT customer, recency_days, frequency, monetary_cents,
-        |  r_score, f_score, m_score,
-        |  CASE WHEN r_score >= 4 AND f_score >= 4 THEN 'champion'
-        |       WHEN r_score >= 4 THEN 'recent'
-        |       WHEN f_score >= 4 THEN 'loyal_lapsing'
-        |       WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
-        |       ELSE 'regular' END AS segment
-        |FROM s""".stripMargin,
-
-    "q193_twohop" ->
-      s"""WITH $basketCtes,
-        |deg AS (SELECT src AS mid, count(*) AS d FROM sym GROUP BY 1),
-        |lm AS (SELECT mid FROM deg WHERE d <= 200),
-        |l AS (SELECT s.src AS anchor, s.dst AS mid, s.weight AS w1 FROM sym s
-        |  JOIN lm ON s.dst = lm.mid
-        |  WHERE s.src IN (SELECT p_partkey FROM part WHERE p_partkey < 50)),
-        |r AS (SELECT src AS mid, dst AS rec, weight AS w2 FROM sym),
-        |p AS (SELECT anchor, rec, count(*)::BIGINT AS n_paths,
-        |    sum(w1 * w2)::BIGINT AS path_weight
-        |  FROM l JOIN r USING (mid) WHERE anchor != rec GROUP BY 1, 2),
-        |dj AS (SELECT src AS anchor, dst AS rec, true AS hd FROM sym),
-        |x AS (SELECT p.anchor, p.rec, p.n_paths, p.path_weight,
-        |    coalesce(dj.hd, false) AS has_direct,
-        |    row_number() OVER (PARTITION BY p.anchor
-        |      ORDER BY p.path_weight DESC, p.rec) AS rnk
-        |  FROM p LEFT JOIN dj ON p.anchor = dj.anchor AND p.rec = dj.rec)
-        |SELECT anchor, rec, n_paths, path_weight, has_direct, rnk
-        |FROM x WHERE rnk <= 10""".stripMargin,
-  )
+  val specs: Seq[QuerySpec] =
+    RelationalQueries.specs ++ GraphQueries.specs ++ RetrievalQueries.specs ++
+      HybridQueries.specs ++ DedupQueries.specs ++ TextQueries.specs ++
+      EventQueries.specs ++ LearningQueries.specs ++ CurationQueries.specs
+
+  private def dups(keys: Seq[String]): Seq[String] = keys.diff(keys.distinct)
+  require(dups(specs.map(_.name)).isEmpty,
+    s"query name declared twice: ${dups(specs.map(_.name)).mkString(", ")}")
+  // Bench's stdout line keys each query by qNN alone
+  require(dups(specs.map(_.shortKey)).isEmpty,
+    s"qNN short key shared: ${dups(specs.map(_.shortKey)).mkString(", ")}")
+
+  val byName: Map[String, QuerySpec] = specs.map(q => q.name -> q).toMap
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.run).toMap
+
+  val setups: Map[String, (SparkSession, String) => Unit] =
+    specs.flatMap(q => q.setup.map(q.name -> _)).toMap
+
+  val oracleSql: Map[String, String] = specs.map(q => q.name -> q.oracle).toMap
 }

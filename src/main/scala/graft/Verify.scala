@@ -1,7 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each declared query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. A query that
   * throws is logged and the rest still run; after every output and
   * oracle_sql.json are written, the failed names are printed and the
@@ -16,13 +16,13 @@ object Verify {
     // without paying for the whole map; oracle_sql.json then lists only
     // the queries that ran.
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
-    val failed = SparkEntry.queries.toSeq
+    val failed = SparkEntry.byName.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }
-      .flatMap { case (name, fn) =>
+      .flatMap { case (name, spec) =>
       val ok =
         try {
-          SparkEntry.setups.get(name).foreach(_(spark, sfDir))
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          spec.setup.foreach(_(spark, sfDir))
+          spec.run(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           true
         }

@@ -91,22 +91,7 @@ object TopKAggregate {
     * that value's doc for the justification and the cross-operator
     * blast radius. */
   def perGroupTopK(df: DataFrame, group: String, id: String, ord: String,
-                   k: Int): DataFrame =
-    perGroupTopKCarry(df, group, id, ord, k, Seq.empty)
-
-  /** [[perGroupTopK]] with extra `carry` columns riding through the heap
-    * struct. Carry fields sit BELOW the (ord, -id) tie encoding in the
-    * struct's lexicographic comparator, and `id` is unique within a
-    * group by the operators' contracts, so they never decide a
-    * comparison — cargo, not keys (they must still be of orderable
-    * types for CollectTopK's type check; numerics/strings are). Use for
-    * per-row payloads whose re-attachment would otherwise need a join
-    * against the candidate-sized frame (e.g. userNeighbors' `shared`
-    * count); per-GROUP payloads should still re-attach by joining the
-    * k-sized output. Same numeric-id contract and session-conf side
-    * effect as [[perGroupTopK]]. */
-  def perGroupTopKCarry(df: DataFrame, group: String, id: String,
-                        ord: String, k: Int, carry: Seq[String]): DataFrame = {
+                   k: Int): DataFrame = {
     // Id contract (ADVICE r12): numeric is CHECKED (a non-numeric id
     // negates to NULL under non-ANSI mode — silent corruption); the two
     // residual hazards the type check cannot see are part of the
@@ -132,14 +117,11 @@ object TopKAggregate {
     // every struct field gets a reserved name: a caller's ord column
     // literally named "nid" would otherwise collide with the tie field
     // and resolve the extraction ambiguously (round-11 ADVICE)
-    val fields = struct((Seq(col(ord).as("__o"), (-col(id)).as("__nid")) ++
-      carry.map(c => col(c).as(s"__c_$c"))): _*)
+    val fields = struct(col(ord).as("__o"), (-col(id)).as("__nid"))
     df.groupBy(group)
       .agg(collectTopK(fields, k, reverse = false).as("__tk"))
       .select(col(group), posexplode(col("__tk")).as(Seq("__p", "__e")))
-      .select((Seq(col(group), (-col("__e.__nid")).as(id),
-        col("__e.__o").as(ord)) ++
-        carry.map(c => col(s"__e.__c_$c").as(c)) :+
-        (col("__p") + 1).cast("int").as("rnk")): _*)
+      .select(col(group), (-col("__e.__nid")).as(id), col("__e.__o").as(ord),
+        (col("__p") + 1).cast("int").as("rnk"))
   }
 }

@@ -68,7 +68,7 @@ class BenchChunkSpec extends AnyFunSuite {
     val chunks = Bench.topoChunks(all, 6)
     for (c <- chunks) {
       val childOrder = Bench.resolveNames(Some(c.mkString(",")))
-      val h = childOrder.filter(Bench.heavySet.contains)
+      val h = childOrder.filter(Bench.heavyNames.contains)
       assert(h.size <= 1, s"chunk $childOrder has ${h.size} heavies")
       if (h.nonEmpty)
         assert(childOrder.last == h.head,

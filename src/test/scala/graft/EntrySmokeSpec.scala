@@ -22,13 +22,22 @@ class EntrySmokeSpec extends SparkTestBase {
     assert(inv.count() == 0)
   }
 
-  test("queries and oracles are in 1:1 correspondence; every plan analyzes") {
-    val qs = SparkEntry.queries
-    // round-1 verdict: a query without an oracle is untested surface —
-    // the sets must be EQUAL, not merely consistent.
-    assert(SparkEntry.oracleSql.keySet == qs.keySet,
-      s"asymmetric: ${SparkEntry.oracleSql.keySet.diff(qs.keySet)} / ${qs.keySet.diff(SparkEntry.oracleSql.keySet)}")
-    qs.foreach { case (_, fn) => fn(spark, sf()).schema } // analyzes the plan
+  test("registry: names and qNN keys unique; every plan analyzes") {
+    // every QuerySpec carries its oracle, so the 1:1 query/oracle
+    // correspondence is the type's; what is left to check is the keys
+    val specs = SparkEntry.specs
+    val names = specs.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"declared twice: ${names.diff(names.distinct)}")
+    val malformed = names.filterNot(_.matches("q\\d+_[a-z0-9_]+"))
+    assert(malformed.isEmpty, s"malformed names: $malformed")
+    // Bench's stdout line keys each row by qNN alone
+    val keys = specs.map(_.shortKey)
+    assert(keys.distinct.size == keys.size, s"qNN shared: ${keys.diff(keys.distinct)}")
+    assert(specs.forall(_.oracle.trim.nonEmpty))
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.keySet == names.toSet)
+    specs.foreach(_.run(spark, sf()).schema) // analyzes the plan
   }
 
   test("no declared query surfaces a DECIMAL output column") {

@@ -9,6 +9,14 @@ import org.apache.spark.sql.functions._
   * answer from the persisted artifact. */
 class IvfIndexStoreSpec extends SparkTestBase {
 
+  /** Deletes a test's private corpus and the stores built under it. */
+  private def deleteTrees(paths: Seq[String]): Unit =
+    paths.map(new java.io.File(_)).filter(_.exists).foreach { f =>
+      java.nio.file.Files.walk(f.toPath)
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    }
+
   test("ensure is idempotent; full-probe serve from disk equals exact topK") {
     val d = sf()
     IvfIndexStore.ensure(spark, d)
@@ -38,27 +46,33 @@ class IvfIndexStoreSpec extends SparkTestBase {
       m.clusterCenters.map(_.toArray.toSeq).toSeq
     def books(d: String) = PqIndexStore.loadModel(spark, d).codebooks.map(_.map(_.toSeq).toSeq).toSeq
     val d = java.nio.file.Files.createTempDirectory("ivf-regen").toString
-    val embPath = s"$d/embeddings.parquet"
-    val raw = Tables.embeddingsRaw(spark, sf())
-    raw.where(col("vec_id") < 200).write.parquet(embPath)
-    IvfIndexStore.ensure(spark, d)
-    val first = IvfIndexStore.loadModel(d)
-    val firstBooks = books(d)
-    val firstRoot = IvfIndexStore.root(d)
+    val roots = scala.collection.mutable.ArrayBuffer[String]()
+    try {
+      val embPath = s"$d/embeddings.parquet"
+      val raw = Tables.embeddingsRaw(spark, sf())
+      raw.where(col("vec_id") < 200).write.parquet(embPath)
+      val firstRoot = IvfIndexStore.root(d)
+      roots += firstRoot
+      IvfIndexStore.ensure(spark, d)
+      val first = IvfIndexStore.loadModel(d)
+      val firstBooks = books(d)
 
-    raw.where(col("vec_id") >= 200).write.mode("overwrite").parquet(embPath)
-    val src = new java.io.File(embPath)
-    src.setLastModified(src.lastModified() + 60000L) // a new fingerprint even within one clock tick
-    assert(IvfIndexStore.root(d) != firstRoot)
-    IvfIndexStore.ensure(spark, d)
+      raw.where(col("vec_id") >= 200).write.mode("overwrite").parquet(embPath)
+      val src = new java.io.File(embPath)
+      src.setLastModified(src.lastModified() + 60000L) // a new fingerprint even within one clock tick
+      val rebuiltRoot = IvfIndexStore.root(d)
+      roots += rebuiltRoot
+      assert(rebuiltRoot != firstRoot)
+      IvfIndexStore.ensure(spark, d)
 
-    val rebuilt = org.apache.spark.ml.clustering.KMeansModel
-      .load(s"${IvfIndexStore.root(d)}/kmeans")
-    val servesRebuilt = centers(IvfIndexStore.loadModel(d)) == centers(rebuilt)
-    assert(centers(rebuilt) != centers(first), "the regenerated corpus fit the same centers")
-    assert(servesRebuilt, "loadModel kept the quantizer of the replaced corpus")
-    val booksMoved = books(d) != firstBooks
-    assert(booksMoved, "PqIndexStore.loadModel kept the codebooks of the replaced corpus")
+      val rebuilt = org.apache.spark.ml.clustering.KMeansModel
+        .load(s"$rebuiltRoot/kmeans")
+      val servesRebuilt = centers(IvfIndexStore.loadModel(d)) == centers(rebuilt)
+      assert(centers(rebuilt) != centers(first), "the regenerated corpus fit the same centers")
+      assert(servesRebuilt, "loadModel kept the quantizer of the replaced corpus")
+      val booksMoved = books(d) != firstBooks
+      assert(booksMoved, "PqIndexStore.loadModel kept the codebooks of the replaced corpus")
+    } finally deleteTrees(d +: roots.toSeq)
   }
 
   test("upsert rows are visible to a post-upsert load") {
@@ -66,11 +80,14 @@ class IvfIndexStoreSpec extends SparkTestBase {
     IvfIndexStore.ensure(spark, d)
     val model = IvfIndexStore.loadModel(d)
     val emb = Tables.embeddings(spark, d).select("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("ivf-upsert").toString + "/index"
-    Ivf.writeIndex(Ivf.assign(model, emb.where(col("vec_id") < 100)), path)
-    assert(Ivf.loadIndex(spark, path).count() == 100)
-    Ivf.upsertIndex(model, emb.where(col("vec_id") >= 100 && col("vec_id") < 150), path)
-    assert(Ivf.loadIndex(spark, path).count() == 150)
+    val dir = java.nio.file.Files.createTempDirectory("ivf-upsert").toString
+    val path = dir + "/index"
+    try {
+      Ivf.writeIndex(Ivf.assign(model, emb.where(col("vec_id") < 100)), path)
+      assert(Ivf.loadIndex(spark, path).count() == 100)
+      Ivf.upsertIndex(model, emb.where(col("vec_id") >= 100 && col("vec_id") < 150), path)
+      assert(Ivf.loadIndex(spark, path).count() == 150)
+    } finally deleteTrees(Seq(dir))
   }
 
   test("an upsert costs the next serve no extra job; the upserted copy is served") {
@@ -83,6 +100,7 @@ class IvfIndexStoreSpec extends SparkTestBase {
     // shared sf store.
     val d = java.nio.file.Files.createTempDirectory("ivf-serve-upsert").toString
     Tables.embeddingsRaw(spark, sf()).write.parquet(s"$d/embeddings.parquet")
+    val root = IvfIndexStore.root(d)
     IvfIndexStore.ensure(spark, d)
     val emb = Tables.embeddings(spark, d).select("vec_id", "embedding")
     // a query whose nearest other vector is clearly not a duplicate, so
@@ -122,6 +140,9 @@ class IvfIndexStoreSpec extends SparkTestBase {
       assert(after == before, s"the post-upsert serve ran $after jobs, the one before it $before")
       val top = rows.find(_.getAs[Int]("rnk") == 1).map(_.getAs[Long]("vec_id"))
       assert(top.contains(copyId), s"the upserted copy is not the top row: ${rows.toSeq}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      deleteTrees(Seq(d, root))
+    }
   }
 }

@@ -10,34 +10,35 @@ so min-over-repeats converges on plan cost from above).
 Usage:
   tools/isolated_bench.py [-o out.json] [--sf DIR] [query ...]
 
-With no queries named, runs the harness's heavy list, parsed from
-graft.Bench.heavyQueries in Bench.scala at startup — one authoritative
-copy, so the fork packer and this script cannot disagree in either
-direction (a stale hand mirror silently skipped queries ADDED to the
-Scala list).
+With no queries named, runs the harness's heavy list: the QuerySpecs
+declared with `heavy = true` under src/main/scala/graft/queries/, in
+numeric qNN order — the same flag graft.Bench's fork packer reads, so
+the two cannot disagree in either direction (a stale hand mirror
+silently skipped queries ADDED to the Scala side).
 
 Driver-side tooling (python3), like tools/compare.py — not a repo dep.
 """
 import argparse, json, os, re, subprocess, sys, time
 
-BENCH_SCALA = os.path.join(os.path.dirname(__file__), "..",
-                           "src", "main", "scala", "graft", "Bench.scala")
+QUERIES_DIR = os.path.join(os.path.dirname(__file__), "..",
+                           "src", "main", "scala", "graft", "queries")
 
 def heavy_list():
-    """Parse graft.Bench.heavyQueries out of Bench.scala — the single
-    authoritative copy. A hand-kept mirror here only detected drift in
-    one direction (a Scala-side rename produced a missing-timing-line
-    error, but a Scala-side ADDITION was silently never benched)."""
-    src = open(BENCH_SCALA).read()
-    # Anchored to the heavySet declaration that immediately follows the
-    # Seq — a non-greedy '\)' alone stops at the FIRST ')' and would
-    # silently truncate the list if a comment or entry ever contains one
-    # (the len>=20 assert can't catch truncation past 20).
-    m = re.search(r"heavyQueries\s*=\s*Seq\((.*?)\)\s*\n\s*"
-                  r"private\[graft\] val heavySet", src, re.S)
-    assert m, "heavyQueries block not found (heavySet anchor moved?)"
-    names = re.findall(r'"(q\w+)"', m.group(1))
-    assert len(names) >= 20, f"heavyQueries parse looks wrong: {names}"
+    """Names of the `heavy = true` QuerySpecs, ordered by qNN. Each spec
+    opens with `QuerySpec("qNN_name",` and ends before the next one, so
+    a spec is heavy when its own span carries `heavy = true`."""
+    names = []
+    for f in sorted(os.listdir(QUERIES_DIR)):
+        if not f.endswith(".scala"):
+            continue
+        src = open(os.path.join(QUERIES_DIR, f), encoding="utf-8").read()
+        starts = list(re.finditer(r'QuerySpec\("(q\d+_\w+)"', src))
+        for k, m in enumerate(starts):
+            end = starts[k + 1].start() if k + 1 < len(starts) else len(src)
+            if re.search(r"\bheavy\s*=\s*true\b", src[m.end():end]):
+                names.append(m.group(1))
+    names.sort(key=lambda n: int(re.match(r"q(\d+)_", n).group(1)))
+    assert len(names) >= 20, f"heavy QuerySpec parse looks wrong: {names}"
     return names
 
 def load1():
