@@ -322,6 +322,12 @@ object Bench {
     }
   }
 
+  /** Writes one artifact; on failure, the line to report (a silent failure
+    * would leave the last run's file looking fresh). */
+  private[graft] def writeArtifact(file: String, payload: String): Option[String] =
+    try { Files.writeString(Paths.get(file), payload); None }
+    catch { case NonFatal(e) => Some(s"[bench] could not write $file: $e") }
+
   private def deleteTree(dir: java.io.File): Unit =
     Files.walk(dir.toPath).sorted(java.util.Comparator.reverseOrder())
       .forEach(p => Files.deleteIfExists(p))
@@ -469,25 +475,25 @@ object Bench {
       if (chunkLoads.isEmpty) ""
       else chunkLoads.map { case (k, v) => "\"" + k + "\":" + r2(v) }
         .mkString(""","load1_at_chunk_start":{""", ",", "}")
-    if (!sys.env.contains("SPARK_GRAFT_NO_ARTIFACT") && !subsetInRepo) {
-      val payload =
-        s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsFull,"sf":"$sfDir"$ambFull$failedPart$loadPart}""" + "\n"
-      // BENCH_FULL.json stays (the forked-child result channel and the
-      // historical artifact name); the core-count-keyed copy exists so
-      // a multi-config driver session (32c then 8c run in the same cwd,
-      // VERDICT r14 item 5) stops clobbering its own per-query ambient
-      // evidence — both runs' artifacts survive side by side.
-      val cpusKey = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      for (f <- Seq("BENCH_FULL.json", s"BENCH_FULL_c$cpusKey.json"))
-        try Files.writeString(Paths.get(f), payload)
-        catch { case NonFatal(_) => () }
-    }
+    val writeFailures =
+      if (sys.env.contains("SPARK_GRAFT_NO_ARTIFACT") || subsetInRepo) Nil
+      else {
+        val payload =
+          s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsFull,"sf":"$sfDir"$ambFull$failedPart$loadPart}""" + "\n"
+        // BENCH_FULL.json stays (the forked-child result channel and the
+        // historical artifact name); the core-count-keyed copy exists so
+        // a multi-config session (32c then 8c run in the same cwd,
+        // VERDICT r14 item 5) stops clobbering its own per-query ambient
+        // evidence — both runs' artifacts survive side by side.
+        val cpusKey = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+        Seq("BENCH_FULL.json", s"BENCH_FULL_c$cpusKey.json").flatMap(writeArtifact(_, payload))
+      }
+    writeFailures.foreach(System.err.println)
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsShort,"sf":"$sfDir"}""")
     try SparkSession.getActiveSession.foreach(_.stop()) catch { case NonFatal(_) => () }
-    if (failed.nonEmpty) {
+    if (failed.nonEmpty)
       System.err.println(s"[bench] ${failed.size} FAILED: " +
         failed.map(q => s"${q.name} (${q.failure.get})").mkString(", "))
-      sys.exit(1)
-    }
+    if (failed.nonEmpty || writeFailures.nonEmpty) sys.exit(1)
   }
 }

@@ -70,24 +70,17 @@ object AlsCf {
         (col("__ra") < lit(margin) * col("__rb")).as("als_beats_baseline"))
   }
 
-  /** Build-once/serve-many factor store (the IvfIndexStore discipline
+  /** Build-once/serve-many factor store ([[graft.sources.BuildOnce]]
     * for the factorization arm): train ALS once per corpus dir, persist
     * user/item factor tables, serve top-N forever after without
     * touching the trainer. */
   object Store {
     private val LayoutVersion = "v1"
 
-    def root(sfDir: String): String = {
-      val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-      // fingerprint BOTH inputs of ratings(): a regenerated orders file
-      // with an untouched lineitem must invalidate the persisted factors
-      val fp = Seq("lineitem", "orders").map { t =>
-        val f = new java.io.File(s"$sfDir/$t.parquet")
-        s"${f.length()}-${f.lastModified()}"
-      }.mkString("-")
-      s"${System.getProperty("java.io.tmpdir")}/graft-als-$LayoutVersion-$tag-$fp"
-    }
-    private def donePath(sfDir: String) = s"${root(sfDir)}/_BUILT"
+    // fingerprint BOTH inputs of ratings(): a regenerated orders file
+    // with an untouched lineitem must invalidate the persisted factors
+    def root(sfDir: String): String = graft.sources.BuildOnce.root(
+      s"als-$LayoutVersion", sfDir, Seq("lineitem", "orders"))
 
     /** The q114 interaction set + planted rating over a corpus dir. */
     def ratings(spark: org.apache.spark.sql.SparkSession,
@@ -102,21 +95,20 @@ object AlsCf {
     }
 
     def ensure(spark: org.apache.spark.sql.SparkSession,
-               sfDir: String): Unit = synchronized {
-      if (new java.io.File(donePath(sfDir)).exists()) return
-      val r = ratings(spark, sfDir)
-        .select(col("user").cast("int").as("user"),
-          col("item").cast("int").as("item"),
-          col("rating").cast("float").as("rating"))
-      val model = new ALS().setRank(8).setMaxIter(8).setRegParam(0.1)
-        .setSeed(42L).setUserCol("user").setItemCol("item")
-        .setRatingCol("rating").fit(r)
-      model.userFactors.write.mode("overwrite")
-        .parquet(s"${root(sfDir)}/user_factors")
-      model.itemFactors.write.mode("overwrite")
-        .parquet(s"${root(sfDir)}/item_factors")
-      new java.io.File(donePath(sfDir)).createNewFile()
-    }
+               sfDir: String): Unit =
+      graft.sources.BuildOnce.ensure(root(sfDir)) {
+        val r = ratings(spark, sfDir)
+          .select(col("user").cast("int").as("user"),
+            col("item").cast("int").as("item"),
+            col("rating").cast("float").as("rating"))
+        val model = new ALS().setRank(8).setMaxIter(8).setRegParam(0.1)
+          .setSeed(42L).setUserCol("user").setItemCol("item")
+          .setRatingCol("rating").fit(r)
+        model.userFactors.write.mode("overwrite")
+          .parquet(s"${root(sfDir)}/user_factors")
+        model.itemFactors.write.mode("overwrite")
+          .parquet(s"${root(sfDir)}/item_factors")
+      }
 
     // ensure-on-read (the IvfIndexStore.indexFrame discipline): plan
     // analysis must never depend on a setup having run first

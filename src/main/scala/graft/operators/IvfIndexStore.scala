@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.BuildOnce
 import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -10,11 +11,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * serve side. Round 1 benched rebuild-per-query, which is not the
   * baseline's contract).
   *
-  * `ensure` is idempotent: the KMeans quantizer and the cell-partitioned
-  * parquet index are written exactly once per (scale-factor dir, layout
-  * version); every subsequent call — and every serve — only reads. The
-  * layout version is part of the path so a schema change never collides
-  * with a stale artifact from an earlier code state.
+  * `ensure` is idempotent ([[graft.sources.BuildOnce]]): the KMeans
+  * quantizer and the cell-partitioned parquet index are written exactly
+  * once per (scale-factor dir, layout version, embeddings fingerprint);
+  * every subsequent call — and every serve — only reads.
   */
 object IvfIndexStore {
 
@@ -26,27 +26,17 @@ object IvfIndexStore {
     * cost a measured 9× on the 10× defaults-path serve). */
   private val LayoutVersion = "v3"
 
-  /** Floor for the adaptive cell count (what `NCells = 16` used to pin
-    * for every corpus size). The actual fit-time count is
-    * `Ivf.nCellsFor(|embeddings|)` = max(16, ⌈√N⌉). */
-  val MinCells = 16
   val Seed = 42L
 
-  def root(sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    // The source fingerprint (size + mtime of the embeddings parquet) is
-    // part of the path: if the corpus is regenerated between sessions,
-    // the stale artifact is simply never found and ensure() rebuilds.
-    val src = new java.io.File(s"$sfDir/embeddings.parquet")
-    val fp = s"${src.length()}-${src.lastModified()}"
-    s"${System.getProperty("java.io.tmpdir")}/graft-ivf-$LayoutVersion-$tag-$fp"
-  }
+  /** Fingerprints the embeddings: a regenerated corpus is simply never
+    * found and ensure() rebuilds. */
+  def root(sfDir: String): String =
+    BuildOnce.root(s"ivf-$LayoutVersion", sfDir, Seq("embeddings"))
 
   private def indexPath(sfDir: String) = s"${root(sfDir)}/index"
   private def modelPath(sfDir: String) = s"${root(sfDir)}/kmeans"
-  private def donePath(sfDir: String) = s"${root(sfDir)}/_BUILT"
 
-  def isBuilt(sfDir: String): Boolean = new java.io.File(donePath(sfDir)).exists()
+  def isBuilt(sfDir: String): Boolean = BuildOnce.isBuilt(root(sfDir))
 
   /** Train the quantizer, assign cells, write the partitioned index +
     * the model. No-op when already built (the build-once contract).
@@ -54,14 +44,13 @@ object IvfIndexStore {
     * (`Ivf.nCellsFor`): the one extra `count()` is a parquet-metadata
     * read paid once per build, and it is what keeps the per-query probed
     * volume ∝ √N instead of ∝ N as the index grows. */
-  def ensure(spark: SparkSession, sfDir: String): Unit = synchronized {
-    if (isBuilt(sfDir)) return
-    val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val model = Ivf.fit(emb, Ivf.nCellsFor(emb.count()), Seed)
-    Ivf.writeIndex(Ivf.assign(model, emb), indexPath(sfDir))
-    model.write.overwrite().save(modelPath(sfDir))
-    new java.io.File(donePath(sfDir)).createNewFile()
-  }
+  def ensure(spark: SparkSession, sfDir: String): Unit =
+    BuildOnce.ensure(root(sfDir)) {
+      val emb = graft.sources.Tables.embeddings(spark, sfDir)
+      val model = Ivf.fit(emb, Ivf.nCellsFor(emb.count()), Seed)
+      Ivf.writeIndex(Ivf.assign(model, emb), indexPath(sfDir))
+      model.write.overwrite().save(modelPath(sfDir))
+    }
 
   /** The ACTUAL cell count of the persisted index (builds on first
     * touch). `serve(nProbe = nCells)` is the exact scan. */

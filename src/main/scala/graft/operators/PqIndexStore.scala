@@ -26,27 +26,22 @@ object PqIndexStore {
     s"${IvfIndexStore.root(sfDir)}/$LayoutVersion"
   private[graft] def codesPath(sfDir: String) = s"${root(sfDir)}/codes"
   private def booksPath(sfDir: String) = s"${root(sfDir)}/books"
-  private def donePath(sfDir: String) = s"${root(sfDir)}/_BUILT"
 
   /** Fit codebooks on the corpus, encode the (cell-assigned) IVF index,
-    * persist both. No-op when already built. (The _BUILT marker +
-    * `synchronized` guard are single-JVM/local-FS scoped — the
-    * build-coordination story for a shared cluster FS would be a
-    * Hadoop-FS atomic-rename marker, out of scope for local mode.) */
-  def ensure(spark: SparkSession, sfDir: String): Unit = synchronized {
-    if (new java.io.File(donePath(sfDir)).exists()) return
-    IvfIndexStore.ensure(spark, sfDir)
-    val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val pq = Pq.fit(emb, Dim, M, Ksub, Seed)
-    import spark.implicits._
-    pq.codebooks.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (center, c) => (j, c, center.toSeq) }
-    }.toSeq.toDF("j", "c", "center")
-      .coalesce(1).write.mode("overwrite").parquet(booksPath(sfDir))
-    Ivf.writeIndex(Pq.encode(pq, IvfIndexStore.indexFrame(spark, sfDir)
-        .select("vec_id", "embedding", "cell")), codesPath(sfDir))
-    new java.io.File(donePath(sfDir)).createNewFile()
-  }
+    * persist both. No-op when already built ([[graft.sources.BuildOnce]]
+    * under the IVF store's root, whose build this one nests). */
+  def ensure(spark: SparkSession, sfDir: String): Unit =
+    graft.sources.BuildOnce.ensure(root(sfDir)) {
+      val emb = graft.sources.Tables.embeddings(spark, sfDir)
+      val pq = Pq.fit(emb, Dim, M, Ksub, Seed)
+      import spark.implicits._
+      pq.codebooks.zipWithIndex.flatMap { case (book, j) =>
+        book.zipWithIndex.map { case (center, c) => (j, c, center.toSeq) }
+      }.toSeq.toDF("j", "c", "center")
+        .coalesce(1).write.mode("overwrite").parquet(booksPath(sfDir))
+      Ivf.writeIndex(Pq.encode(pq, IvfIndexStore.indexFrame(spark, sfDir)
+          .select("vec_id", "embedding", "cell")), codesPath(sfDir))
+    }
 
   private val modelCache =
     scala.collection.concurrent.TrieMap.empty[String, Pq.PqModel]

@@ -2,7 +2,7 @@ package graft
 package queries
 
 import graft.operators._
-import graft.sources.{AmazonMetaParser, Tables}
+import graft.sources.{AmazonMetaParser, BuildOnce, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -165,26 +165,21 @@ private[graft] object QueryHelpers {
     f.getAbsolutePath
   }
 
-  /** Build-once half-corpus index + upserted other half for q66
-    * (idempotent via marker file; the root path already fingerprints the
-    * source corpus, so a regenerated corpus rebuilds). The overwrite-
-    * then-append pair is atomic enough for a rerun: the overwrite wipes
-    * the path, so a repeated build never double-appends. */
-  def ensureUpsertedIndex(s: SparkSession, d: String): String =
-    synchronized {
+  /** Build-once ([[BuildOnce]]) half-corpus index + upserted other half
+    * for q66, under the IVF store's root. The overwrite-then-append pair
+    * is safe to rerun: the overwrite wipes the path, so a repeated build
+    * never double-appends. */
+  def ensureUpsertedIndex(s: SparkSession, d: String): String = {
+    val root = IvfIndexStore.root(d) + "/upsert-check"
+    BuildOnce.ensure(root) {
       IvfIndexStore.ensure(s, d)
-      val root = IvfIndexStore.root(d) + "/upsert-check"
-      val idx = s"$root/index"
-      val done = new java.io.File(s"$root/_BUILT")
-      if (!done.exists()) {
-        val model = IvfIndexStore.loadModel(d)
-        val emb = Tables.embeddings(s, d)
-        Ivf.writeIndex(Ivf.assign(model, emb.where(col("vec_id") % 2 === 0)), idx)
-        Ivf.upsertIndex(model, emb.where(col("vec_id") % 2 === 1), idx)
-        done.createNewFile()
-      }
-      idx
+      val model = IvfIndexStore.loadModel(d)
+      val emb = Tables.embeddings(s, d)
+      Ivf.writeIndex(Ivf.assign(model, emb.where(col("vec_id") % 2 === 0)), s"$root/index")
+      Ivf.upsertIndex(model, emb.where(col("vec_id") % 2 === 1), s"$root/index")
     }
+    s"$root/index"
+  }
 
   /** The e2 corpus as a parsed product DataFrame. */
   def e2Products(s: SparkSession): DataFrame = {

@@ -22,62 +22,52 @@ import org.apache.spark.sql.functions._
   * per-query shuffles, the same trade [[graft.operators.IvfIndexStore]]
   * makes for vectors.
   *
-  * Artifacts are external tables under the JVM tmpdir, fingerprinted by
-  * the source parquet (size + mtime) like the index stores: regenerated
-  * testdata never hits a stale layout. Registration is idempotent per
-  * session — a fresh JVM re-attaches the existing bucketed files via
-  * `CREATE TABLE … CLUSTERED BY … LOCATION` without rewriting anything
-  * (the build-once / serve-many contract).
+  * Artifacts are external tables in one [[BuildOnce]] store under the JVM
+  * tmpdir, fingerprinted by both source parquets like the index stores:
+  * regenerated testdata never hits a stale layout. Registration is
+  * idempotent per session — a fresh JVM re-attaches the existing
+  * bucketed files via `CREATE TABLE … CLUSTERED BY … LOCATION` without
+  * rewriting anything (the build-once / serve-many contract).
   */
 object BucketedStore {
 
   val Buckets = 8
-  private val LayoutVersion = "bkt-v1"
+  private val LayoutVersion = "v1"
+  private val Keys = Seq("lineitem" -> "l_orderkey", "orders" -> "o_orderkey")
 
-  private def tag(sfDir: String): String = {
-    val t = sfDir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    val src = new java.io.File(s"$sfDir/orders.parquet")
-    s"${t}_${src.length()}_${src.lastModified()}"
-  }
+  // fingerprint BOTH inputs: a regenerated lineitem with an untouched
+  // orders file must not keep serving the old bucketed lineitem
+  private[graft] def root(sfDir: String): String =
+    BuildOnce.root(s"bucketed-$LayoutVersion", sfDir, Keys.map(_._1))
 
-  private def root(sfDir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-bucketed-$LayoutVersion-${tag(sfDir)}"
-
-  /** Catalog name of a bucketed base table (unique per corpus
-    * fingerprint, so two testdata generations never collide). */
+  /** Catalog name of a bucketed base table: the store root made an
+    * identifier, so two corpus fingerprints never share a table. */
   def tableName(sfDir: String, base: String): String =
-    s"graft_${base}_b${Buckets}_${tag(sfDir)}"
+    s"${base}_b${Buckets}_" +
+      new java.io.File(root(sfDir)).getName.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
 
-  private def ensureOne(spark: SparkSession, sfDir: String,
-                        base: String, key: String): Unit = {
-    val name = tableName(sfDir, base)
-    if (spark.catalog.tableExists(name)) return
-    val path = s"${root(sfDir)}/$base"
-    val done = new java.io.File(s"${root(sfDir)}/_BUILT_$base")
-    if (done.exists()) {
-      // Files exist from an earlier JVM — re-attach, don't rewrite.
-      val ddl = spark.read.parquet(path).schema.toDDL
-      spark.sql(s"""CREATE TABLE $name ($ddl) USING PARQUET
-                   |CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS
-                   |LOCATION '$path'""".stripMargin)
-    } else {
-      new java.io.File(root(sfDir)).mkdirs()
+  /** Build (or re-attach) the bucketed fact tables. Idempotent. */
+  def ensure(spark: SparkSession, sfDir: String): Unit = synchronized {
+    val dir = root(sfDir)
+    BuildOnce.ensure(dir) {
       // repartition on the bucket hash first so each write task holds
       // exactly one bucket's rows -> one file per bucket (a bucket
       // spread over many small files costs extra opens per scan and
       // loses the per-bucket sort guarantee).
-      Tables.tableRaw(spark, sfDir, base)
-        .repartition(Buckets, col(key))
-        .write.bucketBy(Buckets, key).sortBy(key)
-        .option("path", path).mode("overwrite").saveAsTable(name)
-      done.createNewFile()
+      for ((base, key) <- Keys)
+        Tables.tableRaw(spark, sfDir, base)
+          .repartition(Buckets, col(key))
+          .write.bucketBy(Buckets, key).sortBy(key)
+          .option("path", s"$dir/$base").mode("overwrite")
+          .saveAsTable(tableName(sfDir, base))
     }
-  }
-
-  /** Build (or re-attach) the bucketed fact tables. Idempotent. */
-  def ensure(spark: SparkSession, sfDir: String): Unit = synchronized {
-    ensureOne(spark, sfDir, "lineitem", "l_orderkey")
-    ensureOne(spark, sfDir, "orders", "o_orderkey")
+    // Files built by an earlier JVM: re-attach, don't rewrite.
+    for ((base, key) <- Keys if !spark.catalog.tableExists(tableName(sfDir, base))) {
+      val ddl = spark.read.parquet(s"$dir/$base").schema.toDDL
+      spark.sql(s"""CREATE TABLE ${tableName(sfDir, base)} ($ddl) USING PARQUET
+                   |CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS
+                   |LOCATION '$dir/$base'""".stripMargin)
+    }
   }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = {

@@ -11,31 +11,27 @@ import org.apache.spark.sql.functions._
   * same digests computed from the SOURCE table — any dropped, duplicated
   * or mangled row changes a sum.
   *
-  * Build-once like the index stores: fingerprinted path + _BUILT marker.
+  * Build-once ([[BuildOnce]]); its reader ensures first, so no plan needs a setup.
   */
 object ExportStore {
 
   private val LayoutVersion = "v1"
 
-  def root(sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val src = new java.io.File(s"$sfDir/documents.parquet")
-    val fp = s"${src.length()}-${src.lastModified()}"
-    s"${System.getProperty("java.io.tmpdir")}/graft-export-$LayoutVersion-$tag-$fp"
-  }
+  def root(sfDir: String): String =
+    BuildOnce.root(s"export-$LayoutVersion", sfDir, Seq("documents"))
   private def dataPath(sfDir: String) = s"${root(sfDir)}/documents_by_lang"
-  private def donePath(sfDir: String) = s"${root(sfDir)}/_BUILT"
 
-  def ensure(spark: SparkSession, sfDir: String): Unit = synchronized {
-    if (new java.io.File(donePath(sfDir)).exists()) return
-    Tables.documents(spark, sfDir)
-      .write.mode("overwrite").partitionBy("lang").parquet(dataPath(sfDir))
-    new java.io.File(donePath(sfDir)).createNewFile()
-  }
+  def ensure(spark: SparkSession, sfDir: String): Unit =
+    BuildOnce.ensure(root(sfDir)) {
+      Tables.documents(spark, sfDir)
+        .write.mode("overwrite").partitionBy("lang").parquet(dataPath(sfDir))
+    }
 
   /** The published dataset, read back through the partitioned layout. */
-  def documents(spark: SparkSession, sfDir: String): DataFrame =
+  def documents(spark: SparkSession, sfDir: String): DataFrame = {
+    ensure(spark, sfDir)
     spark.read.parquet(dataPath(sfDir))
+  }
 
   /** Per-partition manifest over an arbitrary frame: (lang, n_rows,
     * content_sum) with content_sum = Σ hash31(text) — order-free exact

@@ -41,4 +41,16 @@ class BenchFailureSpec extends SparkTestBase {
       assert(Bench.total(rows) == 1.5)
     } finally Files.deleteIfExists(f)
   }
+
+  test("writeArtifact: an unwritable artifact path is reported, never swallowed") {
+    val blocker = Files.createTempFile("bench-blocker-", ".json") // a file, not a dir
+    val ok = Files.createTempFile("bench-artifact-", ".json")
+    try {
+      val target = s"$blocker/BENCH_FULL.json"
+      val msg = Bench.writeArtifact(target, "{}\n")
+      assert(msg.exists(_.startsWith(s"[bench] could not write $target: ")), msg)
+      assert(Bench.writeArtifact(ok.toString, "{}\n").isEmpty)
+      assert(Files.readString(ok) == "{}\n")
+    } finally { Files.deleteIfExists(blocker); Files.deleteIfExists(ok) }
+  }
 }

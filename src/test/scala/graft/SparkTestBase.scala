@@ -16,4 +16,12 @@ object SharedSpark {
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SharedSpark.session
   def sf(which: String = "0.001"): String = s"/root/testdata/sf$which"
+
+  /** Deletes a test's private corpus and the stores built under it. */
+  def deleteTrees(paths: Seq[String]): Unit =
+    paths.map(new java.io.File(_)).filter(_.exists).foreach { f =>
+      java.nio.file.Files.walk(f.toPath)
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    }
 }

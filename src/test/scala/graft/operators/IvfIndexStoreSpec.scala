@@ -9,14 +9,6 @@ import org.apache.spark.sql.functions._
   * answer from the persisted artifact. */
 class IvfIndexStoreSpec extends SparkTestBase {
 
-  /** Deletes a test's private corpus and the stores built under it. */
-  private def deleteTrees(paths: Seq[String]): Unit =
-    paths.map(new java.io.File(_)).filter(_.exists).foreach { f =>
-      java.nio.file.Files.walk(f.toPath)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-
   test("ensure is idempotent; full-probe serve from disk equals exact topK") {
     val d = sf()
     IvfIndexStore.ensure(spark, d)

@@ -20,4 +20,14 @@ class ExportStoreSpec extends SparkTestBase {
       .listFiles().filter(_.isDirectory).map(_.getName).filter(_.startsWith("lang="))
     assert(dirs.length >= 2, s"expected lang= partition dirs, got ${dirs.toSeq}")
   }
+
+  test("documents builds the export on first read: no setup needs to run first") {
+    val d = java.nio.file.Files.createTempDirectory("export-fresh").toString
+    try {
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"${sf()}/documents.parquet"),
+        java.nio.file.Paths.get(s"$d/documents.parquet"))
+      assert(ExportStore.documents(spark, d).count() ==
+        Tables.documents(spark, d).count())
+    } finally deleteTrees(Seq(d, ExportStore.root(d)))
+  }
 }
