@@ -19,22 +19,25 @@ import scala.util.control.NonFatal
   *    is within one JVM of cold, warmed by the untimed warmup set.
   *    JVM/session startup is NOT in any timed region (the baseline
   *    equally excludes its index build). A child that leaves no complete
-  *    artifact falls back to in-process execution of that chunk — the
-  *    artifact always covers every query. Each child's `[bench]` lines
-  *    are copied to this process' stderr.
+  *    artifact turns its chunk into failed rows (never re-timed in this
+  *    JVM, whose accumulated state is what forking avoids). Each
+  *    child's `[bench]` and `[reap]` lines are copied to this process'
+  *    stderr.
   *  - IN-PROCESS (SPARK_GRAFT_FORK=0, or small query subsets): the
   *    classic single-JVM loop with the deterministic persistent-block
   *    reap between queries.
   *
   * Env: SPARK_GRAFT_SF_DIR (data), SPARK_GRAFT_CPUS, SPARK_GRAFT_QUERIES
-  * (comma subset), SPARK_GRAFT_WARM=N (1 untimed warmup then N timed
-  * runs, report the MIN; N=1 ≡ the historical run-twice-report-2nd),
-  * SPARK_GRAFT_FORK=<chunk size; 0 disables forking>.
+  * (comma subset, [[SparkEntry.select]]: an unknown name fails the run
+  * before anything is timed), SPARK_GRAFT_WARM=N (1 untimed warmup then
+  * N timed runs, report the MIN; N=1 ≡ the historical
+  * run-twice-report-2nd), SPARK_GRAFT_FORK=<chunk size; 0 disables
+  * forking>.
   *
-  * A query whose setup throws, or whose every run throws, is a failure:
-  * it keeps its -1.0 row in "queries", is left out of the total, is
-  * named under "failed" in BENCH_FULL*.json, and makes Bench exit 1
-  * after everything is written.
+  * A query whose setup throws, whose every run throws, or whose forked
+  * chunk left no complete artifact is a failure: it keeps its -1.0 row
+  * in "queries", is left out of the total, is named under "failed" in
+  * BENCH_FULL*.json, and makes Bench exit 1 after everything is written.
   */
 object Bench {
 
@@ -97,11 +100,6 @@ object Bench {
       case _ => -1.0
     }
 
-  /** reap()'s clearCache guard logs its first failure instead of
-    * silently swallowing (VERDICT r13 item 6): a CacheManager failure
-    * that persisted would otherwise quietly turn min-samples non-iid. */
-  @volatile private var reapClearCacheWarned = false
-
   /** Select the reported time from a run's sample vector. `warmed`
     * drops the first (untimed warmup) sample; of the rest the MIN is
     * reported — interference can only RAISE a sample, so the min
@@ -133,31 +131,6 @@ object Bench {
       groups.zipWithIndex.map { case (g, i) => g ++ heavy.lift(i) } ++
         heavy.drop(groups.size).map(Seq(_))
     }
-  }
-
-  /** The run's query list. A comma list in SPARK_GRAFT_QUERIES keeps
-    * ITS order — forked children receive their chunk through this env
-    * var, and re-sorting would put the chunk's heavy (placed LAST by
-    * [[topoChunks]]) back in front of its light queries, timing every
-    * light on post-heavy JVM state. Unknown names are dropped with a
-    * LOUD stderr line — a silent drop reads as "that query was fast
-    * enough not to notice missing" in the output. */
-  private[graft] def resolveNames(env: Option[String]): Seq[String] =
-    env match {
-      case Some(list) =>
-        val asked = list.split(",").toSeq.map(_.trim).distinct
-        val (known, unknown) = asked.partition(SparkEntry.queries.contains)
-        if (unknown.nonEmpty)
-          System.err.println(
-            s"[bench] UNKNOWN query names dropped: ${unknown.mkString(", ")}")
-        known
-      case None => SparkEntry.queries.keys.toSeq.sorted
-    }
-
-  private def mkSession(): SparkSession = {
-    val spark = GraftSession(GraftSession.envCores(32))
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 
   /** Run `specs` in this JVM and return one [[QueryRun]] per query. */
@@ -206,12 +179,7 @@ object Bench {
       // timed region (or crash it). A failed setup fails the query
       // without running it: its body would self-heal the artifact inside
       // the timed region and report build time as serving time.
-      val setupFailure =
-        try { spec.setup.foreach(_(spark, sfDir)); None }
-        catch { case NonFatal(t) =>
-          System.err.println(s"[bench] $name setup failed: $t")
-          Some(s"setup: $t")
-        }
+      val setupFailure = spec.prepare(spark, sfDir, "bench")
       // SPARK_GRAFT_WARM=N: one untimed warmup run (codegen/broadcast/
       // footer costs), then N timed runs, report the MINIMUM — N=1 is
       // the historical "run twice, report the second" protocol exactly.
@@ -233,7 +201,7 @@ object Bench {
       // -1.0 marker (pickReported's contract) so downstream mins/sums
       // can't mistake a failure for a fast run; the [bench] line carries
       // the FAILED marker and the fail-tokened sample vector.
-      // The reap (below) runs BETWEEN repeats too, not just between
+      // The reap runs BETWEEN repeats too, not just between
       // queries (round 13): a query that leaves per-run session state
       // otherwise times repeat N against N−1 runs of ContextCleaner
       // backlog — BENCH_ISOLATED_r12's monotonic 6.6→28.4→55.2 s repeat
@@ -243,20 +211,10 @@ object Bench {
       // stall 20–30 s per task in SizeEstimator walks), and an explicit
       // between-repeat reap held the same query flat at 5–7 s. The reap
       // sits OUTSIDE the timed region, so samples are iid under the min
-      // estimator's model.
-      def reap(): Unit = {
-        try spark.catalog.clearCache()
-        catch { case NonFatal(t) =>
-          if (!reapClearCacheWarned) {
-            reapClearCacheWarned = true
-            System.err.println(
-              s"[bench] reap: clearCache failed (further failures silenced): $t")
-          }
-        }
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
-      }
+      // estimator's model; the GC after it lets the ContextCleaner
+      // release dead localCheckpoint/broadcast blocks before the next
+      // sample instead of inside it.
+      def reap(): Unit = { GraftSession.reap(spark); System.gc() }
       // ambient window: load1 at query start, steal jiffies across the
       // sample loop (QueryRun's contract) — read BEFORE the first
       // sample, AFTER the last
@@ -296,14 +254,6 @@ object Bench {
       // squeeze execution memory (BENCH_r05's suite-wide spill churn).
       // reap() above runs DETERMINISTICALLY after every repeat — so the
       // last repeat's state is already gone before the next query.
-      // clearCache() first — defensive: no operator registers a
-      // DataFrame cache today, but if one ever does (a future setup),
-      // dropping only RDD blocks would leave stale CacheManager entries
-      // shadowing later identical plans.
-      // BLOCKING unpersist + a GC: the async form left an iterative
-      // query's blocks/broadcasts alive into its successor (r7: q65 ran
-      // 0.65 s isolated but 30-50 s when it followed q63's ten
-      // checkpoint rounds in the same JVM).
       QueryRun(name, reported, qLoad1, qSteal, failure)
     }
   }
@@ -332,13 +282,22 @@ object Bench {
     Files.walk(dir.toPath).sorted(java.util.Comparator.reverseOrder())
       .forEach(p => Files.deleteIfExists(p))
 
+  /** A forked chunk's rows: the child's artifact when it holds exactly
+    * the chunk's queries, else one failed row per query naming `why`.
+    * The chunk is never re-timed in this JVM: it carries the accumulated
+    * state that forking exists to avoid. */
+  private[graft] def chunkRows(chunk: Seq[String], artifact: Option[Seq[QueryRun]],
+                               why: String): Seq[QueryRun] =
+    artifact.filter(_.map(_.name).sorted == chunk.sorted)
+      .getOrElse(chunk.map(QueryRun(_, -1.0, -1.0, -1.0, Some(why))))
+
   /** Spawn one child JVM per chunk (temp cwd: the child's own
     * BENCH_FULL.json can never clobber the parent artifact). The child's
-    * `[bench]` lines are copied to stderr. Returns None if the child left
-    * no complete artifact — caller falls back in-process; a child that
-    * exits 1 over failed queries still returns its rows. The temp dir is
-    * deleted unless the child failed, when its path is printed. */
-  private def runChunkForked(chunk: Seq[String]): Option[Seq[QueryRun]] = {
+    * `[bench]` and `[reap]` lines are copied to stderr. A child that
+    * exits 1 over failed queries still returns its rows; one that left
+    * no complete artifact returns failed rows ([[chunkRows]]). The temp
+    * dir is deleted unless the child failed, when its path is printed. */
+  private def runChunkForked(chunk: Seq[String]): Seq[QueryRun] = {
     var dir: java.io.File = null
     try {
       dir = Files.createTempDirectory("graft-bench-").toFile
@@ -357,41 +316,85 @@ object Bench {
       pb.environment().put("SPARK_GRAFT_FORK", "0") // no recursive forking
       // the child's BENCH_FULL.json (in its temp cwd) is the RESULT
       // CHANNEL — a parent probe run's no-artifact flag must not leak
-      // in, or every chunk would "fail" and fall back into one shared
-      // JVM (the accumulated-state mode forking exists to prevent)
+      // in, or every chunk would fail
       pb.environment().remove("SPARK_GRAFT_NO_ARTIFACT")
       val p = pb.start()
       val done = p.waitFor(30, java.util.concurrent.TimeUnit.MINUTES)
       if (!done) { p.destroyForcibly(); p.waitFor() }
       Files.readAllLines(log.toPath).asScala
-        .filter(_.startsWith("[bench]")).foreach(System.err.println)
+        .filter(l => l.startsWith("[bench]") || l.startsWith("[reap]"))
+        .foreach(System.err.println)
       val full = new java.io.File(dir, "BENCH_FULL.json")
+      // a child killed mid-write leaves a file that does not parse
       val got =
-        if (done && full.exists()) Some(readArtifact(full))
-          .filter(_.map(_.name).sorted == chunk.sorted)
+        if (done && full.exists()) scala.util.Try(readArtifact(full)).toOption
         else None
-      if (got.isEmpty || p.exitValue() != 0)
-        System.err.println(s"[bench] child exit ${p.exitValue()}" +
-          (if (got.isEmpty) ", no complete artifact" else "") + s"; kept $dir")
+      val rows = chunkRows(chunk, got,
+        s"child exit ${p.exitValue()}, no complete artifact")
+      if (p.exitValue() != 0 || rows.exists(_.failure.isDefined))
+        System.err.println(s"[bench] child exit ${p.exitValue()}; kept $dir")
       else deleteTree(dir)
-      got
+      rows
     } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] fork failed: ${e.getMessage}" +
+      System.err.println(s"[bench] fork failed: $e" +
         Option(dir).fold("")(d => s"; kept $d"))
-      None
+      chunkRows(chunk, None, s"fork failed: $e")
     }
+  }
+
+  /** The run's stdout line and its BENCH_FULL*.json payload.
+    *
+    * The harness keeps only the TAIL of this process' output (2000 chars
+    * observed) — a full-name 185-query JSON line gets its head cut off
+    * and fails to parse (BENCH_r03 "parsed": null). So the stdout line
+    * keys each query by `qNN` alone, and the payload carries the same
+    * numbers with full names, 3 dp, plus per-query ambient evidence
+    * ([load1 at query start, steal% over the sample window], -1 =
+    * unmeasurable), every failure (name -> what threw, {} on a clean
+    * run) and, LAST and only when chunks ran (forked children never
+    * emit it), the 1-min load at each chunk start. */
+  private[graft] def render(results: Seq[QueryRun], sfDir: String,
+                            chunkLoads: Seq[(String, Double)]): (String, String) = {
+    def dp(v: Double, n: Int): java.math.BigDecimal =
+      BigDecimal(v).setScale(n, BigDecimal.RoundingMode.HALF_UP).bigDecimal
+    // Short-key value precision (round 15, VERDICT r14 item 8): 193
+    // quoted qNN keys alone cost ~1640 chars, so "<1800 chars" is
+    // arithmetically unreachable — this trims what CAN be trimmed
+    // without distorting round-over-round ratios: ≥1 s values carry 1
+    // decimal (quantization ≤5%), sub-1 s values keep 2 (1 dp there
+    // would inject ±20%+ phantom deltas into a >10% regression gate).
+    def dpShort(v: Double) = dp(v, if (v >= 1) 1 else 2)
+    def obj(kvs: Iterable[(String, AnyRef)]) = {
+      val m = new java.util.LinkedHashMap[String, AnyRef]()
+      kvs.foreach { case (k, v) => m.put(k, v) }
+      m
+    }
+    def head(queries: Seq[(String, AnyRef)]): Seq[(String, AnyRef)] =
+      Seq("metric" -> "total", "value" -> dp(total(results), 3),
+        "unit" -> "sec", "queries" -> obj(queries), "sf" -> sfDir)
+    // Short keys truncate at the first '_'; SparkEntry refuses two specs
+    // sharing a qNN, so no key is emitted twice.
+    val line = head(results.map(q => q.name.takeWhile(_ != '_') -> dpShort(q.sec)))
+    val full = head(results.map(q => q.name -> dp(q.sec, 3))) ++ Seq(
+      "ambient" -> obj(results.map(q =>
+        q.name -> java.util.List.of(dp(q.load1, 2), dp(q.stealPct, 2)))),
+      "failed" -> obj(results.flatMap(q => q.failure.map(q.name -> _)))) ++
+      (if (chunkLoads.isEmpty) Nil
+       else Seq("load1_at_chunk_start" -> obj(chunkLoads.map { case (k, v) => k -> dp(v, 2) })))
+    val json = new ObjectMapper()
+    (json.writeValueAsString(obj(line)), json.writeValueAsString(obj(full)) + "\n")
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val names = resolveNames(sys.env.get("SPARK_GRAFT_QUERIES"))
+    val specs = SparkEntry.select(sys.env.get("SPARK_GRAFT_QUERIES"))
+    val names = specs.map(_.name)
     // default 6 (was 10): a full 193-query local rerun with one-heavy
     // topology chunks of 10 still showed mid-chunk iterative queries
     // (k-core, triangles, BFS, dedup-CC) inflating their successors —
     // those are now in the heavy list, and the shorter light runs bound
     // how much JVM context any query accumulates before it is timed
     val chunkSize = sys.env.get("SPARK_GRAFT_FORK").map(_.toInt).getOrElse(6)
-    lazy val spark = mkSession() // only created if some chunk runs here
     // 1-min load sampled before each chunk, kept in the cwd artifact
     // only (stdout line schema unchanged): the box shows bursty
     // co-tenant storms (BENCH_ISOLATED_r8 notes), and a storm-hit suite
@@ -406,80 +409,33 @@ object Bench {
           chunkLoads += (s"chunk${i + 1}:${chunk.last}" -> load1())
           System.err.println(
             s"[bench] chunk ${i + 1}/${chunks.size}: ${chunk.head}..${chunk.last}")
-          runChunkForked(chunk).getOrElse {
-            System.err.println(s"[bench] chunk ${i + 1} fell back in-process")
-            runInProcess(spark, sfDir, chunk.map(SparkEntry.byName))
-          }
+          runChunkForked(chunk)
         }
-      } else runInProcess(spark, sfDir, names.map(SparkEntry.byName))
-    val total = Bench.total(results)
+      } else {
+        val spark = GraftSession(GraftSession.envCores(32))
+        spark.sparkContext.setLogLevel("WARN")
+        runInProcess(spark, sfDir, specs)
+      }
     val failed = results.filter(_.failure.isDefined)
-    // The harness keeps only the TAIL of this process' output (2000
-    // chars observed) — a full-name 185-query JSON line gets its head
-    // cut off and fails to parse (BENCH_r03 "parsed": null). Two
-    // artifacts:
-    //  1. stdout: ONE compact JSON line (short query keys "q81", 2-dp
-    //     values) sized to survive the tail window;
-    //  2. BENCH_FULL.json in cwd: the same numbers with full names, 3-dp.
-    def r3(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    def r2(v: Double) = BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-    // Short-key value precision (round 15, VERDICT r14 item 8): the
-    // stdout line must survive the harness's ~2000-char output-tail
-    // window (BENCH_r13 lost its head there and PERF_r14 lost its
-    // whole prev baseline). 193 quoted qNN keys alone cost ~1640
-    // chars, so "<1800 chars" is arithmetically unreachable — this
-    // trims what CAN be trimmed without distorting round-over-round
-    // ratios: ≥1 s values carry 1 decimal (quantization ≤5%), sub-1 s
-    // values keep 2 (1 dp there would inject ±20%+ phantom deltas into
-    // a >10% regression gate). ~130 chars saved; the full-fidelity
-    // numbers are in the cwd artifacts either way.
-    def rShort(v: Double) =
-      if (v >= 1) BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP)
-      else r2(v)
-    // Short keys truncate at the first '_'; SparkEntry refuses two specs
-    // sharing a qNN, so no key is emitted twice.
-    val qsShort = results
-      .map(q => "\"" + q.name.takeWhile(_ != '_') + "\":" + rShort(q.sec))
-      .mkString("{", ",", "}")
-    val qsFull = results.map(q => "\"" + q.name + "\":" + r3(q.sec))
-      .mkString("{", ",", "}")
-    // per-query ambient evidence ([load1_at_query_start, steal_pct over
-    // the sample window]; -1 = unmeasurable) — artifact only, like
-    // load1_at_chunk_start: the stdout line is sized for the harness's
-    // tail window and stays schema-stable
-    val ambFull = results
-      .map(q => "\"" + q.name + "\":[" + r2(q.load1) + "," + r2(q.stealPct) + "]")
-      .mkString(""","ambient":{""", ",", "}")
     // SPARK_GRAFT_NO_ARTIFACT=1: skip the cwd artifact — ad-hoc probe
     // runs from the repo root would clobber the committed driver file.
     // Belt-and-braces (a probe DID clobber it once, and the flag only
     // helps when remembered): a SUBSET run from a repo checkout (.git in
-    // cwd) never writes either — keyed on the RESOLVED list covering the
+    // cwd) never writes either — keyed on the SELECTED list covering the
     // registry, not on env-var presence, so a wrapper that passes the
     // full 193 names explicitly still records its run. Forked children
     // run subsets in temp cwds (no .git) and MUST write — the file is
     // their result channel; the driver's full-suite run sets no
     // SPARK_GRAFT_QUERIES. The skip is announced on stderr: a silent
     // skip leaves yesterday's numbers in the file looking fresh.
-    val subsetInRepo = names.toSet != SparkEntry.queries.keySet &&
+    val subsetInRepo = names.size != SparkEntry.specs.size &&
       Files.exists(Paths.get(".git"))
     if (subsetInRepo)
       System.err.println("[bench] subset run in a repo checkout: NOT writing BENCH_FULL.json")
-    // every failure, name -> what threw; {} on a clean run
-    val failedMap = new java.util.LinkedHashMap[String, String]()
-    failed.foreach(q => failedMap.put(q.name, q.failure.get))
-    val failedPart = ""","failed":""" + new ObjectMapper().writeValueAsString(failedMap)
-    // load1 key LAST and only when chunks ran: forked children (FORK=0)
-    // never emit it.
-    val loadPart =
-      if (chunkLoads.isEmpty) ""
-      else chunkLoads.map { case (k, v) => "\"" + k + "\":" + r2(v) }
-        .mkString(""","load1_at_chunk_start":{""", ",", "}")
+    val (line, payload) = render(results, sfDir, chunkLoads.toSeq)
     val writeFailures =
       if (sys.env.contains("SPARK_GRAFT_NO_ARTIFACT") || subsetInRepo) Nil
       else {
-        val payload =
-          s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsFull,"sf":"$sfDir"$ambFull$failedPart$loadPart}""" + "\n"
         // BENCH_FULL.json stays (the forked-child result channel and the
         // historical artifact name); the core-count-keyed copy exists so
         // a multi-config session (32c then 8c run in the same cwd,
@@ -489,7 +445,7 @@ object Bench {
         Seq("BENCH_FULL.json", s"BENCH_FULL_c$cpusKey.json").flatMap(writeArtifact(_, payload))
       }
     writeFailures.foreach(System.err.println)
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsShort,"sf":"$sfDir"}""")
+    println(line)
     try SparkSession.getActiveSession.foreach(_.stop()) catch { case NonFatal(_) => () }
     if (failed.nonEmpty)
       System.err.println(s"[bench] ${failed.size} FAILED: " +

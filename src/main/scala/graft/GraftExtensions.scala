@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.IntegerType
   *     `SparkSessionExtensions.injectFunction` route; survives
   *     `newSession()` clones.
   *   - runtime: `GraftExtensions.register(spark)` on a live session
-  *     (what `SparkEntry.queries` uses — the driver owns session
+  *     (what the declared queries use — the caller owns session
   *     construction there).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** One declared query: everything the harnesses know about it.
   *
@@ -20,7 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *               vs `:384-410` serve). Each is idempotent and DISK-backed;
   *               the query bodies also self-heal by calling ensure()
   *               themselves, so running a query without its setup is
-  *               correct, just slower on first touch.
+  *               correct, just slower on first touch. A setup that
+  *               throws fails the query in every harness ([[prepare]]).
   * @param heavy  iterative / pair-expansion query that leaves enough JVM
   *               state behind to inflate whatever runs after it; Bench
   *               runs at most one per fork chunk, last (`Bench.topoChunks`).
@@ -34,4 +36,42 @@ final case class QuerySpec(
 
   /** `qNN`: the name up to its first '_'. */
   def shortKey: String = name.takeWhile(_ != '_')
+
+  /** Runs the setup, if any; on a throw, logs it under `[tag]` and returns
+    * the failure (`setup: <what threw>`). A query whose setup failed must
+    * not run: its body would rebuild the artifact inside the timed or
+    * checked region, or read a half-built one. */
+  def prepare(spark: SparkSession, sfDir: String, tag: String): Option[String] =
+    try { setup.foreach(_(spark, sfDir)); None }
+    catch { case NonFatal(t) =>
+      System.err.println(s"[$tag] $name setup failed: $t")
+      Some(s"setup: $t")
+    }
+}
+
+object QuerySpec {
+
+  /** The query loop of Verify, ExplainAll and ScaleProbe: per spec,
+    * [[QuerySpec.prepare]], then `body` unless the setup failed, then
+    * [[GraftSession.reap]]. A throwing body is logged under `[tag]` and
+    * the loop goes on. Returns the names that failed, in run order. */
+  def runEach(spark: SparkSession, sfDir: String, specs: Seq[QuerySpec],
+              tag: String)(body: QuerySpec => Unit): Seq[String] =
+    specs.filter { spec =>
+      val ok = spec.prepare(spark, sfDir, tag).isEmpty &&
+        (try { body(spec); true }
+         catch { case NonFatal(t) =>
+           System.err.println(s"[$tag] ${spec.name} failed: $t")
+           false
+         })
+      GraftSession.reap(spark)
+      !ok
+    }.map(_.name)
+
+  /** After a [[runEach]] loop: names the failed queries and exits 1. */
+  def exitOnFailures(tag: String, failed: Seq[String]): Unit =
+    if (failed.nonEmpty) {
+      System.err.println(s"[$tag] ${failed.size} FAILED: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
 }

@@ -1,10 +1,8 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.util.concurrent.atomic.AtomicLong
-import scala.util.control.NonFatal
 
 /** Dev tool (round 15): decompose WHERE wall-clock goes for a query at
   * the session's core count — task/stage/job counts, summed executor
@@ -94,7 +92,7 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.lift(1).map(_.split(",").toSeq)
+    val names = args.lift(1).map(_.split(",").toSeq.map(_.trim).distinct)
       .getOrElse(Seq("q165_user_knn", "q55_embed_dups"))
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
     // "prelude=q1,q2,..": run these untimed first (with the bench's
@@ -102,54 +100,38 @@ object ScaleProbe {
     // channel times heavies under — the anti-scaling reproduces ONLY
     // in that state (fresh-JVM cold runs are core-count-neutral)
     val prelude = args.lift(3).filter(_.startsWith("prelude="))
-      .map(_.stripPrefix("prelude=").split(",").toSeq).getOrElse(Nil)
+      .map(p => SparkEntry.select(Some(p.stripPrefix("prelude=")))).getOrElse(Nil)
+    // hits cadence arms: v186_c<N>, each its own spec; every other name
+    // goes through the registry, which fails on unknown ones
+    val hRe = "v186_c(\\d+)".r
+    val declared = names.filterNot(hRe.matches)
+    if (declared.nonEmpty) SparkEntry.select(Some(declared.mkString(",")))
+    val specs = names.map {
+      case n @ hRe(c) => QuerySpec(n, (s, d) =>
+        graft.operators.GraphMetrics.hitsImpl(
+          graft.operators.CoPurchaseGraph.fromOrders(
+            graft.sources.Tables.lineitem(s, d)), 5,
+          graft.operators.PageRank.BroadcastMaxNodes, c.toInt), oracle = "")
+      case n => SparkEntry.byName(n)
+    }
     val cpus = GraftSession.envCores(32)
     val spark = GraftSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)
 
-    def reap(): Unit = {
-      try spark.catalog.clearCache() catch { case NonFatal(_) => () }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-
-    for (p <- prelude) {
-      try { val spec = SparkEntry.byName(p)
-            spec.setup.foreach(_(spark, sfDir))
-            spec.run(spark, sfDir).count() }
-      catch { case NonFatal(t) =>
-        System.err.println(s"[scaleprobe] prelude $p failed: $t")
-      }
-      reap()
-    }
+    val preludeFailed =
+      QuerySpec.runEach(spark, sfDir, prelude, "scaleprobe")(_.run(spark, sfDir).count())
     println(s"# ScaleProbe cores=$cpus sf=$sfDir reps=$reps prelude=${prelude.size}")
     println("query\tsample\twall_s\tjobs\tstages\ttasks\trun_s\tcpu_s\tgc_s" +
       "\tdeser_s\tfetch_s\tspill_mem_mb\tspill_disk_mb\tshuf_r_mb\tshuf_w_mb" +
       "\tshufw_s\tpeak_mem_mb\tidle_s\tjobcov_s\tdrivergap_s")
-    // hits cadence arms: v186_c<N>
-    val hRe = "v186_c(\\d+)".r
-    def resolve(name: String): (SparkSession, String) => DataFrame =
-      name match {
-        case hRe(c) => (s, d) =>
-          graft.operators.GraphMetrics.hitsImpl(
-            graft.operators.CoPurchaseGraph.fromOrders(
-              graft.sources.Tables.lineitem(s, d)), 5,
-            graft.operators.PageRank.BroadcastMaxNodes, c.toInt)
-        case n => SparkEntry.byName(n).run
-      }
-    for (name <- names) {
-      val fn = resolve(name)
-      try SparkEntry.byName.get(name).flatMap(_.setup).foreach(_(spark, sfDir))
-      catch { case NonFatal(t) =>
-        System.err.println(s"[scaleprobe] $name setup failed: $t")
-      }
+    val failed = QuerySpec.runEach(spark, sfDir, specs, "scaleprobe") { spec =>
+      val name = spec.name
       for (i <- 1 to reps) {
         acc.reset()
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        spec.run(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(700) // let the async listener bus drain
         val run = acc.runMs.get / 1e3
@@ -162,9 +144,10 @@ object ScaleProbe {
           f"${acc.shufWriteB.get / 1000000}%d\t${acc.shufWriteMs.get / 1e3}%.1f\t" +
           f"${acc.peakMemMax.get / 1000000}%d\t$idle%.1f\t" +
           f"${acc.coveredMs() / 1e3}%.1f\t${wall - acc.coveredMs() / 1e3}%.1f")
-        reap()
+        GraftSession.reap(spark)
       }
     }
     spark.stop()
+    QuerySpec.exitOnFailures("scaleprobe", preludeFailed ++ failed)
   }
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every operator from SURVEY §2 (plus the LLM-data-pipeline extensions)
   * is exposed as a named query over the driver parquet corpus
   * (TESTDATA.md), each declared once as a [[QuerySpec]] in its family's
-  * file under `queries/`. The name-keyed maps below are views of
-  * [[specs]].
+  * file under `queries/`. Every harness main picks its queries through
+  * [[select]].
   */
 object SparkEntry {
 
@@ -33,11 +33,18 @@ object SparkEntry {
 
   val byName: Map[String, QuerySpec] = specs.map(q => q.name -> q).toMap
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    specs.map(q => q.name -> q.run).toMap
-
-  val setups: Map[String, (SparkSession, String) => Unit] =
-    specs.flatMap(q => q.setup.map(q.name -> _)).toMap
-
-  val oracleSql: Map[String, String] = specs.map(q => q.name -> q.oracle).toMap
+  /** The specs a harness main runs. No list: every spec, by name. A comma
+    * list keeps its own order (a forked Bench chunk is timed with its
+    * heavy query last) and drops repeats. Unknown names throw, all of
+    * them named, before anything runs: a dropped name would read as a
+    * lower total or a shorter pass list. */
+  def select(list: Option[String]): Seq[QuerySpec] = list match {
+    case None => specs.sortBy(_.name)
+    case Some(l) =>
+      val asked = l.split(",").toSeq.map(_.trim).distinct
+      val unknown = asked.filterNot(byName.contains)
+      require(unknown.isEmpty,
+        s"unknown query names: ${unknown.map(n => s"'$n'").mkString(", ")}")
+      asked.map(byName)
+  }
 }

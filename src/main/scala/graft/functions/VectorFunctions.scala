@@ -54,14 +54,4 @@ object VectorFunctions {
     val denom = l2Norm(a) * l2Norm(b)
     when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)
   }
-
-  /** Reference's distance→similarity post-processing: 1 − dist clamped to
-    * [0,1] (`Hybrid_Recom_vecdb.py:183-185`, P6/P7 in SURVEY §2.2). */
-  def distToSim(dist: Column): Column =
-    greatest(lit(0.0), least(lit(1.0), lit(1.0) - dist))
-
-  /** Cosine similarity clamped to [0,1] — the score the reference's
-    * content arm emits. */
-  def cosineSim01(a: Column, b: Column): Column =
-    greatest(lit(0.0), least(lit(1.0), cosine(a, b)))
 }

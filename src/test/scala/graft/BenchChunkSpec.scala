@@ -53,27 +53,53 @@ class BenchChunkSpec extends AnyFunSuite {
     // forked children receive their chunk through this env var with the
     // heavy LAST; an alphabetical re-sort would put e.g. q102_triangles
     // ahead of q128+ lights and time them all on post-heavy JVM state
-    val real = SparkEntry.queries.keys.toSeq.sorted
+    val real = SparkEntry.specs.map(_.name).sorted
     val chunk = Seq(real.last, real.head, real(real.size / 2))
-    assert(Bench.resolveNames(Some(chunk.mkString(","))) == chunk)
-    // unknown names are dropped, order still kept
-    assert(Bench.resolveNames(Some(s"${real.head},nope,${real.last}"))
-      == Seq(real.head, real.last))
+    assert(SparkEntry.select(Some(chunk.mkString(","))).map(_.name) == chunk)
+    // repeats are dropped, the first occurrence keeps its place
+    assert(SparkEntry.select(Some(s"${real(1)}, ${real.head},${real(1)}")).map(_.name)
+      == Seq(real(1), real.head))
+    // unknown names fail the whole selection, every one of them named; an
+    // all-unknown list must not select nothing and run on as a success
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Some(s"${real.head},nope,${real.last},q01_join_agg")))
+    assert(e.getMessage.contains("'nope'") && e.getMessage.contains("'q01_join_agg'"))
+    intercept[IllegalArgumentException](SparkEntry.select(Some("q01_join_agg")))
+    intercept[IllegalArgumentException](SparkEntry.select(Some("")))
   }
 
   test("every forked chunk keeps its heavy last under the child's own name resolution") {
     // end-to-end guard for the real registry: simulate what each child
     // JVM will time, in order, for the default full-suite run
-    val all = Bench.resolveNames(None)
+    val all = SparkEntry.select(None).map(_.name)
+    assert(all == SparkEntry.specs.map(_.name).sorted)
     val chunks = Bench.topoChunks(all, 6)
     for (c <- chunks) {
-      val childOrder = Bench.resolveNames(Some(c.mkString(",")))
+      val childOrder = SparkEntry.select(Some(c.mkString(","))).map(_.name)
       val h = childOrder.filter(Bench.heavyNames.contains)
       assert(h.size <= 1, s"chunk $childOrder has ${h.size} heavies")
       if (h.nonEmpty)
         assert(childOrder.last == h.head,
           s"heavy ${h.head} not last in child order $childOrder")
     }
+  }
+
+  test("a chunk whose child left no complete artifact is failed rows outside the total") {
+    val chunk = Seq("q02_b", "q01_a")
+    val why = "child exit 137, no complete artifact"
+    def failedRows(rows: Seq[Bench.QueryRun]) = {
+      assert(rows.map(_.name) == chunk)
+      assert(rows.forall(r => r.sec == -1.0 && r.failure.contains(why)))
+      assert(Bench.total(rows) == 0.0)
+    }
+    failedRows(Bench.chunkRows(chunk, None, why))
+    // an artifact that misses one of the chunk's queries is not complete
+    failedRows(Bench.chunkRows(chunk,
+      Some(Seq(Bench.QueryRun("q02_b", 1.5, 0.1, 0.0))), why))
+    // a complete artifact is taken as the child wrote it, in file order
+    val rows = Seq(Bench.QueryRun("q01_a", 2.0, 0.1, 0.0),
+      Bench.QueryRun("q02_b", -1.0, 0.1, 0.0, Some("run: boom")))
+    assert(Bench.chunkRows(chunk, Some(rows), why) == rows)
   }
 
   test("pickReported: min of warm samples; a failed run can never win it") {

@@ -42,6 +42,40 @@ class BenchFailureSpec extends SparkTestBase {
     } finally Files.deleteIfExists(f)
   }
 
+  test("render: the stdout line and the BENCH_FULL payload keep their layout byte for byte") {
+    val results = Seq(
+      Bench.QueryRun("q01_pricing", 12.3456, 0.5, 1.234),
+      Bench.QueryRun("q08_knn", 0.1234, 1.0, -1.0),
+      Bench.QueryRun("q16_simhash_fp", -1.0, 2.345, 0.0,
+        Some("setup: java.lang.IllegalStateException: no \"index\"")))
+    val (line, payload) =
+      Bench.render(results, "/data/sf0.01", Seq("chunk1:q16_simhash_fp" -> 3.456))
+    assert(line ==
+      """{"metric":"total","value":12.469,"unit":"sec",""" +
+        """"queries":{"q01":12.3,"q08":0.12,"q16":-1.00},"sf":"/data/sf0.01"}""")
+    assert(payload ==
+      """{"metric":"total","value":12.469,"unit":"sec",""" +
+        """"queries":{"q01_pricing":12.346,"q08_knn":0.123,"q16_simhash_fp":-1.000},""" +
+        """"sf":"/data/sf0.01",""" +
+        """"ambient":{"q01_pricing":[0.50,1.23],"q08_knn":[1.00,-1.00],"q16_simhash_fp":[2.35,0.00]},""" +
+        """"failed":{"q16_simhash_fp":"setup: java.lang.IllegalStateException: no \"index\""},""" +
+        """"load1_at_chunk_start":{"chunk1:q16_simhash_fp":3.46}}""" + "\n")
+    // a forked child (no chunks) writes no chunk-load key; a clean run an empty failed map
+    val (_, child) = Bench.render(results.take(1), "x", Nil)
+    assert(child ==
+      """{"metric":"total","value":12.346,"unit":"sec","queries":{"q01_pricing":12.346},""" +
+        """"sf":"x","ambient":{"q01_pricing":[0.50,1.23]},"failed":{}}""" + "\n")
+    // the parent reads what a child wrote
+    val f = Files.createTempFile("bench-artifact-", ".json")
+    try {
+      Files.writeString(f, payload)
+      assert(Bench.readArtifact(f.toFile) == Seq(
+        Bench.QueryRun("q01_pricing", 12.346, 0.5, 1.23),
+        Bench.QueryRun("q08_knn", 0.123, 1.0, -1.0),
+        results(2).copy(load1 = 2.35)))
+    } finally Files.deleteIfExists(f)
+  }
+
   test("writeArtifact: an unwritable artifact path is reported, never swallowed") {
     val blocker = Files.createTempFile("bench-blocker-", ".json") // a file, not a dir
     val ok = Files.createTempFile("bench-artifact-", ".json")

@@ -35,8 +35,7 @@ class EntrySmokeSpec extends SparkTestBase {
     val keys = specs.map(_.shortKey)
     assert(keys.distinct.size == keys.size, s"qNN shared: ${keys.diff(keys.distinct)}")
     assert(specs.forall(_.oracle.trim.nonEmpty))
-    assert(SparkEntry.queries.keySet == names.toSet)
-    assert(SparkEntry.oracleSql.keySet == names.toSet)
+    assert(SparkEntry.byName.keySet == names.toSet)
     specs.foreach(_.run(spark, sf()).schema) // analyzes the plan
   }
 
@@ -47,10 +46,10 @@ class EntrySmokeSpec extends SparkTestBase {
     // sides to the same lossy double and pass. Decimals are fine as
     // internal accumulators; the SURFACED column must be BIGINT (fold
     // digests mod 2⁶²) or DOUBLE (snap first).
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      fn(spark, sf()).schema.fields.collect {
+    val offenders = SparkEntry.specs.flatMap { q =>
+      q.run(spark, sf()).schema.fields.collect {
         case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType] =>
-          s"$name.${f.name}"
+          s"${q.name}.${f.name}"
       }
     }
     assert(offenders.isEmpty, s"DECIMAL in output: ${offenders.mkString(", ")}")

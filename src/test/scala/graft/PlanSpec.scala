@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanSpec extends SparkTestBase {
 
   private def planOf(q: String): String = {
-    val df = SparkEntry.queries(q)(spark, sf())
+    val df = SparkEntry.byName(q).run(spark, sf())
     df.queryExecution.executedPlan.toString + "\n" +
       df.queryExecution.optimizedPlan.toString
   }
@@ -68,7 +68,7 @@ class PlanSpec extends SparkTestBase {
     // TermCounts folded the (term, doc) pre-aggregate into the scan; the
     // only shuffle left is the term-key merge (fan-out repartition, if
     // present, is RoundRobin — not counted).
-    val p = SparkEntry.queries("q65_vocabulary")(spark, sf())
+    val p = SparkEntry.byName("q65_vocabulary").run(spark, sf())
       .queryExecution.executedPlan.toString
     val ex = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(ex <= 1, s"expected one term exchange, got $ex:\n$p")
@@ -86,7 +86,7 @@ class PlanSpec extends SparkTestBase {
   test("q96 z-score rides ONE user_id exchange (both window aggs share the sort)") {
     val p = planOf("q96_anomaly_zscore")
     val exchanges = "Exchange".r.findAllIn(
-      SparkEntry.queries("q96_anomaly_zscore")(spark, sf())
+      SparkEntry.byName("q96_anomaly_zscore").run(spark, sf())
         .queryExecution.executedPlan.toString).length
     assert(exchanges <= 2, s"expected one window exchange (+fan-out), got $exchanges")
     assert(!p.contains("CartesianProduct"))
@@ -119,7 +119,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("q81 PQ serving: ADC hot loop is the codegen'd expression, probe side broadcasts") {
-    val df = SparkEntry.queries("q81_pq_serve")(spark, sf())
+    val df = SparkEntry.byName("q81_pq_serve").run(spark, sf())
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("adcscore") || p.contains("AdcScore") ||
       p.toLowerCase.contains("adc"), "AdcScore expression missing from plan")
@@ -136,7 +136,7 @@ class PlanSpec extends SparkTestBase {
   test("q117 alpha sweep retrieves ONCE: embeddings scanned at most twice") {
     // content arm + cf arm each read embeddings; the 6-alpha sweep must
     // NOT multiply scans (executedPlan only — one dump).
-    val df = SparkEntry.queries("q117_alpha_sweep")(spark, sf())
+    val df = SparkEntry.byName("q117_alpha_sweep").run(spark, sf())
     val p = df.queryExecution.executedPlan.toString
     val scans = "Scan parquet".r.findAllIn(p).length
     // arms: content(embeddings+queries=2) + cf(label scans=3) + truth(3);
@@ -148,7 +148,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("q118 target encoding never shuffles the fact table") {
-    val df = SparkEntry.queries("q118_target_encode")(spark, sf())
+    val df = SparkEntry.byName("q118_target_encode").run(spark, sf())
     val p = df.queryExecution.executedPlan.toString
     // the fact->aggregate joins must be broadcast, not shuffle joins
     assert(p.contains("BroadcastHashJoin"), "aggregates should broadcast back")
@@ -156,7 +156,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("q119 feature hashing is a single shuffle: explode then one agg") {
-    val df = SparkEntry.queries("q119_feature_hash")(spark, sf())
+    val df = SparkEntry.byName("q119_feature_hash").run(spark, sf())
     val p = df.queryExecution.executedPlan.toString
     val exchanges = "Exchange".r.findAllIn(p).length
     assert(exchanges <= 1, s"hashing-trick features need one shuffle, got $exchanges")
@@ -164,14 +164,14 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("q116 MMR pairwise term joins on query_id, never cross") {
-    val df = SparkEntry.queries("q116_mmr_rerank")(spark, sf())
+    val df = SparkEntry.byName("q116_mmr_rerank").run(spark, sf())
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), "pairwise sims must equi-join")
   }
 
   test("q131 star flatten: every dimension broadcasts, fact join stays bucketed") {
     graft.sources.BucketedStore.ensure(spark, sf())
-    val df = SparkEntry.queries("q131_star_flatten")(spark, sf())
+    val df = SparkEntry.byName("q131_star_flatten").run(spark, sf())
     val p = df.queryExecution.executedPlan.toString
     val bhj = "BroadcastHashJoin".r.findAllIn(p).length
     // ≥5 dims broadcast; at test scale the orders side may broadcast
@@ -199,7 +199,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("q161 histogram quantiles: both window aggs share one exchange") {
-    val df = SparkEntry.queries("q161_hist_quantiles")(spark, sf())
+    val df = SparkEntry.byName("q161_hist_quantiles").run(spark, sf())
     val p = df.queryExecution.executedPlan.toString
     val ex = "Exchange hashpartitioning".r.findAllIn(p).length
     // bin groupBy + the (cum, n) windows + final groupBy all hash on
@@ -245,7 +245,7 @@ class PlanSpec extends SparkTestBase {
     // Join must appear BELOW (after) the symmetrizing Generate, and the
     // rank filter must compile to WindowGroupLimit so the one window
     // exchange carries capped rows.
-    val df = SparkEntry.queries("q165_user_knn")(spark, sf())
+    val df = SparkEntry.byName("q165_user_knn").run(spark, sf())
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("WindowGroupLimit"), s"top-k must push down:\n$p")
     val gen = p.indexOf("Generate")
@@ -266,7 +266,7 @@ class PlanSpec extends SparkTestBase {
     // single-materialization + releasePostings() contract is pinned on
     // a cap-engaging corpus in DedupSpec.)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val df = SparkEntry.queries("q14_ngram_jaccard")(spark, sf())
+    val df = SparkEntry.byName("q14_ngram_jaccard").run(spark, sf())
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("Scan ExistingRDD") && !p.contains("LogicalRDD"),
       s"uncapped adaptive plan must not read a materialization:\n$p")
@@ -291,7 +291,7 @@ class PlanSpec extends SparkTestBase {
   test("q177 survival: windows sort the duration frame, not subjects") {
     // the per-subject reduction (groupBy custkey) must happen BEFORE any
     // window; the windows are over the distinct-duration frame
-    val df = SparkEntry.queries("q177_survival")(spark, sf())
+    val df = SparkEntry.byName("q177_survival").run(spark, sf())
     val opt = df.queryExecution.optimizedPlan
     // count plan nodes: Window must sit above the duration aggregation
     val s = opt.toString

@@ -33,16 +33,18 @@ class LayoutSpec extends SparkTestBase {
         .agg(avg("sx"), avg("sy")).collect()(0)
       (per.getDouble(0), per.getDouble(1))
     }
-    val zPath = java.nio.file.Files.createTempDirectory("graft-z").toString + "/z"
-    val yPath = java.nio.file.Files.createTempDirectory("graft-z").toString + "/y"
-    Layout.zorderWrite(grid, Layout.zValue(col("x"), col("y")), zPath, 16)
-    grid.repartitionByRange(16, col("y")).sortWithinPartitions(col("y"))
-      .write.mode("overwrite").parquet(yPath)
-    val (zx, zy) = spans(zPath)
-    val (yx, yy) = spans(yPath)
-    // y-sorted: y tight but x spans the whole range (~63)
-    assert(yy < 8.0 && yx > 50.0)
-    // z-ordered: BOTH dims bounded well under the full range
-    assert(zx < 32.0 && zy < 32.0, s"z spans ($zx, $zy)")
+    val dir = java.nio.file.Files.createTempDirectory("graft-z").toString
+    val (zPath, yPath) = (s"$dir/z", s"$dir/y")
+    try {
+      Layout.zorderWrite(grid, Layout.zValue(col("x"), col("y")), zPath, 16)
+      grid.repartitionByRange(16, col("y")).sortWithinPartitions(col("y"))
+        .write.mode("overwrite").parquet(yPath)
+      val (zx, zy) = spans(zPath)
+      val (yx, yy) = spans(yPath)
+      // y-sorted: y tight but x spans the whole range (~63)
+      assert(yy < 8.0 && yx > 50.0)
+      // z-ordered: BOTH dims bounded well under the full range
+      assert(zx < 32.0 && zy < 32.0, s"z spans ($zx, $zy)")
+    } finally deleteTrees(Seq(dir))
   }
 }

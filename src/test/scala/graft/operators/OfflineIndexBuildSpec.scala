@@ -34,12 +34,14 @@ class OfflineIndexBuildSpec extends SparkTestBase {
 
   test("write + load roundtrip preserves both artifacts") {
     val dir = java.nio.file.Files.createTempDirectory("graft-index").toString
-    val a = OfflineIndexBuild.run(products, 10, 1L, 8)
-    OfflineIndexBuild.write(a, dir)
-    OfflineIndexBuild.write(a, dir) // overwrite semantics: second run is a wipe
-    val b = OfflineIndexBuild.load(spark, dir)
-    assert(b.index.count() == 10)
-    assert(b.edges.count() == a.edges.count())
-    assert(b.index.schema("embedding").dataType.simpleString == "array<float>")
+    try {
+      val a = OfflineIndexBuild.run(products, 10, 1L, 8)
+      OfflineIndexBuild.write(a, dir)
+      OfflineIndexBuild.write(a, dir) // overwrite semantics: second run is a wipe
+      val b = OfflineIndexBuild.load(spark, dir)
+      assert(b.index.count() == 10)
+      assert(b.edges.count() == a.edges.count())
+      assert(b.index.schema("embedding").dataType.simpleString == "array<float>")
+    } finally deleteTrees(Seq(dir))
   }
 }

@@ -22,34 +22,36 @@ class StreamingIndexSpec extends SparkTestBase {
     val base = graft.sources.Tables.embeddings(spark, sf())
       .select("vec_id", "embedding")
     val model = Ivf.fit(base, 4)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-stream-ivf").toString + "/index"
-    Ivf.writeIndex(Ivf.assign(model, base), path)
-
-    val mem = MemoryStream[(Long, Array[Float])]
-    val q = mem.toDF().toDF("vec_id", "embedding")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        Ivf.upsertIndex(model, batch, path)
-      }
-      .start()
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-ivf").toString
     try {
-      // two micro-batches of brand-new vectors (ids far outside the base)
-      val v1 = Array.tabulate(64)(i => if (i == 7) 1.0f else 0.01f)
-      val v2 = Array.tabulate(64)(i => if (i == 21) -1.0f else 0.02f)
-      mem.addData((900001L, v1))
-      q.processAllAvailable()
-      mem.addData((900002L, v2))
-      q.processAllAvailable()
+      val path = s"$dir/index"
+      Ivf.writeIndex(Ivf.assign(model, base), path)
 
-      val queries = Seq((1L, v1.toSeq), (2L, v2.toSeq))
-        .toDF("query_id", "q_emb")
-      // nProbe = all cells -> exact; the streamed vector must be its own
-      // top hit (sim ~ 1) with self-match allowed
-      val top = Ivf.topKPersisted(spark, path, model, queries, 1, 4,
-        excludeSelf = false)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(top(1L) == 900001L && top(2L) == 900002L)
-    } finally q.stop()
+      val mem = MemoryStream[(Long, Array[Float])]
+      val q = mem.toDF().toDF("vec_id", "embedding")
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          Ivf.upsertIndex(model, batch, path)
+        }
+        .start()
+      try {
+        // two micro-batches of brand-new vectors (ids far outside the base)
+        val v1 = Array.tabulate(64)(i => if (i == 7) 1.0f else 0.01f)
+        val v2 = Array.tabulate(64)(i => if (i == 21) -1.0f else 0.02f)
+        mem.addData((900001L, v1))
+        q.processAllAvailable()
+        mem.addData((900002L, v2))
+        q.processAllAvailable()
+
+        val queries = Seq((1L, v1.toSeq), (2L, v2.toSeq))
+          .toDF("query_id", "q_emb")
+        // nProbe = all cells -> exact; the streamed vector must be its own
+        // top hit (sim ~ 1) with self-match allowed
+        val top = Ivf.topKPersisted(spark, path, model, queries, 1, 4,
+          excludeSelf = false)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(top(1L) == 900001L && top(2L) == 900002L)
+      } finally q.stop()
+    } finally deleteTrees(Seq(dir))
   }
 }

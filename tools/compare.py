@@ -32,7 +32,8 @@ def main(sfdir, outdir):
         p = f"{sfdir}/{t}.parquet"
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
+    oracle_path = os.path.join(outdir, "oracle_sql.json")
+    oracle = json.load(open(oracle_path)) if os.path.exists(oracle_path) else {}
     # oracle keys as well as output dirs: a query that threw before its
     # write leaves no directory, and must count as a failure, not vanish
     dirs = {n for n in os.listdir(outdir)
@@ -99,6 +100,11 @@ def main(sfdir, outdir):
         else:
             print(f"[PASS] {name}: {len(g)} rows x {len(g.columns)} cols")
             n_pass += 1
+    if n_pass + n_fail == 0:
+        # every oracle key counts as a pass or a fail, so this is an empty
+        # or missing oracle_sql.json; "0 pass, 0 fail" would read as clean
+        print(f"[FAIL] nothing compared: {oracle_path} is empty or missing")
+        return 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
 
