@@ -196,8 +196,8 @@ object GraphMetrics {
       // the per-round form of [[PageRank.BroadcastMaxNodes]]'s choice
       val fr = frontier.withColumnRenamed("node", "src")
       val next = Iterate.roll(
-        sym.join(if (frontierSize <= broadcastMaxNodes) broadcast(fr)
-                 else fr.hint("shuffle_hash"), Seq("src"))
+        sym.join(PageRank.nodeSide(frontierSize, broadcastMaxNodes)(fr),
+            Seq("src"))
           .select(col("dst").as("node")).distinct()
           .join(visited.select("node"), Seq("node"), "left_anti")
           .observe(obs, count(lit(1)).as("n")),
@@ -302,9 +302,9 @@ object GraphMetrics {
     // a broadcast the per-round join goes MAP-SIDE (the edge frame never
     // exchanges inside the loop — same adaptive discipline and bound as
     // [[PageRank.BroadcastMaxNodes]]); above it, shuffle-hash (sort-free)
-    val small = nObs.get("n").asInstanceOf[Long] <= broadcastMaxNodes
-    val lblSide: DataFrame => DataFrame =
-      if (small) broadcast else _.hint("shuffle_hash")
+    val n = nObs.get("n").asInstanceOf[Long]
+    val small = n <= broadcastMaxNodes
+    val lblSide = PageRank.nodeSide(n, broadcastMaxNodes)
     var lbl = nodes.select(col("node"), col("node").as("community"))
     var lblCp: Option[DataFrame] = None
     for (i <- 1 to rounds) {
@@ -458,9 +458,8 @@ object GraphMetrics {
     // a broadcast, BOTH half-step joins go map-side and the edge frame
     // never exchanges inside the loop (same adaptive bound as
     // [[PageRank.BroadcastMaxNodes]]); above it, sort-free shuffle-hash
-    val scoreSide: DataFrame => DataFrame =
-      if (nObs.get("n").asInstanceOf[Long] <= broadcastMaxNodes) broadcast
-      else _.hint("shuffle_hash")
+    val scoreSide =
+      PageRank.nodeSide(nObs.get("n").asInstanceOf[Long], broadcastMaxNodes)
     // Scaling commutes through the linear half-steps, so the RAW power
     // iteration normalized ONCE at the end points exactly where the
     // per-round-normalized one does — and costs nothing mid-loop: no

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Weighted PageRank over the co-purchase graph — graph-global item
@@ -9,20 +9,26 @@ import org.apache.spark.sql.functions._
   * 189-197` takes one neighborhood per query) never needed, but any
   * catalog-scale ranking does.
   *
-  * Spark shape: the canonical bulk-iteration. The edge transition
-  * fractions (src, dst, weight/out_weight) are computed ONCE and
-  * localCheckpoint'd — ten iterations read the materialized blocks, not
-  * ten re-builds of the graph subtree. Each iteration is exactly one
-  * join (ranks ⋈ edges on src) + one groupBy(dst) shuffle — O(E) per
-  * iteration, the same contract GraphX/Pregel gives, without leaving
-  * the DataFrame API. Ranks are checkpointed every few rounds to keep
-  * the growing plan tree from dominating driver time (same lineage
-  * pattern as the connected-components loop in [[Dedup]]).
+  * Spark shape: the canonical bulk-iteration, in ONE loop ([[walk]]).
+  * The edge transition fractions (src, dst, weight/out_weight) are
+  * computed ONCE and localCheckpoint'd — ten iterations read the
+  * materialized blocks, not ten re-builds of the graph subtree. Each
+  * iteration is exactly one join (ranks ⋈ edges on src) + one
+  * groupBy(dst) shuffle — O(E) per iteration, the same contract
+  * GraphX/Pregel gives, without leaving the DataFrame API. Ranks are
+  * checkpointed every few rounds to keep the growing plan tree from
+  * dominating driver time (same lineage pattern as the
+  * connected-components loop in [[Dedup]]).
   *
-  * Contract: `edges` must have no dangling nodes (every node has ≥ 1
-  * out-edge) — automatically true for a symmetrized undirected graph
-  * ([[CoPurchaseGraph.symmetrize]]); general directed graphs would add
-  * the dangling-mass redistribution term.
+  * Any edge set is valid: nodes with no out-edges hand their mass back
+  * through the restart vector (the dangling-mass term), so total rank
+  * stays 1. [[runDirected]] is the walk with a uniform restart and
+  * [[personalized]] the walk with a seed restart — directed PageRank
+  * IS personalized PageRank with the uniform restart vector
+  * (Haveliwala, "Topic-Sensitive PageRank", WWW 2002). On a
+  * symmetrized undirected graph ([[CoPurchaseGraph.symmetrize]], q63)
+  * every node has an out-edge, the dangling mass is exactly 0.0 every
+  * round, and the uniform walk is undirected PageRank bit for bit.
   *
   * Output ranks are scaled by N (mean 1.0) so `round(, 6)` keeps ~6
   * significant digits regardless of graph size — the double-drift
@@ -56,38 +62,36 @@ object PageRank {
     * PageRankSpec's boundary case. */
   val BroadcastMaxNodes: Long = 1L << 20
 
-  /** Shipped mid-loop roll cadence for [[run]] (no dangling term — the
-    * rank chain is single-consumer, so rounds between rolls fuse into
-    * one scheduled job with zero duplicated work).
-    *
-    * 4 → 2 in round 15: the driver's contract channel times each query
-    * COLD (one sample per fresh-chunk JVM), and the cadence-4 fused
-    * plans' extra codegen/interpretation depth lands entirely on that
-    * cold run — ScaleProbe under the exact chunk-prelude cold protocol
-    * at 32 cores measured cadence 4 at 24.6–31.5 s cold vs cadence 2
-    * at 10.1–21.0 and cadence 1 at 11.9–19.0 (medians ≈ 12.4 both;
-    * storms marked by their own ambient columns), with warm samples
-    * 6.7–8.0 vs 5.9–7.3 — the round-14 warm-alternation probe that kept
-    * 4 only ever compared 4 vs 10 and never saw the cold channel.
-    * Cadence 2 is preferred over 1 on the tie: half the roll
-    * materializations + driver round-trips at cluster scale. Outputs
-    * are cadence-invariant to the last ulp (PageRankSpec pin). */
-  private[graft] val RollEvery: Int = 2
+  /** The join side of a node-sized frame of `n` rows in the graph
+    * loops ([[walk]], [[GraphMetrics]]' labelProp, HITS and BFS):
+    * broadcast when `n <= broadcastMaxNodes` (a map-side join — the
+    * edge frame never exchanges), else a shuffle-hash hint — never
+    * sort-merge, which would additionally SORT the edge side. */
+  private[graft] def nodeSide(n: Long, broadcastMaxNodes: Long)
+      : DataFrame => DataFrame =
+    if (n <= broadcastMaxNodes) broadcast else _.hint("shuffle_hash")
 
-  /** Shipped roll cadence for [[runDirected]]: rounds between rolls
-    * read the dangling mass from an in-plan one-row broadcast instead
-    * of an observed-metric literal. Round-14 measurement (SCALE.md
-    * round-14 fusion table: 3-arm same-JVM alternating A/B at sf0.1,
-    * two independent windows, outputs IDENTICAL in all arms): cadence 2
-    * beats 1 on directed PR in both windows (med 7.18→6.37 / 7.23→6.99
-    * s, min 7.00→6.15 / 7.00→6.71) — half the roll actions and
-    * checkpoint materializations for one extra node-sized one-row
-    * aggregate per fused round. Round-15 re-confirmed it in the COLD
-    * chunk-prelude channel too (ScaleProbe 32c: c2 8.78/7.01/5.83 vs
-    * c1 9.42/8.28/6.58). FULL fusion (cadence ≥ iterations) LOSES
-    * (q94 med 8.76): the per-round broadcast chain serializes inside
-    * one job and the unmaterialized rank subtrees re-execute per
-    * consumer — rejected, kept here as the measured boundary. */
+  /** Shipped roll cadence for [[runDirected]] (q94, and q63 on its
+    * symmetrized graph): rounds between rolls read the dangling mass
+    * from an in-plan one-row broadcast instead of an observed-metric
+    * literal. Round-14 measurement (SCALE.md round-14 fusion table:
+    * 3-arm same-JVM alternating A/B at sf0.1, two independent windows,
+    * outputs IDENTICAL in all arms): cadence 2 beats 1 on directed PR
+    * in both windows (med 7.18→6.37 / 7.23→6.99 s, min 7.00→6.15 /
+    * 7.00→6.71) — half the roll actions and checkpoint materializations
+    * for one extra node-sized one-row aggregate per fused round.
+    * Round-15 re-confirmed it in the COLD chunk-prelude channel too
+    * (ScaleProbe 32c: c2 8.78/7.01/5.83 vs c1 9.42/8.28/6.58). FULL
+    * fusion (cadence ≥ iterations) LOSES (q94 med 8.76): the per-round
+    * broadcast chain serializes inside one job and the unmaterialized
+    * rank subtrees re-execute per consumer — rejected, kept here as the
+    * measured boundary. q63's own round-15 cold-channel measurement
+    * (of its loop without the dangling term; ScaleProbe, exact
+    * chunk-prelude cold protocol, 32 cores) also chose 2: cadence 4 at
+    * 24.6–31.5 s cold vs cadence 2 at 10.1–21.0 and cadence 1 at
+    * 11.9–19.0, medians ≈ 12.4 for both, 2 preferred over 1 on the tie
+    * for half the roll materializations and driver round-trips at
+    * cluster scale. */
   private[graft] val RollEveryDirected: Int = 2
 
   /** Shipped roll cadence for [[personalized]] — REVERTED to 1 in
@@ -111,11 +115,11 @@ object PageRank {
     * full per-partition sort), and above the threshold the totals meet
     * the edges in a regular shuffled join (deployments with >10 MB node
     * frames size `spark.sql.autoBroadcastJoinThreshold` accordingly).
-    * The directed/personalized node frames read this CHECKPOINT instead
-    * of the raw edge plan, so the edge build runs once per query.
+    * The node frame reads this CHECKPOINT instead of the raw edge plan,
+    * so the edge build runs once per query.
     * Round-14 measurement (same-JVM alternating, 5 reps, outputs
     * IDENTICAL): directed PR med 6.91→4.99 s, personalized med
-    * 6.28→5.00, undirected [[run]] a local wash adopted for the
+    * 6.28→5.00, undirected (q63) a local wash adopted for the
     * structural term (SCALE.md round-14 fusion section).
     *
     * DETERMINISM REQUIREMENT (ADVICE r14): the join self-joins the
@@ -133,125 +137,118 @@ object PageRank {
         (col("weight").cast("double") / col("__w")).as("frac"))
       .localCheckpoint()
 
-  def run(edges: DataFrame, iterations: Int = 10,
-          damping: Double = 0.85,
-          broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame =
-    runImpl(edges, iterations, damping, broadcastMaxNodes, RollEvery)
+  /** Directed PageRank: the [[walk]] with a uniform restart — base
+    * (1−d)/n to every node, and each round's dangling mass shared out
+    * as dm/n.
+    * @return (node, pr_scaled) — rank × |nodes| rounded to 6 dp. */
+  def runDirected(edges: DataFrame, iterations: Int = 10,
+                  damping: Double = 0.85,
+                  broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame =
+    walk(edges, None, iterations, damping, broadcastMaxNodes,
+      RollEveryDirected)
 
-  /** Mid-loop lineage-truncation cadence: roll the rank frame every
-    * `RollEvery` rounds. The cadence is a pure plan/scheduling knob —
-    * the arithmetic per round is identical at ANY cadence, so outputs
-    * match to the last ulp (PageRankSpec pins equality across
-    * cadences). Round-14 measurement (SCALE.md round-14 fusion table,
-    * same-JVM alternating A/B at sf0.1, outputs IDENTICAL): cadence 10
-    * (whole loop in one job) is NOT better than 4 (med 7.35 vs 7.54 s) — the
-    * broadcast chain serializes inside the job either way — so the
-    * historical 4 stays. */
-  private[graft] def runImpl(edges: DataFrame, iterations: Int,
-                             damping: Double, broadcastMaxNodes: Long,
-                             rollEvery: Int): DataFrame = {
-    val frac = fracOf(edges)
-    val nodes = frac.select(col("src").as("node")).distinct()
-    val n = nodes.count()
-    val base = (1.0 - damping) / n
+  /** PERSONALIZED PageRank: random walk with restart to a seed set —
+    * "related to THESE anchor products", the seed-conditioned item
+    * importance a recommender blends when a user has a known basket
+    * (vs [[runDirected]]'s global importance). The [[walk]] with the
+    * seed restart column: teleport mass — the (1−d) restart AND the
+    * dangling-node mass — returns only to the seeds, uniformly. The
+    * seed flag is a column, not a driver structure, so |S| can be
+    * thousands of anchors unchanged.
+    *
+    * @param seeds one column `node`; seeds absent from the graph are
+    *              ignored (they could neither receive nor pass mass)
+    * @return (node, ppr_scaled) — rank × |nodes| rounded to 6 dp. */
+  def personalized(edges: DataFrame, seeds: DataFrame, iterations: Int = 10,
+                   damping: Double = 0.85,
+                   broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame =
+    walk(edges, Some(seeds), iterations, damping, broadcastMaxNodes,
+      RollEveryPersonalized)
 
-    // rank side of the contrib join: broadcast when |V| provably fits
-    // (map-side join, no edge exchange), shuffle-hash otherwise — never
-    // sort-merge, which would additionally SORT the edge side per round
-    val rankSide: DataFrame => DataFrame =
-      if (n <= broadcastMaxNodes) broadcast else _.hint("shuffle_hash")
-
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-    var cp: Option[DataFrame] = None
-    for (i <- 1 to iterations) {
-      // on the shuffle path the checkpointed frac re-exchanges on src
-      // each round — under AQE a localCheckpoint captures
-      // UnknownPartitioning, so the window's src partitioning is NOT
-      // carried (SCALE.md round 8; the partitioning-preserving pin forms
-      // were A/B-measured SLOWER here because AQE coalesces this
-      // re-exchange). The broadcast path deletes that exchange outright
-      ranks = frac.join(rankSide(ranks),
-          frac("src") === ranks("node"))
-        .groupBy(col("dst"))
-        .agg((lit(base) + lit(damping) * sum(col("frac") * col("rank")))
-          .as("rank"))
-        .select(col("dst").as("node"), col("rank"))
-      if (i % rollEvery == 0 && i < iterations) {
-        ranks = Iterate.roll(ranks, cp); cp = Some(ranks)
-      }
-    }
-    ranks.select(col("node"), round(col("rank") * n, 6).as("pr_scaled"))
-  }
-
-  /** General DIRECTED PageRank — [[run]] without the no-dangling-nodes
-    * contract: nodes with no out-edges redistribute their mass uniformly
-    * (the standard dangling-mass term), so total rank stays 1 on any
-    * edge set. Per iteration: the same contrib join + groupBy(dst), plus
-    * a filter-aggregate producing the ONE-ROW dangling mass (broadcast
-    * back — no extra wide shuffle) and a left join so nodes with no
-    * in-edges still receive base + dangling share. The dangling FLAG is
-    * topology, computed once outside the loop. (Note: the checkpointed
-    * node/edge frames DO re-exchange per round — AQE's checkpoint
-    * capture is UnknownPartitioning — and the A/B-measured verdict is
-    * that the AQE-coalesced re-exchange is cheaper at bench scale than
-    * either partitioning-preserving pin form; SCALE.md round 8, "The
-    * pinned-partitioning belief was wrong", has the numbers.)
+  /** The one PageRank round loop, restarting uniformly (`seeds` None)
+    * or to the seed set. Per iteration: the contrib join +
+    * groupBy(dst), the dangling mass as ONE number, and a left join so
+    * nodes with no in-edges still receive their restart share. The
+    * dangling FLAG is topology, computed once outside the loop. (Note:
+    * the checkpointed node/edge frames DO re-exchange per round — AQE's
+    * checkpoint capture is UnknownPartitioning — and the A/B-measured
+    * verdict is that the AQE-coalesced re-exchange is cheaper at bench
+    * scale than either partitioning-preserving pin form; SCALE.md round
+    * 8, "The pinned-partitioning belief was wrong", has the numbers.)
     *
     * The dangling mass is harvested as an OBSERVED metric of the
     * per-round checkpoint (`Iterate.roll`) rather than a standalone
     * aggregate: the loop already pays one materialization action per
-    * round, and `observe` metrics fire on that same action — so the
+    * roll, and `observe` metrics fire on that same action — so the
     * scalar costs zero extra jobs and the next round's plan embeds it
     * as a literal instead of a broadcast cross join (measured on the
     * sf0.1 co-purchase graph: two scheduled jobs per round collapse to
     * one; see BENCH_ISOLATED_r8's post-publish note). Round 1's mass is
     * the one aggregate the observation cannot supply (there is no
     * checkpoint before the first roll) — a single node-sized job at
-    * setup, not per round. */
-  def runDirected(edges: DataFrame, iterations: Int = 10,
-                  damping: Double = 0.85,
-                  broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame =
-    runDirectedImpl(edges, iterations, damping, broadcastMaxNodes,
-      RollEveryDirected)
-
-  /** [[runDirected]] with the roll cadence exposed: rounds that do NOT
-    * roll read the dangling mass from a one-row in-plan aggregate
-    * (broadcast cross join) over the previous round's rank subtree
-    * instead of an observed-metric literal — same double sum, so the
-    * arithmetic is identical modulo partial-aggregation order (the
-    * same run-to-run nondeterminism the observed metric already has).
-    * At cadence 1 this is exactly the historical shape. */
-  private[graft] def runDirectedImpl(edges: DataFrame, iterations: Int,
-                                     damping: Double,
-                                     broadcastMaxNodes: Long,
-                                     rollEvery: Int): DataFrame = {
+    * setup, not per round.
+    *
+    * `rollEvery` is a pure plan knob: rounds that do NOT roll read the
+    * dangling mass from a one-row in-plan aggregate (broadcast cross
+    * join) over the previous round's rank subtree instead of an
+    * observed-metric literal — same double sum, so the arithmetic is
+    * identical modulo partial-aggregation order (the same run-to-run
+    * nondeterminism the observed metric already has). At cadence 1
+    * every round rolls. */
+  private[graft] def walk(edges: DataFrame, seeds: Option[DataFrame],
+                          iterations: Int, damping: Double,
+                          broadcastMaxNodes: Long,
+                          rollEvery: Int): DataFrame = {
     val frac = fracOf(edges)
     // the node frame derives from the frac CHECKPOINT (frac has one row
     // per edge, so its src/dst sets are the edge frame's) — raw-plan
     // union arms would re-execute the whole edge build
     val srcs = frac.select(col("src").as("node"), lit(true).as("__has")).distinct()
     val nObs = Observation()
-    val nodes = frac.select(col("src").as("node"))
+    val flagged = frac.select(col("src").as("node"))
       .unionByName(frac.select(col("dst").as("node")))
       .distinct()
       .join(srcs, Seq("node"), "left")
-      .select(col("node"), col("__has").isNull.as("dang"))
-      // no build-time repartition: an AQE checkpoint would discard the
-      // partitioning anyway (SCALE.md round 8); n rides the checkpoint
-      // action
-      .observe(nObs, count(lit(1)).as("n"))
-      .localCheckpoint()
+    // no build-time repartition: an AQE checkpoint would discard the
+    // partitioning anyway (SCALE.md round 8); n (and the seed count)
+    // ride the checkpoint action
+    val nodes = (seeds match {
+      case None =>
+        flagged.select(col("node"), col("__has").isNull.as("dang"))
+          .observe(nObs, count(lit(1)).as("n"))
+      case Some(s) =>
+        flagged
+          .join(s.select(col("node"), lit(true).as("__seed")).distinct(),
+            Seq("node"), "left")
+          .select(col("node"), col("__has").isNull.as("dang"),
+            coalesce(col("__seed"), lit(false)).as("seed"))
+          .observe(nObs, count(lit(1)).as("n"),
+            coalesce(sum(when(col("seed"), lit(1L))), lit(0L)).as("ns"))
+    }).localCheckpoint()
     val n = nObs.get("n").asInstanceOf[Long]
-    val base = (1.0 - damping) / n
-    // same adaptive choice as [[run]] (|V| is in hand from the observed
-    // metric): broadcast the node-sized frames when they provably fit —
-    // the contrib join goes map-side (no per-round edge exchange) and
-    // the receive join builds on the contrib side — else shuffle-hash
+    // the restart vector r: rank starts at r, and each round adds the
+    // teleport (1−d)·r and the dangling share dm·r
+    val (start, teleport, share) = seeds match {
+      case None =>
+        val base = (1.0 - damping) / n
+        (lit(1.0 / n), lit(base), (dm: Column) => dm / n)
+      case Some(_) =>
+        val nSeeds = nObs.get("ns").asInstanceOf[Long]
+        require(nSeeds > 0, "personalized PageRank needs >= 1 seed in the graph")
+        // 1/|S| on seeds, 0 elsewhere
+        val restart = when(col("seed"), lit(1.0 / nSeeds)).otherwise(lit(0.0))
+        (restart, lit(1.0 - damping) * restart, (dm: Column) => dm * restart)
+    }
+    // topology flags carried through every round: dang (and seed)
+    val flags = nodes.columns.toSeq.tail.map(col)
+    // |V| is in hand from the observed metric: broadcast the node-sized
+    // frames when they provably fit — the contrib join goes map-side
+    // (no per-round edge exchange) and the receive join builds on the
+    // contrib side — else shuffle-hash
     val small = n <= broadcastMaxNodes
-    val rankSide: DataFrame => DataFrame =
-      if (small) broadcast else _.hint("shuffle_hash")
+    val rankSide = nodeSide(n, broadcastMaxNodes)
 
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("rank"), col("dang"))
+    var ranks = nodes.select(col("node") +: start.as("rank") +: flags: _*)
     // round-1 dangling mass: the only aggregate the roll observation
     // can't supply (nothing has been rolled yet) — one node-sized job
     var dmLit: Option[Double] = Some(ranks.where(col("dang"))
@@ -264,9 +261,9 @@ object PageRank {
     var dmDf: Option[DataFrame] = None
     var cp: Option[DataFrame] = None
     for (i <- 1 to iterations) {
-      // same discipline as [[run]]: hash join (never sort-merge); on
-      // the shuffle path the per-round frac re-exchange is
-      // AQE-coalesced, measured cheaper than pinning (SCALE.md round 8)
+      // hash join (never sort-merge); on the shuffle path the per-round
+      // frac re-exchange is AQE-coalesced, measured cheaper than
+      // pinning (SCALE.md round 8)
       val contrib = frac.join(rankSide(ranks.select("node", "rank")),
           frac("src") === col("node"))
         .groupBy(frac("dst").as("node"))
@@ -278,10 +275,10 @@ object PageRank {
         case None => (joined.crossJoin(broadcast(dmDf.get)), col("__dm"))
       }
       ranks = withDm
-        .select(col("node"),
-          (lit(base) + lit(damping) *
-            (coalesce(col("m"), lit(0.0)) + dmCol / n)).as("rank"),
-          col("dang"))
+        .select(col("node") +:
+          (teleport + lit(damping) *
+            (coalesce(col("m"), lit(0.0)) + share(dmCol))).as("rank") +:
+          flags: _*)
       // Rolling materializes the node-sized rank frame (one tiny job)
       // and hands the NEXT round its dangling mass as an observed
       // metric — zero extra jobs. Rounds between rolls skip both the
@@ -303,106 +300,7 @@ object PageRank {
         }
       }
     }
-    ranks.select(col("node"), round(col("rank") * n, 6).as("pr_scaled"))
-  }
-
-  /** PERSONALIZED PageRank: random walk with restart to a seed set —
-    * "related to THESE anchor products", the seed-conditioned item
-    * importance a recommender blends when a user has a known basket
-    * (vs [[run]]'s global importance). Teleport mass — the (1−d) restart
-    * AND the dangling-node mass — returns only to the seeds, uniformly.
-    *
-    * Same bulk-iteration shape as [[runDirected]]: transition fractions
-    * checkpointed once, one join + one groupBy(dst) per round, dangling
-    * mass a one-row broadcast. The seed flag is a column, not a driver
-    * structure, so |S| can be thousands of anchors unchanged.
-    *
-    * @param seeds one column `node`; seeds absent from the graph are
-    *              ignored (they could neither receive nor pass mass)
-    * @return (node, ppr_scaled) — rank × |nodes| rounded to 6 dp. */
-  def personalized(edges: DataFrame, seeds: DataFrame, iterations: Int = 10,
-                   damping: Double = 0.85,
-                   broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame =
-    personalizedImpl(edges, seeds, iterations, damping, broadcastMaxNodes,
-      RollEveryPersonalized)
-
-  /** [[personalized]] with the roll cadence exposed — the
-    * [[runDirectedImpl]] fusion applied to the restart form. */
-  private[graft] def personalizedImpl(edges: DataFrame, seeds: DataFrame,
-                                      iterations: Int, damping: Double,
-                                      broadcastMaxNodes: Long,
-                                      rollEvery: Int): DataFrame = {
-    val frac = fracOf(edges)
-    // see [[runDirectedImpl]]: the union arms read the frac checkpoint
-    // instead of re-executing the edge build
-    val srcs = frac.select(col("src").as("node"), lit(true).as("__has")).distinct()
-    val nObs = Observation()
-    val nodes = frac.select(col("src").as("node"))
-      .unionByName(frac.select(col("dst").as("node")))
-      .distinct()
-      .join(srcs, Seq("node"), "left")
-      .join(seeds.select(col("node"), lit(true).as("__seed")).distinct(),
-        Seq("node"), "left")
-      .select(col("node"), col("__has").isNull.as("dang"),
-        coalesce(col("__seed"), lit(false)).as("seed"))
-      // no build-time repartition (see [[runDirected]]); n AND the
-      // seed count ride the one checkpoint action
-      .observe(nObs, count(lit(1)).as("n"),
-        coalesce(sum(when(col("seed"), lit(1L))), lit(0L)).as("ns"))
-      .localCheckpoint()
-    val n = nObs.get("n").asInstanceOf[Long]
-    val nSeeds = nObs.get("ns").asInstanceOf[Long]
-    require(nSeeds > 0, "personalized PageRank needs >= 1 seed in the graph")
-    // restart vector: 1/|S| on seeds, 0 elsewhere
-    val restart = when(col("seed"), lit(1.0 / nSeeds)).otherwise(lit(0.0))
-    // adaptive contrib-join strategy (see [[runDirected]])
-    val small = n <= broadcastMaxNodes
-    val rankSide: DataFrame => DataFrame =
-      if (small) broadcast else _.hint("shuffle_hash")
-
-    var ranks = nodes.select(col("node"), restart.as("rank"),
-      col("dang"), col("seed"))
-    // round-1 dangling mass (the [[runDirected]] setup job)
-    var dmLit: Option[Double] = Some(ranks.where(col("dang"))
-      .agg(coalesce(sum(col("rank")), lit(0.0))).collect()(0).getDouble(0))
-    var dmDf: Option[DataFrame] = None
-    var cp: Option[DataFrame] = None
-    for (i <- 1 to iterations) {
-      val contrib = frac.join(rankSide(ranks.select("node", "rank")),
-          frac("src") === col("node"))
-        .groupBy(frac("dst").as("node"))
-        .agg(sum(col("frac") * col("rank")).as("m"))
-      val joined = nodes.join(if (small) broadcast(contrib) else contrib,
-        Seq("node"), "left")
-      val (withDm, dmCol) = dmLit match {
-        case Some(v) => (joined, lit(v))
-        case None => (joined.crossJoin(broadcast(dmDf.get)), col("__dm"))
-      }
-      ranks = withDm
-        .select(col("node"),
-          (lit(1.0 - damping) * restart + lit(damping) *
-            (coalesce(col("m"), lit(0.0)) +
-              dmCol * restart)).as("rank"),
-          col("dang"), col("seed"))
-      // same discipline as [[runDirectedImpl]]: a rolled round hands
-      // the next round its mass as an observed-metric literal; a fused
-      // round reads it from the in-plan one-row broadcast
-      if (i < iterations) {
-        if (i % rollEvery == 0) {
-          val obs = Observation()
-          ranks = Iterate.roll(ranks.observe(obs,
-            coalesce(sum(when(col("dang"), col("rank"))), lit(0.0))
-              .as("dm")), cp)
-          cp = Some(ranks)
-          dmLit = Some(obs.get("dm").asInstanceOf[Double])
-          dmDf = None
-        } else {
-          dmLit = None
-          dmDf = Some(ranks.where(col("dang"))
-            .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dm")))
-        }
-      }
-    }
-    ranks.select(col("node"), round(col("rank") * n, 6).as("ppr_scaled"))
+    ranks.select(col("node"), round(col("rank") * n, 6)
+      .as(if (seeds.isEmpty) "pr_scaled" else "ppr_scaled"))
   }
 }

@@ -30,10 +30,13 @@ private[graft] object GraphQueries {
 
     // --- weighted PageRank: iterative graph analytics -------------------
     // 10 bulk iterations, one join+groupBy shuffle each, over
-    // checkpointed transition fractions. Oracle = the same 10 rounds as
+    // checkpointed transition fractions: the directed walk on the
+    // symmetrized graph, where every node has an out-edge, so the
+    // dangling mass is 0.0 every round and base + d·(m + 0.0/n) is
+    // exactly the oracle's base + d·m. Oracle = the same 10 rounds as
     // chained CTEs in DuckDB.
     QuerySpec("q63_pagerank", ((s, d) =>
-      PageRank.run(CoPurchaseGraph.symmetrize(
+      PageRank.runDirected(CoPurchaseGraph.symmetrize(
         CoPurchaseGraph.fromOrders(Tables.lineitem(s, d))))),
       {
         val rounds = (1 to 10).map { i =>
@@ -98,11 +101,10 @@ private[graft] object GraphQueries {
         |SELECT count(*) AS n_rows, true AS salted_equals_plain FROM r""".stripMargin),
 
     // --- DIRECTED PageRank with dangling-mass redistribution ------------
-    // The q63 contract excluded dangling nodes (symmetrized input); this
-    // runs on the raw src<dst basket DAG where most nodes have no
-    // out-edges — the dangling term keeps total mass at 1 (the general
-    // directed-graph form). 10-round chained-CTE oracle with the same
-    // dangling arithmetic.
+    // q63's walk on the raw src<dst basket DAG instead of its symmetrized
+    // form: here most nodes have no out-edges, and the dangling term
+    // keeps total mass at 1 (the general directed-graph form). 10-round
+    // chained-CTE oracle with the same dangling arithmetic.
     QuerySpec("q94_pagerank_directed", ((s, d) =>
       PageRank.runDirected(CoPurchaseGraph.fromOrders(Tables.lineitem(s, d)))),
       {

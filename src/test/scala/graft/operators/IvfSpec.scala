@@ -43,29 +43,32 @@ class IvfSpec extends SparkTestBase {
   }
 
   test("persisted index: partitionBy(cell) prunes files, results match in-memory topK") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf").toString + "/index"
-    val model = Ivf.fit(emb, nCells = 8)
-    val indexed = Ivf.assign(model, emb)
-    Ivf.writeIndex(indexed, dir)
-    val loaded = Ivf.loadIndex(spark, dir)
-    // partition pruning: a one-cell filter's scan opens a strict subset of
-    // files (numFiles is the post-pruning metric on the executed scan)
-    def filesScanned(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      df.queryExecution.executedPlan.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metrics("numFiles").value
-      }.sum
-    }
-    val someCell = indexed.select("cell").head().getInt(0)
-    val prunedFiles = filesScanned(loaded.where(col("cell") === lit(someCell)))
-    val allFiles = filesScanned(loaded)
-    assert(prunedFiles > 0 && prunedFiles < allFiles)
-    val persisted = Ivf.topKPersisted(spark, dir, model, queries, 10, nProbe = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), math.rint(r.getDouble(2) * 1e6), r.getInt(3))).toSet
-    val inMem = Ivf.topK(indexed, model, queries, 10, nProbe = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), math.rint(r.getDouble(2) * 1e6), r.getInt(3))).toSet
-    assert(persisted == inMem)
+    val tmp = java.nio.file.Files.createTempDirectory("ivf").toString
+    val dir = s"$tmp/index"
+    try {
+      val model = Ivf.fit(emb, nCells = 8)
+      val indexed = Ivf.assign(model, emb)
+      Ivf.writeIndex(indexed, dir)
+      val loaded = Ivf.loadIndex(spark, dir)
+      // partition pruning: a one-cell filter's scan opens a strict subset of
+      // files (numFiles is the post-pruning metric on the executed scan)
+      def filesScanned(df: org.apache.spark.sql.DataFrame): Long = {
+        df.collect()
+        df.queryExecution.executedPlan.collectLeaves().collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.metrics("numFiles").value
+        }.sum
+      }
+      val someCell = indexed.select("cell").head().getInt(0)
+      val prunedFiles = filesScanned(loaded.where(col("cell") === lit(someCell)))
+      val allFiles = filesScanned(loaded)
+      assert(prunedFiles > 0 && prunedFiles < allFiles)
+      val persisted = Ivf.topKPersisted(spark, dir, model, queries, 10, nProbe = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), math.rint(r.getDouble(2) * 1e6), r.getInt(3))).toSet
+      val inMem = Ivf.topK(indexed, model, queries, 10, nProbe = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), math.rint(r.getDouble(2) * 1e6), r.getInt(3))).toSet
+      assert(persisted == inMem)
+    } finally deleteTrees(Seq(tmp))
   }
 
   test("topKPersisted == ranking the whole index filtered to the probed cells, row for row") {
@@ -88,23 +91,26 @@ class IvfSpec extends SparkTestBase {
       assert(served == rows(viaLoad(path, q, nProbe)), s"$at, nProbe=$nProbe")
       served
     }
-    val dir = java.nio.file.Files.createTempDirectory("ivf-probed").toString + "/index"
-    Ivf.writeIndex(indexed.where(col("vec_id") < 150), dir)
-    for (nProbe <- Seq(1, 4, 8)) assert(assertSame(dir, queries, nProbe, "before upsert").nonEmpty)
-    Ivf.upsertIndex(model, emb.where(col("vec_id") >= 150), dir)
-    for (nProbe <- Seq(1, 4, 8)) assertSame(dir, queries, nProbe, "after upsert")
-    assert(rows(Ivf.topKPersisted(spark, dir, model, queries, 10, 8)) ==
-      rows(Ivf.topK(indexed, model, queries, 10, 8)), "the upserted rows are not served")
+    val tmp = java.nio.file.Files.createTempDirectory("ivf-probed").toString
+    val dir = s"$tmp/index"
+    try {
+      Ivf.writeIndex(indexed.where(col("vec_id") < 150), dir)
+      for (nProbe <- Seq(1, 4, 8)) assert(assertSame(dir, queries, nProbe, "before upsert").nonEmpty)
+      Ivf.upsertIndex(model, emb.where(col("vec_id") >= 150), dir)
+      for (nProbe <- Seq(1, 4, 8)) assertSame(dir, queries, nProbe, "after upsert")
+      assert(rows(Ivf.topKPersisted(spark, dir, model, queries, 10, 8)) ==
+        rows(Ivf.topK(indexed, model, queries, 10, 8)), "the upserted rows are not served")
 
-    // an index written without the rows of query 0's nearest cell: that
-    // cell has no directory, and probing only it serves nothing
-    val q0 = queries.where(col("query_id") === queries.select("query_id").head().getLong(0))
-    val missing = Ivf.probeCells(model, q0, 1)._2.head
-    val holed = java.nio.file.Files.createTempDirectory("ivf-holed").toString + "/index"
-    Ivf.writeIndex(indexed.where(col("cell") =!= missing), holed)
-    assert(!new java.io.File(s"$holed/cell=$missing").exists())
-    assert(assertSame(holed, q0, 1, "missing cell").isEmpty)
-    for (nProbe <- Seq(4, 8)) assertSame(holed, queries, nProbe, "missing cell")
+      // an index written without the rows of query 0's nearest cell: that
+      // cell has no directory, and probing only it serves nothing
+      val q0 = queries.where(col("query_id") === queries.select("query_id").head().getLong(0))
+      val missing = Ivf.probeCells(model, q0, 1)._2.head
+      val holed = s"$tmp/holed"
+      Ivf.writeIndex(indexed.where(col("cell") =!= missing), holed)
+      assert(!new java.io.File(s"$holed/cell=$missing").exists())
+      assert(assertSame(holed, q0, 1, "missing cell").isEmpty)
+      for (nProbe <- Seq(4, 8)) assertSame(holed, queries, nProbe, "missing cell")
+    } finally deleteTrees(Seq(tmp))
   }
 
   test("repeated serves of an unchanged index list nothing; writes under any spelling of the path are seen") {
@@ -114,45 +120,51 @@ class IvfSpec extends SparkTestBase {
     // overwrite, under whatever spelling of the path, is seen by the
     // next read.
     val model = Ivf.fit(emb, nCells = 48)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-listing").toString + "/index"
-    Ivf.writeIndex(Ivf.assign(model, emb), dir)
-    val nDirs = new java.io.File(dir).listFiles().count(_.getName.startsWith("cell="))
-    assert(nDirs > 32, s"only $nDirs cell directories")
-    def listingJobs[T](body: => T): (Int, T) = ListingJobs(spark.sparkContext)(body)
-    def serveAll() = Ivf.topKPersisted(spark, dir, model, queries, 10, 48).collect().length
-    val (first, served) = listingJobs(serveAll())
-    assert(first == 1 && served > 0)
-    assert(listingJobs(serveAll())._1 == 0, "a repeated wide serve listed the index again")
-    assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (0, 200L))
-    Ivf.upsertIndex(model, emb.limit(20).withColumn("vec_id", col("vec_id") + 100000L), dir)
-    assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (1, 220L))
-    assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (0, 220L))
-    // overwrite with an extra column through a qualified, slash-ended
-    // spelling of the same directory
-    val spelled = new java.io.File(dir).toURI.toString
-    assert(spelled.startsWith("file:") && spelled.endsWith("/"))
-    val fewer = emb.where(col("vec_id") < 100)
-    Ivf.writeIndex(Ivf.assign(model, fewer).withColumn("tag", lit("t")), spelled)
-    val reread = Ivf.loadIndex(spark, dir)
-    assert(reread.columns.contains("tag") && reread.count() == fewer.count())
-    assert(fewer.count() < 200)
+    val tmp = java.nio.file.Files.createTempDirectory("ivf-listing").toString
+    val dir = s"$tmp/index"
+    try {
+      Ivf.writeIndex(Ivf.assign(model, emb), dir)
+      val nDirs = new java.io.File(dir).listFiles().count(_.getName.startsWith("cell="))
+      assert(nDirs > 32, s"only $nDirs cell directories")
+      def listingJobs[T](body: => T): (Int, T) = ListingJobs(spark.sparkContext)(body)
+      def serveAll() = Ivf.topKPersisted(spark, dir, model, queries, 10, 48).collect().length
+      val (first, served) = listingJobs(serveAll())
+      assert(first == 1 && served > 0)
+      assert(listingJobs(serveAll())._1 == 0, "a repeated wide serve listed the index again")
+      assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (0, 200L))
+      Ivf.upsertIndex(model, emb.limit(20).withColumn("vec_id", col("vec_id") + 100000L), dir)
+      assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (1, 220L))
+      assert(listingJobs(Ivf.loadIndex(spark, dir).count()) == (0, 220L))
+      // overwrite with an extra column through a qualified, slash-ended
+      // spelling of the same directory
+      val spelled = new java.io.File(dir).toURI.toString
+      assert(spelled.startsWith("file:") && spelled.endsWith("/"))
+      val fewer = emb.where(col("vec_id") < 100)
+      Ivf.writeIndex(Ivf.assign(model, fewer).withColumn("tag", lit("t")), spelled)
+      val reread = Ivf.loadIndex(spark, dir)
+      assert(reread.columns.contains("tag") && reread.count() == fewer.count())
+      assert(fewer.count() < 200)
+    } finally deleteTrees(Seq(tmp))
   }
 
   test("out-of-range k or nProbe is rejected before any serve runs") {
     val model = Ivf.fit(emb, nCells = 8)
     val indexed = Ivf.assign(model, emb)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-args").toString + "/index"
-    Ivf.writeIndex(indexed, dir)
-    val d = sf()
-    val serves: Seq[(String, (Int, Int) => Unit)] = Seq(
-      "topK" -> ((k, p) => Ivf.topK(indexed, model, queries, k, p)),
-      "topKPersisted" -> ((k, p) => Ivf.topKPersisted(spark, dir, model, queries, k, p)),
-      "knnJoin" -> ((k, p) => Ivf.knnJoin(indexed, model, queries, k, p)),
-      "IvfIndexStore.serve" -> ((k, p) => IvfIndexStore.serve(spark, d, queries, k, p)))
-    for ((name, serve) <- serves; (k, nProbe) <- Seq((10, 0), (10, -1), (0, 4), (-3, 4)))
-      withClue(s"$name(k = $k, nProbe = $nProbe): ") {
-        intercept[IllegalArgumentException](serve(k, nProbe))
-      }
+    val tmp = java.nio.file.Files.createTempDirectory("ivf-args").toString
+    val dir = s"$tmp/index"
+    try {
+      Ivf.writeIndex(indexed, dir)
+      val d = sf()
+      val serves: Seq[(String, (Int, Int) => Unit)] = Seq(
+        "topK" -> ((k, p) => Ivf.topK(indexed, model, queries, k, p)),
+        "topKPersisted" -> ((k, p) => Ivf.topKPersisted(spark, dir, model, queries, k, p)),
+        "knnJoin" -> ((k, p) => Ivf.knnJoin(indexed, model, queries, k, p)),
+        "IvfIndexStore.serve" -> ((k, p) => IvfIndexStore.serve(spark, d, queries, k, p)))
+      for ((name, serve) <- serves; (k, nProbe) <- Seq((10, 0), (10, -1), (0, 4), (-3, 4)))
+        withClue(s"$name(k = $k, nProbe = $nProbe): ") {
+          intercept[IllegalArgumentException](serve(k, nProbe))
+        }
+    } finally deleteTrees(Seq(tmp))
   }
 
   test("writeIndex emits exactly one file per cell directory") {
@@ -160,25 +172,28 @@ class IvfSpec extends SparkTestBase {
     // nCells × parallelism tiny files; measured round 10: 4,168 sub-8KB
     // files on the 10× index and a 9× defaults-path serve penalty. The
     // repartition(cell) in writeIndex pins one file per cell.
-    val dir = java.nio.file.Files.createTempDirectory("ivf1f").toString + "/index"
-    val model = Ivf.fit(emb, nCells = 8)
-    // many input partitions so the old layout would provably multi-file
-    Ivf.writeIndex(Ivf.assign(model, emb).repartition(16), dir)
-    val cellDirs = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-    assert(cellDirs.nonEmpty)
-    for (cd <- cellDirs) {
-      val parts = cd.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(parts.length == 1,
-        s"${cd.getName} has ${parts.length} files — one-file-per-cell broke")
-    }
-    // an upsert batch appends at most one new file per touched cell
-    Ivf.upsertIndex(model, emb.limit(50), dir)
-    for (cd <- cellDirs) {
-      val parts = cd.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(parts.length <= 2,
-        s"${cd.getName} has ${parts.length} files after one upsert")
-    }
+    val tmp = java.nio.file.Files.createTempDirectory("ivf1f").toString
+    val dir = s"$tmp/index"
+    try {
+      val model = Ivf.fit(emb, nCells = 8)
+      // many input partitions so the old layout would provably multi-file
+      Ivf.writeIndex(Ivf.assign(model, emb).repartition(16), dir)
+      val cellDirs = new java.io.File(dir).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+      assert(cellDirs.nonEmpty)
+      for (cd <- cellDirs) {
+        val parts = cd.listFiles().filter(_.getName.endsWith(".parquet"))
+        assert(parts.length == 1,
+          s"${cd.getName} has ${parts.length} files — one-file-per-cell broke")
+      }
+      // an upsert batch appends at most one new file per touched cell
+      Ivf.upsertIndex(model, emb.limit(50), dir)
+      for (cd <- cellDirs) {
+        val parts = cd.listFiles().filter(_.getName.endsWith(".parquet"))
+        assert(parts.length <= 2,
+          s"${cd.getName} has ${parts.length} files after one upsert")
+      }
+    } finally deleteTrees(Seq(tmp))
   }
 
   test("knnJoin equals the broadcast probe path query-for-query") {

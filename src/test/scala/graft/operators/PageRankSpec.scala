@@ -3,15 +3,17 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** PageRank invariants on a hand-built star graph: probability mass is
-  * conserved, every rank is positive, and the hub outranks the leaves. */
+/** PageRank invariants on hand-built graphs: probability mass is
+  * conserved, every rank is positive, the hub outranks the leaves, and
+  * the one round loop agrees with itself across restarts, cadences and
+  * join sides. */
 class PageRankSpec extends SparkTestBase {
 
   test("star graph: mass conserved, hub wins, leaves symmetric") {
     import spark.implicits._
     val undirected = Seq((1L, 2L, 1L), (1L, 3L, 1L), (1L, 4L, 1L))
       .toDF("src", "dst", "weight")
-    val pr = PageRank.run(CoPurchaseGraph.symmetrize(undirected))
+    val pr = PageRank.runDirected(CoPurchaseGraph.symmetrize(undirected))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
     assert(math.abs(pr.values.sum - 4.0) < 1e-4) // scaled ranks sum to N
@@ -25,7 +27,7 @@ class PageRankSpec extends SparkTestBase {
     // triangle with one heavy edge 1-2; node 3 is lighter-connected
     val undirected = Seq((1L, 2L, 10L), (1L, 3L, 1L), (2L, 3L, 1L))
       .toDF("src", "dst", "weight")
-    val pr = PageRank.run(CoPurchaseGraph.symmetrize(undirected))
+    val pr = PageRank.runDirected(CoPurchaseGraph.symmetrize(undirected))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(pr(1L) > pr(3L) && pr(2L) > pr(3L))
   }
@@ -72,7 +74,7 @@ class PageRankSpec extends SparkTestBase {
     // against, where the aggregate ran as its own job against a
     // checkpointed frame every round.)
     val edges = Seq((1L, 2L, 1L), (2L, 3L, 1L)).toDF("src", "dst", "weight")
-    val plan = PageRank.runDirectedImpl(edges, 3, 0.85,
+    val plan = PageRank.walk(edges, None, 3, 0.85,
         PageRank.BroadcastMaxNodes, 1)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"),
@@ -108,8 +110,9 @@ class PageRankSpec extends SparkTestBase {
     val seeds = Seq(0L, 9L).toDF("node")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
-    assert(rows(PageRank.run(edges, 8, broadcastMaxNodes = 0L)) ==
-      rows(PageRank.run(edges, 8, broadcastMaxNodes = Long.MaxValue)))
+    val sym = CoPurchaseGraph.symmetrize(edges)
+    assert(rows(PageRank.runDirected(sym, 8, broadcastMaxNodes = 0L)) ==
+      rows(PageRank.runDirected(sym, 8, broadcastMaxNodes = Long.MaxValue)))
     assert(rows(PageRank.runDirected(edges, 8, broadcastMaxNodes = 0L)) ==
       rows(PageRank.runDirected(edges, 8, broadcastMaxNodes = Long.MaxValue)))
     assert(rows(PageRank.personalized(edges, seeds, 8,
@@ -133,17 +136,32 @@ class PageRankSpec extends SparkTestBase {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
     val b = PageRank.BroadcastMaxNodes
-    for (cadence <- Seq(2, 3, 8)) {
-      assert(rows(PageRank.runDirectedImpl(edges, 8, 0.85, b, 1)) ==
-        rows(PageRank.runDirectedImpl(edges, 8, 0.85, b, cadence)),
-        s"runDirected cadence $cadence diverged")
-      assert(rows(PageRank.personalizedImpl(edges, seeds, 8, 0.85, b, 1)) ==
-        rows(PageRank.personalizedImpl(edges, seeds, 8, 0.85, b, cadence)),
-        s"personalized cadence $cadence diverged")
+    for ((restart, kind) <- Seq(None -> "uniform", Some(seeds) -> "seeded")) {
+      val rolledEveryRound = rows(PageRank.walk(edges, restart, 8, 0.85, b, 1))
+      for (cadence <- 2 to 8)
+        assert(rows(PageRank.walk(edges, restart, 8, 0.85, b, cadence)) ==
+          rolledEveryRound, s"$kind restart, cadence $cadence diverged")
     }
-    assert(rows(PageRank.runImpl(edges, 8, 0.85, b, 4)) ==
-      rows(PageRank.runImpl(edges, 8, 0.85, b, 8)),
-      "run cadence 8 diverged")
+  }
+
+  test("personalized with every node a seed is runDirected (uniform restart)") {
+    import spark.implicits._
+    // the identity the one walk rests on: a restart vector of 1/|S| on
+    // every node IS the uniform restart — (1−d)·(1/n) and dm·(1/n) vs
+    // (1−d)/n and dm/n differ by at most an ulp before the 6-dp round
+    val edges = ((0L to 30L).map(i => (i, (i * 5 + 2) % 31, 1L + i % 4)) ++
+      (0L to 30L).map(i => (i, (i + 1) % 31, 1L)) ++
+      Seq((40L, 41L, 1L), (41L, 42L, 2L), (3L, 43L, 1L))) // 42, 43 dangle
+      .filter(e => e._1 != e._2).toDF("src", "dst", "weight")
+    val everyNode = edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node")))
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val pr = ranks(PageRank.runDirected(edges))
+    val ppr = ranks(PageRank.personalized(edges, everyNode))
+    assert(pr.size == 35 && ppr.keySet == pr.keySet)
+    for ((node, r) <- pr)
+      assert(math.abs(ppr(node) - r) <= 1e-6, s"node $node: $r vs ${ppr(node)}")
   }
 
   test("BroadcastMaxNodes boundary: the mode flips exactly at |V| == bound " +
@@ -153,18 +171,25 @@ class PageRankSpec extends SparkTestBase {
     // bound = 31 must broadcast (n <= bound) and bound = 30 must
     // shuffle — the deploy-time knob binds at the documented boundary,
     // not one off it. Plan is string-matched: AQE's adaptive root does
-    // not expose the inner plan via collect.
+    // not expose the inner plan via collect. Spark's own size-based
+    // broadcast is off while the plan is read: on 31 nodes it would
+    // broadcast the receive join's contrib side by its estimated size,
+    // which is not the knob under test.
     val edges = ((0L to 30L).map(i => (i, (i * 7 + 3) % 31, 1L + i % 3)) ++
       (0L to 30L).map(i => (i, (i + 1) % 31, 1L)))
       .filter(e => e._1 != e._2).toDF("src", "dst", "weight")
-    def hasBroadcastJoin(bound: Long): Boolean =
-      PageRank.run(edges, 2, broadcastMaxNodes = bound)
+    def hasBroadcastJoin(bound: Long): Boolean = {
+      val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try PageRank.runDirected(edges, 2, broadcastMaxNodes = bound)
         .queryExecution.executedPlan.toString.contains("BroadcastHashJoin")
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    }
     assert(hasBroadcastJoin(31L), "|V| == bound must take the broadcast path")
     assert(!hasBroadcastJoin(30L), "|V| == bound+1 must take shuffle-hash")
     // and the choice is invisible in the output (6-dp contract)
     def rows(bound: Long) =
-      PageRank.run(edges, 8, broadcastMaxNodes = bound)
+      PageRank.runDirected(edges, 8, broadcastMaxNodes = bound)
         .collect().map(_.toSeq).toSet
     assert(rows(31L) == rows(30L))
   }
