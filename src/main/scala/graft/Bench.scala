@@ -29,12 +29,13 @@ import scala.util.control.NonFatal
   *
   * Env: SPARK_GRAFT_SF_DIR (data), SPARK_GRAFT_CPUS, SPARK_GRAFT_QUERIES
   * (comma subset, [[SparkEntry.select]]: an unknown name fails the run
-  * before anything is timed), SPARK_GRAFT_WARM=N (1 untimed warmup then
-  * N timed runs, report the MIN; N=1 ≡ the historical
-  * run-twice-report-2nd), SPARK_GRAFT_FORK=<chunk size; 0 disables
+  * before anything is timed), SPARK_GRAFT_FORK=<chunk size; 0 disables
   * forking>.
   *
-  * A query whose setup throws, whose every run throws, or whose forked
+  * Every query is timed once: one run of its body, cold but for the
+  * untimed warmup set, with the block reap after it.
+  *
+  * A query whose setup throws, whose run throws, or whose forked
   * chunk left no complete artifact is a failure: it keeps its -1.0 row
   * in "queries", is left out of the total, is named under "failed" in
   * BENCH_FULL*.json, and makes Bench exit 1 after everything is written.
@@ -57,7 +58,7 @@ object Bench {
 
   /** One benched query's reported time plus its own ambient evidence:
     * 1-min load sampled at query start and hypervisor-steal%% across
-    * the query's sample window (setup excluded; warmup + reaps
+    * the query's timed run (setup excluded; the reap after it
     * included — steal is a rate, so the window just needs to cover the
     * timed region). Motivation (VERDICT r13): every round's driver-
     * channel outliers forced an after-the-fact isolated-rerun chase
@@ -65,7 +66,7 @@ object Bench {
     * that carries its own load1/steal%% at measurement time is
     * adjudicable from the artifact alone. -1.0 = not measurable
     * (non-Linux /proc, or a zero-width window). `failure` names what
-    * threw (setup, or every run); a failed row's `sec` is -1.0. */
+    * threw (setup, or the run); a failed row's `sec` is -1.0. */
   private[graft] final case class QueryRun(name: String, sec: Double,
                                            load1: Double, stealPct: Double,
                                            failure: Option[String] = None)
@@ -100,20 +101,6 @@ object Bench {
       case _ => -1.0
     }
 
-  /** Select the reported time from a run's sample vector. `warmed`
-    * drops the first (untimed warmup) sample; of the rest the MIN is
-    * reported — interference can only RAISE a sample, so the min
-    * converges on plan cost from above. Failed runs carry +Infinity
-    * (a failure can only LOWER an elapsed time, so it must never win
-    * the min); all-failed reports -1 so the artifact stays finite.
-    * Returns (reported, timedSamples). */
-  private[graft] def pickReported(samples: Seq[Double],
-                                  warmed: Boolean): (Double, Seq[Double]) = {
-    val timed = if (warmed) samples.tail else samples
-    val dt = timed.min
-    (if (dt.isInfinity) -1.0 else dt, timed)
-  }
-
   /** Pack `names` into fork chunks of ≤ `chunkSize`: light queries in
     * sorted runs of `chunkSize−1`, then one heavy appended per chunk
     * (heavies beyond the light-group count run solo). Deterministic,
@@ -147,13 +134,12 @@ object Bench {
     // Also warm the iterative-loop machinery — Iterate.roll
     // (localCheckpoint + ContextCleaner release) and
     // observe-on-checkpoint — which no registry warmup touches, yet
-    // every graph/fixpoint heavy pays cold on its only timed suite run
-    // (isolated rows don't: the warm protocol's untimed first run
-    // absorbs it). Tiny in-memory frame, ~1 s, skipped for light-only
-    // chunks. Alternating-JVM A/B on cold q163 (storm window, mins:
-    // 10.99 off vs 9.8 on; medians 11.4 vs 10.2): ~1.2 s of the cold
-    // gap is this machinery; the rest is the query's own per-round
-    // codegen, not warmable generically.
+    // every graph/fixpoint heavy pays cold on its one timed run. Tiny
+    // in-memory frame, ~1 s, skipped for light-only chunks.
+    // Alternating-JVM A/B on cold q163 (storm window, mins: 10.99 off
+    // vs 9.8 on; medians 11.4 vs 10.2): ~1.2 s of the cold gap is this
+    // machinery; the rest is the query's own per-round codegen, not
+    // warmable generically.
     if (specs.exists(_.heavy)) try {
       import org.apache.spark.sql.{DataFrame, Observation}
       import org.apache.spark.sql.functions.{count, lit, col}
@@ -173,88 +159,43 @@ object Bench {
       // Build-once artifacts are constructed OUTSIDE the timed region:
       // the benched number is serving cost, matching how the baseline
       // measures (pre-built index, timed queries). Setups must be
-      // DISK-backed (all in-tree ones write stores): the reap between
-      // repeats drops every in-memory persisted/checkpointed frame, so
-      // an in-memory setup artifact would be rebuilt inside repeat 2's
-      // timed region (or crash it). A failed setup fails the query
-      // without running it: its body would self-heal the artifact inside
-      // the timed region and report build time as serving time.
+      // DISK-backed (all in-tree ones write stores): the reap after each
+      // query drops every in-memory persisted/checkpointed frame, so an
+      // in-memory setup artifact would be rebuilt inside a later
+      // query's timed region. A failed setup fails the query without
+      // running it: its body would self-heal the artifact inside the
+      // timed region and report build time as serving time.
       val setupFailure = spec.prepare(spark, sfDir, "bench")
-      // SPARK_GRAFT_WARM=N: one untimed warmup run (codegen/broadcast/
-      // footer costs), then N timed runs, report the MINIMUM — N=1 is
-      // the historical "run twice, report the second" protocol exactly.
-      // N>1 exists because this box shows bursty hypervisor-level
-      // interference at the seconds scale (BENCH_ISOLATED_r8 notes):
-      // the min over in-JVM repeats is the cheapest estimator of plan
-      // cost that a transient burst can only raise, never lower. The
-      // full sample vector goes to stderr so the artifact can carry it.
-      // WARM must parse to a positive int to enable warm mode: WARM=0 or
-      // garbage means warm OFF (None), matching the documented WARM=N
-      // contract — the old getOrElse(1).max(1) silently turned WARM=0
-      // (a plausible attempt to disable) INTO warm mode.
-      val warmRuns = sys.env.get("SPARK_GRAFT_WARM")
-        .flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ > 0)
-      // A FAILED run records +Infinity, not its elapsed-to-failure time:
-      // the min estimator's rationale (interference can only RAISE a
-      // sample) inverts for failures, which can only LOWER one — a 0.3 s
-      // OOM must never beat a 45 s success. All-runs-failed reports the
-      // -1.0 marker (pickReported's contract) so downstream mins/sums
-      // can't mistake a failure for a fast run; the [bench] line carries
-      // the FAILED marker and the fail-tokened sample vector.
-      // The reap runs BETWEEN repeats too, not just between
-      // queries (round 13): a query that leaves per-run session state
-      // otherwise times repeat N against N−1 runs of ContextCleaner
-      // backlog — BENCH_ISOLATED_r12's monotonic 6.6→28.4→55.2 s repeat
-      // growth came about exactly this way (SCALE.md round 13, "q165's
-      // monotonic in-JVM growth": superseded localCheckpoint blocks
-      // survive until a GC proves them dead; later block stores then
-      // stall 20–30 s per task in SizeEstimator walks), and an explicit
-      // between-repeat reap held the same query flat at 5–7 s. The reap
-      // sits OUTSIDE the timed region, so samples are iid under the min
-      // estimator's model; the GC after it lets the ContextCleaner
-      // release dead localCheckpoint/broadcast blocks before the next
-      // sample instead of inside it.
-      def reap(): Unit = { GraftSession.reap(spark); System.gc() }
       // ambient window: load1 at query start, steal jiffies across the
-      // sample loop (QueryRun's contract) — read BEFORE the first
-      // sample, AFTER the last
+      // timed run and its reap (QueryRun's contract)
       val qLoad1 = load1()
       val steal0 = stealTotal()
-      var runFailure: Option[String] = None
-      val samples =
-        if (setupFailure.isDefined) Seq(Double.PositiveInfinity)
-        else (1 to (1 + warmRuns.getOrElse(0))).map { _ =>
+      // One timed run, then the reap OUTSIDE the timed region. Dead
+      // localCheckpoint/broadcast blocks are reaped by the ContextCleaner
+      // only after a GC proves them unreachable; across a long suite they
+      // otherwise pile up in the block manager and squeeze execution
+      // memory (BENCH_r05's suite-wide spill churn), or stall later
+      // block stores in SizeEstimator walks (SCALE.md round 13, "q165's
+      // monotonic in-JVM growth"). Reaping deterministically after every
+      // query keeps that state out of the next query's timed run.
+      val (sec, failure) = setupFailure match {
+        case Some(f) => (-1.0, Some(f))
+        case None =>
           val t0 = System.nanoTime()
-          val ok = try { spec.run(spark, sfDir).count(); true }
-                   catch { case NonFatal(t) =>
-                     if (runFailure.isEmpty) runFailure = Some(s"run: $t")
-                     false
-                   }
+          val runFailure =
+            try { spec.run(spark, sfDir).count(); None }
+            catch { case NonFatal(t) => Some(s"run: $t") }
           val el = (System.nanoTime() - t0) / 1e9
-          reap()
-          if (ok) el else Double.PositiveInfinity
-        }
+          GraftSession.reap(spark); System.gc()
+          (if (runFailure.isEmpty) el else -1.0, runFailure)
+      }
       val qSteal = stealPctOf(steal0, stealTotal())
-      val (reported, timed) = pickReported(samples, warmRuns.isDefined)
-      val failure = setupFailure.orElse(runFailure.filter(_ => reported < 0))
-      System.err.println(f"[bench] $name%-24s $reported%8.2f s" +
+      System.err.println(f"[bench] $name%-24s $sec%8.2f s" +
         (if (setupFailure.isDefined) "  FAILED (setup threw)"
-         else if (reported < 0) "  FAILED (all runs threw)" else "") +
-        (if (timed.size > 1)
-           timed.map(s => if (s.isInfinity) "fail" else f"$s%.2f")
-             .mkString("  (samples: ", " ", ")")
-         else "") +
-        // ambient evidence on the line itself so the isolated channel's
-        // artifacts (tools/isolated_bench.py parses this) are as
-        // self-adjudicating as the suite artifact
+         else if (failure.isDefined) "  FAILED (run threw)" else "") +
+        // ambient evidence on the line itself, as in the artifact
         f"  [ambient load1 $qLoad1%.2f steal $qSteal%.2f%%]")
-      // Dead localCheckpoint/broadcast blocks are reaped by the
-      // ContextCleaner only after a GC proves them unreachable; across
-      // a long suite they otherwise pile up in the block manager and
-      // squeeze execution memory (BENCH_r05's suite-wide spill churn).
-      // reap() above runs DETERMINISTICALLY after every repeat — so the
-      // last repeat's state is already gone before the next query.
-      QueryRun(name, reported, qLoad1, qSteal, failure)
+      QueryRun(name, sec, qLoad1, qSteal, failure)
     }
   }
 
@@ -314,10 +255,6 @@ object Bench {
       pb.redirectOutput(log)
       pb.environment().put("SPARK_GRAFT_QUERIES", chunk.mkString(","))
       pb.environment().put("SPARK_GRAFT_FORK", "0") // no recursive forking
-      // the child's BENCH_FULL.json (in its temp cwd) is the RESULT
-      // CHANNEL — a parent probe run's no-artifact flag must not leak
-      // in, or every chunk would fail
-      pb.environment().remove("SPARK_GRAFT_NO_ARTIFACT")
       val p = pb.start()
       val done = p.waitFor(30, java.util.concurrent.TimeUnit.MINUTES)
       if (!done) { p.destroyForcibly(); p.waitFor() }
@@ -349,7 +286,7 @@ object Bench {
     * and fails to parse (BENCH_r03 "parsed": null). So the stdout line
     * keys each query by `qNN` alone, and the payload carries the same
     * numbers with full names, 3 dp, plus per-query ambient evidence
-    * ([load1 at query start, steal% over the sample window], -1 =
+    * ([load1 at query start, steal% over the timed run], -1 =
     * unmeasurable), every failure (name -> what threw, {} on a clean
     * run) and, LAST and only when chunks ran (forked children never
     * emit it), the 1-min load at each chunk start. */
@@ -417,24 +354,22 @@ object Bench {
         runInProcess(spark, sfDir, specs)
       }
     val failed = results.filter(_.failure.isDefined)
-    // SPARK_GRAFT_NO_ARTIFACT=1: skip the cwd artifact — ad-hoc probe
-    // runs from the repo root would clobber the committed driver file.
-    // Belt-and-braces (a probe DID clobber it once, and the flag only
-    // helps when remembered): a SUBSET run from a repo checkout (.git in
-    // cwd) never writes either — keyed on the SELECTED list covering the
-    // registry, not on env-var presence, so a wrapper that passes the
-    // full 193 names explicitly still records its run. Forked children
-    // run subsets in temp cwds (no .git) and MUST write — the file is
-    // their result channel; the driver's full-suite run sets no
-    // SPARK_GRAFT_QUERIES. The skip is announced on stderr: a silent
-    // skip leaves yesterday's numbers in the file looking fresh.
+    // A SUBSET run from a repo checkout (.git in cwd) writes no cwd
+    // artifact: an ad-hoc probe run from the repo root would clobber
+    // the committed driver file (one did, once). Keyed on the SELECTED
+    // list covering the registry, not on env-var presence, so a wrapper
+    // that passes the full 193 names explicitly still records its run.
+    // Forked children run subsets in temp cwds (no .git) and MUST write
+    // — the file is their result channel; the driver's full-suite run
+    // sets no SPARK_GRAFT_QUERIES. The skip is announced on stderr: a
+    // silent skip leaves yesterday's numbers in the file looking fresh.
     val subsetInRepo = names.size != SparkEntry.specs.size &&
       Files.exists(Paths.get(".git"))
     if (subsetInRepo)
       System.err.println("[bench] subset run in a repo checkout: NOT writing BENCH_FULL.json")
     val (line, payload) = render(results, sfDir, chunkLoads.toSeq)
     val writeFailures =
-      if (sys.env.contains("SPARK_GRAFT_NO_ARTIFACT") || subsetInRepo) Nil
+      if (subsetInRepo) Nil
       else {
         // BENCH_FULL.json stays (the forked-child result channel and the
         // historical artifact name); the core-count-keyed copy exists so

@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** The one session builder of the engine's mains (Bench, Verify,
-  * ExplainAll, ScaleProbe, GraphProbe) and of the test suite, so their
-  * confs cannot drift apart, and the one [[reap]] the query-running mains
-  * call between queries. Each caller keeps its own core count and log
+  * ExplainAll, ScaleProbe) and of the test suite, so their confs cannot
+  * drift apart, and the one [[reap]] the query-running mains call
+  * between queries. Each caller keeps its own core count and log
   * level; `-Dspark.*` system properties still reach the SparkConf for
   * one-off A/B confs. */
 object GraftSession {

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   */
 object GraphMetrics {
 
-  /** Lineage-safety roll cadence for the FUSED labelProp branch
+  /** Lineage-safety roll cadence for [[labelProp]]'s fused rounds
     * (ADVICE r14): fused rounds build one nested plan per round, so a
     * large caller-chosen round budget would grow Catalyst
     * analysis/optimization time and driver memory without bound. Every
@@ -245,46 +245,26 @@ object GraphMetrics {
     *
     * Spark shape per round: one equi-join (edges ⋈ labels on src), one
     * groupBy (dst, label) weight fold, one per-node argmax fold — all
-    * keyed exchanges. Since round 14 the shipped form is FUSED: the
-    * argmax frame is provably total (see [[labelPropImpl]]), so there
-    * is no per-round carry-forward join and the whole loop runs as one
-    * scheduled job. Isolated nodes keep their own label (they are not
-    * in the edge-derived node frame at all).
+    * keyed exchanges. The rounds are FUSED: `nodes` is built as the
+    * distinct src of the SYMMETRIZED edge frame, so every node has ≥ 1
+    * incident edge, every node therefore appears as a dst in `sym`, and
+    * the argmax frame covers EVERY node each round — it IS the next
+    * label frame, with no carry-forward join. The label chain is
+    * single-consumer, so all rounds run as one scheduled job with no
+    * mid-loop rolls (up to [[FusedRollEvery]]) and zero duplicated
+    * subtree work. Isolated nodes keep their own label (they are not in
+    * the edge-derived node frame at all). Round-14 measurement (SCALE.md
+    * "Round-14 ... iterative-loop round fusion": same-JVM alternating
+    * A/B at sf0.1, 20 000-row outputs IDENTICAL): the carry-forward
+    * join form med 6.24 s / min 5.14 vs fused med 3.90 / min 3.33 —
+    * each round deletes a join AND its roll.
     *
     * @param edges undirected edge list (src, dst, weight) — symmetrized
     *              internally
     * @return (node, community) after `rounds` synchronous updates */
   def labelProp(edges: DataFrame, rounds: Int,
                 broadcastMaxNodes: Long = PageRank.BroadcastMaxNodes)
-      : DataFrame =
-    labelPropImpl(edges, rounds, broadcastMaxNodes,
-      fused = true)
-
-  /** [[labelProp]] with the per-round carry-forward join selectable.
-    *
-    * The `fused = true` form drops it: `nodes` is built as the distinct
-    * src of the SYMMETRIZED edge frame, so every node has ≥ 1 incident
-    * edge, every node therefore appears as a dst in `sym`, and the
-    * argmax frame `picked` covers EVERY node each round — the
-    * `coalesce(__next, community)` fallback can never fire. With the
-    * join gone the label chain is single-consumer, so all rounds fuse
-    * into one scheduled job with no mid-loop rolls and zero duplicated
-    * subtree work (isolated nodes keep their own label in both forms:
-    * they are not in `nodes` at all). Outputs are identical — the
-    * argmax arithmetic is integer/long-exact, so this is provable, not
-    * a 6-dp argument; GraphMetricsSpec pins cross-form equality.
-    *
-    * Round-14 measurement (SCALE.md "Round-14 ... iterative-loop round
-    * fusion": same-JVM alternating A/B at sf0.1, 20 000-row outputs
-    * IDENTICAL): join-form med 6.24 s /
-    * min 5.14 vs fused med 3.90 / min 3.33 — ~1.6×, the largest win of
-    * the fusion family, because each round deletes a join AND its roll.
-    * At 100 TB the deleted per-round join is a node-frame shuffle (or
-    * broadcast rebuild) and the deleted roll a node-frame
-    * materialization — the win is structural, not local. */
-  private[graft] def labelPropImpl(edges: DataFrame, rounds: Int,
-                                   broadcastMaxNodes: Long,
-                                   fused: Boolean): DataFrame = {
+      : DataFrame = {
     // checkpointed once. On the shuffle path the edge frame re-exchanges
     // on src per round — an AQE checkpoint captures UnknownPartitioning,
     // so a build-time repartition buys nothing and is not paid; the
@@ -302,9 +282,8 @@ object GraphMetrics {
     // a broadcast the per-round join goes MAP-SIDE (the edge frame never
     // exchanges inside the loop — same adaptive discipline and bound as
     // [[PageRank.BroadcastMaxNodes]]); above it, shuffle-hash (sort-free)
-    val n = nObs.get("n").asInstanceOf[Long]
-    val small = n <= broadcastMaxNodes
-    val lblSide = PageRank.nodeSide(n, broadcastMaxNodes)
+    val lblSide = PageRank.nodeSide(nObs.get("n").asInstanceOf[Long],
+      broadcastMaxNodes)
     var lbl = nodes.select(col("node"), col("node").as("community"))
     var lblCp: Option[DataFrame] = None
     for (i <- 1 to rounds) {
@@ -314,34 +293,22 @@ object GraphMetrics {
         .agg(sum(col("weight")).as("w"))
       // argmax as a struct-max: (w, −community) orders ties toward the
       // SMALLEST label deterministically, and the groupBy(node) reuses
-      // contrib's hash partitioning — no per-round window sort
-      val picked = contrib
+      // contrib's hash partitioning — no per-round window sort. It
+      // covers every node (see the scaladoc), so it IS the next label
+      // frame: no carry-forward join
+      lbl = contrib
         .groupBy("node")
         .agg(max(struct(col("w"), (-col("community")).as("nc"))).as("m"))
-        .select(col("node"), (-col("m.nc")).as("__next"))
-      if (fused) {
-        // picked covers every node (see [[labelPropImpl]] scaladoc):
-        // it IS the next label frame — no carry-forward join, no roll.
-        lbl = picked.withColumnRenamed("__next", "community")
-        // Safety roll (ADVICE r14): without ANY roll the fused plan's
-        // depth grows linearly with the caller's round budget —
-        // Catalyst analysis time and driver memory are unbounded at
-        // e.g. a 50-round LPA convergence budget even though the
-        // arithmetic is fine. A roll WITHOUT the carry-forward join
-        // preserves row-identical output while truncating lineage; at
-        // the shipped 5-round usage (< FusedRollEvery) it never fires,
-        // so q163's one-job shape is untouched.
-        if (i % FusedRollEvery == 0 && i < rounds) {
-          lbl = Iterate.roll(lbl, lblCp); lblCp = Some(lbl)
-        }
-      } else {
-        lbl = lbl.join(if (small) broadcast(picked) else picked,
-            Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("__next"), col("community")).as("community"))
-        if (i % 2 == 0 && i < rounds) {
-          lbl = Iterate.roll(lbl, lblCp); lblCp = Some(lbl)
-        }
+        .select(col("node"), (-col("m.nc")).as("community"))
+      // Safety roll (ADVICE r14): without ANY roll the fused plan's
+      // depth grows linearly with the caller's round budget — Catalyst
+      // analysis time and driver memory are unbounded at e.g. a
+      // 50-round LPA convergence budget even though the arithmetic is
+      // fine. The roll preserves row-identical output while truncating
+      // lineage; at the shipped 5-round usage (< FusedRollEvery) it
+      // never fires, so q163's one-job shape is untouched.
+      if (i % FusedRollEvery == 0 && i < rounds) {
+        lbl = Iterate.roll(lbl, lblCp); lblCp = Some(lbl)
       }
     }
     lbl

@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   * (Haveliwala, "Topic-Sensitive PageRank", WWW 2002). On a
   * symmetrized undirected graph ([[CoPurchaseGraph.symmetrize]], q63)
   * every node has an out-edge, the dangling mass is exactly 0.0 every
-  * round, and the uniform walk is undirected PageRank bit for bit.
+  * round (the walk then reads it as the literal 0.0), and the uniform
+  * walk is undirected PageRank bit for bit.
   *
   * Output ranks are scaled by N (mean 1.0) so `round(, 6)` keeps ~6
   * significant digits regardless of graph size — the double-drift
@@ -186,7 +187,10 @@ object PageRank {
     * one; see BENCH_ISOLATED_r8's post-publish note). Round 1's mass is
     * the one aggregate the observation cannot supply (there is no
     * checkpoint before the first roll) — a single node-sized job at
-    * setup, not per round.
+    * setup, not per round. A graph with no dangling node (the count
+    * rides the node checkpoint's observation) pays neither that job
+    * nor the fused rounds' in-plan aggregate below: its mass is the
+    * literal 0.0 in every round.
     *
     * `rollEvery` is a pure plan knob: rounds that do NOT roll read the
     * dangling mass from a one-row in-plan aggregate (broadcast cross
@@ -210,22 +214,26 @@ object PageRank {
       .distinct()
       .join(srcs, Seq("node"), "left")
     // no build-time repartition: an AQE checkpoint would discard the
-    // partitioning anyway (SCALE.md round 8); n (and the seed count)
-    // ride the checkpoint action
+    // partitioning anyway (SCALE.md round 8); n, the dangling count (and
+    // the seed count) ride the checkpoint action
+    def countOf(flag: String) = coalesce(sum(when(col(flag), lit(1L))), lit(0L))
     val nodes = (seeds match {
       case None =>
         flagged.select(col("node"), col("__has").isNull.as("dang"))
-          .observe(nObs, count(lit(1)).as("n"))
+          .observe(nObs, count(lit(1)).as("n"), countOf("dang").as("nd"))
       case Some(s) =>
         flagged
           .join(s.select(col("node"), lit(true).as("__seed")).distinct(),
             Seq("node"), "left")
           .select(col("node"), col("__has").isNull.as("dang"),
             coalesce(col("__seed"), lit(false)).as("seed"))
-          .observe(nObs, count(lit(1)).as("n"),
-            coalesce(sum(when(col("seed"), lit(1L))), lit(0L)).as("ns"))
+          .observe(nObs, count(lit(1)).as("n"), countOf("dang").as("nd"),
+            countOf("seed").as("ns"))
     }).localCheckpoint()
     val n = nObs.get("n").asInstanceOf[Long]
+    // no dangling node (every symmetrized graph, q63): the dangling mass
+    // is exactly 0.0 every round, so no round aggregates it
+    val dangling = nObs.get("nd").asInstanceOf[Long] > 0
     // the restart vector r: rank starts at r, and each round adds the
     // teleport (1−d)·r and the dangling share dm·r
     val (start, teleport, share) = seeds match {
@@ -251,8 +259,10 @@ object PageRank {
     var ranks = nodes.select(col("node") +: start.as("rank") +: flags: _*)
     // round-1 dangling mass: the only aggregate the roll observation
     // can't supply (nothing has been rolled yet) — one node-sized job
-    var dmLit: Option[Double] = Some(ranks.where(col("dang"))
-      .agg(coalesce(sum(col("rank")), lit(0.0))).collect()(0).getDouble(0))
+    var dmLit: Option[Double] = Some(
+      if (!dangling) 0.0
+      else ranks.where(col("dang"))
+        .agg(coalesce(sum(col("rank")), lit(0.0))).collect()(0).getDouble(0))
     // in-plan form for fused (non-rolled) rounds: a one-row aggregate
     // over the previous round's rank subtree, attached as a broadcast
     // cross join (kcore's `stable` idiom). ReuseExchange dedupes the
@@ -293,7 +303,7 @@ object PageRank {
           cp = Some(ranks)
           dmLit = Some(obs.get("dm").asInstanceOf[Double])
           dmDf = None
-        } else {
+        } else if (dangling) {
           dmLit = None
           dmDf = Some(ranks.where(col("dang"))
             .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dm")))

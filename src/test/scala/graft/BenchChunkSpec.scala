@@ -102,23 +102,6 @@ class BenchChunkSpec extends AnyFunSuite {
     assert(Bench.chunkRows(chunk, Some(rows), why) == rows)
   }
 
-  test("pickReported: min of warm samples; a failed run can never win it") {
-    val inf = Double.PositiveInfinity
-    // warm mode drops the untimed warmup (head), reports min of the rest
-    assert(Bench.pickReported(Seq(9.0, 3.5, 2.0, 7.0), warmed = true)
-      == ((2.0, Seq(3.5, 2.0, 7.0))))
-    // WARM=1 ≡ the historical run-twice-report-2nd protocol
-    assert(Bench.pickReported(Seq(9.0, 4.2), warmed = true)._1 == 4.2)
-    // un-warmed single run reports itself
-    assert(Bench.pickReported(Seq(6.1), warmed = false)._1 == 6.1)
-    // a failed run (+Inf) loses to any finite success — a 0.3 s OOM
-    // must never beat a 45 s success (the min-estimator inversion)
-    assert(Bench.pickReported(Seq(1.0, 45.0, inf, inf), warmed = true)._1 == 45.0)
-    // all timed runs failed -> -1 marker, never an elapsed-to-failure time
-    assert(Bench.pickReported(Seq(1.0, inf, inf), warmed = true)._1 == -1.0)
-    assert(Bench.pickReported(Seq(inf), warmed = false)._1 == -1.0)
-  }
-
   test("ambient columns: stealPctOf is a jiffy-delta rate with -1 markers") {
     // normal window: 5 steal jiffies over 500 total -> 1%
     assert(Bench.stealPctOf(Some((100L, 10000L)), Some((105L, 10500L))) == 1.0)

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 /** Bench failures are loud: a query whose body or setup throws is a
   * failed row that names what threw and never changes the total. */
@@ -25,6 +25,16 @@ class BenchFailureSpec extends SparkTestBase {
     assert(results.filter(_.failure.isDefined).forall(_.sec == -1.0))
     assert(!ranAfterFailedSetup.get, "a query ran after its setup threw")
     assert(Bench.total(results) == byName(ok.name).sec)
+  }
+
+  test("runInProcess runs each spec's body exactly once") {
+    // one timed run per query: no untimed warmup run, no repeats
+    val calls = new AtomicInteger(0)
+    val counted = QuerySpec("q9004_counted",
+      (s, _) => { calls.incrementAndGet(); s.range(10).toDF("x") }, "SELECT 1")
+    val Seq(row) = Bench.runInProcess(spark, sf(), Seq(counted))
+    assert(calls.get == 1, s"body ran ${calls.get} times")
+    assert(row.failure.isEmpty && row.sec >= 0)
   }
 
   test("readArtifact: a child's rows in file order, ambient markers, failures") {

@@ -158,6 +158,28 @@ class GraphMetricsSpec extends SparkTestBase {
       f"hub graph took $th%.1f s vs uniform $tu%.1f s — skew stall")
   }
 
+  /** Ring + chords over 41 nodes, weights 1..3: every node has an edge. */
+  private val lpaEdges: Seq[(Long, Long, Long)] =
+    ((0L to 40L).map(i => (i, (i * 7 + 3) % 41, 1L + i % 3)) ++
+      (0L to 40L).map(i => (i, (i + 1) % 41, 1L))).filter(e => e._1 != e._2)
+
+  /** Synchronous LPA in plain Scala, labelProp's rule: each round every
+    * node takes the label with the most incident weight among its
+    * neighbors, ties to the smallest label. */
+  private def referenceLpa(edges: Seq[(Long, Long, Long)], rounds: Int): Set[Seq[Any]] = {
+    val sym = edges ++ edges.map { case (s, d, w) => (d, s, w) }
+    var lbl = sym.map(_._1).distinct.map(v => v -> v).toMap
+    for (_ <- 1 to rounds)
+      lbl = sym.groupBy(_._2).map { case (v, in) =>
+        v -> in.groupMapReduce(e => lbl(e._1))(_._3)(_ + _)
+          .maxBy { case (l, w) => (w, -l) }._1
+      }
+    lbl.map { case (v, l) => Seq(v, l) }.toSet
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
   test("broadcast and shuffle loop paths agree bit-for-bit") {
     import spark.implicits._
     // the adaptive join strategy (per-round frame broadcast under
@@ -165,12 +187,8 @@ class GraphMetricsSpec extends SparkTestBase {
     // choice: labelProp/bfsHops are integer-exact and hits rounds to
     // 6 dp inside the operator, so forcing each mode must give the
     // SAME rows. Mirrors the sf0.1 A/B in SCALE.md round 8.
-    val edges = ((0L to 40L).map(i => (i, (i * 7 + 3) % 41, 1L + i % 3)) ++
-      (0L to 40L).map(i => (i, (i + 1) % 41, 1L)))
-      .filter(e => e._1 != e._2).toDF("src", "dst", "weight")
+    val edges = lpaEdges.toDF("src", "dst", "weight")
     val seeds = Seq(0L, 17L).toDF("node")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
     assert(rows(GraphMetrics.labelProp(edges, 4, broadcastMaxNodes = 0L)) ==
       rows(GraphMetrics.labelProp(edges, 4, broadcastMaxNodes = Long.MaxValue)))
     assert(rows(GraphMetrics.bfsHops(edges, seeds, 3, broadcastMaxNodes = 0L)) ==
@@ -181,25 +199,20 @@ class GraphMetricsSpec extends SparkTestBase {
 
   test("labelProp fused form and hits roll cadence return identical rows") {
     import spark.implicits._
-    // round-14 fusion pins. labelProp: every node has >= 1 incident
-    // edge (nodes is built FROM sym), so the argmax frame covers every
-    // node each round and the carry-forward join is dead logic — the
-    // fused form that drops it must be row-identical (integer-exact
-    // arithmetic, no rounding argument needed). hits: the score chain
-    // is single-consumer, so the roll cadence cannot change any value.
-    val edges = ((0L to 40L).map(i => (i, (i * 7 + 3) % 41, 1L + i % 3)) ++
-      (0L to 40L).map(i => (i, (i + 1) % 41, 1L)))
-      .filter(e => e._1 != e._2).toDF("src", "dst", "weight")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
+    // labelProp: every node has >= 1 incident edge (nodes is built FROM
+    // sym), so the argmax frame covers every node each round and is the
+    // next label frame — the fused rounds must replay a plain
+    // synchronous LPA exactly (integer-exact arithmetic), on the
+    // broadcast path and the shuffle path. hits: the score chain is
+    // single-consumer, so the roll cadence cannot change any value.
+    val edges = lpaEdges.toDF("src", "dst", "weight")
     val b = PageRank.BroadcastMaxNodes
-    assert(rows(GraphMetrics.labelPropImpl(edges, 5, b, fused = false)) ==
-      rows(GraphMetrics.labelPropImpl(edges, 5, b, fused = true)),
-      "fused labelProp diverged")
-    // and on the shuffle path too (the fallback join is equally dead)
-    assert(rows(GraphMetrics.labelPropImpl(edges, 4, 0L, fused = false)) ==
-      rows(GraphMetrics.labelPropImpl(edges, 4, 0L, fused = true)),
-      "fused labelProp diverged on the shuffle path")
+    for (rounds <- Seq(4, 5); bound <- Seq(b, 0L)) {
+      val want = referenceLpa(lpaEdges, rounds)
+      assert(want.map(_(1)).size > 1, "the reference collapsed to one label")
+      assert(rows(GraphMetrics.labelProp(edges, rounds, bound)) == want,
+        s"labelProp diverged from the reference at $rounds rounds, bound $bound")
+    }
     assert(rows(GraphMetrics.hitsImpl(edges, 5, b, rollEvery = 2)) ==
       rows(GraphMetrics.hitsImpl(edges, 5, b, rollEvery = 10)),
       "hits cadence diverged")
@@ -209,20 +222,17 @@ class GraphMetricsSpec extends SparkTestBase {
     import spark.implicits._
     // round-15 lineage-bounding pins (ADVICE r14). The fused labelProp
     // safety roll (fires past FusedRollEvery=8 rounds) and the bfsHops
-    // union consolidation are plain materializations — both must be
-    // row-identical to the unrolled forms at round/hop budgets large
-    // enough that they actually fire.
-    val edges = ((0L to 40L).map(i => (i, (i * 7 + 3) % 41, 1L + i % 3)) ++
-      (0L to 40L).map(i => (i, (i + 1) % 41, 1L)))
-      .filter(e => e._1 != e._2).toDF("src", "dst", "weight")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
+    // union consolidation are plain materializations: labelProp must
+    // still replay the reference LPA, and bfsHops match its
+    // unconsolidated form, at round/hop budgets large enough that they
+    // actually fire.
+    val edges = lpaEdges.toDF("src", "dst", "weight")
     val b = PageRank.BroadcastMaxNodes
     assert(GraphMetrics.FusedRollEvery == 8,
       "pin assumes the shipped cadence; update the 10-round case below")
-    assert(rows(GraphMetrics.labelPropImpl(edges, 10, b, fused = false)) ==
-      rows(GraphMetrics.labelPropImpl(edges, 10, b, fused = true)),
-      "fused labelProp diverged once the safety roll fires")
+    for (bound <- Seq(b, 0L))
+      assert(rows(GraphMetrics.labelProp(edges, 10, bound)) == referenceLpa(lpaEdges, 10),
+        s"labelProp diverged once the safety roll fires, bound $bound")
     // long path so the frontier survives 5+ hops; consolidation at
     // every 2 hops vs effectively never must agree exactly
     val path = (0L until 12L).map(i => (i, i + 1)).toDF("src", "dst")

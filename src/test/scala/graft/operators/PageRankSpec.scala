@@ -87,6 +87,32 @@ class PageRankSpec extends SparkTestBase {
       "the shipped default's final (post-roll) round must read a literal")
   }
 
+  test("no dangling node, no dangling aggregate: a symmetrized graph's " +
+    "fused rounds carry no join for the mass") {
+    import spark.implicits._
+    // At cadence 2 a fused round reads the dangling mass from a one-row
+    // broadcast aggregate (a BroadcastNestedLoopJoin). A symmetrized
+    // graph has no dangling node, so its mass is the literal 0.0 and
+    // the aggregate and its join are never built; a graph with a
+    // dangling node keeps them. 10 rounds end on a round that follows
+    // a fused one, so the final plan shows which form it read.
+    val undirected = Seq((1L, 2L, 1L), (1L, 3L, 2L), (2L, 3L, 1L), (3L, 4L, 1L))
+      .toDF("src", "dst", "weight")
+    val sym = CoPurchaseGraph.symmetrize(undirected)
+    val b = PageRank.BroadcastMaxNodes
+    def plan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString
+    val symmetric = PageRank.walk(sym, None, 10, 0.85, b, 2)
+    assert(!plan(symmetric).contains("BroadcastNestedLoopJoin"),
+      s"a graph with no dangling node built the dangling aggregate:\n${plan(symmetric)}")
+    val dangles = Seq((1L, 2L, 1L), (2L, 3L, 1L)).toDF("src", "dst", "weight")
+    assert(plan(PageRank.walk(dangles, None, 10, 0.85, b, 2))
+      .contains("BroadcastNestedLoopJoin"), "a dangling node lost its mass term")
+    // and the literal 0.0 is the mass the rolled rounds observe
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(rows(symmetric) == rows(PageRank.walk(sym, None, 10, 0.85, b, 1)))
+  }
+
   test("personalized: dangling mass teleports back to seeds only") {
     import spark.implicits._
     // 2 is a dead end; without dangling handling mass drains every round

@@ -8,9 +8,13 @@ Each directory holds one `<query>.txt` formatted physical plan per query
 (`sbt "runMain graft.ExplainAll <sfDir> <outDir> [q,...|all]"`). Before
 comparing, the run-specific tokens are normalized: Catalyst expression
 ids (`#123` -> `#N`), plan ids (`plan_id=7`), the numeric suffixes of
-temp paths, JVM lambda class names and identity hashes, and the source
-call sites (`at Foo.scala:12`) that name checkpointed RDDs, so moving
-code between files is not a plan change. The projection groups of a
+temp paths, JVM lambda class names and identity hashes, the ids and
+source call sites (`MapPartitionsRDD[186] at Foo.scala:12`) of
+checkpointed RDDs, and the `java.io.tmpdir` prefix of the `graft-*`
+store paths on `Location:` lines. So moving code between files, one
+query creating more or fewer RDDs (the per-JVM RDD counter shifts every
+later plan), or running each side on its own tmpdir is not a plan
+change. The projection groups of a
 distinct-aggregate Expand (its `gid` column) are put in one canonical
 order too: Spark orders them, their columns and their `gid` numbers by
 expression-id hashes, so the same query flips between runs (q75, q82).
@@ -20,6 +24,7 @@ Exit status: 0 when every plan matches, 1 otherwise.
 """
 import difflib, os, re, sys
 
+STORE_DIR = re.compile(r"file:[^\s\[\],]*?/(?=graft-)")
 NORMALIZE = [
     (re.compile(r"#\d+L?"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
@@ -27,6 +32,9 @@ NORMALIZE = [
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda"),
     (re.compile(r"@[0-9a-f]{5,8}\b"), "@H"),
     (re.compile(r" at \w+\.scala:\d+"), " at <call site>"),
+    (re.compile(r"\b(\w*RDD)\[\d+\]"), r"\1[N]"),
+    (re.compile(r"^Location: .*$", re.M),
+     lambda m: STORE_DIR.sub("file:<tmpdir>/", m.group(0))),
 ]
 
 
