@@ -3,6 +3,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
@@ -33,7 +34,10 @@ import scala.util.control.NonFatal
   * forking>.
   *
   * Every query is timed once: one run of its body, cold but for the
-  * untimed warmup set, with the block reap after it.
+  * untimed warmup set, with the block reap after it. The run is wrapped
+  * in [[QueryMetrics.measure]], and its figures plus the setup's
+  * seconds (`setup_s`) are the row's "metrics" in BENCH_FULL*.json and
+  * a short `[jobs … gap …]` bracket on its `[bench]` line.
   *
   * A query whose setup throws, whose run throws, or whose forked
   * chunk left no complete artifact is a failure: it keeps its -1.0 row
@@ -60,16 +64,16 @@ object Bench {
     * 1-min load sampled at query start and hypervisor-steal%% across
     * the query's timed run (setup excluded; the reap after it
     * included — steal is a rate, so the window just needs to cover the
-    * timed region). Motivation (VERDICT r13): every round's driver-
-    * channel outliers forced an after-the-fact isolated-rerun chase
-    * because the artifact carried load only at chunk starts — a row
-    * that carries its own load1/steal%% at measurement time is
-    * adjudicable from the artifact alone. -1.0 = not measurable
+    * timed region), so a row is adjudicable from the artifact alone
+    * (VERDICT r13). -1.0 = not measurable
     * (non-Linux /proc, or a zero-width window). `failure` names what
-    * threw (setup, or the run); a failed row's `sec` is -1.0. */
+    * threw (setup, or the run); a failed row's `sec` is -1.0, any
+    * other is unrounded (rounded once, in [[render]]). `metrics`: the
+    * `setup_s` and, for a run that started, its [[QueryMetrics]]. */
   private[graft] final case class QueryRun(name: String, sec: Double,
                                            load1: Double, stealPct: Double,
-                                           failure: Option[String] = None)
+                                           failure: Option[String] = None,
+                                           metrics: ListMap[String, Double] = ListMap.empty)
 
   /** The suite total: failed rows are left out, never summed as -1.0. */
   private[graft] def total(results: Seq[QueryRun]): Double =
@@ -165,7 +169,9 @@ object Bench {
       // query's timed region. A failed setup fails the query without
       // running it: its body would self-heal the artifact inside the
       // timed region and report build time as serving time.
+      val setup0 = System.nanoTime()
       val setupFailure = spec.prepare(spark, sfDir, "bench")
+      val setupS = ListMap("setup_s" -> (System.nanoTime() - setup0) / 1e9)
       // ambient window: load1 at query start, steal jiffies across the
       // timed run and its reap (QueryRun's contract)
       val qLoad1 = load1()
@@ -178,38 +184,59 @@ object Bench {
       // block stores in SizeEstimator walks (SCALE.md round 13, "q165's
       // monotonic in-JVM growth"). Reaping deterministically after every
       // query keeps that state out of the next query's timed run.
-      val (sec, failure) = setupFailure match {
-        case Some(f) => (-1.0, Some(f))
-        case None =>
-          val t0 = System.nanoTime()
-          val runFailure =
+      val (failure, m) =
+        if (setupFailure.isDefined) (setupFailure, ListMap.empty[String, Double])
+        else {
+          val run = QueryMetrics.measure(spark) {
             try { spec.run(spark, sfDir).count(); None }
             catch { case NonFatal(t) => Some(s"run: $t") }
-          val el = (System.nanoTime() - t0) / 1e9
+          }
           GraftSession.reap(spark); System.gc()
-          (if (runFailure.isEmpty) el else -1.0, runFailure)
-      }
-      val qSteal = stealPctOf(steal0, stealTotal())
-      System.err.println(f"[bench] $name%-24s $sec%8.2f s" +
-        (if (setupFailure.isDefined) "  FAILED (setup threw)"
-         else if (failure.isDefined) "  FAILED (run threw)" else "") +
-        // ambient evidence on the line itself, as in the artifact
-        f"  [ambient load1 $qLoad1%.2f steal $qSteal%.2f%%]")
-      QueryRun(name, sec, qLoad1, qSteal, failure)
+          run
+        }
+      val row = QueryRun(name, if (failure.isEmpty) m("wall_s") else -1.0, qLoad1,
+        stealPctOf(steal0, stealTotal()), failure, setupS ++ m)
+      System.err.println(benchLine(row))
+      row
     }
   }
 
+  /** A row's seconds on the stdout line and the `[bench]` line alike, so
+    * a forked row reads the same on both. ≥1 s values carry 1 decimal
+    * (≤5% quantization; 193 quoted qNN keys alone cost ~1640 chars of the
+    * stdout line, VERDICT r14 item 8), sub-1 s values keep 2: 1 dp there
+    * would inject ±20%+ phantom deltas into a >10% regression gate. */
+  private[graft] def shortSec(v: Double): java.math.BigDecimal = dp(v, if (v >= 1) 1 else 2)
+
+  private def dp(v: Double, n: Int): java.math.BigDecimal =
+    BigDecimal(v).setScale(n, BigDecimal.RoundingMode.HALF_UP).bigDecimal
+
+  /** The `[bench]` stderr line of one row: its time, what threw, its
+    * ambient evidence and, for a run that started, a layer bracket. */
+  private[graft] def benchLine(q: QueryRun): String =
+    f"[bench] ${q.name}%-24s ${shortSec(q.sec).toPlainString}%8s s" +
+      q.failure.fold("")(f => s"  FAILED (${f.takeWhile(_ != ':')} threw)") +
+      f"  [ambient load1 ${q.load1}%.2f steal ${q.stealPct}%.2f%%]" +
+      (if (!q.metrics.contains("driver_gap_ms")) ""
+       else Seq("jobs", "tasks", "plan_ms", "compiles", "compile_ms", "gc_ms", "driver_gap_ms")
+         .map(k => f"${k.stripPrefix("driver_")} ${q.metrics(k)}%.0f").mkString("  [", " ", "]"))
+
   /** A child's BENCH_FULL.json as [[QueryRun]]s, in file order. Missing
     * ambient columns read as -1.0 markers, never as a parse failure, so
-    * an ambient-format skew can't discard a chunk's timings. */
+    * an ambient-format skew can't discard a chunk's timings. A clean
+    * row's time is its unrounded `metrics.wall_s` where the child wrote
+    * one (an artifact without "metrics" reads its "queries" value). */
   private[graft] def readArtifact(file: java.io.File): Seq[QueryRun] = {
     val root = new ObjectMapper().readTree(file)
     val qs = root.path("queries")
     qs.fieldNames().asScala.toSeq.map { n =>
       val amb = root.path("ambient").path(n)
-      QueryRun(n, qs.path(n).asDouble(), amb.path(0).asDouble(-1.0),
-        amb.path(1).asDouble(-1.0),
-        Option(root.path("failed").get(n)).map(_.asText()))
+      val mj = root.path("metrics").path(n)
+      val metrics = ListMap.from(mj.fieldNames().asScala.map(k => k -> mj.path(k).asDouble()))
+      val failure = Option(root.path("failed").get(n)).map(_.asText())
+      QueryRun(n, metrics.get("wall_s").filter(_ => failure.isEmpty)
+          .getOrElse(qs.path(n).asDouble()),
+        amb.path(0).asDouble(-1.0), amb.path(1).asDouble(-1.0), failure, metrics)
     }
   }
 
@@ -218,10 +245,6 @@ object Bench {
   private[graft] def writeArtifact(file: String, payload: String): Option[String] =
     try { Files.writeString(Paths.get(file), payload); None }
     catch { case NonFatal(e) => Some(s"[bench] could not write $file: $e") }
-
-  private def deleteTree(dir: java.io.File): Unit =
-    Files.walk(dir.toPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
 
   /** A forked chunk's rows: the child's artifact when it holds exactly
     * the chunk's queries, else one failed row per query naming `why`.
@@ -270,7 +293,7 @@ object Bench {
         s"child exit ${p.exitValue()}, no complete artifact")
       if (p.exitValue() != 0 || rows.exists(_.failure.isDefined))
         System.err.println(s"[bench] child exit ${p.exitValue()}; kept $dir")
-      else deleteTree(dir)
+      else graft.sources.BuildOnce.deleteTree(dir)
       rows
     } catch { case NonFatal(e) =>
       System.err.println(s"[bench] fork failed: $e" +
@@ -288,19 +311,11 @@ object Bench {
     * numbers with full names, 3 dp, plus per-query ambient evidence
     * ([load1 at query start, steal% over the timed run], -1 =
     * unmeasurable), every failure (name -> what threw, {} on a clean
-    * run) and, LAST and only when chunks ran (forked children never
-    * emit it), the 1-min load at each chunk start. */
+    * run), every row's "metrics" (unrounded; counts as integers) and,
+    * LAST and only when chunks ran (forked children never emit it), the
+    * 1-min load at each chunk start. Each time is rounded here, once. */
   private[graft] def render(results: Seq[QueryRun], sfDir: String,
                             chunkLoads: Seq[(String, Double)]): (String, String) = {
-    def dp(v: Double, n: Int): java.math.BigDecimal =
-      BigDecimal(v).setScale(n, BigDecimal.RoundingMode.HALF_UP).bigDecimal
-    // Short-key value precision (round 15, VERDICT r14 item 8): 193
-    // quoted qNN keys alone cost ~1640 chars, so "<1800 chars" is
-    // arithmetically unreachable — this trims what CAN be trimmed
-    // without distorting round-over-round ratios: ≥1 s values carry 1
-    // decimal (quantization ≤5%), sub-1 s values keep 2 (1 dp there
-    // would inject ±20%+ phantom deltas into a >10% regression gate).
-    def dpShort(v: Double) = dp(v, if (v >= 1) 1 else 2)
     def obj(kvs: Iterable[(String, AnyRef)]) = {
       val m = new java.util.LinkedHashMap[String, AnyRef]()
       kvs.foreach { case (k, v) => m.put(k, v) }
@@ -311,11 +326,14 @@ object Bench {
         "unit" -> "sec", "queries" -> obj(queries), "sf" -> sfDir)
     // Short keys truncate at the first '_'; SparkEntry refuses two specs
     // sharing a qNN, so no key is emitted twice.
-    val line = head(results.map(q => q.name.takeWhile(_ != '_') -> dpShort(q.sec)))
+    val line = head(results.map(q => q.name.takeWhile(_ != '_') -> shortSec(q.sec)))
     val full = head(results.map(q => q.name -> dp(q.sec, 3))) ++ Seq(
       "ambient" -> obj(results.map(q =>
         q.name -> java.util.List.of(dp(q.load1, 2), dp(q.stealPct, 2)))),
-      "failed" -> obj(results.flatMap(q => q.failure.map(q.name -> _)))) ++
+      "failed" -> obj(results.flatMap(q => q.failure.map(q.name -> _))),
+      "metrics" -> obj(results.filter(_.metrics.nonEmpty).map(q => q.name ->
+        obj(q.metrics.map { case (k, v) =>
+          k -> (if (v.isWhole) Long.box(v.toLong) else Double.box(v)) })))) ++
       (if (chunkLoads.isEmpty) Nil
        else Seq("load1_at_chunk_start" -> obj(chunkLoads.map { case (k, v) => k -> dp(v, 2) })))
     val json = new ObjectMapper()

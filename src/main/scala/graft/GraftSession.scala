@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** The one session builder of the engine's mains (Bench, Verify,
-  * ExplainAll, ScaleProbe) and of the test suite, so their confs cannot
+  * ExplainAll) and of the test suite, so their confs cannot
   * drift apart, and the one [[reap]] the query-running mains call
   * between queries. Each caller keeps its own core count and log
   * level; `-Dspark.*` system properties still reach the SparkConf for

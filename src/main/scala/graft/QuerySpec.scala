@@ -51,7 +51,7 @@ final case class QuerySpec(
 
 object QuerySpec {
 
-  /** The query loop of Verify, ExplainAll and ScaleProbe: per spec,
+  /** The query loop of Verify and ExplainAll: per spec,
     * [[QuerySpec.prepare]], then `body` unless the setup failed, then
     * [[GraftSession.reap]]. A throwing body is logged under `[tag]` and
     * the loop goes on. Returns the names that failed, in run order. */

@@ -381,30 +381,15 @@ object GraphMetrics {
     * scores on one endpoint, fold on the other) — never a cross
     * product, no mid-loop driver action; lineage truncates through
     * [[Iterate.roll]] every 2nd round so live state is one checkpoint
-    * regardless of `rounds`.
+    * regardless of `rounds`. The score chain is single-consumer, so the
+    * cadence changes no value; 2 is measured (SCALE.md round-14 fusion
+    * table, and "q186 HITS cadence, decided cold").
     *
     * @param edges directed (src, dst, weight)
     * @return (node, hub, auth), both rounded to 6 dp */
   def hits(edges: DataFrame, rounds: Int,
            broadcastMaxNodes: Long = PageRank.BroadcastMaxNodes)
-      : DataFrame =
-    hitsImpl(edges, rounds, broadcastMaxNodes, rollEvery = 2)
-
-  /** [[hits]] with the mid-loop roll cadence exposed. The score chain
-    * is single-consumer (auth_i feeds only the hub half-step, hub_i
-    * only the next auth half-step), so rounds between rolls fuse into
-    * one scheduled job with zero duplicated subtree work — the
-    * arithmetic is identical at any cadence. `rollEvery >= rounds`
-    * runs the whole loop as one job (only the final materializations
-    * remain — those frames are each consumed twice). Round-14
-    * measurement (SCALE.md round-14 fusion table, sf0.1, outputs
-    * IDENTICAL): full
-    * fusion is NOT better (med 4.21 s at cadence 2 vs 4.36 at 10) —
-    * the half-step broadcast chain serializes inside the job either
-    * way — so the historical cadence 2 stays. */
-  private[graft] def hitsImpl(edges: DataFrame, rounds: Int,
-                              broadcastMaxNodes: Long,
-                              rollEvery: Int): DataFrame = {
+      : DataFrame = {
     // ONE checkpointed edge frame serves both half-steps. (An earlier
     // form kept TWO copies, each "pre-partitioned" on its half-step's
     // key — but an AQE checkpoint captures UnknownPartitioning, so the
@@ -463,7 +448,7 @@ object GraphMetrics {
         .agg(sum(col("weight") * col("auth")).as("hub"))
       // labelProp's lineage discipline: truncate at the cadence and at
       // the end; intermediate frames are consumed exactly once
-      if (i == rounds || (i % rollEvery == 0)) {
+      if (i == rounds || (i % 2 == 0)) {
         hub = Iterate.roll(hub, hubCp); hubCp = Some(hub)
       }
     }

@@ -82,13 +82,14 @@ object PageRank {
     * 7.00→6.71) — half the roll actions and checkpoint materializations
     * for one extra node-sized one-row aggregate per fused round.
     * Round-15 re-confirmed it in the COLD chunk-prelude channel too
-    * (ScaleProbe 32c: c2 8.78/7.01/5.83 vs c1 9.42/8.28/6.58). FULL
+    * (chunk-replica cold runs, 32c: c2 8.78/7.01/5.83 vs c1
+    * 9.42/8.28/6.58; SCALE.md round 15). FULL
     * fusion (cadence ≥ iterations) LOSES (q94 med 8.76): the per-round
     * broadcast chain serializes inside one job and the unmaterialized
     * rank subtrees re-execute per consumer — rejected, kept here as the
     * measured boundary. q63's own round-15 cold-channel measurement
-    * (of its loop without the dangling term; ScaleProbe, exact
-    * chunk-prelude cold protocol, 32 cores) also chose 2: cadence 4 at
+    * (of its loop without the dangling term; exact chunk-prelude cold
+    * protocol, 32 cores) also chose 2: cadence 4 at
     * 24.6–31.5 s cold vs cadence 2 at 10.1–21.0 and cadence 1 at
     * 11.9–19.0, medians ≈ 12.4 for both, 2 preferred over 1 on the tie
     * for half the roll materializations and driver round-trips at
@@ -99,8 +100,8 @@ object PageRank {
     * round 15 (VERDICT r14 item 1). Round 14 adopted cadence 2 from a
     * warm-alternation "small win / wash" (med 7.61→7.18); but the
     * driver contract channel times COLD, and there the fused (cadence
-    * 2) q149 plans lose decisively: ScaleProbe under the exact
-    * chunk-prelude cold protocol at 32 cores measured c2 17.2 s cold
+    * 2) q149 plans lose decisively: the exact chunk-prelude cold
+    * protocol at 32 cores measured c2 17.2 s cold
     * (warm 8.9/10.7) vs c1 10.7 cold (warm 9.2/5.9); the driver's own
     * quiet 32-core row regressed 10.05 → 15.15 s under cadence 2. Cadence 1 is exactly the r13 shape
     * (every round's dangling mass an observed-metric literal). */

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicBoolean
 
-/** The query loop Verify, ExplainAll and ScaleProbe share: a failed setup
+/** The query loop Verify and ExplainAll share: a failed setup
   * fails its query and its body never runs, a throwing body fails only
   * its own query, and every query's blocks are reaped after it. */
 class HarnessLoopSpec extends SparkTestBase {

@@ -106,19 +106,11 @@ class IvfIndexStoreSpec extends SparkTestBase {
     val query = emb.where(col("vec_id") === qid)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     def serveJobs(): (Int, Array[org.apache.spark.sql.Row]) = {
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs.set(0)
-      val rows = IvfIndexStore.serve(spark, d, query, 5, 4).collect()
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      (jobs.get, rows)
+      val (rows, m) = graft.QueryMetrics.measure(spark)(
+        IvfIndexStore.serve(spark, d, query, 5, 4).collect())
+      (m("jobs").toInt, rows)
     }
-    spark.sparkContext.addSparkListener(listener)
     try {
       serveJobs() // first use of the index: reads its schema once
       val (before, _) = serveJobs()
@@ -132,9 +124,6 @@ class IvfIndexStoreSpec extends SparkTestBase {
       assert(after == before, s"the post-upsert serve ran $after jobs, the one before it $before")
       val top = rows.find(_.getAs[Int]("rnk") == 1).map(_.getAs[Long]("vec_id"))
       assert(top.contains(copyId), s"the upserted copy is not the top row: ${rows.toSeq}")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      deleteTrees(Seq(d, root))
-    }
+    } finally deleteTrees(Seq(d, root))
   }
 }
